@@ -31,12 +31,16 @@ def pin_environment(root: str, work: str) -> None:
 
 
 def spark_conf(work: str) -> dict[str, str]:
+    # C1 only: a run is too short for the optimizing JIT to settle. With
+    # it, cycle time fell steadily over six cycles (9.7 s to 6.8 s), so a
+    # run's figure depended on how far compilation had got; without it,
+    # cycles were flat within 5%.
     return {
         "spark.ui.showConsoleProgress": "false",
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
         "spark.driver.extraJavaOptions": (
             f"-Djava.io.tmpdir={os.path.join(work, 'tmp')} "
-            f"-Dderby.system.home={work}"
+            f"-Dderby.system.home={work} -XX:TieredStopAtLevel=1"
         ),
     }
 
@@ -124,9 +128,19 @@ def p90(xs) -> float:
 class Clock:
     def __init__(self) -> None:
         self.t0 = time.perf_counter()
+        self.cpu0 = cpu_times()
 
     def lap(self) -> float:
         return time.perf_counter() - self.t0
+
+    def unstolen(self) -> float:
+        """Wall time since start, scaled by the share of the CPU time the
+        machine wanted that it got: busy / (busy + hypervisor steal)."""
+        wall = self.lap()
+        d = [b - a for a, b in zip(self.cpu0, cpu_times())]
+        busy = d[0] + d[1] + d[2] + d[5] + d[6]  # user nice system irq softirq
+        steal = d[7] if len(d) > 7 else 0
+        return wall * busy / (busy + steal) if busy else wall
 
 
 @dataclass
@@ -159,9 +173,9 @@ class Ledger:
 class Result:
     """What a workload hands back to the runner."""
 
-    setup_s: float
-    latency_s: list[float]
-    read_s: float  # the workload's typical read request
+    setup_s: list[float]  # one sample per repeated set-up
+    latency_s: list[float]  # one sample per measured op
+    read_s: float  # the workload's read requests, fastest of each kind
     read_n: int  # samples behind read_s
     named: dict[str, tuple[float, str, int]] = field(default_factory=dict)
     layers: dict[str, float] = field(default_factory=dict)

@@ -5,7 +5,8 @@
 The first tests need no Spark. The smoke tests run each workload at a
 tiny scale (sf0.001 fixture, 2k-row tables, 2 cycles or passes) through
 the command line, once clean and once with a deliberately corrupted
-result, and take a few minutes.
+result. They take a few minutes, so they are marked ``slow`` and run
+only with ``-m slow``.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ import pytest
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-from perfbench import nrt_ingest, run, trace  # noqa: E402
+from perfbench import common, nrt_ingest, run, trace  # noqa: E402
 
 
 def _spec() -> dict:
@@ -44,12 +45,24 @@ def test_cdc_batch_shape_and_model():
     keys, cents, ops = nrt_ingest.make_batch(rng, m, 100)
     assert len(set(keys.tolist())) == len(keys) == 100
     assert ops.count("D") == 10 and ops.count("U") == 40 and ops.count("I") == 50
+    recent = 1000 - max(4 * 100, 1000 // 10)
+    assert sum(k >= recent for k, op in zip(keys, ops) if op == "U") >= 30
     for k, c, op in zip(keys, cents, ops):
         assert (m.cents[k] == -1) if op == "D" else (m.cents[k] == c)
         assert (before[k] >= 0) == (op != "I")
     again = nrt_ingest.make_batch(np.random.default_rng(7),
                                   nrt_ingest.EntityModel(1000, 2000, salt=3), 100)
     assert again[0].tolist() == keys.tolist()  # same seed, same batch
+
+
+def test_unstolen_scales_wall_time_by_busy_share(monkeypatch):
+    # /proc/stat fields: user nice system idle iowait irq softirq steal
+    ticks = iter([[100, 0, 20, 500, 0, 0, 0, 10],
+                  [160, 0, 40, 600, 0, 0, 0, 30]])  # busy +80, steal +20
+    monkeypatch.setattr(common, "cpu_times", lambda: next(ticks))
+    clock = common.Clock()
+    monkeypatch.setattr(clock, "lap", lambda: 2.0)
+    assert clock.unstolen() == 2.0 * 80 / 100
 
 
 def test_self_time_and_pool_thread_parent():
@@ -92,6 +105,7 @@ def _printed(stdout: str) -> dict[str, str]:
     return out
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("workload", run.WORKLOADS)
 def test_smoke_prints_every_metric_and_passes_gates(workload):
     res, stdout = _cli(workload, "--trace", "0")
@@ -103,6 +117,7 @@ def test_smoke_prints_every_metric_and_passes_gates(workload):
     assert printed["ops_failed_ratio"] == "ratio"
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("workload,corrupt", [("nrt_ingest", "silver_row"),
                                               ("query_mix", "query_result")])
 def test_smoke_traced_gate_trips_on_corrupted_result(workload, corrupt):

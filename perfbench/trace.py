@@ -141,8 +141,7 @@ def install_program_wrappers(tracer: Tracer) -> None:
                 inheritable=True)
     tracer.wrap(incremental, "load_entity", "incremental.load_entity",
                 on_result=lambda rec, r: rec.update(action=r.action, rows=r.rows))
-    for m in ("entities_with_watermarks", "open_watermark",
-              "close_watermark", "register_entity", "init"):
+    for m in ("entities_with_watermarks", "open_watermark", "close_watermark"):
         tracer.wrap(config.ConfigStore, m, f"config.{m}")
 
     def merge_result(rec, r):
@@ -152,18 +151,9 @@ def install_program_wrappers(tracer: Tracer) -> None:
 
     tracer.wrap(VersionedTable, "merge", "tables.merge", on_result=merge_result)
     for m in ("append", "update", "read", "read_between", "change_feed",
-              "history", "latest_version", "create"):
+              "history", "latest_version"):
         tracer.wrap(VersionedTable, m, f"tables.{m}")
     tracer.wrap(VersionedTable, "get_commit", "logcodec.get_commit")
-    orig_delete = VersionedTable.delete
-
-    def delete(self, condition, use_dv=False):
-        name = "tables.delete_dv" if use_dv else "tables.delete"
-        with tracer.span(name):
-            return orig_delete(self, condition, use_dv=use_dv)
-
-    VersionedTable.delete = delete
-    tracer._patches.append((VersionedTable, "delete", orig_delete))
     tracer.wrap_everywhere("nrtwithdeltalake_spark", catalog.load_table,
                            "catalog.load_table")
 
@@ -203,7 +193,7 @@ def per_layer_names() -> dict[str, str]:
         "logcodec.get_commit_s": "s",
         "logcodec.get_commit_calls": "count",
         "logcodec.commits": "count",
-        "datasource.lookup_key_s": "s",
+        "datasource.plan_key_s": "s",
         "datasource.files_planned_key": "count",
         "spark.jobs_per_cycle": "count",
         "spark.jobs_per_pass": "count",
@@ -278,7 +268,6 @@ def layer_metrics(tracer: Tracer, res, session_s: float) -> dict[str, tuple]:
         "logcodec.get_commit_calls": sum(
             1 for s in spans.get("logcodec.get_commit", []) if _under(s, by_id, "bench.cycle")
         ) / cycles,
-        "datasource.lookup_key_s": med("bench.read.lookup_key"),
         "trace.spans": float(len(tracer.spans)),
     }
     out.update(res.layers)
