@@ -22,10 +22,10 @@ Recompute-not-delta makes every case uniformly correct — dim deletes
 under ``how='inner'`` retract rows, under ``how='left'`` they
 null-extend them — and refresh cost scales with the changed key range,
 never view size (the ``VersionedTable.merge`` touched-file law again).
-Watermarks (reflected fact/dim versions) ride the view's own commit
-stats, so a crash between merge and stamp replays idempotently — the
-reference's commit-on-close ledger rule (``dbrconfig.sql:85-91``)
-without the second database.
+Watermarks (reflected fact/dim versions) ride the view's own refresh
+commit (``extra_stats``), so stamp and state publish atomically and a
+crash replays idempotently — the reference's commit-on-close ledger
+rule (``dbrconfig.sql:85-91``) without the second database.
 """
 
 from __future__ import annotations
@@ -107,9 +107,6 @@ class IncrementalJoinView:
         st = self._table().get_commit().stats
         return (st.get("fact_version", -1), st.get("dim_version", -1))
 
-    def _stamp(self, t: VersionedTable, fv: int, dv: int) -> None:
-        t.patch_latest_stats({"fact_version": fv, "dim_version": dv})
-
     # -- refresh -------------------------------------------------------------
 
     def refresh(self) -> dict:
@@ -118,11 +115,12 @@ class IncrementalJoinView:
         last_f, last_d = self.reflected_versions()
         if (last_f, last_d) == (fv, dv):
             return {"refreshed": False, "fact_version": fv, "dim_version": dv}
+        # the reflected versions ride the refresh commit itself
+        stamp = {"fact_version": fv, "dim_version": dv}
 
         if last_f < 0:
             full = self._join(self.fact.read(), self.dim.read())
-            t = VersionedTable.create(self.spark, self.path, full)
-            self._stamp(t, fv, dv)
+            VersionedTable.create(self.spark, self.path, full, extra_stats=stamp)
             return {
                 "refreshed": True,
                 "bootstrap": True,
@@ -160,7 +158,7 @@ class IncrementalJoinView:
         n_touched = touched.count()
         t = self._table()
         if n_touched == 0:
-            self._stamp(t, fv, dv)
+            t._commit_same_snapshot("refresh", lambda prev: {"stats": stamp})
             return {
                 "refreshed": True,
                 "touched_rows": 0,
@@ -192,8 +190,8 @@ class IncrementalJoinView:
             keys=self.fact_pk,
             delete_condition="__op = 'D'",
             exclude_cols=["__op"],
+            extra_stats=stamp,
         )
-        self._stamp(t, fv, dv)
         return {
             "refreshed": True,
             "touched_rows": n_touched,

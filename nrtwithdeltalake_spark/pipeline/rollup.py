@@ -102,11 +102,12 @@ class IncrementalRollup:
         last = self.last_refreshed_version()
         if last == base_version:
             return {"refreshed": False, "base_version": base_version}
+        # the reflected base version rides the refresh commit itself
+        stamp = {"base_version": base_version}
 
         if last < 0:
             full = self._aggregate(self.base.read())
-            t = VersionedTable.create(self.spark, self.path, full)
-            self._stamp(t, base_version)
+            VersionedTable.create(self.spark, self.path, full, extra_stats=stamp)
             return {
                 "refreshed": True,
                 "bootstrap": True,
@@ -119,8 +120,9 @@ class IncrementalRollup:
         )
         n_touched = touched.count()
         if n_touched == 0:
-            t = self._table()
-            self._stamp(t, base_version)
+            self._table()._commit_same_snapshot(
+                "refresh", lambda prev: {"stats": stamp}
+            )
             return {
                 "refreshed": True,
                 "touched_groups": 0,
@@ -155,20 +157,13 @@ class IncrementalRollup:
             keys=self.group_cols,
             delete_condition="__op = 'D'",
             exclude_cols=["__op"],
+            extra_stats=stamp,
         )
-        self._stamp(t, base_version)
         return {
             "refreshed": True,
             "touched_groups": n_touched,
             "base_version": base_version,
         }
-
-    def _stamp(self, t: VersionedTable, base_version: int) -> None:
-        """Record the reflected base version on the rollup's latest
-        commit (merged into stats via a metadata-only rewrite of the
-        commit record — single-writer, same guarantee as the log
-        itself)."""
-        t.patch_latest_stats({"base_version": base_version})
 
     # -- reads --------------------------------------------------------------
 

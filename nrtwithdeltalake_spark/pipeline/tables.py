@@ -18,8 +18,9 @@ Table Storage over Cloud Object Stores", VLDB 2020):
   ``_change_type`` column — the engine's analog of Delta CDF /
   SQL Server CHANGETABLE (O20, ``COPY_MSQL_TO_SILVER.py:171-174``).
 
-Commit records are written via atomic rename; single-writer semantics
-(the reference is single-writer too — one notebook job). Data files are
+Commit records — table metadata included — are read and published
+put-if-absent by ``log.py``, which owns every byte under ``_log/``;
+concurrent writers resolve by optimistic concurrency. Data files are
 written through the normal Spark parquet writer, so everything here is
 executor-parallel; only file *lists* (metadata) touch the driver.
 """
@@ -34,10 +35,22 @@ import shutil
 import tempfile
 import time
 import uuid
-import dataclasses
-from dataclasses import dataclass
 
-from . import logcodec
+from . import log
+from .log import (
+    FIELD_ID,
+    SUPPORTED_READER_FEATURES,
+    SUPPORTED_WRITER_FEATURES,
+    Commit,
+    CommitConflictError,
+    commit_from_record,
+    file_stats_may_match,
+    latest_version_in,
+    max_field_id,
+    strip_ids,
+    widened_type,
+    with_field_ids,
+)
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -109,35 +122,6 @@ def _morton_code(df: DataFrame, cols: list[str]) -> F.Column:
     return code
 
 
-@dataclass
-class Commit:
-    version: int
-    op: str
-    files: list[str]
-    cdf_files: list[str]
-    schema_json: str
-    ts: float
-    stats: dict
-    # deletion vectors: parquet sidecars of (file, pos) pairs naming
-    # rows of `files` that are LOGICALLY DELETED without a rewrite
-    # (merge-on-read). Reads anti-join them out; rewriting ops
-    # materialize them. Absent in pre-DV commits (default []).
-    dv_files: list[str] = dataclasses.field(default_factory=list)
-    # reader/writer protocol (Delta PROTOCOL-action semantics): once a
-    # commit depends on a feature a plain-parquet-list reader would
-    # silently misinterpret (deletion vectors, field-id column
-    # mapping), every subsequent commit names it here, and engines
-    # that don't support it must FAIL the read/write instead of
-    # returning wrong rows. None (absent in the JSON) = base protocol.
-    protocol: dict | None = None
-
-    def to_json(self) -> str:
-        d = dict(self.__dict__)
-        if d.get("protocol") is None:
-            d.pop("protocol", None)
-        return json.dumps(d)
-
-
 def _as_epoch(timestamp) -> float:
     """Epoch seconds from an epoch number, datetime (naive = UTC — the
     commit stamps are ``time.time()``), or ISO-8601 string."""
@@ -158,258 +142,6 @@ class ConstraintViolationError(RuntimeError):
     """A write contained rows that falsify a table CHECK constraint."""
 
 
-class CommitConflictError(RuntimeError):
-    """Another writer published this commit version first. ``append``
-    retries automatically (blind appends never semantically conflict);
-    ``merge``/``delete``/``update`` rebase-retry when the conflicting
-    commits provably commute — no overlap with the rewritten files,
-    schema unchanged, and the concurrently-ADDED files contain no row
-    the operation would have affected (Delta VLDB'20 §3.2 semantics);
-    ``compact`` rebases over any pure file-add. Only genuinely
-    conflicting writes surface — their read was stale, the caller must
-    re-run. ``overwrite`` always surfaces (a full replace has no
-    meaningful rebase)."""
-
-
-class UnsupportedTableFeatureError(RuntimeError):
-    """The table's protocol names a reader/writer feature this engine
-    doesn't implement. Reading anyway would return WRONG rows (e.g. a
-    deletion-vector-unaware reader resurrects deleted rows; a
-    name-matching reader misreads a field-id-renamed table); writing
-    anyway could corrupt invariants a newer writer maintains. Failing
-    loudly is the contract — Delta's protocol-action semantics
-    (VLDB'20 §3.1's metaData/protocol actions)."""
-
-
-# This engine's protocol support. Version 1 = plain cumulative file
-# lists; version 2 = feature-gated (the sets below). A commit whose
-# protocol demands more than these raises UnsupportedTableFeatureError
-# instead of guessing.
-READER_VERSION = 2
-WRITER_VERSION = 2
-SUPPORTED_READER_FEATURES = frozenset(
-    {"deletion_vectors", "column_mapping", "type_widening"}
-)
-SUPPORTED_WRITER_FEATURES = SUPPORTED_READER_FEATURES | frozenset(
-    {
-        "check_constraints",
-        "generated_columns",
-        "identity_columns",
-        "not_null_constraints",
-        "column_defaults",
-    }
-)
-
-
-def check_read_protocol(record: dict, where: str = "") -> None:
-    """Raise unless this engine can CORRECTLY interpret the snapshot the
-    (raw or materialized) commit ``record`` describes. Protocol fields
-    are never delta-encoded, so raw records are fine."""
-    p = record.get("protocol") or {}
-    if not p:
-        return
-    need = int(p.get("min_reader", 1))
-    if need > READER_VERSION:
-        raise UnsupportedTableFeatureError(
-            f"{where}version {record.get('version')} requires reader "
-            f"protocol {need}; this engine supports {READER_VERSION}"
-        )
-    unknown = set(p.get("reader_features") or []) - SUPPORTED_READER_FEATURES
-    if unknown:
-        raise UnsupportedTableFeatureError(
-            f"{where}version {record.get('version')} requires reader "
-            f"feature(s) {sorted(unknown)} this engine does not "
-            "implement — reading anyway would return wrong rows"
-        )
-
-
-def check_write_protocol(record: dict, where: str = "") -> None:
-    """Raise unless this engine may COMMIT on top of ``record``. A
-    writer must understand every reader feature too (it republishes the
-    snapshot) plus the write-side invariants (constraints, generated
-    columns) a concurrent newer writer relies on."""
-    check_read_protocol(record, where)
-    p = record.get("protocol") or {}
-    if not p:
-        return
-    need = int(p.get("min_writer", 1))
-    if need > WRITER_VERSION:
-        raise UnsupportedTableFeatureError(
-            f"{where}version {record.get('version')} requires writer "
-            f"protocol {need}; this engine supports {WRITER_VERSION}"
-        )
-    unknown = set(p.get("writer_features") or []) - SUPPORTED_WRITER_FEATURES
-    if unknown:
-        raise UnsupportedTableFeatureError(
-            f"{where}version {record.get('version')} requires writer "
-            f"feature(s) {sorted(unknown)} this engine does not "
-            "implement — committing anyway could violate invariants "
-            "newer writers maintain"
-        )
-
-
-_COMMIT_FIELDS = frozenset(f.name for f in dataclasses.fields(Commit))
-
-
-def commit_from_record(record: dict, where: str = "") -> Commit:
-    """Materialized record → Commit, with the reader gate applied and
-    UNKNOWN top-level keys tolerated (additive metadata from a newer
-    writer is fine BY CONTRACT — anything semantics-changing must bump
-    the protocol, which gates above; that split is what lets old
-    readers keep working across format growth)."""
-    check_read_protocol(record, where)
-    return Commit(**{k: v for k, v in record.items() if k in _COMMIT_FIELDS})
-
-
-def parse_stat(probe, s: str):
-    """Committed stats are ``str()``-serialized — parse back as the
-    probe value's type; None (keep the file) when unparseable."""
-    import datetime
-
-    try:
-        if isinstance(probe, bool):
-            return s == "True"
-        if isinstance(probe, datetime.datetime):
-            return datetime.datetime.fromisoformat(s)
-        if isinstance(probe, datetime.date):
-            return datetime.date.fromisoformat(s)
-        return type(probe)(s)
-    except (TypeError, ValueError):
-        return None
-
-
-def file_stats_may_match(stats: dict | None, pushed) -> bool:
-    """Stats-based data skipping, shared by the DataSource planner and
-    predicate-scoped compaction: False only when a file's committed
-    [min, max] PROVES no row can satisfy the ``(col, op, value)``
-    conjunction. Absent/unparseable stats keep the file — pruning is
-    an IO reducer, never a correctness input."""
-    for col, op, value in pushed:
-        s = (stats or {}).get(col)
-        if not s or not isinstance(s, (list, tuple)):
-            # absent, or not a [lo, hi] pair (the reserved __bloom__
-            # sidecar pointer lives beside column stats): can't prove
-            # anything here — keep the file
-            continue
-        probe = value[0] if op == "in" else value
-        lo = parse_stat(probe, s[0])
-        hi = parse_stat(probe, s[1])
-        if lo is None or hi is None:
-            continue
-        try:
-            if op == "=" and not (lo <= value <= hi):
-                return False
-            if op == ">" and not hi > value:
-                return False
-            if op == ">=" and not hi >= value:
-                return False
-            if op == "<" and not lo < value:
-                return False
-            if op == "<=" and not lo <= value:
-                return False
-            if op == "in" and not any(lo <= v <= hi for v in value):
-                return False
-        except TypeError:
-            continue  # incomparable types: keep the file
-    return True
-
-
-_FIELD_ID = "parquet.field.id"  # Spark's parquet field-id metadata key
-
-
-def _max_field_id(schema: T.StructType) -> int:
-    return max(
-        (
-            int(f.metadata[_FIELD_ID])
-            for f in schema.fields
-            if f.metadata and _FIELD_ID in f.metadata
-        ),
-        default=0,
-    )
-
-
-def _strip_ids(schema: T.StructType) -> T.StructType:
-    """Drop inherited field-id metadata: a dataframe built FROM table
-    reads (a join of two VersionedTables, say) carries each source's
-    ids in its column metadata — committing them verbatim can collide
-    (two sources both have an id 2). New tables and new columns always
-    get fresh ids of their own."""
-    return T.StructType(
-        [
-            T.StructField(
-                f.name,
-                f.dataType,
-                f.nullable,
-                {k: v for k, v in (f.metadata or {}).items() if k != _FIELD_ID}
-                or None,
-            )
-            for f in schema.fields
-        ]
-    )
-
-
-def _with_field_ids(schema: T.StructType, floor: int = 0) -> T.StructType:
-    """Column mapping (Delta VLDB'20 §4 / Iceberg field IDs): assign a
-    stable integer id to every field that lacks one. Files written
-    under an id-bearing schema carry the ids in their parquet footers
-    (Spark's ``parquet.field.id`` support), so the read path can match
-    columns BY ID — which is what makes ``rename_column`` a pure
-    metadata commit: old files keep their old physical column names,
-    the id still finds them. ``floor`` is the table's id high-water
-    mark (commit stats ``max_field_id``): new ids start above it so a
-    dropped column's id is never reissued."""
-    nxt = max(_max_field_id(schema), floor) + 1
-    fields = []
-    for f in schema.fields:
-        md = dict(f.metadata or {})
-        if _FIELD_ID not in md:
-            md[_FIELD_ID] = nxt
-            nxt += 1
-        fields.append(T.StructField(f.name, f.dataType, f.nullable, md))
-    return T.StructType(fields)
-
-
-_INT_RANK = {T.ByteType: 1, T.ShortType: 2, T.IntegerType: 3, T.LongType: 4}
-
-
-def widened_type(a: T.DataType, b: T.DataType) -> T.DataType | None:
-    """The wider of two types when one SAFELY widens to the other (every
-    value of the narrow type is exactly representable in the wide one),
-    else None. This is the Delta-type-widening set restricted to what
-    Spark 4's parquet readers read losslessly through a widened schema
-    without rewriting old (narrow) files — verified: int32 files read as
-    LONG, float as DOUBLE, decimal(8,2) as decimal(12,2), in both
-    name- and field-id-matching modes:
-
-    * integer chain byte → short → int → long;
-    * float → double;
-    * byte/short/int → double (exact: a 53-bit mantissa holds int32);
-    * decimal(p1,s1) → decimal(p2,s2) when s2 >= s1 and
-      p2 - s2 >= p1 - s1 (no digit of either side is ever dropped).
-
-    Narrowing and everything else (string↔number, long→double which
-    rounds above 2^53, timestamp changes) returns None — the caller
-    rejects loudly."""
-    if a == b:
-        return a
-    ra, rb = _INT_RANK.get(type(a)), _INT_RANK.get(type(b))
-    if ra is not None and rb is not None:
-        return a if ra >= rb else b
-    for narrow, wide in ((a, b), (b, a)):
-        if isinstance(wide, T.DoubleType) and (
-            isinstance(narrow, T.FloatType)
-            or _INT_RANK.get(type(narrow), 9) <= 3
-        ):
-            return wide
-    if isinstance(a, T.DecimalType) and isinstance(b, T.DecimalType):
-        for narrow, wide in ((a, b), (b, a)):
-            if (
-                wide.scale >= narrow.scale
-                and wide.precision - wide.scale
-                >= narrow.precision - narrow.scale
-            ):
-                return wide
-    return None
 
 
 def _attach_ids(df: DataFrame, schema: T.StructType) -> DataFrame:
@@ -420,15 +152,15 @@ def _attach_ids(df: DataFrame, schema: T.StructType) -> DataFrame:
     columns (CDF change-type) pass through id-free; no-op for id-free
     (legacy) schemas."""
     ids = {
-        f.name: int(f.metadata[_FIELD_ID])
+        f.name: int(f.metadata[FIELD_ID])
         for f in schema.fields
-        if f.metadata and _FIELD_ID in f.metadata
+        if f.metadata and FIELD_ID in f.metadata
     }
     if not ids or not any(c in ids for c in df.columns):
         return df
     return df.select(
         *[
-            F.col(c).alias(c, metadata={_FIELD_ID: ids[c]}) if c in ids else F.col(c)
+            F.col(c).alias(c, metadata={FIELD_ID: ids[c]}) if c in ids else F.col(c)
             for c in df.columns
         ]
     )
@@ -513,164 +245,6 @@ def _footer_file_stats(
     return {key: stats for key, stats in results if stats}
 
 
-class LocalLinkCommitStore:
-    """The default commit primitive: POSIX hardlink put-if-absent.
-
-    THE contract every backend must meet (this is the single seam the
-    whole format's optimistic concurrency rests on):
-
-    ``put_if_absent(target, payload) -> bool`` publishes the COMPLETE
-    payload at ``target`` if and only if nothing exists there, ATOMICALLY
-    with respect to every concurrent caller — of all racers for one
-    target, exactly one returns True; the rest return False and the
-    stored bytes are exactly the winner's. Readers must never observe a
-    partial payload. A crash mid-call must leave either nothing or the
-    full payload at ``target``.
-
-    Local/POSIX (this class, also correct for HDFS via create-no-
-    overwrite): write a tempfile in the same directory, then
-    ``os.link`` to the target — link is atomic and fails with EEXIST
-    for losers.
-
-    S3-class object stores: a bare PUT is last-writer-wins and a
-    HEAD-then-PUT race loses commits SILENTLY — do NOT point this
-    engine at S3 through a filesystem shim. Use
-    ``pipeline/objectstore.py::ConditionalPutCommitStore``, which
-    implements this seam over the store's conditional write (S3
-    ``If-None-Match: *``, GCS ``x-goog-if-generation-match: 0``, ADLS
-    ETag preconditions) including ambiguous-retry ownership resolution;
-    or an external coordinator (the DynamoDB lock table Delta's
-    S3DynamoDBLogStore uses). ``tests/test_logcodec.py`` carries a
-    conformance storm (``storm_commit_store``) that any new backend
-    must pass — a fake non-atomic (check-then-put) store and a
-    precondition-violating object store both demonstrably fail it."""
-
-    def put_if_absent(self, target: str, payload: str) -> bool:
-        d = os.path.dirname(target)
-        os.makedirs(d, exist_ok=True)
-        if os.path.exists(target):
-            return False
-        fd, tmp = tempfile.mkstemp(dir=d, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            f.write(payload)
-        try:
-            os.link(tmp, target)
-            return True
-        except FileExistsError:
-            return False
-        finally:
-            os.unlink(tmp)
-
-
-COMMIT_STORE = LocalLinkCommitStore()
-
-
-def storm_commit_store(store, scratch_dir: str, racers: int = 16) -> None:
-    """Conformance check for the put-if-absent contract: ``racers``
-    threads race one target; exactly one may win and the stored bytes
-    must be the winner's. Raises AssertionError on any violation —
-    point it at a candidate backend before trusting commits to it."""
-    import threading
-
-    target = os.path.join(scratch_dir, "storm_commit.json")
-    results: list[tuple[int, bool]] = []
-    barrier = threading.Barrier(racers)
-
-    def race(i: int) -> None:
-        barrier.wait()
-        results.append((i, store.put_if_absent(target, f"payload-{i}")))
-
-    threads = [threading.Thread(target=race, args=(i,)) for i in range(racers)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    winners = [i for i, won in results if won]
-    assert len(winners) == 1, (
-        f"put_if_absent violated: {len(winners)} of {racers} racers "
-        "believe they won the same commit (lost-commit hazard)"
-    )
-    with open(target) as f:
-        assert f.read() == f"payload-{winners[0]}", (
-            "stored payload is not the winner's — torn/overwritten commit"
-        )
-
-
-def publish_commit_file(log_dir: str, version: int, payload: str) -> None:
-    """Atomic put-if-absent commit publish, shared by every writer of
-    the ``versioned`` log (the native API here and both DataSource
-    writers in ``sources/datasource.py``). The atomicity itself is the
-    commit-store seam's contract (``LocalLinkCommitStore``): two racing
-    writers can never both believe they own a version — a bare rename
-    or blind PUT would let the second silently overwrite the first (a
-    lost commit). A crash before publish leaves the previous version
-    intact (data files without a commit record are invisible garbage,
-    as in any log-structured format).
-
-    Checkpoint-cadence versions also refresh the ``_last_checkpoint``
-    pointer (Delta's file of the same name), which turns
-    latest-version resolution from an O(total commits) directory
-    listing into an O(commits since checkpoint) existence probe — the
-    snapshot-read tax at 10^5–10^6 commits is the listing itself."""
-    target = os.path.join(log_dir, f"{version:020d}.json")
-    if not COMMIT_STORE.put_if_absent(target, payload):
-        raise CommitConflictError(
-            f"concurrent write detected: version {version} exists"
-        )
-    if version % logcodec.CHECKPOINT_EVERY == 0:
-        write_log_pointer(log_dir, version)
-
-
-LAST_CHECKPOINT_FILE = "_last_checkpoint"
-
-
-def write_log_pointer(log_dir: str, version: int) -> None:
-    """Atomically advance ``_last_checkpoint`` to ``version`` (never
-    backwards — a slow writer must not regress a newer pointer). The
-    pointer is advisory: every reader falls back to a full listing when
-    it is missing or stale, so a crash between commit publish and
-    pointer write costs nothing but probe length."""
-    p = os.path.join(log_dir, LAST_CHECKPOINT_FILE)
-    cur = read_log_pointer(log_dir)
-    if cur is not None and cur >= version:
-        return
-    fd, tmp = tempfile.mkstemp(dir=log_dir, suffix=".ptrtmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump({"version": version}, f)
-    os.replace(tmp, p)
-
-
-def read_log_pointer(log_dir: str) -> int | None:
-    try:
-        with open(os.path.join(log_dir, LAST_CHECKPOINT_FILE)) as f:
-            return int(json.load(f)["version"])
-    except (FileNotFoundError, ValueError, KeyError, TypeError):
-        return None
-
-
-def latest_version_in(log_dir: str) -> int:
-    """Resolve the newest commit version: probe forward from the
-    ``_last_checkpoint`` pointer (versions are dense — every commit is
-    parent+1 and commit files are never deleted), falling back to a
-    full directory listing for legacy/pointerless logs. Cost with a
-    pointer: O(commits since the last checkpoint) existence checks."""
-    ptr = read_log_pointer(log_dir)
-    if ptr is not None and os.path.exists(
-        os.path.join(log_dir, f"{ptr:020d}.json")
-    ):
-        v = ptr
-        while os.path.exists(os.path.join(log_dir, f"{v + 1:020d}.json")):
-            v += 1
-        return v
-    versions = [
-        int(f[: -len(".json")])
-        for f in os.listdir(log_dir)
-        if f.endswith(".json") and not f.endswith(".ptrtmp")
-    ]
-    if not versions:
-        raise FileNotFoundError(f"no commits in {log_dir}")
-    return max(versions)
-
 
 class VersionedTable:
     """A versioned parquet table rooted at ``path``."""
@@ -678,7 +252,7 @@ class VersionedTable:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = os.path.abspath(path)
-        self.log_dir = os.path.join(self.path, "_log")
+        self.log_dir = log.dir_of(self.path)
         self.data_dir = os.path.join(self.path, "_data")
         self.cdf_dir = os.path.join(self.path, "_cdf")
         self.dv_dir = os.path.join(self.path, "_dv")
@@ -688,46 +262,23 @@ class VersionedTable:
 
     @staticmethod
     def exists(path: str) -> bool:
-        log = os.path.join(os.path.abspath(path), "_log")
-        return os.path.isdir(log) and any(
-            f.endswith(".json") for f in os.listdir(log)
+        log_dir = log.dir_of(path)
+        return os.path.isdir(log_dir) and any(
+            f.endswith(".json") for f in os.listdir(log_dir)
         )
 
     def latest_version(self) -> int:
         return latest_version_in(self.log_dir)
 
     def _commit_path(self, version: int) -> str:
-        return os.path.join(self.log_dir, f"{version:020d}.json")
-
-    def patch_latest_stats(self, extra: dict) -> None:
-        """Merge ``extra`` into the LATEST commit's stats by patching
-        the RAW on-disk record in place (atomic replace; single-writer,
-        same guarantee as the log itself). Views stamp their refresh
-        watermarks this way — patching raw keeps a delta-encoded
-        record encoded (rewriting the materialized Commit would
-        silently revert the log to full lists)."""
-        path = self._commit_path(self.latest_version())
-        with open(path) as f:
-            raw = json.loads(f.read())
-        raw["stats"] = {**(raw.get("stats") or {}), **extra}
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(json.dumps(raw))
-        os.replace(tmp, path)
-
-    def _materialized_record(self, version: int) -> dict:
-        """The commit record with full file lists — delta-encoded
-        records (see ``logcodec``) resolve through the parent chain,
-        bounded by the checkpoint cadence."""
-        with open(self._commit_path(version)) as f:
-            raw = json.loads(f.read())
-        return logcodec.materialize(raw, self._materialized_record)
+        return log.commit_path(self.log_dir, version)
 
     def get_commit(self, version: int | None = None) -> Commit:
         v = self.latest_version() if version is None else version
-        return commit_from_record(
-            self._materialized_record(v), where=f"{self.path}: "
-        )
+        c = log.read_commit(self.log_dir, v, where=f"{self.path}: ")
+        if version is None and c.metadata is None:
+            c.metadata = log.legacy_metadata(self.log_dir)
+        return c
 
     def history(self) -> list[Commit]:
         # sequential forward materialization: each record decodes
@@ -735,16 +286,12 @@ class VersionedTable:
         # per-version parent-chain walk
         out: list[Commit] = []
         prev: dict | None = None
-        for f in sorted(os.listdir(self.log_dir)):
-            if not f.endswith(".json"):
-                continue
-            with open(os.path.join(self.log_dir, f)) as fh:
-                raw = json.loads(fh.read())
-            rec = logcodec.materialize(
-                raw,
-                lambda v: prev
-                if prev is not None and prev["version"] == v
-                else self._materialized_record(v),
+        for v in log.versions(self.log_dir):
+            rec = log.materialize(
+                log.read_raw(self.log_dir, v),
+                lambda u: prev
+                if prev is not None and prev["version"] == u
+                else log.read_record(self.log_dir, u),
             )
             out.append(commit_from_record(rec, where=f"{self.path}: "))
             prev = rec
@@ -770,66 +317,6 @@ class VersionedTable:
             )
         return best
 
-    def _next_protocol(
-        self,
-        commit: Commit,
-        prev_protocol: dict | None,
-        widens: bool = False,
-    ) -> dict | None:
-        """The protocol this commit must carry: predecessor's features
-        (monotone — a feature once required never un-requires; restore
-        and rebase keep it) ∪ a preset on the commit itself (clone
-        carries the source's) ∪ what the commit's CONTENT demands:
-        deletion vectors present → a DV-unaware reader would resurrect
-        deleted rows; a rename/drop commit → files must be read by
-        parquet field id, not name; live CHECK constraints / generated
-        columns → an unaware writer would commit violating/NULL rows.
-        Returns None (no protocol stamped) while nothing beyond plain
-        cumulative file lists is in play."""
-        rf: set[str] = set()
-        wf: set[str] = set()
-        for p in (prev_protocol, commit.protocol):
-            if p:
-                rf |= set(p.get("reader_features") or [])
-                wf |= set(p.get("writer_features") or [])
-        if commit.dv_files:
-            rf.add("deletion_vectors")
-        if commit.op in ("rename_column", "drop_column"):
-            rf.add("column_mapping")
-        # a widened column leaves NARROW pages under a WIDE schema: a
-        # reader trusting parquet footer types over the commit schema
-        # would hand back int32 frames for a bigint column (Delta's
-        # typeWidening reader+writer feature, same rationale). `widens`
-        # covers the EVOLUTION path too — append/merge/copy_into whose
-        # _merged_schema adopted a wider type (op stays "append"/…)
-        # produce the same narrow-pages-under-wide-schema state
-        if commit.op == "widen_column" or widens:
-            rf.add("type_widening")
-        if self.constraints():
-            wf.add("check_constraints")
-        if self.generated_columns():
-            wf.add("generated_columns")
-        # an unaware writer would append without assigning ids /
-        # advancing the high-water (identity), or commit NULL rows a
-        # declared NOT NULL column forbids — both must refuse loudly
-        if self.identity_columns():
-            wf.add("identity_columns")
-        if self.not_null_columns():
-            wf.add("not_null_constraints")
-        if self.column_defaults():
-            wf.add("column_defaults")
-        # every reader feature is implicitly a writer feature: a writer
-        # republishes the snapshot, so it must understand them all
-        wf |= rf
-        if not rf and not wf:
-            return None
-        return {
-            "min_reader": 2 if rf else 1,
-            "min_writer": 2,
-            "reader_features": sorted(rf),
-            "writer_features": sorted(wf),
-        }
-
     def upgrade_protocol(
         self,
         reader_features: list[str] | tuple = (),
@@ -837,16 +324,12 @@ class VersionedTable:
     ) -> int:
         """Explicit, commit-atomic protocol upgrade — a metadata-only
         commit (op ``set_protocol``, same snapshot, no CDF) that adds
-        the named features NOW rather than with the next data commit.
-        The use case is closing the sidecar-stamp lag: ``add_constraint``
-        / ``add_generated_column`` write their sidecar immediately but
-        the writer-feature advertisement otherwise lands only with the
-        next commit — ``add_constraint(...); upgrade_protocol(
-        writer_features=["check_constraints"])`` closes that window for
-        fleets with mixed engine versions. Features must be ones THIS
-        engine implements: advertising an unimplemented feature would
-        brick the table for its own writer (the crafted-log tests do
-        exactly that on purpose, via raw commits)."""
+        the named features NOW rather than when the table's content
+        first demands them — for fleets with mixed engine versions.
+        Features must be ones THIS engine implements: advertising an
+        unimplemented feature would brick the table for its own writer
+        (the crafted-log tests do exactly that on purpose, via raw
+        commits)."""
         bad = (set(reader_features) - SUPPORTED_READER_FEATURES) | (
             set(writer_features) - SUPPORTED_WRITER_FEATURES
         )
@@ -855,25 +338,39 @@ class VersionedTable:
                 f"cannot advertise feature(s) {sorted(bad)} this engine "
                 "does not implement"
             )
-        # metadata-only: a version collision just means re-reading the
-        # fresh snapshot and re-publishing — trivially commutative
+        return self._commit_same_snapshot(
+            "set_protocol",
+            lambda prev: {
+                "protocol": {
+                    "reader_features": sorted(reader_features),
+                    "writer_features": sorted(writer_features),
+                }
+            },
+        )
+
+    def _commit_same_snapshot(self, op: str, build) -> int:
+        """Publish a commit that keeps the latest snapshot's files — a
+        DDL or protocol commit. ``build(prev)`` returns the fields that
+        change (``metadata``, ``schema_json``, ``protocol``, and
+        ``stats`` keys to add) or raises to refuse. A version collision
+        re-reads the fresh snapshot and builds again, so any validation
+        ``build`` runs covers the snapshot the commit lands on."""
         for attempt in range(6):
             prev = self.get_commit()
+            kw = build(prev)
             try:
                 self._write_commit(
                     Commit(
                         prev.version + 1,
-                        "set_protocol",
+                        op,
                         prev.files,
                         [],
-                        prev.schema_json,
+                        kw.get("schema_json", prev.schema_json),
                         time.time(),
-                        self._carry_stats(prev, prev.files),
+                        self._carry_stats(prev, prev.files, kw.get("stats")),
                         dv_files=list(prev.dv_files),
-                        protocol={
-                            "reader_features": sorted(reader_features),
-                            "writer_features": sorted(writer_features),
-                        },
+                        protocol=kw.get("protocol"),
+                        metadata=kw.get("metadata"),
                     )
                 )
                 return prev.version + 1
@@ -883,148 +380,15 @@ class VersionedTable:
                 time.sleep(0.05 * (attempt + 1))
 
     def _write_commit(self, commit: Commit) -> None:
-        """Atomic put-if-absent publish (see ``publish_commit_file``).
-        Every commit re-stamps the field-id high-water mark from its own
-        schema ∨ the carried value ∨ the PREDECESSOR's carried value
-        (so a hand-built stats dict — compact/purge — can never regress
-        it; a dropped column's id must never be reissued), keeping
-        ``_next_field_floor`` exact across drops."""
-        m = max(
-            _max_field_id(T.StructType.fromJson(json.loads(commit.schema_json))),
-            int(commit.stats.get("max_field_id", 0)),
-        )
-        # protocol: gate on the PREDECESSOR (may we build on it at
-        # all?), then stamp this commit with its features ∪ whatever
-        # this commit newly requires — upgrades are monotone, never
-        # dropped, so a version-v reader gate covers v's whole history.
-        prev_protocol: dict | None = None
-        if commit.version > 0:
-            try:
-                with open(self._commit_path(commit.version - 1)) as f:
-                    prev_raw = json.loads(f.read())
-            except FileNotFoundError:
-                prev_raw = {}
-            check_write_protocol(prev_raw, where=f"{self.path}: ")
-            prev_protocol = prev_raw.get("protocol")
-            m = max(
-                m, int((prev_raw.get("stats") or {}).get("max_field_id", 0))
-            )
-            # monotone in-commit timestamps (Delta inCommitTimestamps):
-            # commits stamp max(now, prev_ts + 1ms), so TIMESTAMP AS OF
-            # resolution (version_at's last-at-or-before rule) stays
-            # well-defined even when a fleet's writer clocks skew — a
-            # backdated wall clock can otherwise make version n+1
-            # "older" than n and timestamp travel non-deterministic
-            commit.ts = max(commit.ts, float(prev_raw.get("ts", 0.0)) + 1e-3)
-            # the identity high-water survives EVERY commit kind and
-            # never regresses (a RESTORE to an older version must not
-            # reissue ids of restored-away rows) — merge per column,
-            # farther-along-the-step-direction wins. Scalar stats keys
-            # are never delta-encoded, so prev_raw carries them whole.
-            prev_ident = (prev_raw.get("stats") or {}).get("identity") or {}
-            if prev_ident:
-                cur = dict(commit.stats.get("identity") or {})
-                defs = self.identity_columns()
-                for c, v in prev_ident.items():
-                    if c in cur:
-                        step = defs.get(c, (1, 1))[1]
-                        cur[c] = (
-                            max(int(cur[c]), int(v))
-                            if step >= 0
-                            else min(int(cur[c]), int(v))
-                        )
-                    else:
-                        cur[c] = int(v)
-                commit.stats["identity"] = cur
-        if m:
-            commit.stats["max_field_id"] = m
-        # no vectors -> no live DV entries: clear any carried counts so
-        # current_row_count never subtracts deletions a compact/purge
-        # already materialized
-        if not commit.dv_files:
-            commit.stats.pop("dv_counts", None)
-        # checkpoint versions fold the COPY INTO loaded-file registry
-        # forward: the commit carries the UNION of every loaded
-        # identity at-or-below it, so _copy_into_loaded walks only
-        # commits since the last checkpoint instead of full history
-        # (at NRT cadence a year-old table otherwise pays ~500k commit
-        # reads per COPY INTO). Stamped even when empty — the stamp is
-        # the stop marker. The walk reads RAW records (copy_into keys
-        # are scalar stats, never delta-encoded) and itself stops at
-        # the previous stamp, so the fold is O(CHECKPOINT_EVERY)
-        # amortized (one full walk at the first post-upgrade
-        # checkpoint of a legacy log).
-        if commit.version % logcodec.CHECKPOINT_EVERY:
-            # the stamp is the walk's stop marker: a stray carried copy
-            # at a non-checkpoint version would stop the walk with a
-            # stale union (no builder carries it today — belt/braces)
-            commit.stats.pop("copy_into_registry", None)
-        if (
-            commit.version > 0
-            and commit.version % logcodec.CHECKPOINT_EVERY == 0
-        ):
-            reg = set(
-                (commit.stats.get("copy_into") or {}).get("loaded") or []
-            )
-            v = commit.version - 1
-            while v >= 0:
-                st = self._raw_commit_stats(v)
-                ci = st.get("copy_into")
-                if ci:
-                    reg.update(ci.get("loaded") or [])
-                prior = st.get("copy_into_registry")
-                if prior is not None:
-                    reg.update(prior)
-                    break
-                v -= 1
-            commit.stats["copy_into_registry"] = sorted(reg)
-        # widening detection vs the PREDECESSOR schema (not just the
-        # widen_column op): schema-evolution widening during append/
-        # merge/copy_into must gate readers identically — old narrow
-        # pages sit under the new wide schema either way. schema_json
-        # is a scalar record key (never delta-encoded), so prev_raw
-        # carries the full predecessor schema.
-        widens = False
-        prev_sj = prev_raw.get("schema_json") if commit.version > 0 else None
-        if prev_sj and prev_sj != commit.schema_json:
-            prev_by = {
-                f.name: f.dataType
-                for f in T.StructType.fromJson(json.loads(prev_sj)).fields
-            }
-            for f in T.StructType.fromJson(
-                json.loads(commit.schema_json)
-            ).fields:
-                p = prev_by.get(f.name)
-                if (
-                    p is not None
-                    and p != f.dataType
-                    and widened_type(p, f.dataType) == f.dataType
-                ):
-                    widens = True
-                    break
-        commit.protocol = self._next_protocol(
-            commit, prev_protocol, widens=widens
-        )
-        parent: dict | None = None
-        if commit.version > 0 and commit.version % logcodec.CHECKPOINT_EVERY:
-            # checkpoint versions store full lists — don't pay the
-            # parent-chain walk for a parent encode() won't look at
-            try:
-                parent = self._materialized_record(commit.version - 1)
-            except FileNotFoundError:
-                parent = None
-        record = dict(commit.__dict__)
-        if record.get("protocol") is None:
-            # base-protocol tables keep the pre-gate JSON shape — old
-            # logs and new plain tables are byte-compatible
-            record.pop("protocol", None)
-        payload = logcodec.encode(record, parent)
-        publish_commit_file(self.log_dir, commit.version, json.dumps(payload))
+        """Publish through the one log writer (``log.commit``: protocol
+        gate, carry rules, delta encoding, put-if-absent), then keep a
+        catalog-registered table's manifest in step."""
+        # unset protocol/metadata stay out of the record: prepare derives them
+        record = {k: v for k, v in commit.__dict__.items() if v is not None}
+        log.commit(self.log_dir, record, where=f"{self.path}: ")
         reg = self._read_registration()
         if reg is not None:
-            self._sync_registration(
-                commit, reg, parent_files=parent["files"] if parent else None
-            )
+            self._sync_registration(commit, reg)
 
     # -- metastore registration (O5) ---------------------------------------
 
@@ -1096,9 +460,7 @@ class VersionedTable:
         except OSError:  # cross-device / fs without hardlinks
             shutil.copy2(fpath, dst)
 
-    def _sync_registration(
-        self, commit: Commit, reg: dict, parent_files: list[str] | None = None
-    ) -> None:
+    def _sync_registration(self, commit: Commit, reg: dict) -> None:
         """Maintain ``_current/`` (hardlink manifest dir) + the catalog
         entry for a registered table.
 
@@ -1118,11 +480,12 @@ class VersionedTable:
         (register compacted silver, not merge-heavy bronze)."""
         cur = self._current_dir()
         prev_synced = reg.get("synced_version")
-        if parent_files is None and prev_synced == commit.version - 1:
+        parent_files = None
+        if prev_synced == commit.version - 1:
             try:
-                parent_files = self._materialized_record(prev_synced)["files"]
+                parent_files = log.read_record(self.log_dir, prev_synced)["files"]
             except FileNotFoundError:
-                parent_files = None
+                pass
         incremental = (
             os.path.isdir(cur)
             and prev_synced == commit.version - 1
@@ -1189,21 +552,31 @@ class VersionedTable:
             )
         os.rename(mtmp, self._registration_path())
 
-    # -- IO ----------------------------------------------------------------
+    # -- table metadata (rides every commit; see log.prepare) -------------
+
+    def _metadata(self) -> dict:
+        return log.current_metadata(self.log_dir)
+
+    def _update_metadata(self, op: str, key: str, change) -> None:
+        """One metadata-only commit that replaces metadata entry ``key``
+        (a dict) with ``change(prev, copy of the entry)``, which may
+        raise to refuse; an emptied entry leaves the dict."""
+
+        def build(prev: Commit) -> dict:
+            value = change(prev, dict(prev.metadata.get(key) or {}))
+            md = {k: v for k, v in prev.metadata.items() if k != key}
+            if value:
+                md[key] = value
+            return {"metadata": md}
+
+        self._commit_same_snapshot(op, build)
 
     # -- CHECK constraints (Delta `ALTER TABLE ADD CONSTRAINT` parity;
     # the reference's sink has none, but a silver-zone consumer expects
     # the invariant to hold table-wide, not per-producer) ----------------
 
-    def _constraints_path(self) -> str:
-        return os.path.join(self.path, "_constraints.json")
-
     def constraints(self) -> dict[str, str]:
-        try:
-            with open(self._constraints_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+        return dict(self._metadata().get("constraints") or {})
 
     def add_constraint(self, name: str, predicate_sql: str) -> None:
         """Declare a CHECK constraint. Like Delta, the CURRENT snapshot is
@@ -1218,12 +591,14 @@ class VersionedTable:
                 "NOT NULL columns — use set_not_null(col) / ALTER TABLE "
                 "... ALTER COLUMN c SET NOT NULL"
             )
-        cons = self.constraints()
-        if name in cons:
-            raise ValueError(f"constraint {name!r} already exists")
-        self._probe_violations({name: predicate_sql}, self.read())
-        cons[name] = predicate_sql
-        self._write_constraints(cons)
+
+        def add(prev: Commit, cons: dict) -> dict:
+            if name in cons:
+                raise ValueError(f"constraint {name!r} already exists")
+            self._probe_violations({name: predicate_sql}, self._snapshot(prev))
+            return {**cons, name: predicate_sql}
+
+        self._update_metadata("add_constraint", "constraints", add)
 
     def drop_constraint(self, name: str) -> None:
         if name.startswith("notnull:"):
@@ -1232,19 +607,16 @@ class VersionedTable:
                 "drop_not_null(col) / ALTER TABLE ... ALTER COLUMN c "
                 "DROP NOT NULL"
             )
-        cons = self.constraints()
-        if name not in cons:
-            raise ValueError(
-                f"no CHECK constraint {name!r} (have {sorted(cons)})"
-            )
-        cons.pop(name)
-        self._write_constraints(cons)
 
-    def _write_constraints(self, cons: dict[str, str]) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.path, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(cons, f)
-        os.rename(tmp, self._constraints_path())
+        def drop(prev: Commit, cons: dict) -> dict:
+            if name not in cons:
+                raise ValueError(
+                    f"no CHECK constraint {name!r} (have {sorted(cons)})"
+                )
+            cons.pop(name)
+            return cons
+
+        self._update_metadata("drop_constraint", "constraints", drop)
 
     # -- NOT NULL column constraints (Delta's SET/DROP NOT NULL) ----------
 
@@ -1254,6 +626,53 @@ class VersionedTable:
             for k in self.constraints()
             if k.startswith("notnull:")
         )
+
+    def _not_null_commit(self, op: str, col: str, not_null: bool) -> int:
+        """One commit that flips ``col``'s nullability in the schema and
+        adds or removes its ``notnull:`` constraint entry together."""
+        name = f"notnull:{col}"
+
+        def build(prev: Commit) -> dict:
+            schema = T.StructType.fromJson(json.loads(prev.schema_json))
+            if col not in {f.name for f in schema.fields}:
+                raise ValueError(f"column {col!r} does not exist")
+            cons = dict(prev.metadata.get("constraints") or {})
+            if not_null:
+                if name in cons and not schema[col].nullable:
+                    raise ValueError(f"column {col!r} is already NOT NULL")
+                if name not in cons:
+                    self._probe_violations(
+                        {name: f"{col} IS NOT NULL"}, self._snapshot(prev)
+                    )
+                cons[name] = f"{col} IS NOT NULL"
+            else:
+                if name not in cons:
+                    raise ValueError(
+                        f"column {col!r} has no NOT NULL constraint "
+                        f"(have {self.not_null_columns()})"
+                    )
+                cons.pop(name)
+            md = {k: v for k, v in prev.metadata.items() if k != "constraints"}
+            if cons:
+                md["constraints"] = cons
+            new_schema = T.StructType(
+                [
+                    T.StructField(
+                        f.name,
+                        f.dataType,
+                        not not_null if f.name == col else f.nullable,
+                        f.metadata,
+                    )
+                    for f in schema.fields
+                ]
+            )
+            return {
+                "metadata": md,
+                "schema_json": new_schema.json(),
+                "stats": {"not_null" if not_null else "dropped_not_null": col},
+            }
+
+        return self._commit_same_snapshot(op, build)
 
     def set_not_null(self, col: str) -> int:
         """``ALTER TABLE ... ALTER COLUMN col SET NOT NULL`` (Delta's
@@ -1265,120 +684,40 @@ class VersionedTable:
         future data-file write is then gated through the same
         single-ORed constraint probe, so a NULL row fails LOUDLY before
         any file lands; and the committed schema flips the field to
-        non-nullable so readers see the invariant. Clone carries it
-        (the constraints sidecar travels); the protocol gate declares
-        ``not_null_constraints`` so an unaware writer refuses rather
-        than committing NULL rows."""
-        prev = self.get_commit()
-        schema = T.StructType.fromJson(json.loads(prev.schema_json))
-        if col not in {f.name for f in schema.fields}:
-            raise ValueError(f"column {col!r} does not exist")
-        name = f"notnull:{col}"
-        cons = self.constraints()
-        already = name in cons
-        if already and not schema[col].nullable:
-            raise ValueError(f"column {col!r} is already NOT NULL")
-        if not already:
-            self._probe_violations({name: f"{col} IS NOT NULL"}, self.read())
-            cons[name] = f"{col} IS NOT NULL"
-            self._write_constraints(cons)
-        new_schema = T.StructType(
-            [
-                T.StructField(
-                    f.name,
-                    f.dataType,
-                    False if f.name == col else f.nullable,
-                    f.metadata,
-                )
-                for f in schema.fields
-            ]
-        )
-        v = prev.version + 1
-        self._write_commit(
-            Commit(
-                v,
-                "set_not_null",
-                prev.files,
-                [],
-                new_schema.json(),
-                time.time(),
-                self._carry_stats(prev, prev.files, {"not_null": col}),
-                dv_files=list(prev.dv_files),
-            )
-        )
-        return v
+        non-nullable so readers see the invariant. The constraint entry
+        and the schema flip land in ONE commit; clone carries it with
+        the rest of the commit's metadata, and the protocol gate
+        declares ``not_null_constraints`` so an unaware writer refuses
+        rather than committing NULL rows."""
+        return self._not_null_commit("set_not_null", col, True)
 
     def drop_not_null(self, col: str) -> int:
-        """Inverse of ``set_not_null``. Ordering matters: the
-        nullable=True schema commit publishes FIRST, the enforcement
-        entry leaves the constraints sidecar SECOND — a crash (or a
-        concurrent writer) between the two then leaves the CONSERVATIVE
-        state (schema already nullable, constraint still enforced),
-        never a schema that promises non-nullability with enforcement
-        gone. ``set_not_null`` is the mirror image (sidecar first)."""
-        name = f"notnull:{col}"
-        cons = self.constraints()
-        if name not in cons:
-            raise ValueError(
-                f"column {col!r} has no NOT NULL constraint "
-                f"(have {self.not_null_columns()})"
-            )
-        prev = self.get_commit()
-        schema = T.StructType.fromJson(json.loads(prev.schema_json))
-        new_schema = T.StructType(
-            [
-                T.StructField(
-                    f.name,
-                    f.dataType,
-                    True if f.name == col else f.nullable,
-                    f.metadata,
-                )
-                for f in schema.fields
-            ]
-        )
-        v = prev.version + 1
-        self._write_commit(
-            Commit(
-                v,
-                "drop_not_null",
-                prev.files,
-                [],
-                new_schema.json(),
-                time.time(),
-                self._carry_stats(prev, prev.files, {"dropped_not_null": col}),
-                dv_files=list(prev.dv_files),
-            )
-        )
-        cons.pop(name)
-        self._write_constraints(cons)
-        return v
+        """Inverse of ``set_not_null``: the nullable schema and the
+        removal of the enforcement entry publish in ONE commit, so no
+        reader or writer ever sees one without the other."""
+        return self._not_null_commit("drop_not_null", col, False)
 
     # -- table properties (Delta TBLPROPERTIES analog) ---------------------
 
-    def _properties_path(self) -> str:
-        return os.path.join(self.path, "_properties.json")
-
     def properties(self) -> dict[str, str]:
-        """Free-form table properties (Delta TBLPROPERTIES analog).
-        Load-bearing keys: ``versioned.deletedFileRetentionHours`` — a
+        """Free-form table properties (Delta TBLPROPERTIES analog),
+        carried in each commit's metadata; every change is one
+        metadata-only commit. Load-bearing keys:
+        ``versioned.deletedFileRetentionHours`` — a
         float-string used as ``vacuum``'s default ``retain_hours`` when
         the caller passes none (Delta's
         ``delta.deletedFileRetentionDuration`` shape);
         ``versioned.bloomFilterColumns`` (comma-separated) +
         ``versioned.bloomFilterFpp`` — per-file bloom sidecars for
         equality skipping on unclustered columns (see
-        ``pipeline/bloom.py``; Databricks' bloom index analog)."""
-        try:
-            with open(self._properties_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+        ``pipeline/bloom.py``; Databricks' bloom index analog);
+        ``versioned.identityColumns`` — identity column definitions."""
+        return dict(self._metadata().get("properties") or {})
 
     def set_properties(self, props: dict[str, str]) -> None:
         """Upsert properties. Values are stored as strings (Delta does
         the same); known load-bearing keys are validated eagerly so a
         typo fails at SET time, not at the eventual vacuum."""
-        cur = self.properties()
         for k, v in props.items():
             if k == "versioned.deletedFileRetentionHours":
                 if float(v) < 0:
@@ -1415,27 +754,28 @@ class VersionedTable:
                         "'__bloom__' is the reserved sidecar-pointer key "
                         "and cannot be a bloom-indexed column"
                     )
-            cur[str(k)] = str(v)
-        self._write_properties(cur)
+        self._update_metadata(
+            "set_properties",
+            "properties",
+            lambda prev, cur: {**cur, **{str(k): str(v) for k, v in props.items()}},
+        )
 
     def unset_properties(self, keys: list[str]) -> None:
-        cur = self.properties()
-        missing = [k for k in keys if k not in cur]
-        if missing:
-            raise ValueError(f"no such propert{'y' if len(missing)==1 else 'ies'}: {missing}")
-        for k in keys:
-            del cur[k]
-        self._write_properties(cur)
+        def unset(prev: Commit, cur: dict) -> dict:
+            missing = [k for k in keys if k not in cur]
+            if missing:
+                raise ValueError(f"no such propert{'y' if len(missing)==1 else 'ies'}: {missing}")
+            return {k: v for k, v in cur.items() if k not in keys}
 
-    def _write_properties(self, props: dict[str, str]) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.path, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(props, f)
-        os.rename(tmp, self._properties_path())
+        self._update_metadata("unset_properties", "properties", unset)
 
     # -- ANALYZE TABLE statistics (Spark/Delta COMPUTE STATISTICS) ---------
 
+    # where a legacy table kept its ANALYZE result (a table property)
     _ANALYZE_PROP = "versioned.analyze.stats"
+
+    def _analyze_path(self) -> str:
+        return os.path.join(self.path, "_analyze.json")
 
     def analyze(self, columns: list[str] | None = None) -> dict:
         """``ANALYZE TABLE ... COMPUTE STATISTICS [FOR COLUMNS ...]``.
@@ -1443,10 +783,10 @@ class VersionedTable:
         ONE distributed aggregate over the snapshot: row count always;
         per requested column approximate NDV (HyperLogLog —
         ``approx_count_distinct``, the only viable NDV at 100 TB),
-        min, max, and null count. The result persists metadata-only
-        into table properties (no data commit), stamped with the
-        snapshot version it describes so consumers can tell stale
-        stats from fresh ones. Surfaced by DESCRIBE DETAIL; consumed
+        min, max, and null count. The result persists beside the log
+        in ``_analyze.json`` (no commit: it is derived, advisory data),
+        stamped with the snapshot version it describes so consumers
+        can tell stale stats from fresh ones. Surfaced by DESCRIBE DETAIL; consumed
         by ``read_for_join()``'s broadcast decision."""
         c = self.get_commit()
         schema = self.schema()
@@ -1505,7 +845,10 @@ class VersionedTable:
             "row_count": int(r["__rows"]),
             "columns": col_stats,
         }
-        self.set_properties({self._ANALYZE_PROP: json.dumps(stats)})
+        fd, tmp = tempfile.mkstemp(dir=self.path, suffix=".tmp")
+        with os.fdopen(fd, "w") as f:
+            json.dump(stats, f)
+        os.replace(tmp, self._analyze_path())
         return stats
 
     def table_statistics(self) -> dict | None:
@@ -1514,8 +857,12 @@ class VersionedTable:
         staleness — the PERSISTED stats are NOT auto-refreshed by
         writes; ``current_statistics()`` rolls them forward from
         commit metadata."""
-        raw = self.properties().get(self._ANALYZE_PROP)
-        return json.loads(raw) if raw else None
+        try:
+            with open(self._analyze_path()) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            raw = self.properties().get(self._ANALYZE_PROP)
+            return json.loads(raw) if raw else None
 
     # str()-serialized committed file stats decoded by COLUMN type
     # (parse_stat decodes by probe type; min/max roll-forward has no
@@ -1700,9 +1047,6 @@ class VersionedTable:
 
     # -- partition columns (PARTITIONED BY) --------------------------------
 
-    def _partitioning_path(self) -> str:
-        return os.path.join(self.path, "_partitioning.json")
-
     def partition_columns(self) -> list[str]:
         """Declared partition columns (empty for unpartitioned tables).
         Partitioning here is a WRITE-LAYOUT + PRUNING contract, not a
@@ -1718,29 +1062,12 @@ class VersionedTable:
         ``replace_where`` / ``delete`` on the partition predicate,
         which rewrite nothing outside the matching files. Declared at
         CREATE, immutable thereafter (Delta's contract)."""
-        try:
-            with open(self._partitioning_path()) as f:
-                return list(json.load(f))
-        except FileNotFoundError:
-            return []
-
-    def _write_partitioning(self, cols: list[str]) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.path, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            f.write(json.dumps(list(cols)))
-        os.replace(tmp, self._partitioning_path())
+        return list(self._metadata().get("partition_columns") or [])
 
     # -- generated columns (Delta GENERATED ALWAYS AS analog) -------------
 
-    def _generated_path(self) -> str:
-        return os.path.join(self.path, "_generated.json")
-
     def generated_columns(self) -> dict[str, str]:
-        try:
-            with open(self._generated_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+        return dict(self._metadata().get("generated") or {})
 
     def add_generated_column(self, name: str, expr_sql: str) -> None:
         """Bind an EXISTING column to a generation expression — Delta's
@@ -1762,36 +1089,30 @@ class VersionedTable:
                 f"column {name!r} does not exist — backfill it first: "
                 f"t.overwrite(t.read().withColumn({name!r}, F.expr(...)))"
             )
-        gen = self.generated_columns()
-        if name in gen:
-            raise ValueError(f"column {name!r} is already generated")
-        self._probe_violations(
-            {f"generated:{name}": f"{name} <=> ({expr_sql})"}, self.read()
-        )
-        gen[name] = expr_sql
-        self._write_generated(gen)
+
+        def add(prev: Commit, gen: dict) -> dict:
+            if name in gen:
+                raise ValueError(f"column {name!r} is already generated")
+            self._probe_violations(
+                {f"generated:{name}": f"{name} <=> ({expr_sql})"},
+                self._snapshot(prev),
+            )
+            return {**gen, name: expr_sql}
+
+        self._update_metadata("add_generated_column", "generated", add)
 
     def drop_generated_column(self, name: str) -> None:
         """Unbind the generation expression (the column itself stays)."""
-        gen = self.generated_columns()
-        if name not in gen:
-            raise ValueError(
-                f"no generated column {name!r} (have {sorted(gen)})"
-            )
-        gen.pop(name)
-        self._write_generated(gen)
 
-    def _write_generated(self, gen: dict[str, str]) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.path, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(gen, f)
-        os.rename(tmp, self._generated_path())
+        def drop(prev: Commit, gen: dict) -> dict:
+            if name not in gen:
+                raise ValueError(
+                    f"no generated column {name!r} (have {sorted(gen)})"
+                )
+            gen.pop(name)
+            return gen
 
-    def _generated_predicates(self) -> dict[str, str]:
-        return {
-            f"generated:{n}": f"{n} <=> ({e})"
-            for n, e in self.generated_columns().items()
-        }
+        self._update_metadata("drop_generated_column", "generated", drop)
 
     def _fill_generated(self, df: DataFrame) -> DataFrame:
         """Compute generated columns the incoming batch omits. Supplied
@@ -1820,19 +1141,12 @@ class VersionedTable:
 
     # -- column DEFAULT values (Delta allowColumnDefaults analog) ---------
 
-    def _defaults_path(self) -> str:
-        return os.path.join(self.path, "_defaults.json")
-
     def column_defaults(self) -> dict[str, str]:
         """{column: default SQL expr} — the reference's
         ``TransactionDatetime DATETIME2 DEFAULT GETUTCDATE()``
         (``/root/reference/dbrdemo.sql:23,35``); Delta's
         ``allowColumnDefaults`` writer feature."""
-        try:
-            with open(self._defaults_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+        return dict(self._metadata().get("defaults") or {})
 
     def set_column_default(self, name: str, expr_sql: str) -> None:
         """Declare ``DEFAULT expr_sql`` for an existing column: batches
@@ -1864,24 +1178,22 @@ class VersionedTable:
         self.spark.range(1).select(
             F.expr(expr_sql).cast(schema[name].dataType)
         ).schema
-        cur = self.column_defaults()
-        cur[name] = expr_sql
-        self._write_defaults(cur)
+        self._update_metadata(
+            "set_column_default",
+            "defaults",
+            lambda prev, cur: {**cur, name: expr_sql},
+        )
 
     def drop_column_default(self, name: str) -> None:
-        cur = self.column_defaults()
-        if name not in cur:
-            raise ValueError(
-                f"column {name!r} has no DEFAULT (have {sorted(cur)})"
-            )
-        cur.pop(name)
-        self._write_defaults(cur)
+        def drop(prev: Commit, cur: dict) -> dict:
+            if name not in cur:
+                raise ValueError(
+                    f"column {name!r} has no DEFAULT (have {sorted(cur)})"
+                )
+            cur.pop(name)
+            return cur
 
-    def _write_defaults(self, cur: dict[str, str]) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.path, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(cur, f)
-        os.rename(tmp, self._defaults_path())
+        self._update_metadata("drop_column_default", "defaults", drop)
 
     def _fill_defaults(self, df: DataFrame) -> DataFrame:
         """Apply DEFAULT expressions for columns the batch omits —
@@ -1904,7 +1216,7 @@ class VersionedTable:
     # atomicity comes from the database (SCOPE_IDENTITY()). The engine's
     # analog arbitrates allocation through the COMMIT: each commit that
     # assigns ids records the last value used in its stats
-    # (``stats["identity"]``, carried monotonically by ``_write_commit``
+    # (``stats["identity"]``, carried monotonically by ``log.prepare``
     # exactly like ``max_field_id``), and the put-if-absent commit
     # publish makes exactly one concurrent writer win each version slot
     # — the loser re-reads the fresh high-water and shifts its ids
@@ -1928,7 +1240,7 @@ class VersionedTable:
     # disjoint (never reissued), and RESTORE keeps the high-water mark so
     # ids of restored-away rows are never reused (Delta's rule).
 
-    _IDENTITY_PROP = "versioned.identityColumns"
+    _IDENTITY_PROP = log.IDENTITY_PROP
 
     def identity_columns(self) -> dict[str, tuple[int, int]]:
         """{column: (start, step)} for declared identity columns."""
@@ -2003,16 +1315,17 @@ class VersionedTable:
         )
 
     def _explicit_identity_extremes(
-        self, df: DataFrame, cols: list[str]
+        self, df: DataFrame, cols: list[str], defs: dict | None = None
     ) -> dict[str, int]:
         """Validate explicitly-supplied (BY DEFAULT) identity values and
         return {col: farthest-along-the-step value} for the commit's
         high-water advance. One bounded aggregate over the batch; NULL
         values are refused (a NULL id can never be arbitrated past).
-        {} for an empty batch — the carried high-water then stands."""
+        {} for an empty batch — the carried high-water then stands.
+        ``defs`` ({col: (start, step)}) defaults to the table's."""
         if not cols:
             return {}
-        defs = self.identity_columns()
+        defs = defs or self.identity_columns()
         aggs = [F.count(F.lit(1)).alias("__n")]
         for c in cols:
             aggs += [
@@ -2203,28 +1516,21 @@ class VersionedTable:
                 )
             self.add_column(name, T.LongType())
             prev = self.get_commit()
-        raw = self.properties().get(self._IDENTITY_PROP)
-        # preserve existing specs VERBATIM (incl. their mode keys)
-        defs = json.loads(raw) if raw else {}
-        defs[name] = {"start": int(start), "step": int(step), "mode": mode}
-        self.set_properties({self._IDENTITY_PROP: json.dumps(defs)})
-        if hw is not None:
-            # record the adopted high-water in a metadata-only commit so
+
+        def build(prev: Commit) -> dict:
+            props = dict(prev.metadata.get("properties") or {})
+            # preserve existing specs VERBATIM (incl. their mode keys)
+            defs = json.loads(props.get(self._IDENTITY_PROP) or "{}")
+            defs[name] = {"start": int(start), "step": int(step), "mode": mode}
+            props[self._IDENTITY_PROP] = json.dumps(defs)
+            # an adopted column's high-water rides the same commit, so
             # the next writer's plan starts past existing values
-            self._write_commit(
-                Commit(
-                    prev.version + 1,
-                    "set_identity",
-                    prev.files,
-                    [],
-                    prev.schema_json,
-                    time.time(),
-                    self._carry_stats(
-                        prev, prev.files, {"identity": {name: hw}}
-                    ),
-                    dv_files=list(prev.dv_files),
-                )
-            )
+            return {
+                "metadata": {**prev.metadata, "properties": props},
+                "stats": None if hw is None else {"identity": {name: hw}},
+            }
+
+        self._commit_same_snapshot("set_identity", build)
 
     # -- writer transactions (Delta txnAppId/txnVersion parity) ----------
 
@@ -2262,6 +1568,7 @@ class VersionedTable:
         base: str,
         enforce: bool = True,
         schema: T.StructType | None = None,
+        metadata: dict | None = None,
     ) -> list[str]:
         """Write a batch as immutable parquet files in a fresh uuid dir;
         returns the file list (metadata only — no data on the driver).
@@ -2273,10 +1580,20 @@ class VersionedTable:
         metadata is stamped into the parquet footers so id-mapped reads
         (and renames) keep finding the columns — callers evolving the
         schema in the same commit MUST pass the evolved schema, or the
-        new columns' files would miss their ids."""
+        new columns' files would miss their ids. ``metadata`` names the
+        table metadata (constraints, generated and partition columns)
+        they are written under, by default the latest commit's."""
+        md = self._metadata() if metadata is None else metadata
         if enforce and base == self.data_dir:
             self._probe_violations(
-                {**self.constraints(), **self._generated_predicates()}, df
+                {
+                    **(md.get("constraints") or {}),
+                    **{
+                        f"generated:{n}": f"{n} <=> ({e})"
+                        for n, e in (md.get("generated") or {}).items()
+                    },
+                },
+                df,
             )
         if schema is None:
             try:
@@ -2287,7 +1604,7 @@ class VersionedTable:
             df = _attach_ids(df, schema)
         self.spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
         out = os.path.join(base, uuid.uuid4().hex)
-        pcols = self.partition_columns() if base == self.data_dir else []
+        pcols = md.get("partition_columns") if base == self.data_dir else None
         if pcols:
             missing = [c for c in pcols if c not in df.columns]
             if missing:
@@ -2473,11 +1790,6 @@ class VersionedTable:
         # one would silently re-open the door to a duplicate replay
         if "txn" not in out and prev.stats.get("txn"):
             out["txn"] = dict(prev.stats["txn"])
-        # the field-id high-water mark survives too: a dropped column's id
-        # must NEVER be reissued (an old file still stores its data under
-        # that id — reuse would resurrect it under the new column)
-        if "max_field_id" not in out and prev.stats.get("max_field_id"):
-            out["max_field_id"] = prev.stats["max_field_id"]
         # live DV cardinalities (keyed by DATA file) follow the files
         # they describe: entries for rewritten/dropped files die with
         # them, so `current_row_count` never double-subtracts a
@@ -2526,8 +1838,8 @@ class VersionedTable:
         if cls.exists(path):
             raise RuntimeError(f"table already exists at {path}")
         ident_last: dict[str, int] = {}
+        md: dict = {}  # the table metadata commit 0 carries
         if identity:
-            os.makedirs(path, exist_ok=True)
             defs = {}
             plan = {}
             explicit: list[str] = []
@@ -2563,13 +1875,17 @@ class VersionedTable:
                 }
                 if col not in df.columns:
                     plan[col] = (int(start), int(step))
-            t.set_properties({cls._IDENTITY_PROP: json.dumps(defs)})
+            md["properties"] = {cls._IDENTITY_PROP: json.dumps(defs)}
             explicit_cache = None
             if explicit:
                 # pin ONE materialization so the extremes aggregate and
                 # the file writes see identical explicit values
                 df = explicit_cache = df.persist()
-            ident_last = t._explicit_identity_extremes(df, explicit)
+            ident_last = t._explicit_identity_extremes(
+                df,
+                explicit,
+                {c: (d["start"], d["step"]) for c, d in defs.items()},
+            )
             df, assigned_last, ident_cache = t._assign_identity(df, plan)
             ident_last.update(assigned_last)
             order = column_order or (
@@ -2598,14 +1914,14 @@ class VersionedTable:
                     f"column name(s) {bad} collide with the reserved "
                     "__part__ shadow-column prefix of partitioned writes"
                 )
-            os.makedirs(path, exist_ok=True)
-            t._write_partitioning(pcols)
-        schema = _with_field_ids(_strip_ids(df.schema))  # mapping from birth
-        files = t._write_files(df, t.data_dir, schema=schema)
+            md["partition_columns"] = pcols
+        schema = with_field_ids(strip_ids(df.schema))  # mapping from birth
+        files = t._write_files(df, t.data_dir, schema=schema, metadata=md)
         cdf = t._write_files(
             df.withColumn(CHANGE_TYPE_COL, F.lit("insert")),
             t.cdf_dir,
             schema=schema,
+            metadata=md,
         )
         stats = dict(extra_stats or {})
         if ident_last:
@@ -2614,7 +1930,16 @@ class VersionedTable:
         if fstats and "file_stats" not in stats:
             stats["file_stats"] = fstats  # O(#files) footer harvest
         t._write_commit(
-            Commit(0, "create", files, cdf, schema.json(), time.time(), stats)
+            Commit(
+                0,
+                "create",
+                files,
+                cdf,
+                schema.json(),
+                time.time(),
+                stats,
+                metadata=md,
+            )
         )
         if identity and ident_cache is not None:
             ident_cache.unpersist()
@@ -2679,7 +2004,7 @@ class VersionedTable:
             )
         if not files:
             raise ValueError(f"no parquet files found in {src}")
-        schema = _strip_ids(spark.read.parquet(*files).schema)
+        schema = strip_ids(spark.read.parquet(*files).schema)
         stats: dict = {
             "converted_from": src,
             "cdf_absent": True,
@@ -2729,7 +2054,7 @@ class VersionedTable:
             explicit_ext = self._explicit_identity_extremes(df, explicit)
             # numbering CONTINUES past the previous high-water — an
             # overwrite never reuses ids of replaced rows (Delta's rule);
-            # _write_commit's monotone combine keeps that true for
+            # log.prepare's monotone combine keeps that true for
             # explicit BY DEFAULT values below the high-water too
             df, ident_last, ident_cache = self._assign_identity(
                 df,
@@ -2752,7 +2077,7 @@ class VersionedTable:
             # columns keep their field ids (they are the same logical
             # column), brand-new ones get fresh ids
             prev_fields = {f.name: f for f in prev_schema.fields}
-            schema = _with_field_ids(
+            schema = with_field_ids(
                 T.StructType(
                     [
                         T.StructField(
@@ -2767,7 +2092,7 @@ class VersionedTable:
                             else {
                                 k: v
                                 for k, v in (f.metadata or {}).items()
-                                if k != _FIELD_ID
+                                if k != FIELD_ID
                             },
                         )
                         for f in df.schema.fields
@@ -2980,7 +2305,10 @@ class VersionedTable:
         per-file min/max skipping stats, the dropped-column field-id
         high-water mark, writer-transaction watermarks (Delta clones
         copy txn app ids too, so an idempotent ingest job replayed
-        against the clone doesn't double-apply), and CHECK constraints.
+        against the clone doesn't double-apply), and the cloned
+        version's table metadata (constraints, properties, partition,
+        generated and DEFAULT columns) — the version's own, so an older
+        snapshot never inherits a constraint its schema can't resolve.
         What does NOT: version history (the clone starts at v0) and the
         change feed — the clone commit carries no CDF files (copying the
         full snapshot as insert images would defeat zero-copy), so a CDF
@@ -3115,23 +2443,12 @@ class VersionedTable:
                 # were written under those features (field-id renames,
                 # DV sidecars), so the clone's readers need them all
                 protocol=src.protocol,
+                # the metadata of the cloned VERSION: it describes that
+                # snapshot's schema (a version whose record predates
+                # in-commit metadata has none to carry)
+                metadata=src.metadata or {},
             )
         )
-        # constraint/generation sidecars describe the CURRENT schema —
-        # against an older cloned snapshot they may reference columns
-        # that didn't exist yet (or not yet hold), so they only carry
-        # when cloning the latest version
-        if src.version == self.latest_version():
-            for src_side, dst_side in (
-                (self._constraints_path(), dest._constraints_path()),
-                (self._generated_path(), dest._generated_path()),
-                (self._properties_path(), dest._properties_path()),
-                (self._defaults_path(), dest._defaults_path()),
-                (self._partitioning_path(), dest._partitioning_path()),
-            ):
-                if os.path.exists(src_side):
-                    os.makedirs(os.path.dirname(dst_side), exist_ok=True)
-                    shutil.copy2(src_side, dst_side)
         return dest
 
     def append(
@@ -3157,8 +2474,8 @@ class VersionedTable:
         files on top of it — no data is rewritten, only the metadata
         record (Delta's optimistic-concurrency resolution for
         AppendOnly ops). Retries re-check the txn watermark (another
-        attempt of this same job may have won) and stop if the schema
-        changed concurrently (that is a real conflict). Snapshot-
+        attempt of this same job may have won) and stop if the schema or
+        table metadata changed concurrently (a real conflict). Snapshot-
         dependent writers (merge/delete/update/overwrite/compact) do
         NOT retry — their result depends on what they read."""
         prev = self.get_commit()
@@ -3230,8 +2547,11 @@ class VersionedTable:
                 fresh = self.get_commit()
                 if self._txn_skip(fresh, txn_app, txn_version):
                     return fresh.version  # our own replay won the race
-                if fresh.schema_json != prev.schema_json:
-                    raise  # concurrent schema change: a real conflict
+                if (
+                    fresh.schema_json != prev.schema_json
+                    or fresh.metadata != prev.metadata
+                ):
+                    raise  # concurrent schema/metadata change: a real conflict
                 if ident_last:
                     # commit arbitration for identity: the concurrent
                     # winner may have consumed the id range this append
@@ -3291,14 +2611,13 @@ class VersionedTable:
         materialization. Only valid for SCALAR stats keys (copy_into,
         copy_into_registry, txn, identity, …), which the codec stores
         whole in every record; file_stats may be delta-encoded here."""
-        with open(self._commit_path(version)) as f:
-            return json.loads(f.read()).get("stats") or {}
+        return log.read_raw(self.log_dir, version).get("stats") or {}
 
     def _copy_into_loaded(self) -> set[str]:
         """Union of every COPY INTO commit's loaded-file identities.
         Backward walk from the latest commit, stopping (inclusively) at
         the first ``copy_into_registry`` stamp — checkpoint commits
-        fold the full union forward (see ``_write_commit``), so the
+        fold the full union forward (see ``log.prepare``), so the
         walk reads O(commits since the last checkpoint) raw records,
         not O(history) (Delta pays the full log scan here; the
         checkpoint fold is what this engine's own cadence makes
@@ -3539,15 +2858,15 @@ class VersionedTable:
             list(existing.fields)
             + [
                 T.StructField(f.name, f.dataType, True, f.metadata)
-                for f in _strip_ids(
+                for f in strip_ids(
                     T.StructType(
                         [f for f in df.schema.fields if f.name not in names]
                     )
                 ).fields
             ]
         )
-        if _max_field_id(existing):
-            merged = _with_field_ids(
+        if max_field_id(existing):
+            merged = with_field_ids(
                 merged, int(prev.stats.get("max_field_id", 0))
             )
         return merged
@@ -3565,6 +2884,7 @@ class VersionedTable:
         not_matched_by_source_update: dict[str, str] | None = None,
         not_matched_by_source_update_condition: str | None = None,
         matched_update_condition: str | None = None,
+        extra_stats: dict | None = None,
     ) -> dict:
         """MERGE upsert — the reference's core operator (O6,
         ``COPY_MSQL_TO_SILVER.py:200-209``): ``WHEN MATCHED UPDATE ALL,
@@ -3611,6 +2931,9 @@ class VersionedTable:
         by-source clause is active: a concurrent commit that ADDS files
         conflicts loudly (its rows would be unmatched-by-source in a
         serial execution, so our rewrite is stale).
+
+        ``extra_stats`` rides the commit record (atomic with the data)
+        — see ``create``.
 
         Concurrent writers: a version collision rebase-retries when the
         conflicting commits provably commute with this merge (see
@@ -3990,6 +3313,7 @@ class VersionedTable:
             txn_version,
             nmbs_active=nmbs_active,
             identity_stats=ident_last or None,
+            extra_stats=extra_stats,
         )
         src.unpersist()
         for c in ident_caches:
@@ -4014,6 +3338,7 @@ class VersionedTable:
         retry_conflicts: int = 5,
         nmbs_active: bool = False,
         identity_stats: dict | None = None,
+        extra_stats: dict | None = None,
     ) -> tuple[int, dict]:
         """Optimistic-concurrency resolution for merge (Delta VLDB'20
         §3.2): on a version collision, re-read the new latest commit
@@ -4025,8 +3350,9 @@ class VersionedTable:
         * every file this merge rewrote is still live in the fresh
           snapshot (a concurrent writer removing one means write-write
           overlap: lost update — raise);
-        * the table schema is unchanged (a concurrent evolution could
-          invalidate the rewrite's column set — raise);
+        * the table schema and metadata are unchanged (a concurrent
+          evolution could invalidate the rewrite's column set, a new
+          constraint its rows — raise, Delta's MetadataChangedException);
         * files the concurrent commits ADDED contain no rows matching
           this merge's keys — checked exactly with a semi-join that
           scans ONLY the added files (a match means a serial execution
@@ -4047,6 +3373,7 @@ class VersionedTable:
             extra = {
                 "touched_files": len(touched),
                 "carryover_files": len(carryover),
+                **(extra_stats or {}),
             }
             if base.version != prev.version:
                 extra["rebased_from_version"] = prev.version
@@ -4083,9 +3410,13 @@ class VersionedTable:
                 fresh = self.get_commit()
                 if self._txn_skip(fresh, txn_app, txn_version):
                     return fresh.version, {"txn_skipped": True}
-                if fresh.schema_json != prev.schema_json:
+                if (
+                    fresh.schema_json != prev.schema_json
+                    or fresh.metadata != prev.metadata
+                ):
                     raise CommitConflictError(
-                        "concurrent schema change during merge — re-run"
+                        "concurrent schema or metadata change during "
+                        "merge — re-run"
                     ) from None
                 if identity_stats and (fresh.stats.get("identity") or {}) != (
                     prev.stats.get("identity") or {}
@@ -4155,10 +3486,10 @@ class VersionedTable:
         if name in {f.name for f in schema.fields}:
             raise ValueError(f"column {name!r} already exists")
         schema = schema.add(name, dtype)
-        if _max_field_id(schema):
+        if max_field_id(schema):
             # fresh id for the new column, above the high-water mark so a
             # previously-dropped column's id can't be reissued
-            schema = _with_field_ids(
+            schema = with_field_ids(
                 schema, int(prev.stats.get("max_field_id", 0))
             )
         v = prev.version + 1
@@ -4210,7 +3541,7 @@ class VersionedTable:
         if new in names:
             raise ValueError(f"column {new!r} already exists")
         field = schema[old]
-        if not (field.metadata and _FIELD_ID in field.metadata):
+        if not (field.metadata and FIELD_ID in field.metadata):
             raise ValueError(
                 f"column {old!r} has no field id (table predates column "
                 "mapping) — upgrade first: t.overwrite(t.read()) rewrites "
@@ -4248,19 +3579,16 @@ class VersionedTable:
             prev, prev.files, {"renamed_column": f"{old}->{new}"}
         )
         # a DEFAULT follows its column (the expr is self-contained,
-        # only the registry key changes)
-        defaults = self.column_defaults()
-        if old in defaults:
-            defaults[new] = defaults.pop(old)
-            self._write_defaults(defaults)
-        # partitioning follows its column too (crash between sidecar
-        # and commit fails LOUDLY on the next partitioned write —
-        # "missing partition column" — never a silent layout change)
-        pcols = self.partition_columns()
-        if old in pcols:
-            self._write_partitioning(
-                [new if c == old else c for c in pcols]
-            )
+        # only the registry key changes), and so does partitioning
+        md = dict(prev.metadata)
+        if old in (md.get("defaults") or {}):
+            md["defaults"] = {
+                (new if c == old else c): e for c, e in md["defaults"].items()
+            }
+        if old in (md.get("partition_columns") or []):
+            md["partition_columns"] = [
+                new if c == old else c for c in md["partition_columns"]
+            ]
         # data-skipping stats follow the logical name: re-key them
         if "file_stats" in stats:
             stats["file_stats"] = {
@@ -4278,6 +3606,7 @@ class VersionedTable:
                 time.time(),
                 stats,
                 dv_files=list(prev.dv_files),
+                metadata=md,
             )
         )
         return v
@@ -4323,10 +3652,14 @@ class VersionedTable:
                 "write layout and partition pruning depend on it; "
                 "recreate the table to change partitioning"
             )
-        if name in self.column_defaults():
-            # the DEFAULT dies with its column (defaults are
-            # self-contained, so nothing else can reference it)
-            self.drop_column_default(name)
+        # the DEFAULT dies with its column (defaults are self-contained,
+        # so nothing else can reference it)
+        md = dict(prev.metadata)
+        defaults = {
+            c: e for c, e in (md.pop("defaults", None) or {}).items() if c != name
+        }
+        if defaults:
+            md["defaults"] = defaults
         v = prev.version + 1
         self._write_commit(
             Commit(
@@ -4338,6 +3671,7 @@ class VersionedTable:
                 time.time(),
                 self._carry_stats(prev, prev.files, {"dropped_column": name}),
                 dv_files=list(prev.dv_files),
+                metadata=md,
             )
         )
         return v
@@ -4606,7 +3940,7 @@ class VersionedTable:
         concurrent commit removed a file this op rewrote (write-write
         overlap) — for a DV delete the "rewritten" set is the files its
         vector REFERENCES (a concurrent rewrite of one would resurrect
-        our deletions), (b) the schema is unchanged, (c) the
+        our deletions), (b) the schema and metadata are unchanged, (c) the
         concurrently-ADDED files contain no row matching the predicate
         (a serial execution would have affected it) — checked with a
         filter probe that scans ONLY the added files — and (d) no
@@ -4662,9 +3996,13 @@ class VersionedTable:
                 if attempt > retry_conflicts:
                     raise
                 fresh = self.get_commit()
-                if fresh.schema_json != prev.schema_json:
+                if (
+                    fresh.schema_json != prev.schema_json
+                    or fresh.metadata != prev.metadata
+                ):
                     raise CommitConflictError(
-                        f"concurrent schema change during {op} — re-run"
+                        f"concurrent schema or metadata change during "
+                        f"{op} — re-run"
                     ) from None
                 if identity_stats and (fresh.stats.get("identity") or {}) != (
                     prev.stats.get("identity") or {}
@@ -5008,7 +4346,7 @@ class VersionedTable:
             # DV counts follow the surviving files (entries for
             # rewritten files die with them — their deletions are now
             # materialized); unscoped modes drop dv_files and
-            # _write_commit clears the counts
+            # log.prepare clears the counts
             if where and base.stats.get("dv_counts"):
                 live = set(files)
                 dvc = {
@@ -5075,9 +4413,9 @@ class VersionedTable:
 
         schema = T.StructType.fromJson(json.loads(c.schema_json))
         live_ids = {
-            int(f.metadata[_FIELD_ID])
+            int(f.metadata[FIELD_ID])
             for f in schema.fields
-            if f.metadata and _FIELD_ID in f.metadata
+            if f.metadata and FIELD_ID in f.metadata
         }
         live_names = {f.name for f in schema.fields}
 
@@ -5537,9 +4875,9 @@ class VersionedTable:
                 + [T.StructField(CHANGE_TYPE_COL, T.StringType())]
             ).json()
             v_by_id = {
-                int(f.metadata[_FIELD_ID]): f
+                int(f.metadata[FIELD_ID]): f
                 for f in vschema.fields
-                if f.metadata and _FIELD_ID in f.metadata
+                if f.metadata and FIELD_ID in f.metadata
             }
             v_by_name = {f.name: f for f in vschema.fields}
             cols = []
@@ -5577,9 +4915,9 @@ def _align_by_id(
     lossy). Used where two schemas of the SAME table meet across
     metadata history (restore, change-feed projection)."""
     by_id = {
-        int(f.metadata[_FIELD_ID]): f
+        int(f.metadata[FIELD_ID]): f
         for f in from_schema.fields
-        if f.metadata and _FIELD_ID in f.metadata
+        if f.metadata and FIELD_ID in f.metadata
     }
     by_name = {f.name: f for f in from_schema.fields}
     cols = []
@@ -5601,7 +4939,7 @@ def _match_field(
     the same table: FIELD ID first (rename-proof), then NAME (a retype
     assigns a fresh id, so the id misses but the logical column is the
     same-named one), else None (column didn't exist)."""
-    fid = (f.metadata or {}).get(_FIELD_ID)
+    fid = (f.metadata or {}).get(FIELD_ID)
     if fid is not None and int(fid) in by_id:
         return by_id[int(fid)]
     return by_name.get(f.name)
@@ -5619,9 +4957,9 @@ def _cdf_representable(
     continuity breaks at that commit (Delta's overwriteSchema contract)
     and the change feed must refuse to cross it."""
     by_id = {
-        int(f.metadata[_FIELD_ID]): f
+        int(f.metadata[FIELD_ID]): f
         for f in from_schema.fields
-        if f.metadata and _FIELD_ID in f.metadata
+        if f.metadata and FIELD_ID in f.metadata
     }
     by_name = {f.name: f for f in from_schema.fields}
     for f in to_schema.fields:

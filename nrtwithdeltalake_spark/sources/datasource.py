@@ -53,84 +53,10 @@ from pyspark.sql.datasource import (
 )
 
 from ..pipeline import bloom as _bloom
+from ..pipeline import log
 
 CHANGE_TYPE_COL = "_change_type"
 VERSION_COL = "_commit_version"
-FIELD_ID_KEY = "parquet.field.id"  # column-mapping id in schema metadata
-
-
-def _strip_field_ids(schema: T.StructType) -> T.StructType:
-    """Drop the field-id metadata key from every field — the logical
-    schema surfaced to users/Spark carries no storage concerns."""
-    fields = []
-    for f in schema.fields:
-        md = {k: v for k, v in (f.metadata or {}).items() if k != FIELD_ID_KEY}
-        fields.append(T.StructField(f.name, f.dataType, f.nullable, md or None))
-    return T.StructType(fields)
-
-
-
-def _sidecar_active(path: str, name: str) -> bool:
-    """True when the sidecar file exists AND binds anything — dropping
-    the last constraint/generated column leaves an empty '{}' file,
-    which must not keep refusing format writes. Unparseable → refuse
-    conservatively."""
-    try:
-        with open(os.path.join(path, name)) as f:
-            return bool(json.load(f))
-    except FileNotFoundError:
-        return False
-    except ValueError:
-        return True
-
-
-def _log_dir(path: str) -> str:
-    return os.path.join(os.path.abspath(path), "_log")
-
-
-def _versions(path: str) -> list[int]:
-    """All commit versions, ascending. With a ``_last_checkpoint``
-    pointer present, the dense range [0, latest] is derived from an
-    O(commits since checkpoint) probe (versions are parent+1 sequential
-    and never deleted) instead of listing the whole log dir — the
-    stream reader calls this EVERY trigger, so at 10^5+ commits the
-    listing itself would be the per-trigger tax."""
-    from ..pipeline.tables import latest_version_in, read_log_pointer
-
-    log = _log_dir(path)
-    if read_log_pointer(log) is not None:
-        try:
-            return list(range(0, latest_version_in(log) + 1))
-        except FileNotFoundError:
-            return []
-    return sorted(
-        int(f[: -len(".json")])
-        for f in os.listdir(log)
-        if f.endswith(".json")
-    )
-
-
-def _raw_commit(path: str, version: int) -> dict:
-    """The on-disk record, possibly delta-encoded — enough for fields
-    the codec never encodes (schema_json, stats flags, cdf_files)."""
-    with open(os.path.join(_log_dir(path), f"{version:020d}.json")) as f:
-        return json.loads(f.read())
-
-
-def _commit(path: str, version: int) -> dict:
-    """Commit record with full file lists — delta-encoded records (see
-    ``pipeline.logcodec``) resolve through the parent chain, pure local
-    JSON, still SparkSession-free. Applies the reader protocol gate:
-    a record demanding features this engine lacks raises
-    ``UnsupportedTableFeatureError`` instead of planning a wrong scan
-    (parent-chain records need no separate gate — protocol upgrades are
-    monotone, so the target version's gate covers its ancestry)."""
-    from ..pipeline import logcodec
-    from ..pipeline.tables import check_read_protocol
-
-    raw = _raw_commit(path, version)
-    check_read_protocol(raw, where=f"{path}: ")
-    return logcodec.materialize(raw, lambda v: _commit(path, v))
 
 
 @dataclass
@@ -191,7 +117,7 @@ def _arrow_batches(part: _FilePartition):
     # applies to id-free fields and id-free (legacy) files.
     phys: dict[str, str] = {}
     for f in want.fields:
-        fid = (f.metadata or {}).get(FIELD_ID_KEY)
+        fid = (f.metadata or {}).get(log.FIELD_ID)
         if fid is not None and file_by_id:
             if int(fid) in file_by_id:
                 phys[f.name] = file_by_id[int(fid)]
@@ -297,17 +223,6 @@ def _simple_filter(f) -> tuple | None:
     return (attr[0], op, value)
 
 
-def _file_may_match(stats: dict | None, pushed: list[tuple]) -> bool:
-    """Driver-side data skipping: False only when a file's committed
-    [min, max] PROVES no row can satisfy the pushed conjunction.
-    Canonical implementation lives in ``pipeline.tables`` (shared with
-    predicate-scoped compaction); lazy import keeps worker-side module
-    load light."""
-    from ..pipeline.tables import file_stats_may_match
-
-    return file_stats_may_match(stats, pushed)
-
-
 class _BatchReader(DataSourceReader):
     """Snapshot reader without ``pushFilters`` — the planner worker
     REJECTS any reader that implements ``pushFilters`` when
@@ -335,26 +250,29 @@ class _BatchReader(DataSourceReader):
         self.pushed: list[tuple] = []
 
     def partitions(self):
-        vs = _versions(self.path)
-        v = self.version if self.version is not None else vs[-1]
-        c = _commit(self.path, v)
+        log_dir = log.dir_of(self.path)
+        v = self.version
+        if v is None:
+            v = log.latest_version_in(log_dir)
+        c = log.read_commit(log_dir, v, where=f"{self.path}: ")
         if self.columns:
             # prune from the COMMIT schema so field-id metadata survives
             # into the per-file column matching (the declared schema is
             # deliberately id-free)
             keep = set(self.columns)
-            full = T.StructType.fromJson(json.loads(c["schema_json"]))
+            full = T.StructType.fromJson(json.loads(c.schema_json))
             schema_json = T.StructType(
                 [f for f in full.fields if f.name in keep]
             ).json()
         else:
-            schema_json = c["schema_json"]
-        fstats = (c.get("stats") or {}).get("file_stats", {})
-        dv = tuple(c.get("dv_files") or ())
+            schema_json = c.schema_json
+        fstats = c.stats.get("file_stats", {})
+        dv = tuple(c.dv_files)
         files = [
             f
-            for f in c["files"]
-            if not self.pushed or _file_may_match(fstats.get(f), self.pushed)
+            for f in c.files
+            if not self.pushed
+            or log.file_stats_may_match(fstats.get(f), self.pushed)
         ]
         # bloom equality skipping (pipeline/bloom.py): committed sidecar
         # pointers ride each file's stats entry. Planning-side pruning
@@ -486,7 +404,7 @@ class _ChangeFeedStreamReader(DataSourceStreamReader):
 
     def initialOffset(self):
         if self.initial_snapshot:
-            self._snap_base = _versions(self.path)[-1]
+            self._snap_base = log.latest_version_in(log.dir_of(self.path))
             self._snap_state = "pending"
             self._snap_pos = 0
             self._pos = self._snap_base
@@ -504,7 +422,9 @@ class _ChangeFeedStreamReader(DataSourceStreamReader):
                 # cache the (possibly delta-encoded) commit's file list
                 # so the byte-budget path below doesn't re-materialize
                 # the parent chain a second time per trigger
-                self._snap_files = _commit(self.path, base).get("files", [])
+                self._snap_files = log.read_commit(
+                    log.dir_of(self.path), base, where=f"{self.path}: "
+                ).files
                 self._snap_n = len(self._snap_files)
             n = self._snap_n
             take = n - p
@@ -531,7 +451,8 @@ class _ChangeFeedStreamReader(DataSourceStreamReader):
                     "pos": p + take,
                 }
             return {"version": base, "snapshot": "done"}
-        latest = _versions(self.path)[-1]
+        log_dir = log.dir_of(self.path)
+        latest = log.latest_version_in(log_dir)
         if (self.max_files is None and self.max_bytes is None) or self._pos is None:
             # _pos None = a checkpointed restart whose resume point this
             # reader has not observed yet (Spark hands the checkpoint to
@@ -545,12 +466,10 @@ class _ChangeFeedStreamReader(DataSourceStreamReader):
         fbudget = self.max_files if self.max_files is not None else float("inf")
         bbudget = self.max_bytes if self.max_bytes is not None else float("inf")
         end = self._pos
-        for v in _versions(self.path):
-            if v <= self._pos or v > latest:
-                continue
+        for v in range(self._pos + 1, latest + 1):
             # cdf_files is never delta-encoded: the raw record counts
             # the backlog without materializing parent chains per trigger
-            cdf = _raw_commit(self.path, v).get("cdf_files", [])
+            cdf = log.read_raw(log_dir, v).get("cdf_files", [])
             n = len(cdf)
             b = 0
             if self.max_bytes is not None:
@@ -591,19 +510,23 @@ class _ChangeFeedStreamReader(DataSourceStreamReader):
         epoch replay plans identically even after later commits."""
         declared = T.StructType.fromJson(json.loads(self.row_schema_json))
         commit_schema = T.StructType.fromJson(
-            json.loads(_commit(self.path, end_version)["schema_json"])
+            json.loads(
+                log.read_commit(
+                    log.dir_of(self.path), end_version, where=f"{self.path}: "
+                ).schema_json
+            )
         )
         by_name = {f.name: f for f in commit_schema.fields}
         fields = []
         for f in declared.fields:
             src = by_name.get(f.name)
-            if src is not None and src.metadata and FIELD_ID_KEY in src.metadata:
+            if src is not None and src.metadata and log.FIELD_ID in src.metadata:
                 fields.append(
                     T.StructField(
                         f.name,
                         f.dataType,
                         f.nullable,
-                        {FIELD_ID_KEY: src.metadata[FIELD_ID_KEY]},
+                        {log.FIELD_ID: src.metadata[log.FIELD_ID]},
                     )
                 )
             else:
@@ -615,14 +538,15 @@ class _ChangeFeedStreamReader(DataSourceStreamReader):
         if self._pos is None or hi > self._pos:
             self._pos = hi  # sync after a checkpointed restart
         parts = []
+        log_dir = log.dir_of(self.path)
         if start.get("snapshot") == "pending":
             # bootstrap batch(es): the snapshot at `lo` as insert images,
             # sliced by the offsets' file positions (maxFilesPerTrigger).
             # Derived purely from the offset pair, so a checkpointed
             # restart replays any slice identically with no reader state.
             p0 = start.get("pos", 0)
-            c = _commit(self.path, lo)
-            snap_files = c.get("files", [])
+            c = log.read_commit(log_dir, lo, where=f"{self.path}: ")
+            snap_files = c.files
             if end.get("snapshot") == "pending":
                 sel = snap_files[p0 : end["pos"]]
                 self._snap_state = "pending"
@@ -644,7 +568,7 @@ class _ChangeFeedStreamReader(DataSourceStreamReader):
                     if f.name != CHANGE_TYPE_COL
                 ]
             ).json()
-            dv = tuple(c.get("dv_files") or ())
+            dv = tuple(c.dv_files)
             parts.extend(
                 _FilePartition(
                     file=f,
@@ -659,12 +583,10 @@ class _ChangeFeedStreamReader(DataSourceStreamReader):
         if hi <= lo:
             return parts
         schema_json = self._read_schema_json(hi)
-        for v in _versions(self.path):
-            if not (lo < v <= hi):
-                continue
+        for v in range(lo + 1, hi + 1):
             # stats flags and cdf_files are never delta-encoded: the
             # raw record suffices, no parent-chain materialization
-            c = _raw_commit(self.path, v)
+            c = log.read_raw(log_dir, v)
             if (c.get("stats") or {}).get("cdf_schema_break"):
                 # incompatible retype: no pre-images exist for this
                 # commit — the tail cannot cross it (same contract as
@@ -706,9 +628,9 @@ class _WriteResult(WriterCommitMessage):
 
 def _ids_of(schema: T.StructType) -> dict[str, int]:
     return {
-        f.name: int(f.metadata[FIELD_ID_KEY])
+        f.name: int(f.metadata[log.FIELD_ID])
         for f in schema.fields
-        if f.metadata and FIELD_ID_KEY in f.metadata
+        if f.metadata and log.FIELD_ID in f.metadata
     }
 
 
@@ -763,68 +685,6 @@ def _write_task_files(path: str, iterator, field_ids: dict[str, int]) -> _WriteR
     return _WriteResult(data_file, cdf_file, tbl.num_rows)
 
 
-def _publish_record(path: str, record: dict) -> None:
-    """Driver-side commit publish — delegates to the SAME os.link-based
-    put-if-absent helper the native ``VersionedTable`` uses
-    (``pipeline.tables.publish_commit_file``), so a DataSource writer
-    racing a native writer can never silently clobber the other's
-    commit: exactly one wins the link, the loser gets
-    ``CommitConflictError``. (A bare exists-check + rename — the old
-    code here — loses a commit on POSIX, where rename overwrites.)"""
-    from ..pipeline.tables import check_write_protocol, publish_commit_file
-
-    if record["version"] > 0:
-        # writer protocol gate + monotone feature carry, mirroring the
-        # native _write_commit: refuse to build on a snapshot whose
-        # features we can't maintain; re-advertise them all (plus
-        # deletion vectors if this commit still carries sidecars —
-        # overwrite spends them but the upgrade is permanent, so carry
-        # keeps the stamp). Constraints/generated columns never reach
-        # here — both DataSource writers refuse those tables up front.
-        prev_raw = _raw_commit(path, record["version"] - 1)
-        check_write_protocol(prev_raw, where=f"{path}: ")
-        # monotone in-commit timestamps, same clamp as the native layer
-        record["ts"] = max(
-            float(record.get("ts", 0.0)), float(prev_raw.get("ts", 0.0)) + 1e-3
-        )
-        p = prev_raw.get("protocol") or {}
-        rf = set(p.get("reader_features") or [])
-        wf = set(p.get("writer_features") or [])
-        if record.get("dv_files"):
-            rf.add("deletion_vectors")
-        wf |= rf
-        if rf or wf:
-            record["protocol"] = {
-                "min_reader": 2 if rf else 1,
-                "min_writer": 2,
-                "reader_features": sorted(rf),
-                "writer_features": sorted(wf),
-            }
-    # re-stamp the field-id high-water mark (schema ids ∨ carried value),
-    # same as the native _write_commit — keeps dropped ids retired
-    ids = [
-        int(f.metadata[FIELD_ID_KEY])
-        for f in T.StructType.fromJson(json.loads(record["schema_json"])).fields
-        if f.metadata and FIELD_ID_KEY in f.metadata
-    ]
-    m = max(
-        max(ids, default=0), int(record.get("stats", {}).get("max_field_id", 0))
-    )
-    if m:
-        record.setdefault("stats", {})["max_field_id"] = m
-    from ..pipeline import logcodec
-
-    parent = None
-    if record["version"] > 0 and record["version"] % logcodec.CHECKPOINT_EVERY:
-        # checkpoint versions store full lists — skip the parent walk
-        try:
-            parent = _commit(path, record["version"] - 1)
-        except FileNotFoundError:
-            parent = None
-    payload = logcodec.encode(record, parent)
-    publish_commit_file(_log_dir(path), record["version"], json.dumps(payload))
-
-
 def _check_type_compat(
     prev_schema: T.StructType, new_schema: T.StructType, id_floor: int = 0
 ):
@@ -838,15 +698,13 @@ def _check_type_compat(
     fresh field ids above ``id_floor`` (the table's high-water mark),
     matching the native ``_merged_schema`` discipline — mixed id/no-id
     schemas are never committed."""
-    from ..pipeline.tables import widened_type
-
     prev_names = {f.name: f for f in prev_schema.fields}
     widened: dict[str, T.DataType] = {}
     for f in new_schema.fields:
         p = prev_names.get(f.name)
         if p is None or p.dataType == f.dataType:
             continue
-        w = widened_type(p.dataType, f.dataType)
+        w = log.widened_type(p.dataType, f.dataType)
         if w is None:
             raise ValueError(
                 f"type change for column '{f.name}' "
@@ -868,9 +726,9 @@ def _check_type_compat(
             ]
         )
     prev_ids = [
-        int(f.metadata[FIELD_ID_KEY])
+        int(f.metadata[log.FIELD_ID])
         for f in prev_schema.fields
-        if f.metadata and FIELD_ID_KEY in f.metadata
+        if f.metadata and log.FIELD_ID in f.metadata
     ]
     # an evolved-in column is nullable BY DEFINITION: every row that
     # existed before this append holds NULL for it. Keeping the source
@@ -887,30 +745,12 @@ def _check_type_compat(
         stamped = []
         for f in added:
             md = dict(f.metadata or {})
-            if FIELD_ID_KEY not in md:
-                md[FIELD_ID_KEY] = nxt
+            if log.FIELD_ID not in md:
+                md[log.FIELD_ID] = nxt
                 nxt += 1
             stamped.append(T.StructField(f.name, f.dataType, True, md))
         added = stamped
     return T.StructType(list(prev_schema.fields) + added)
-
-
-def _fresh_field_ids(schema: T.StructType, floor: int = 0) -> T.StructType:
-    """Assign a fresh field id to every field lacking one — the format
-    writer's mirror of the native ``_with_field_ids``
-    (``pipeline/tables.py:167``): format-created tables are id-mapped
-    from birth, so ``rename_column`` works on them exactly as on
-    natively created tables."""
-    have = [i for i in _ids_of(schema).values()]
-    nxt = max(max(have, default=0), floor) + 1
-    fields = []
-    for f in schema.fields:
-        md = dict(f.metadata or {})
-        if FIELD_ID_KEY not in md:
-            md[FIELD_ID_KEY] = nxt
-            nxt += 1
-        fields.append(T.StructField(f.name, f.dataType, f.nullable, md))
-    return T.StructType(fields)
 
 
 def _overwrite_schema(
@@ -930,10 +770,42 @@ def _overwrite_schema(
         p = prev_fields.get(f.name)
         md = dict(f.metadata or {})
         if p is not None and p.dataType == f.dataType and p.metadata:
-            if FIELD_ID_KEY in p.metadata:
-                md[FIELD_ID_KEY] = int(p.metadata[FIELD_ID_KEY])
+            if log.FIELD_ID in p.metadata:
+                md[log.FIELD_ID] = int(p.metadata[log.FIELD_ID])
         carried.append(T.StructField(f.name, f.dataType, f.nullable, md))
-    return _fresh_field_ids(T.StructType(carried), id_floor)
+    return log.with_field_ids(T.StructType(carried), id_floor)
+
+
+def _latest_commit(path: str) -> log.Commit | None:
+    """The table's latest commit, or None while it has none."""
+    log_dir = log.dir_of(path)
+    try:
+        v = log.latest_version_in(log_dir)
+    except FileNotFoundError:
+        return None
+    return log.read_commit(log_dir, v, where=f"{path}: ")
+
+
+def _refuse_unmaintainable(path: str) -> None:
+    """The format writers maintain none of the invariants table metadata
+    can bind (CHECK and NOT NULL enforcement needs a validation scan;
+    generated, identity and DEFAULT columns need values computed per
+    row), nor a catalog registration (its sync needs DDL): refuse such
+    a table loudly instead of committing rows that break them."""
+    bound = log.metadata_features(log.current_metadata(log.dir_of(path)))
+    if bound:
+        raise ValueError(
+            "format('versioned') writers cannot maintain the table's "
+            "CHECK/NOT NULL constraints or generated, identity and "
+            f"DEFAULT columns (bound: {sorted(bound)}); use "
+            "VersionedTable.append/overwrite (foreachBatch for streams)"
+        )
+    if os.path.exists(os.path.join(path, "_registration.json")):
+        raise ValueError(
+            "table is catalog-registered; the registration sync needs "
+            "a SparkSession — use VersionedTable.append/overwrite "
+            "(foreachBatch for streams)"
+        )
 
 
 def _plan_commit_schema(
@@ -945,15 +817,11 @@ def _plan_commit_schema(
     (overwrite), or id-mapped-from-birth (create). Run BEFORE tasks
     write files so the files holding a new column's data carry its id;
     re-run at commit time as the concurrency guard."""
-    try:
-        vs = _versions(path)
-    except (FileNotFoundError, OSError):
-        vs = []
-    if not vs:
-        return _fresh_field_ids(new_schema)
-    prev = _commit(path, vs[-1])
-    prev_schema = T.StructType.fromJson(json.loads(prev["schema_json"]))
-    floor = int(prev.get("stats", {}).get("max_field_id", 0))
+    prev = _latest_commit(path)
+    if prev is None:
+        return log.with_field_ids(new_schema)
+    prev_schema = T.StructType.fromJson(json.loads(prev.schema_json))
+    floor = int(prev.stats.get("max_field_id", 0))
     if overwrite:
         return _overwrite_schema(prev_schema, new_schema, floor)
     return _check_type_compat(prev_schema, new_schema, floor)
@@ -977,14 +845,14 @@ class _VersionedWriter(DataSourceArrowWriter):
       parquet data file plus one insert-image CDF file (no row ever
       passes through the driver);
     * ``commit(messages)`` publishes ONE commit record referencing the
-      task files — rename-atomic, so a failed/duplicated task attempt
-      leaves only invisible garbage (Spark retries tasks; only the
-      files named in the committed messages become live);
+      task files through the shared log writer (``log.commit``,
+      put-if-absent), so a failed/duplicated task attempt leaves only
+      invisible garbage (Spark retries tasks; only the files named in
+      the committed messages become live);
     * ``abort()`` deletes whatever the failed attempt wrote.
 
     Refused (use the native ``VersionedTable`` API, which holds a
-    SparkSession): tables with CHECK constraints (enforcement needs a
-    validation scan) and registered tables (the catalog sync needs DDL).
+    SparkSession): see ``_refuse_unmaintainable``.
     ``mode("overwrite")`` emits delete pre-images for the previous
     snapshot to the change feed — converted file-by-file on the driver
     via pyarrow (delta-sized driver IO; the JVM-path ``overwrite()``
@@ -996,23 +864,9 @@ class _VersionedWriter(DataSourceArrowWriter):
         # other versioned tables (ids in column metadata, possibly
         # colliding), while this writer's task files carry only the ids
         # the TARGET table's commit schema defines (_stamp_field_ids)
-        self.schema_json = _strip_field_ids(schema).json()
+        self.schema_json = log.strip_ids(schema).json()
         self.overwrite = overwrite
-        if _sidecar_active(self.path, "_constraints.json"):
-            raise ValueError(
-                "format('versioned') write path cannot enforce CHECK "
-                "constraints; use VersionedTable.append/overwrite"
-            )
-        if _sidecar_active(self.path, "_generated.json"):
-            raise ValueError(
-                "format('versioned') write path cannot compute/validate "
-                "generated columns; use VersionedTable.append/overwrite"
-            )
-        if os.path.exists(os.path.join(self.path, "_registration.json")):
-            raise ValueError(
-                "table is catalog-registered; the registration sync needs "
-                "a SparkSession — use VersionedTable.append/overwrite"
-            )
+        _refuse_unmaintainable(self.path)
         # plan the commit schema NOW, before any task writes a file:
         # evolved-in columns get their fresh field ids here, so the very
         # files holding their data carry the ids the read path matches
@@ -1037,9 +891,7 @@ class _VersionedWriter(DataSourceArrowWriter):
         now = {n: i for n, i in _ids_of(planned_now).items() if n in ours}
         then = {n: i for n, i in self.task_field_ids.items() if n in ours}
         if now != then:
-            from ..pipeline.tables import CommitConflictError
-
-            raise CommitConflictError(
+            raise log.CommitConflictError(
                 "concurrent schema change invalidated the field ids "
                 "stamped into this write's task files — re-run the write"
             )
@@ -1051,7 +903,9 @@ class _VersionedWriter(DataSourceArrowWriter):
 
     # -- driver side ----------------------------------------------------------
 
-    def _delete_preimages(self, prev: dict, new_schema: T.StructType) -> list[str]:
+    def _delete_preimages(
+        self, prev: log.Commit, new_schema: T.StructType
+    ) -> list[str]:
         """Overwrite CDF: previous snapshot rows re-emitted as deletes,
         one CDF file per previous data file (pyarrow, driver-local).
         Pre-images are ALIGNED to the NEW commit schema — one commit's
@@ -1067,20 +921,20 @@ class _VersionedWriter(DataSourceArrowWriter):
         from pyspark.sql.pandas.types import to_arrow_type
 
         out = []
-        prev_schema = T.StructType.fromJson(json.loads(prev["schema_json"]))
+        prev_schema = T.StructType.fromJson(json.loads(prev.schema_json))
         prev_by_id = {
-            int(f.metadata[FIELD_ID_KEY]): f
+            int(f.metadata[log.FIELD_ID]): f
             for f in prev_schema.fields
-            if f.metadata and FIELD_ID_KEY in f.metadata
+            if f.metadata and log.FIELD_ID in f.metadata
         }
         prev_names = {f.name for f in prev_schema.fields}
         new_ids = _ids_of(new_schema)
-        prev_dv = tuple(prev.get("dv_files") or ())
-        for f in prev["files"]:
+        prev_dv = tuple(prev.dv_files)
+        for f in prev.files:
             # DV-applied: a row already deleted by vector must not be
             # retracted a second time by the overwrite's pre-images
             part = _FilePartition(
-                file=f, schema_json=prev["schema_json"], dv_files=prev_dv
+                file=f, schema_json=prev.schema_json, dv_files=prev_dv
             )
             batches = list(_arrow_batches(part))
             if not batches:
@@ -1090,7 +944,7 @@ class _VersionedWriter(DataSourceArrowWriter):
             for fld in new_schema.fields:
                 names.append(fld.name)
                 at = to_arrow_type(fld.dataType)
-                fid = (fld.metadata or {}).get(FIELD_ID_KEY)
+                fid = (fld.metadata or {}).get(log.FIELD_ID)
                 src_f = (
                     prev_by_id.get(int(fid))
                     if fid is not None and int(fid) in prev_by_id
@@ -1133,10 +987,11 @@ class _VersionedWriter(DataSourceArrowWriter):
             self.overwrite,
         )
         self._guard_ids(planned_now)
-        exists = os.path.isdir(_log_dir(self.path)) and _versions(self.path)
-        if not exists:
-            _publish_record(
-                self.path,
+        log_dir = log.dir_of(self.path)
+        prev = _latest_commit(self.path)
+        if prev is None:
+            log.commit(
+                log_dir,
                 {
                     "version": 0,
                     "op": "create",
@@ -1147,9 +1002,9 @@ class _VersionedWriter(DataSourceArrowWriter):
                     "ts": time.time(),
                     "stats": {},
                 },
+                where=f"{self.path}: ",
             )
             return
-        prev = _commit(self.path, _versions(self.path)[-1])
         stats: dict = {}
         if self.overwrite:
             # full replace: the NEW dataframe's columns become the table
@@ -1164,7 +1019,7 @@ class _VersionedWriter(DataSourceArrowWriter):
             files = new_files
             op = "overwrite"
             if _cdf_representable(
-                T.StructType.fromJson(json.loads(prev["schema_json"])),
+                T.StructType.fromJson(json.loads(prev.schema_json)),
                 planned_now,
             ):
                 cdf = self._delete_preimages(prev, planned_now) + new_cdf
@@ -1180,24 +1035,22 @@ class _VersionedWriter(DataSourceArrowWriter):
                 stats["cdf_schema_break"] = True
         else:
             schema_json = planned_now.json()
-            files = list(prev["files"]) + new_files
+            files = list(prev.files) + new_files
             cdf = new_cdf
             op = "append"
             kept = {
                 f: s
-                for f, s in (prev.get("stats", {}).get("file_stats") or {}).items()
-                if f in set(prev["files"])
+                for f, s in (prev.stats.get("file_stats") or {}).items()
+                if f in set(prev.files)
             }
             if kept:
                 stats["file_stats"] = kept
-        if prev.get("stats", {}).get("txn"):
-            stats["txn"] = dict(prev["stats"]["txn"])
-        if prev.get("stats", {}).get("max_field_id"):
-            stats["max_field_id"] = prev["stats"]["max_field_id"]
-        _publish_record(
-            self.path,
+        if prev.stats.get("txn"):
+            stats["txn"] = dict(prev.stats["txn"])
+        log.commit(
+            log_dir,
             {
-                "version": prev["version"] + 1,
+                "version": prev.version + 1,
                 "op": op,
                 "files": files,
                 "cdf_files": cdf,
@@ -1207,10 +1060,9 @@ class _VersionedWriter(DataSourceArrowWriter):
                 # append preserves the deletion vectors (its new files
                 # have no entries); overwrite replaces every data file,
                 # so the vectors are spent
-                "dv_files": []
-                if self.overwrite
-                else list(prev.get("dv_files") or []),
+                "dv_files": [] if self.overwrite else list(prev.dv_files),
             },
+            where=f"{self.path}: ",
         )
 
     def abort(self, messages):
@@ -1231,21 +1083,8 @@ class _VersionedStreamWriter(DataSourceStreamArrowWriter):
 
     def __init__(self, path: str, schema: T.StructType):
         self.path = os.path.abspath(path)
-        self.schema_json = _strip_field_ids(schema).json()  # see batch writer
-        if _sidecar_active(self.path, "_constraints.json"):
-            raise ValueError(
-                "format('versioned') stream sink cannot enforce CHECK "
-                "constraints; use foreachBatch + VersionedTable"
-            )
-        if _sidecar_active(self.path, "_generated.json"):
-            raise ValueError(
-                "format('versioned') stream sink cannot compute/validate "
-                "generated columns; use foreachBatch + VersionedTable"
-            )
-        if os.path.exists(os.path.join(self.path, "_registration.json")):
-            raise ValueError(
-                "table is catalog-registered; use foreachBatch + VersionedTable"
-            )
+        self.schema_json = log.strip_ids(schema).json()  # see batch writer
+        _refuse_unmaintainable(self.path)
         # same driver-side planning as the batch writer: evolved-in
         # columns' fresh field ids are known before epoch 0's tasks
         # write a single file (and an append-retype fails the query
@@ -1277,10 +1116,11 @@ class _VersionedStreamWriter(DataSourceStreamArrowWriter):
             overwrite=False,
         )
         self._guard_ids(merged)
-        exists = os.path.isdir(_log_dir(self.path)) and _versions(self.path)
-        if not exists:
-            _publish_record(
-                self.path,
+        log_dir = log.dir_of(self.path)
+        prev = _latest_commit(self.path)
+        if prev is None:
+            log.commit(
+                log_dir,
                 {
                     "version": 0,
                     "op": "create",
@@ -1291,36 +1131,35 @@ class _VersionedStreamWriter(DataSourceStreamArrowWriter):
                     "ts": time.time(),
                     "stats": {"txn": {_STREAM_TXN_APP: batchId}},
                 },
+                where=f"{self.path}: ",
             )
             return
-        prev = _commit(self.path, _versions(self.path)[-1])
-        seen = (prev.get("stats", {}).get("txn") or {}).get(_STREAM_TXN_APP)
+        seen = (prev.stats.get("txn") or {}).get(_STREAM_TXN_APP)
         if seen is not None and batchId <= seen:
             _drop_files(messages)  # replayed epoch: structural no-op
             return
-        stats: dict = {"txn": dict(prev.get("stats", {}).get("txn") or {})}
+        stats: dict = {"txn": dict(prev.stats.get("txn") or {})}
         stats["txn"][_STREAM_TXN_APP] = batchId
-        if prev.get("stats", {}).get("max_field_id"):
-            stats["max_field_id"] = prev["stats"]["max_field_id"]
         kept = {
             f: s
-            for f, s in (prev.get("stats", {}).get("file_stats") or {}).items()
-            if f in set(prev["files"])
+            for f, s in (prev.stats.get("file_stats") or {}).items()
+            if f in set(prev.files)
         }
         if kept:
             stats["file_stats"] = kept
-        _publish_record(
-            self.path,
+        log.commit(
+            log_dir,
             {
-                "version": prev["version"] + 1,
+                "version": prev.version + 1,
                 "op": "append",
-                "files": list(prev["files"]) + new_files,
+                "files": list(prev.files) + new_files,
                 "cdf_files": new_cdf,
                 "schema_json": merged.json(),
                 "ts": time.time(),
                 "stats": stats,
-                "dv_files": list(prev.get("dv_files") or []),
+                "dv_files": list(prev.dv_files),
             },
+            where=f"{self.path}: ",
         )
 
     def abort(self, messages, batchId: int) -> None:
@@ -1366,8 +1205,9 @@ class VersionedTableDataSource(DataSource):
 
             t = _as_epoch(float(ts) if ts.replace(".", "", 1).isdigit() else ts)
             best = None
-            for ver in _versions(path):
-                if float(_commit(path, ver).get("ts", 0.0)) <= t:
+            log_dir = log.dir_of(path)
+            for ver in log.versions(log_dir):
+                if float(log.read_raw(log_dir, ver).get("ts", 0.0)) <= t:
                     best = ver
             if best is None:
                 raise ValueError(
@@ -1379,14 +1219,18 @@ class VersionedTableDataSource(DataSource):
     def schema(self):
         path = self._path()
         v = self._version_option(path)
-        vs = _versions(path)
-        ver = v if v is not None else vs[-1]
+        log_dir = log.dir_of(path)
+        ver = v if v is not None else log.latest_version_in(log_dir)
         # the DECLARED schema is metadata-free: Spark's streaming runner
         # asserts arrow-batch schemas against it byte-for-byte, and field
         # ids are an internal storage concern — partition planning
         # re-reads the commit schema (ids intact) for column matching
-        base = _strip_field_ids(
-            T.StructType.fromJson(json.loads(_commit(path, ver)["schema_json"]))
+        base = log.strip_ids(
+            T.StructType.fromJson(
+                json.loads(
+                    log.read_commit(log_dir, ver, where=f"{path}: ").schema_json
+                )
+            )
         )
         if self.options.get("feed") == "changes":
             return base.add(CHANGE_TYPE_COL, T.StringType()).add(
@@ -1468,8 +1312,9 @@ class VersionedTableDataSource(DataSource):
             # startingTimestamp): the start OFFSET is the last version
             # strictly before it
             start = -1
-            for v in _versions(self._path()):
-                if float(_commit(self._path(), v).get("ts", 0.0)) < t:
+            log_dir = log.dir_of(self._path())
+            for v in log.versions(log_dir):
+                if float(log.read_raw(log_dir, v).get("ts", 0.0)) < t:
                     start = v
         else:
             start = int(self.options.get("startingVersion", -1))

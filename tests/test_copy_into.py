@@ -275,9 +275,9 @@ def test_copy_into_registry_folds_across_checkpoint(
     """Checkpoint commits carry the cumulative union of loaded-file
     identities (copy_into_registry), so idempotency survives — and is
     served from — the fold rather than a full-history walk."""
-    from nrtwithdeltalake_spark.pipeline import logcodec
+    from nrtwithdeltalake_spark.pipeline import log
 
-    monkeypatch.setattr(logcodec, "CHECKPOINT_EVERY", 5)
+    monkeypatch.setattr(log, "CHECKPOINT_EVERY", 5)
     t = _mk(spark, tmp_path, "ckpt")
     land = str(tmp_path / "land_ckpt")
     pa_file = _land(land, "a.parquet", [1, 2])
@@ -306,9 +306,9 @@ def test_copy_into_loaded_walk_is_bounded_by_checkpoint(
     """The loaded-file walk reads O(commits since the last checkpoint)
     raw records, never O(history) — the registry stamp is the stop
     marker."""
-    from nrtwithdeltalake_spark.pipeline import logcodec
+    from nrtwithdeltalake_spark.pipeline import log
 
-    monkeypatch.setattr(logcodec, "CHECKPOINT_EVERY", 5)
+    monkeypatch.setattr(log, "CHECKPOINT_EVERY", 5)
     t = _mk(spark, tmp_path, "probe")
     land = str(tmp_path / "land_probe")
     pa_file = _land(land, "a.parquet", [1])

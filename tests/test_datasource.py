@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from nrtwithdeltalake_spark.pipeline import log
 from nrtwithdeltalake_spark.pipeline.tables import VersionedTable
 from nrtwithdeltalake_spark.sources import datasource as ds
 
@@ -211,12 +212,13 @@ def test_writer_rejects_type_change_and_guarded_tables(spark, tmp_path):
 
     t = VersionedTable(spark, p)
     t.add_constraint("grp_nonneg", "grp >= 0")
+    v = t.latest_version()
     with pytest.raises(Exception, match="CHECK"):
         spark.range(5, 8).select(
             F.col("id"), (F.col("id") % 2).alias("grp")
         ).write.format("versioned").mode("append").save(p)
     # constraint refusal left no new commit behind
-    assert t.latest_version() == 0
+    assert t.latest_version() == v
 
 
 def test_stream_sink_appends_with_epoch_idempotency(spark, tmp_path):
@@ -473,10 +475,7 @@ def test_format_writers_publish_put_if_absent(spark, tmp_path):
     from pyspark.sql import types as T
 
     from nrtwithdeltalake_spark.pipeline.tables import CommitConflictError
-    from nrtwithdeltalake_spark.sources.datasource import (
-        _VersionedWriter,
-        _publish_record,
-    )
+    from nrtwithdeltalake_spark.sources.datasource import _VersionedWriter
 
     tgt = str(tmp_path / "w")
     schema = T.StructType([T.StructField("id", T.LongType())])
@@ -486,12 +485,12 @@ def test_format_writers_publish_put_if_absent(spark, tmp_path):
 
     # the race: a second writer computed the same next version; the
     # loser of the os.link must get CommitConflictError, not a silent
-    # rename-over (commit() funnels every publish through _publish_record)
+    # rename-over (commit() funnels every publish through log.commit)
     rec = {"version": 1, "op": "append", "files": [], "cdf_files": [],
            "schema_json": schema.json(), "ts": 0.0, "stats": {}}
-    _publish_record(tgt, rec)
+    log.commit(log.dir_of(tgt), dict(rec))
     with pytest.raises(CommitConflictError, match="concurrent write"):
-        _publish_record(tgt, rec)
+        log.commit(log.dir_of(tgt), dict(rec))
     # native readers still see the winner's commit intact
     assert VersionedTable(spark, tgt).latest_version() == 1
 
@@ -555,9 +554,9 @@ def test_format_append_evolution_onto_id_mapped_table(spark, tmp_path):
 
     sch = T.StructType.fromJson(_json.loads(t.get_commit().schema_json))
     ids = {
-        f.name: int(f.metadata[ds.FIELD_ID_KEY])
+        f.name: int(f.metadata[log.FIELD_ID])
         for f in sch.fields
-        if f.metadata and ds.FIELD_ID_KEY in f.metadata
+        if f.metadata and log.FIELD_ID in f.metadata
     }
     assert "score" in ids and len(set(ids.values())) == 3
 
@@ -862,15 +861,14 @@ def test_format_overwrite_incompatible_retype_breaks_cdf(spark, tmp_path):
     import json as _json
 
     from nrtwithdeltalake_spark.pipeline.tables import VersionedTable
-    from nrtwithdeltalake_spark.sources.datasource import _commit
 
     p, t = _mk(spark, tmp_path)  # v0 create, v1 append (id long, v string)
     spark.createDataFrame([(1, 7)], "id long, v long").write.format(
         "versioned"
     ).mode("overwrite").option("path", p).save()
-    c = _commit(p, 2)
-    assert (c.get("stats") or {}).get("cdf_schema_break") is True
-    assert c["cdf_files"] == []
+    c = t.get_commit(2)
+    assert c.stats.get("cdf_schema_break") is True
+    assert c.cdf_files == []
     # snapshot reads fine on both paths
     assert [
         (r.id, r.v)
@@ -1187,7 +1185,7 @@ def test_snapshot_byte_budget_resolves_commit_once_per_trigger(
 ):
     """The initial-snapshot byte-budget path must resolve the base
     commit's file list ONCE and cache it — the base commit can be
-    delta-encoded, so a second _commit() per latestOffset would
+    delta-encoded, so a second read_commit() per latestOffset would
     re-materialize the parent chain every trigger of a long snapshot."""
     p, t = _mk(spark, tmp_path)
     from pyspark.sql import types as T
@@ -1200,13 +1198,13 @@ def test_snapshot_byte_budget_resolves_commit_once_per_trigger(
         ]
     )
     calls = {"n": 0}
-    orig = ds._commit
+    orig = log.read_commit
 
-    def counting(path, v, *a, **kw):
+    def counting(log_dir, v, *a, **kw):
         calls["n"] += 1
-        return orig(path, v, *a, **kw)
+        return orig(log_dir, v, *a, **kw)
 
-    monkeypatch.setattr(ds, "_commit", counting)
+    monkeypatch.setattr(log, "read_commit", counting)
     r = ds._ChangeFeedStreamReader(
         p, -1, row_schema, initial_snapshot=True, max_bytes_per_trigger=1
     )
@@ -1224,3 +1222,23 @@ def test_snapshot_byte_budget_resolves_commit_once_per_trigger(
         triggers += 1
         assert triggers < 100
     assert triggers >= 2  # budget actually sliced the snapshot
+
+
+def test_format_write_refuses_identity_table(spark, tmp_path):
+    """A format('versioned') append cannot assign identity values. It
+    used to commit the row with a NULL id and drop the committed
+    high-water, so the next native append reissued ids 1 and 2; it must
+    refuse the table instead, leaving the allocation intact."""
+    p = str(tmp_path / "ident")
+    t = VersionedTable.create(
+        spark, p, spark.createDataFrame([], "s string"), identity={"id": (1, 1)}
+    )
+    t.append(spark.createDataFrame([("a",), ("b",), ("c",)], "s string"))
+    with pytest.raises(Exception, match="identity"):
+        spark.createDataFrame([("d",)], "s string").write.format(
+            "versioned"
+        ).mode("append").save(p)
+    t.append(spark.createDataFrame([("e",), ("f",)], "s string"))
+    rows = sorted((r.id, r.s) for r in t.read().collect())
+    assert rows == [(1, "a"), (2, "b"), (3, "c"), (4, "e"), (5, "f")]
+    assert t.get_commit().stats["identity"] == {"id": 5}

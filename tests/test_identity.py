@@ -1091,36 +1091,38 @@ def test_rebase_keeps_evolved_schema_field_ids(spark, tmp_path, monkeypatch):
 def test_drop_not_null_crash_leaves_conservative_state(
     spark, tmp_path, monkeypatch
 ):
-    """ADVICE r11: drop_not_null publishes the nullable schema FIRST;
-    a crash before the sidecar update leaves the CONSERVATIVE state
-    (constraint still enforced) — never unenforced non-nullability."""
+    """drop_not_null publishes the nullable schema and the removal of
+    the enforcement entry in ONE commit: a crash at the publish leaves
+    neither changed — the column stays NOT NULL, declared and
+    enforced."""
+    from nrtwithdeltalake_spark.pipeline import log
+    from nrtwithdeltalake_spark.pipeline.tables import (
+        ConstraintViolationError,
+    )
+
     t = VersionedTable.create(
         spark,
         str(tmp_path / "dnn"),
         spark.createDataFrame([("a",)], "s string"),
     )
     t.set_not_null("s")
-    orig = VersionedTable._write_constraints
+    v = t.latest_version()
 
-    def crashing(self, cons):
+    def crashing(log_dir, version, payload):
         raise RuntimeError("injected crash")
 
-    monkeypatch.setattr(VersionedTable, "_write_constraints", crashing)
+    monkeypatch.setattr(log, "publish_commit_file", crashing)
     with pytest.raises(RuntimeError, match="injected crash"):
         t.drop_not_null("s")
-    monkeypatch.setattr(VersionedTable, "_write_constraints", orig)
-    # schema already flipped nullable, but enforcement SURVIVES: a NULL
-    # row is still refused
-    assert t.schema()["s"].nullable is True
+    monkeypatch.undo()
+    assert t.latest_version() == v
+    assert t.schema()["s"].nullable is False
     assert t.not_null_columns() == ["s"]
-    from nrtwithdeltalake_spark.pipeline.tables import (
-        ConstraintViolationError,
-    )
-
     with pytest.raises(ConstraintViolationError):
         t.append(spark.createDataFrame([(None,)], "s string"))
-    # re-running the drop heals the half-state
+    # re-running the drop completes it
     t.drop_not_null("s")
+    assert t.schema()["s"].nullable is True
     assert t.not_null_columns() == []
     t.append(spark.createDataFrame([(None,)], "s string"))
     assert t.read().filter("s is null").count() == 1

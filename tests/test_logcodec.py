@@ -1,4 +1,4 @@
-"""Delta-encoded commit log (pipeline/logcodec.py) — Delta's
+"""Delta-encoded commit log (pipeline/log.py) — Delta's
 log + checkpoint design applied to the self-contained JSON commits.
 
 Scale contract: per-commit log cost is O(file churn), not O(live
@@ -16,7 +16,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from nrtwithdeltalake_spark.pipeline import logcodec
+from nrtwithdeltalake_spark.pipeline import log
 from nrtwithdeltalake_spark.pipeline.tables import VersionedTable
 from nrtwithdeltalake_spark.sources import datasource as ds
 
@@ -65,7 +65,7 @@ def test_checkpoint_every_20_bounds_the_chain(spark, tmp_path):
     for i in range(1, 22):
         t.append(spark.createDataFrame([(i,)], "id long"))
     assert "files" in _raw(t, 0)
-    assert "files" in _raw(t, logcodec.CHECKPOINT_EVERY)  # the checkpoint
+    assert "files" in _raw(t, log.CHECKPOINT_EVERY)  # the checkpoint
     assert "files" not in _raw(t, 19) and "files" not in _raw(t, 21)
     assert t.read().count() == 22
     assert len(t.history()) == 22  # O(n) forward materialization
@@ -214,25 +214,61 @@ def test_file_stats_delta_encode_and_pruning_survives(spark, tmp_path):
     assert {r.g for r in t.read().filter("id = 50").collect()} == {99}
 
 
-def test_view_stamp_preserves_encoded_record(spark, tmp_path):
-    """Rollup/joinview stamp their watermarks by patching the RAW
-    commit record — stamping must not silently un-delta-encode a view
-    table's log."""
+def test_view_refresh_stamps_inside_the_refresh_commit(spark, tmp_path):
+    """Rollup and joinview stamp their watermarks INSIDE the refresh
+    commit (merge ``extra_stats``): no published commit is ever
+    rewritten, and no separate stamp commit follows the refresh."""
+    from nrtwithdeltalake_spark.pipeline.joinview import IncrementalJoinView
     from nrtwithdeltalake_spark.pipeline.rollup import IncrementalRollup
 
-    t = VersionedTable.create(
+    base = VersionedTable.create(
         spark,
-        str(tmp_path / "t"),
-        spark.range(32).select(F.col("id")).repartition(4),
+        str(tmp_path / "base"),
+        spark.range(32)
+        .select(F.col("id"), (F.col("id") % 4).alias("g"))
+        .repartition(4),
     )
-    t.append(spark.createDataFrame([(99,)], "id long"))  # v1: encoded
-    assert "files_base" in _raw(t, 1)
-    IncrementalRollup._stamp(object(), t, 7)  # self unused by _stamp
-    raw = _raw(t, 1)
-    assert "files_base" in raw  # still encoded
-    assert raw["stats"]["base_version"] == 7
-    assert t.get_commit().stats["base_version"] == 7
-    assert t.read().count() == 33
+    dim = VersionedTable.create(
+        spark,
+        str(tmp_path / "dim"),
+        spark.createDataFrame([(g, f"G{g}") for g in range(4)], "g long, label string"),
+    )
+    roll = IncrementalRollup(
+        spark, base, str(tmp_path / "roll"), ["g"], {"n": F.count(F.lit(1))}
+    )
+    view = IncrementalJoinView(
+        spark, base, dim, str(tmp_path / "jv"), ["id"], ["g"], ["g"]
+    )
+    roll.refresh()
+    view.refresh()
+    before = {
+        t.path: {
+            v: open(t._commit_path(v)).read()
+            for v in range(t.latest_version() + 1)
+        }
+        for t in (roll._table(), view._table())
+    }
+    base.merge(
+        spark.createDataFrame([(1, 2), (100, 3)], "id long, g long"), ["id"]
+    )
+    roll.refresh()
+    view.refresh()
+    for t, stamp in (
+        (roll._table(), {"base_version": base.latest_version()}),
+        (
+            view._table(),
+            {"fact_version": base.latest_version(), "dim_version": 0},
+        ),
+    ):
+        for v, payload in before[t.path].items():
+            assert open(t._commit_path(v)).read() == payload  # never rewritten
+        v = t.latest_version()
+        assert v == max(before[t.path]) + 1  # one refresh commit, no stamp commit
+        raw = _raw(t, v)
+        assert raw["op"] == "merge"
+        assert {k: raw["stats"][k] for k in stamp} == stamp
+    assert {r.g: r.n for r in roll.read().collect()} == {0: 8, 1: 7, 2: 9, 3: 9}
+    assert view.read().count() == 33
 
 
 from hypothesis import given, settings, strategies as st
@@ -278,9 +314,9 @@ def test_codec_roundtrip_property(
     import copy
 
     snap = copy.deepcopy(record)
-    enc = logcodec.encode(record, parent)
+    enc = log.encode(record, parent)
     assert record == snap  # encode never mutates its input
-    out = logcodec.materialize(enc, lambda v: parent)
+    out = log.materialize(enc, lambda v: parent)
     for key in ("files", "dv_files"):
         assert out[key] == snap[key], (key, enc)
     assert out["stats"].get("file_stats") == snap["stats"]["file_stats"]
@@ -296,13 +332,11 @@ def test_last_checkpoint_pointer_bounds_version_resolution(tmp_path):
     last checkpoint) existence checks, NO directory listing — against a
     synthetic long history; legacy logs without a pointer fall back to
     the full listing; the pointer never regresses."""
-    from nrtwithdeltalake_spark.pipeline import tables as tb
-
-    log = str(tmp_path / "_log")
-    n = 10 * logcodec.CHECKPOINT_EVERY + 5  # 205 commits, 10 checkpoints
+    log_dir = str(tmp_path / "_log")
+    n = 10 * log.CHECKPOINT_EVERY + 5  # 205 commits, 10 checkpoints
     for v in range(n + 1):
-        tb.publish_commit_file(log, v, json.dumps({"version": v}))
-    assert tb.read_log_pointer(log) == 10 * logcodec.CHECKPOINT_EVERY
+        log.publish_commit_file(log_dir, v, json.dumps({"version": v}))
+    assert log.read_log_pointer(log_dir) == 10 * log.CHECKPOINT_EVERY
 
     probes = []
     real_exists = os.path.exists
@@ -315,29 +349,28 @@ def test_last_checkpoint_pointer_bounds_version_resolution(tmp_path):
     def no_listdir(p):
         raise AssertionError(f"latest_version_in listed {p} despite pointer")
 
-    tb.os.path.exists = counting_exists
-    tb.os.listdir = no_listdir
+    os.path.exists = counting_exists
+    os.listdir = no_listdir
     try:
-        assert tb.latest_version_in(log) == n
+        assert log.latest_version_in(log_dir) == n
     finally:
-        tb.os.path.exists = real_exists
-        tb.os.listdir = real_listdir
+        os.path.exists = real_exists
+        os.listdir = real_listdir
     # pointer check + probe to n + one miss at n+1 — bounded by the
     # checkpoint cadence, independent of the 206-file history
-    assert len(probes) <= logcodec.CHECKPOINT_EVERY + 3
+    assert len(probes) <= log.CHECKPOINT_EVERY + 3
 
     # monotonic: a stale writer cannot move the pointer backwards
-    tb.write_log_pointer(log, 3 * logcodec.CHECKPOINT_EVERY)
-    assert tb.read_log_pointer(log) == 10 * logcodec.CHECKPOINT_EVERY
+    log.write_log_pointer(log_dir, 3 * log.CHECKPOINT_EVERY)
+    assert log.read_log_pointer(log_dir) == 10 * log.CHECKPOINT_EVERY
 
-    # legacy/pointerless log: full-listing fallback still resolves
-    os.remove(os.path.join(log, tb.LAST_CHECKPOINT_FILE))
-    assert tb.latest_version_in(log) == n
+    # legacy/pointerless log_dir: full-listing fallback still resolves
+    os.remove(os.path.join(log_dir, log.LAST_CHECKPOINT_FILE))
+    assert log.latest_version_in(log_dir) == n
 
     # the datasource's per-trigger version walk takes the same probe
-    tb.write_log_pointer(log, 10 * logcodec.CHECKPOINT_EVERY)
-    root = str(tmp_path)
-    assert ds._versions(root) == list(range(n + 1))
+    log.write_log_pointer(log_dir, 10 * log.CHECKPOINT_EVERY)
+    assert log.versions(log_dir) == list(range(n + 1))
 
 
 def test_commit_store_conformance_and_nonatomic_detection(tmp_path):
@@ -350,12 +383,10 @@ def test_commit_store_conformance_and_nonatomic_detection(tmp_path):
 
     import pytest
 
-    from nrtwithdeltalake_spark.pipeline import tables as tb
-
     # the real store: every storm round has exactly one winner
     for i in range(3):
-        tb.storm_commit_store(
-            tb.LocalLinkCommitStore(), str(tmp_path / f"ok{i}")
+        log.storm_commit_store(
+            log.LocalLinkCommitStore(), str(tmp_path / f"ok{i}")
         )
 
     class CheckThenPutStore:
@@ -374,7 +405,7 @@ def test_commit_store_conformance_and_nonatomic_detection(tmp_path):
     detected = False
     for i in range(5):  # racy by nature; any round may catch it
         try:
-            tb.storm_commit_store(
+            log.storm_commit_store(
                 CheckThenPutStore(), str(tmp_path / f"bad{i}")
             )
         except AssertionError:
@@ -383,10 +414,10 @@ def test_commit_store_conformance_and_nonatomic_detection(tmp_path):
     assert detected, "conformance storm failed to flag a non-atomic store"
 
     # and publish_commit_file surfaces the loser as CommitConflictError
-    log = str(tmp_path / "log")
-    tb.publish_commit_file(log, 7, "{}")
-    with pytest.raises(tb.CommitConflictError):
-        tb.publish_commit_file(log, 7, "{}")
+    log_dir = str(tmp_path / "log")
+    log.publish_commit_file(log_dir, 7, "{}")
+    with pytest.raises(log.CommitConflictError):
+        log.publish_commit_file(log_dir, 7, "{}")
 
 
 def test_conditional_put_commit_store_conformance(tmp_path):
@@ -396,7 +427,6 @@ def test_conditional_put_commit_store_conformance(tmp_path):
     flagged by the storm. This is the second CommitStore implementation
     — the 100 TB deployment path (the reference deploys on object
     storage: COPY_MSQL_TO_SILVER.py:51-76)."""
-    from nrtwithdeltalake_spark.pipeline import tables as tb
     from nrtwithdeltalake_spark.pipeline.objectstore import (
         ConditionalPutCommitStore,
         InMemoryObjectStore,
@@ -407,13 +437,13 @@ def test_conditional_put_commit_store_conformance(tmp_path):
         store = ConditionalPutCommitStore(
             InMemoryObjectStore(write_through=True)
         )
-        tb.storm_commit_store(store, str(tmp_path / f"ok{i}"))
+        log.storm_commit_store(store, str(tmp_path / f"ok{i}"))
 
     # precondition-violating client (bare PUT): the storm must flag it
     detected = False
     for i in range(5):
         try:
-            tb.storm_commit_store(
+            log.storm_commit_store(
                 ConditionalPutCommitStore(
                     InMemoryObjectStore(
                         honor_precondition=False, write_through=True
@@ -459,7 +489,7 @@ def test_versioned_table_commits_through_object_store(spark, tmp_path, monkeypat
     )
 
     client = InMemoryObjectStore(write_through=True)
-    monkeypatch.setattr(tb, "COMMIT_STORE", ConditionalPutCommitStore(client))
+    monkeypatch.setattr(log, "COMMIT_STORE", ConditionalPutCommitStore(client))
 
     df = spark.createDataFrame(
         [(1, "a", 10.0), (2, "b", 20.0)], "k bigint, name string, v double"
@@ -478,8 +508,8 @@ def test_versioned_table_commits_through_object_store(spark, tmp_path, monkeypat
     # losing a version race surfaces as CommitConflictError
     import pytest as _pytest
 
-    with _pytest.raises(tb.CommitConflictError):
-        tb.publish_commit_file(t.log_dir, t.latest_version(), "{}")
+    with _pytest.raises(log.CommitConflictError):
+        log.publish_commit_file(t.log_dir, t.latest_version(), "{}")
 
 
 def test_conditional_put_storm_under_ambiguity_injection(tmp_path):
@@ -487,7 +517,6 @@ def test_conditional_put_storm_under_ambiguity_injection(tmp_path):
     APPLYING but reporting ambiguous failure (lost responses), racing
     writers retry into 412s and resolve ownership by read-back — the
     storm's exactly-one-winner invariant must still hold."""
-    from nrtwithdeltalake_spark.pipeline import tables as tb
     from nrtwithdeltalake_spark.pipeline.objectstore import (
         ConditionalPutCommitStore,
         InMemoryObjectStore,
@@ -497,7 +526,7 @@ def test_conditional_put_storm_under_ambiguity_injection(tmp_path):
         store = ConditionalPutCommitStore(
             InMemoryObjectStore(ambiguous_failures=3, write_through=True)
         )
-        tb.storm_commit_store(store, str(tmp_path / f"amb{i}"))
+        log.storm_commit_store(store, str(tmp_path / f"amb{i}"))
 
 
 def test_localfs_conditional_put_store_conformance(tmp_path):
@@ -507,7 +536,6 @@ def test_localfs_conditional_put_store_conformance(tmp_path):
     same ``ConditionalPutCommitStore`` the cloud bindings would use.
     The same storms the in-memory fake passes must pass here, with real
     file concurrency."""
-    from nrtwithdeltalake_spark.pipeline import tables as tb
     from nrtwithdeltalake_spark.pipeline.objectstore import (
         AmbiguityInjector,
         ConditionalPutCommitStore,
@@ -516,7 +544,7 @@ def test_localfs_conditional_put_store_conformance(tmp_path):
 
     # conformance storm: exactly one winner per round, winner's bytes
     for i in range(3):
-        tb.storm_commit_store(
+        log.storm_commit_store(
             ConditionalPutCommitStore(LocalFSConditionalPutStore()),
             str(tmp_path / f"ok{i}"),
         )
@@ -525,7 +553,7 @@ def test_localfs_conditional_put_store_conformance(tmp_path):
     # read-back ownership) against the real client, exactly as run
     # against the in-memory fake
     for i in range(3):
-        tb.storm_commit_store(
+        log.storm_commit_store(
             ConditionalPutCommitStore(
                 AmbiguityInjector(LocalFSConditionalPutStore(), n=3)
             ),
@@ -583,7 +611,7 @@ def test_versioned_table_end_to_end_through_localfs_object_store(
     )
 
     store = ConditionalPutCommitStore(LocalFSConditionalPutStore())
-    monkeypatch.setattr(tb, "COMMIT_STORE", store)
+    monkeypatch.setattr(log, "COMMIT_STORE", store)
     p = str(tmp_path / "t")
     t = tb.VersionedTable.create(
         spark, p, spark.createDataFrame([("a", 1)], "s string, v long")

@@ -1038,6 +1038,7 @@ def test_check_constraints_gate_writes(spark, tmp_path):
     )
     t = VersionedTable.create(spark, path, df)
     t.add_constraint("amount_pos", "amount > 0")
+    v = t.latest_version()
     with pytest.raises(ValueError):
         t.add_constraint("amount_pos", "amount > 1")  # duplicate name
     with pytest.raises(ConstraintViolationError):
@@ -1046,7 +1047,7 @@ def test_check_constraints_gate_writes(spark, tmp_path):
                 [(3, -1.0)], "id bigint, amount double"
             )
         )
-    assert t.latest_version() == 0  # rejected append committed nothing
+    assert t.latest_version() == v  # rejected append committed nothing
     # NULL passes (SQL CHECK semantics)
     t.append(
         spark.createDataFrame(
@@ -1457,11 +1458,11 @@ def test_rename_requires_column_mapping_with_upgrade_path(spark, tmp_path):
     birth, so the legacy state is simulated by stripping the ids out of
     the commit record, exactly what a pre-mapping commit looked like."""
     import json as _json
-    import os
 
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
+    from nrtwithdeltalake_spark.pipeline import log
     from nrtwithdeltalake_spark.sources import datasource as ds
 
     ds.register(spark)
@@ -1470,8 +1471,8 @@ def test_rename_requires_column_mapping_with_upgrade_path(spark, tmp_path):
         "versioned"
     ).mode("append").save(p)
     # simulate a pre-column-mapping commit: strip field ids from the log
-    v = ds._versions(p)[-1]
-    cpath = os.path.join(ds._log_dir(p), f"{v:020d}.json")
+    v = log.latest_version_in(log.dir_of(p))
+    cpath = log.commit_path(log.dir_of(p), v)
     with open(cpath) as f:
         rec = _json.loads(f.read())
     sch = T.StructType.fromJson(_json.loads(rec["schema_json"]))

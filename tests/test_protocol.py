@@ -13,14 +13,14 @@ import os
 
 import pytest
 
-from nrtwithdeltalake_spark.pipeline.tables import (
+from nrtwithdeltalake_spark.pipeline.log import (
     READER_VERSION,
     SUPPORTED_READER_FEATURES,
     SUPPORTED_WRITER_FEATURES,
     UnsupportedTableFeatureError,
-    VersionedTable,
     publish_commit_file,
 )
+from nrtwithdeltalake_spark.pipeline.tables import VersionedTable
 from nrtwithdeltalake_spark.sources import datasource as ds
 
 
@@ -348,3 +348,92 @@ def test_monotone_in_commit_timestamps(spark, tmp_path, monkeypatch):
     # timestamp travel resolves deterministically on the clamped stamps
     assert t.version_at(t0) == 0
     assert t.version_at(t1) == 1
+
+
+# -- table metadata rides the commits --------------------------------------
+
+
+def test_merge_racing_add_constraint_conflicts(spark, tmp_path, monkeypatch):
+    """A merge whose snapshot predates a concurrent ADD CONSTRAINT must
+    not rebase over it: its rows were validated against the old
+    metadata, so publishing them could land a violating row (Delta's
+    MetadataChangedException). The DDL lands between the merge's file
+    writes and its publish."""
+    from nrtwithdeltalake_spark.pipeline.log import CommitConflictError
+
+    t = _mk(spark, tmp_path)
+    orig = VersionedTable._commit_merge_with_rebase
+
+    def ddl_first(self, *a, **kw):
+        VersionedTable(spark, t.path).add_constraint("amount_pos", "amount > 0")
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(VersionedTable, "_commit_merge_with_rebase", ddl_first)
+    with pytest.raises(CommitConflictError, match="metadata"):
+        t.merge(_df(spark, [(9, "z", -5.0)]), ["id"])
+    monkeypatch.undo()
+    assert t.constraints() == {"amount_pos": "amount > 0"}
+    assert t.read().filter("amount <= 0").count() == 0
+
+
+def test_legacy_sidecar_metadata_applies_and_migrates(spark, tmp_path):
+    """A table written before metadata rode the commits keeps it in five
+    sidecar files beside a log whose records have no ``metadata`` key.
+    It must keep applying — constraint, generated column, identity,
+    DEFAULT and partition layout — and the next commit must carry it,
+    after which the sidecars are no longer read."""
+    from nrtwithdeltalake_spark.pipeline.tables import ConstraintViolationError
+
+    p = str(tmp_path / "legacy")
+    VersionedTable.create(
+        spark,
+        p,
+        spark.createDataFrame(
+            [("a", 1.0, 2.0, "x"), ("b", 2.0, 4.0, "y")],
+            "grp string, amount double, amount2 double, note string",
+        ),
+        identity={"id": (1, 1)},
+        partition_by=["grp"],
+    )
+    log_dir = os.path.join(p, "_log")
+    for name in os.listdir(log_dir):
+        if name.endswith(".json"):
+            rec = json.load(open(os.path.join(log_dir, name)))
+            rec.pop("metadata")
+            json.dump(rec, open(os.path.join(log_dir, name), "w"))
+    md = {
+        "constraints": {"amount_pos": "amount > 0"},
+        "properties": {
+            "versioned.identityColumns": json.dumps(
+                {"id": {"start": 1, "step": 1, "mode": "always"}}
+            )
+        },
+        "partition_columns": ["grp"],
+        "generated": {"amount2": "amount * 2"},
+        "defaults": {"note": "'n/a'"},
+    }
+    for key, name in (
+        ("constraints", "_constraints.json"),
+        ("properties", "_properties.json"),
+        ("partition_columns", "_partitioning.json"),
+        ("generated", "_generated.json"),
+        ("defaults", "_defaults.json"),
+    ):
+        json.dump(md[key], open(os.path.join(p, name), "w"))
+
+    t = VersionedTable(spark, p)
+    assert t.constraints() == md["constraints"]
+    with pytest.raises(ConstraintViolationError):
+        t.append(spark.createDataFrame([("a", -1.0)], "grp string, amount double"))
+    v = t.append(spark.createDataFrame([("a", 3.0)], "grp string, amount double"))
+    row = t.read().filter("amount = 3.0").collect()[0]
+    assert (row.id, row.amount2, row.note) == (3, 6.0, "n/a")
+    new_files = set(t.get_commit(v).files) - set(t.get_commit(v - 1).files)
+    assert new_files and all("__part__grp=a" in f for f in new_files)
+    assert _raw(t, v)["metadata"] == md
+    assert "check_constraints" in t.get_commit().protocol["writer_features"]
+    # migrated: the commit, not the sidecar, now holds the constraint
+    os.remove(os.path.join(p, "_constraints.json"))
+    assert t.constraints() == md["constraints"]
+    with pytest.raises(ConstraintViolationError):
+        t.append(spark.createDataFrame([("b", -2.0)], "grp string, amount double"))

@@ -194,12 +194,12 @@ def test_purge_conflicts_with_concurrent_dv_delete(
 
 def test_field_id_high_water_survives_purge_and_compact(spark, tmp_path):
     """compact/purge hand-build their commit stats; the field-id
-    high-water must still carry (centrally, in _write_commit) — a
+    high-water must still carry (centrally, in log.prepare) — a
     regressed floor would reissue a dropped column's id and resurrect
     its bytes from any file that escaped rewriting."""
     import json as _json
 
-    from nrtwithdeltalake_spark.pipeline.tables import _FIELD_ID
+    from nrtwithdeltalake_spark.pipeline.log import FIELD_ID
 
     t = _mk(spark, tmp_path, "fid")
     t.add_column("doomed", "long")
@@ -212,7 +212,7 @@ def test_field_id_high_water_survives_purge_and_compact(spark, tmp_path):
     assert int(t.get_commit().stats["max_field_id"]) == hw
     t.add_column("fresh", "long")
     schema = t.schema()
-    fid = int(schema["fresh"].metadata[_FIELD_ID])
+    fid = int(schema["fresh"].metadata[FIELD_ID])
     assert fid == hw + 1  # never re-mints the dropped column's id
 
 

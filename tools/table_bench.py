@@ -17,7 +17,7 @@ core (O6 merge is the reference's central operator,
   (writes only position sidecars). The ratio is the DV crossover
   argument.
 * ``read_at_checkpoint`` vs ``read_mid_chain`` — snapshot resolution +
-  count at a logcodec checkpoint version vs a version
+  count at a log checkpoint version vs a version
   ``CHECKPOINT_EVERY-1`` deltas past one: the delta-decode chain cost.
 
 Run: ``python tools/table_bench.py [n_rows]`` (default 1.2M). Prints
@@ -37,7 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from nrtwithdeltalake_spark.pipeline import logcodec
+from nrtwithdeltalake_spark.pipeline import log
 from nrtwithdeltalake_spark.pipeline.tables import VersionedTable
 from nrtwithdeltalake_spark.session import build_spark
 
@@ -114,7 +114,7 @@ def bench_snapshot_read(spark, root: str, n_rows: int) -> dict:
     """Build a history of 2*CHECKPOINT_EVERY+1 commits of small appends;
     time read(version).count() at a checkpoint version vs the version
     just before the next checkpoint (longest delta chain)."""
-    ck = logcodec.CHECKPOINT_EVERY
+    ck = log.CHECKPOINT_EVERY
     t = _fresh_table(spark, root, "snap", n_rows // 10)
     one = spark.range(1).select(
         (F.col("id") + 10_000_000).alias("k"),
