@@ -20,8 +20,11 @@ identity definitions, partition columns, generated columns and column
 defaults) rides each commit's ``metadata`` dict, the analog of Delta's
 ``metaData`` action, so DDL is one atomic commit like any other.
 Logs written before that kept it in sidecar files beside the log;
-``current_metadata`` reads them while the latest commit has no
-``metadata`` key, and the next commit carries what it found.
+``metadata_of`` reads them while the latest commit has no ``metadata``
+key, and the next commit carries what it found. Every commit with
+metadata advertises the ``table_metadata`` writer feature, so an engine
+that still keeps metadata in sidecars refuses to write such a table
+instead of publishing a commit that drops it.
 
 Delta encoding — the log-compaction half of Delta's log + checkpoint
 design. Why: every commit names the table's FULL live file list (plus
@@ -50,6 +53,7 @@ by version-pinned readers because materialization is pure local JSON.
 
 from __future__ import annotations
 
+import copy
 import dataclasses
 import json
 import os
@@ -223,6 +227,9 @@ SUPPORTED_WRITER_FEATURES = SUPPORTED_READER_FEATURES | frozenset(
         "identity_columns",
         "not_null_constraints",
         "column_defaults",
+        # the table metadata rides the commit: a writer that reads it
+        # from sidecars would publish a commit without it
+        "table_metadata",
     }
 )
 
@@ -643,8 +650,12 @@ def read_record(log_dir: str, version: int) -> dict:
 
 
 def read_commit(log_dir: str, version: int, where: str = "") -> Commit:
-    """The materialized commit at ``version``, reader gate applied."""
-    return commit_from_record(read_record(log_dir, version), where)
+    """The materialized commit at ``version``, reader gate applied, its
+    ``metadata`` resolved by ``metadata_of``."""
+    rec = read_record(log_dir, version)
+    c = commit_from_record(rec, where)
+    c.metadata = metadata_of(log_dir, version, rec)
+    return c
 
 
 # -- table metadata --------------------------------------------------------
@@ -652,25 +663,60 @@ def read_commit(log_dir: str, version: int, where: str = "") -> Commit:
 IDENTITY_PROP = "versioned.identityColumns"
 
 
-def current_metadata(log_dir: str, latest: dict | None = None) -> dict:
-    """The table metadata as of the latest commit (``latest``: its raw
-    record, read here when not given; {} when the table has no commit
-    yet)."""
-    if latest is None:
-        try:
-            latest = read_raw(log_dir, latest_version_in(log_dir))
-        except FileNotFoundError:
-            return {}
-    if "metadata" in latest:
-        return latest["metadata"]
+def metadata_of(log_dir: str, version: int, record: dict) -> dict | None:
+    """The table metadata of commit ``version`` (``record``: its raw or
+    materialized record). The one legacy rule: a record without a
+    ``metadata`` key predates metadata in the commit, so the latest such
+    record takes the sidecar files (``legacy_metadata``) and an older
+    one None (the sidecars kept no history)."""
+    if "metadata" in record:
+        return record["metadata"]
+    if os.path.exists(commit_path(log_dir, version + 1)):
+        return None
     return legacy_metadata(log_dir)
+
+
+# commit file (path, inode, mtime, size) -> {"metadata": ...}, or {}
+# when the record has no metadata key. Published commits are never
+# rewritten; the stamp tells a file recreated at the same path apart.
+_METADATA_SEEN: dict[tuple, dict] = {}
+
+
+def _stamp(path: str) -> tuple:
+    st = os.stat(path)
+    return (path, st.st_ino, st.st_mtime_ns, st.st_size)
+
+
+def _remember(stamp: tuple, part: dict) -> None:
+    if len(_METADATA_SEEN) >= 256:
+        _METADATA_SEEN.clear()
+    _METADATA_SEEN[stamp] = part
+
+
+def current_metadata(log_dir: str) -> dict:
+    """The table metadata as of the latest commit ({} while the table
+    has none). A record that stores full file lists is tens of MB at
+    10^5 files, so each commit's metadata is parsed at most once per
+    process (never for a commit this process published)."""
+    try:
+        v = latest_version_in(log_dir)
+        stamp = _stamp(commit_path(log_dir, v))
+    except FileNotFoundError:
+        return {}
+    part = _METADATA_SEEN.get(stamp)
+    if part is None:
+        rec = read_raw(log_dir, v)
+        part = {"metadata": rec["metadata"]} if "metadata" in rec else {}
+        _remember(stamp, part)
+    return copy.deepcopy(metadata_of(log_dir, v, part) or {})
 
 
 def legacy_metadata(log_dir: str) -> dict:
     """A legacy log's table metadata. Before metadata rode the commits,
     it lived in sidecar files beside the log; this is the one place
-    that reads them, called only while the latest commit has no
-    ``metadata`` key — the next commit carries what it finds."""
+    that reads them, called by ``metadata_of`` only while the latest
+    commit has no ``metadata`` key — the next commit carries what it
+    finds."""
     md = {}
     for key, name in (
         ("constraints", "_constraints.json"),
@@ -763,9 +809,10 @@ def prepare(prev: dict | None, record: dict, read_raw_at=None) -> dict:
       walk reads back past ``prev``;
     * ``protocol`` is the predecessor's features ∪ a preset on the
       record ∪ what its content demands: deletion vectors, column
-      mapping (rename/drop), type widening, and the writer features
-      its metadata binds (``metadata_features``). Upgrades are
-      monotone, so a version-v reader gate covers v's whole history.
+      mapping (rename/drop), type widening, the writer features its
+      metadata binds (``metadata_features``) and ``table_metadata``
+      once the metadata is non-empty. Upgrades are monotone, so a
+      version-v reader gate covers v's whole history.
 
     Scalar stats keys and schema_json are never delta-encoded, so the
     raw ``prev`` carries everything these rules read."""
@@ -833,6 +880,8 @@ def prepare(prev: dict | None, record: dict, read_raw_at=None) -> dict:
     # every reader feature is implicitly a writer feature: a writer
     # republishes the snapshot, so it must understand them all
     wf |= metadata_features(md) | rf
+    if md:
+        wf.add("table_metadata")
     if rf or wf:
         record["protocol"] = {
             "min_reader": 2 if rf else 1,
@@ -846,7 +895,7 @@ def prepare(prev: dict | None, record: dict, read_raw_at=None) -> dict:
     return record
 
 
-def commit(log_dir: str, record: dict, where: str = "") -> dict:
+def commit(log_dir: str, record: dict, where: str = "") -> None:
     """Publish ``record`` as the next commit — the one commit writer of
     both the native API and the DataSource writers. Gates on the
     predecessor (may this engine build on it at all?), completes the
@@ -861,7 +910,7 @@ def commit(log_dir: str, record: dict, where: str = "") -> dict:
         except FileNotFoundError:
             prev = {}
         check_write_protocol(prev, where)
-        prev["metadata"] = current_metadata(log_dir, prev)
+        prev["metadata"] = metadata_of(log_dir, version - 1, prev)
     prepare(prev, record, lambda v: read_raw(log_dir, v))
     parent = None
     if version > 0 and version % CHECKPOINT_EVERY:
@@ -872,3 +921,7 @@ def commit(log_dir: str, record: dict, where: str = "") -> dict:
         except FileNotFoundError:
             parent = None
     publish_commit_file(log_dir, version, json.dumps(encode(record, parent)))
+    _remember(
+        _stamp(commit_path(log_dir, version)),
+        {"metadata": copy.deepcopy(record["metadata"])},
+    )

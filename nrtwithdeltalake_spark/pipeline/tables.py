@@ -275,10 +275,7 @@ class VersionedTable:
 
     def get_commit(self, version: int | None = None) -> Commit:
         v = self.latest_version() if version is None else version
-        c = log.read_commit(self.log_dir, v, where=f"{self.path}: ")
-        if version is None and c.metadata is None:
-            c.metadata = log.legacy_metadata(self.log_dir)
-        return c
+        return log.read_commit(self.log_dir, v, where=f"{self.path}: ")
 
     def history(self) -> list[Commit]:
         # sequential forward materialization: each record decodes
@@ -464,7 +461,7 @@ class VersionedTable:
         """Maintain ``_current/`` (hardlink manifest dir) + the catalog
         entry for a registered table.
 
-        Cost model (the logcodec idea applied to the manifest dir):
+        Cost model (the log's delta-encoding idea applied to the manifest dir):
         *append-only* commits — the NRT per-trigger hot path — link just
         the commit's new files into the live dir: O(churn) metadata ops,
         not O(live files). A reader listing the dir mid-sync sees old
@@ -2444,8 +2441,8 @@ class VersionedTable:
                 # DV sidecars), so the clone's readers need them all
                 protocol=src.protocol,
                 # the metadata of the cloned VERSION: it describes that
-                # snapshot's schema (a version whose record predates
-                # in-commit metadata has none to carry)
+                # snapshot's schema (log.metadata_of: a legacy latest
+                # version takes the sidecars, an older one has none)
                 metadata=src.metadata or {},
             )
         )

@@ -786,13 +786,16 @@ def _latest_commit(path: str) -> log.Commit | None:
     return log.read_commit(log_dir, v, where=f"{path}: ")
 
 
-def _refuse_unmaintainable(path: str) -> None:
+def _refuse_unmaintainable(path: str, prev: log.Commit | None) -> None:
     """The format writers maintain none of the invariants table metadata
     can bind (CHECK and NOT NULL enforcement needs a validation scan;
     generated, identity and DEFAULT columns need values computed per
     row), nor a catalog registration (its sync needs DDL): refuse such
-    a table loudly instead of committing rows that break them."""
-    bound = log.metadata_features(log.current_metadata(log.dir_of(path)))
+    a table loudly instead of committing rows that break them. Checked
+    when a write starts and again on the commit it publishes on
+    (``prev``, the latest): a DDL landing after that read takes version
+    prev+1 first, so the publish conflicts."""
+    bound = log.metadata_features((prev.metadata or {}) if prev else {})
     if bound:
         raise ValueError(
             "format('versioned') writers cannot maintain the table's "
@@ -866,7 +869,7 @@ class _VersionedWriter(DataSourceArrowWriter):
         # the TARGET table's commit schema defines (_stamp_field_ids)
         self.schema_json = log.strip_ids(schema).json()
         self.overwrite = overwrite
-        _refuse_unmaintainable(self.path)
+        _refuse_unmaintainable(self.path, _latest_commit(self.path))
         # plan the commit schema NOW, before any task writes a file:
         # evolved-in columns get their fresh field ids here, so the very
         # files holding their data carry the ids the read path matches
@@ -989,6 +992,7 @@ class _VersionedWriter(DataSourceArrowWriter):
         self._guard_ids(planned_now)
         log_dir = log.dir_of(self.path)
         prev = _latest_commit(self.path)
+        _refuse_unmaintainable(self.path, prev)
         if prev is None:
             log.commit(
                 log_dir,
@@ -1084,7 +1088,7 @@ class _VersionedStreamWriter(DataSourceStreamArrowWriter):
     def __init__(self, path: str, schema: T.StructType):
         self.path = os.path.abspath(path)
         self.schema_json = log.strip_ids(schema).json()  # see batch writer
-        _refuse_unmaintainable(self.path)
+        _refuse_unmaintainable(self.path, _latest_commit(self.path))
         # same driver-side planning as the batch writer: evolved-in
         # columns' fresh field ids are known before epoch 0's tasks
         # write a single file (and an append-retype fails the query
@@ -1118,6 +1122,7 @@ class _VersionedStreamWriter(DataSourceStreamArrowWriter):
         self._guard_ids(merged)
         log_dir = log.dir_of(self.path)
         prev = _latest_commit(self.path)
+        _refuse_unmaintainable(self.path, prev)
         if prev is None:
             log.commit(
                 log_dir,

@@ -1242,3 +1242,31 @@ def test_format_write_refuses_identity_table(spark, tmp_path):
     rows = sorted((r.id, r.s) for r in t.read().collect())
     assert rows == [(1, "a"), (2, "b"), (3, "c"), (4, "e"), (5, "f")]
     assert t.get_commit().stats["identity"] == {"id": 5}
+
+
+def test_format_writers_recheck_metadata_at_commit(spark, tmp_path):
+    """A constraint added while a format write is in flight binds that
+    write: both writers re-check the metadata of the commit they publish
+    on, so the violating rows never land."""
+    import pyarrow as pa
+
+    from nrtwithdeltalake_spark.sources.datasource import (
+        _VersionedStreamWriter,
+        _VersionedWriter,
+    )
+
+    p, t = _mk(spark, tmp_path)
+    v = t.latest_version()
+    batch = pa.record_batch(
+        {"id": pa.array([-5], type=pa.int64()), "v": pa.array(["x"])}
+    )
+    w = _VersionedWriter(p, t.schema(), overwrite=False)
+    s = _VersionedStreamWriter(p, t.schema())
+    mw, ms = w.write(iter([batch])), s.write(iter([batch]))
+    t.add_constraint("id_pos", "id > 0")  # the DDL lands in between
+    with pytest.raises(ValueError, match="check_constraints"):
+        w.commit([mw])
+    with pytest.raises(ValueError, match="check_constraints"):
+        s.commit([ms], 0)
+    assert t.latest_version() == v + 1
+    assert t.read().filter("id < 0").count() == 0

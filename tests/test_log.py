@@ -1,11 +1,13 @@
 """The log layer's carry rules (``pipeline/log.py::prepare``) on plain
-dict records — no SparkSession, no files. Every commit writer (the
-native ``VersionedTable`` and both ``versioned`` DataSource writers)
-publishes through ``prepare``, so these rules hold for all of them."""
+dict records, and its table-metadata reads on hand-written log files —
+no SparkSession. Every commit writer (the native ``VersionedTable`` and
+both ``versioned`` DataSource writers) publishes through ``prepare``,
+so these rules hold for all of them."""
 
 from __future__ import annotations
 
 import json
+import os
 
 from nrtwithdeltalake_spark.pipeline import log
 
@@ -134,7 +136,11 @@ def test_metadata_binds_writer_features():
         "generated_columns",
         "identity_columns",
         "not_null_constraints",
+        "table_metadata",
     ]
+    # metadata that binds no invariant still gates sidecar-era writers
+    p = log.prepare(None, _rec(0, metadata={"properties": {"k": "v"}}))["protocol"]
+    assert p["writer_features"] == ["table_metadata"]
 
 
 def test_dv_counts_dropped_without_deletion_vectors():
@@ -183,3 +189,46 @@ def test_metadata_carries_when_a_record_omits_it():
     assert log.prepare(prev, _rec(4, metadata={}))["metadata"] == {}
     # the first commit of a table without metadata gets an empty dict
     assert log.prepare(None, _rec(0))["metadata"] == {}
+
+
+def _write(log_dir: str, rec: dict) -> None:
+    with open(log.commit_path(log_dir, rec["version"]), "w") as f:
+        json.dump(rec, f)
+
+
+def test_legacy_metadata_read_only_at_the_latest_commit(tmp_path):
+    """A log whose records carry no ``metadata`` key keeps it in sidecar
+    files: the latest record takes them, an older one has none (the
+    sidecars kept no history), and a record with the key is its own."""
+    log_dir = str(tmp_path / "_log")
+    os.makedirs(log_dir)
+    with open(tmp_path / "_constraints.json", "w") as f:
+        json.dump({"pos": "id > 0"}, f)
+    _write(log_dir, _rec(0))
+    _write(log_dir, _rec(1))
+    legacy = {"constraints": {"pos": "id > 0"}}
+    assert log.read_commit(log_dir, 1).metadata == legacy
+    assert log.read_commit(log_dir, 0).metadata is None
+    assert log.current_metadata(log_dir) == legacy
+    # the next commit migrates: the sidecar is no longer read
+    log.commit(log_dir, _rec(2))
+    os.remove(tmp_path / "_constraints.json")
+    assert log.read_commit(log_dir, 2).metadata == legacy
+    assert log.current_metadata(log_dir) == legacy
+    assert log.read_commit(log_dir, 1).metadata is None
+
+
+def test_current_metadata_follows_the_latest_commit(tmp_path):
+    """``current_metadata`` serves a parsed commit's metadata from
+    memory; a new commit, or a file recreated at the same path, is
+    read afresh, and callers get a copy they may change."""
+    log_dir = str(tmp_path / "_log")
+    os.makedirs(log_dir)
+    log.commit(log_dir, _rec(0, metadata={"constraints": {"a": "id > 0"}}))
+    md = log.current_metadata(log_dir)
+    md["constraints"]["b"] = "id < 9"
+    assert log.current_metadata(log_dir) == {"constraints": {"a": "id > 0"}}
+    log.commit(log_dir, _rec(1, metadata={}))
+    assert log.current_metadata(log_dir) == {}
+    _write(log_dir, _rec(1, metadata={"partition_columns": ["s"]}))
+    assert log.current_metadata(log_dir) == {"partition_columns": ["s"]}

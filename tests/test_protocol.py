@@ -132,10 +132,9 @@ def test_rename_and_drop_stamp_column_mapping(spark, tmp_path):
 
 def test_constraints_stamp_writer_feature_on_next_commit(spark, tmp_path):
     """CHECK constraints / generated columns are WRITER features (reads
-    are unaffected): a writer unaware of the sidecar would commit
-    violating/NULL rows. The stamp lands with the next commit after
-    the sidecar write; reader features stay base, so min_reader
-    stays 1."""
+    are unaffected): a writer unaware of them would commit
+    violating/NULL rows. The stamp lands with the DDL commit and
+    carries on; reader features stay base, so min_reader stays 1."""
     t = _mk(spark, tmp_path)
     t.add_constraint("amount_pos", "amount > 0")
     t.append(_df(spark, [(6, "e", 60.0)]))
@@ -376,14 +375,11 @@ def test_merge_racing_add_constraint_conflicts(spark, tmp_path, monkeypatch):
     assert t.read().filter("amount <= 0").count() == 0
 
 
-def test_legacy_sidecar_metadata_applies_and_migrates(spark, tmp_path):
-    """A table written before metadata rode the commits keeps it in five
-    sidecar files beside a log whose records have no ``metadata`` key.
-    It must keep applying — constraint, generated column, identity,
-    DEFAULT and partition layout — and the next commit must carry it,
-    after which the sidecars are no longer read."""
-    from nrtwithdeltalake_spark.pipeline.tables import ConstraintViolationError
-
+def _legacy_table(spark, tmp_path) -> tuple[str, dict]:
+    """A table laid out the way engines before in-commit metadata wrote
+    it: five sidecar files beside a log whose records have no
+    ``metadata`` key. Returns its path and the metadata the sidecars
+    hold."""
     p = str(tmp_path / "legacy")
     VersionedTable.create(
         spark,
@@ -400,6 +396,8 @@ def test_legacy_sidecar_metadata_applies_and_migrates(spark, tmp_path):
         if name.endswith(".json"):
             rec = json.load(open(os.path.join(log_dir, name)))
             rec.pop("metadata")
+            feats = rec["protocol"]["writer_features"]
+            feats.remove("table_metadata")
             json.dump(rec, open(os.path.join(log_dir, name), "w"))
     md = {
         "constraints": {"amount_pos": "amount > 0"},
@@ -420,7 +418,17 @@ def test_legacy_sidecar_metadata_applies_and_migrates(spark, tmp_path):
         ("defaults", "_defaults.json"),
     ):
         json.dump(md[key], open(os.path.join(p, name), "w"))
+    return p, md
 
+
+def test_legacy_sidecar_metadata_applies_and_migrates(spark, tmp_path):
+    """A legacy table's sidecar metadata must keep applying —
+    constraint, generated column, identity, DEFAULT and partition
+    layout — and the next commit must carry it, after which the
+    sidecars are no longer read."""
+    from nrtwithdeltalake_spark.pipeline.tables import ConstraintViolationError
+
+    p, md = _legacy_table(spark, tmp_path)
     t = VersionedTable(spark, p)
     assert t.constraints() == md["constraints"]
     with pytest.raises(ConstraintViolationError):
@@ -437,3 +445,47 @@ def test_legacy_sidecar_metadata_applies_and_migrates(spark, tmp_path):
     assert t.constraints() == md["constraints"]
     with pytest.raises(ConstraintViolationError):
         t.append(spark.createDataFrame([("b", -2.0)], "grp string, amount double"))
+
+
+def test_clone_of_legacy_table_at_explicit_latest_version(spark, tmp_path):
+    """``CLONE ... VERSION AS OF <latest>`` of a legacy table clones the
+    same snapshot as a clone without a version: both carry the sidecar
+    metadata, so the clone keeps enforcing the constraint and assigning
+    identity values."""
+    from nrtwithdeltalake_spark.pipeline.tables import ConstraintViolationError
+
+    p, md = _legacy_table(spark, tmp_path)
+    t = VersionedTable(spark, p)
+    c = t.clone(str(tmp_path / "fork"), version=t.latest_version())
+    assert c.get_commit(0).metadata == md
+    with pytest.raises(ConstraintViolationError):
+        c.append(spark.createDataFrame([("a", -1.0)], "grp string, amount double"))
+    c.append(spark.createDataFrame([("a", 3.0)], "grp string, amount double"))
+    assert c.read().filter("amount = 3.0").collect()[0].id == 3
+
+
+def test_table_metadata_gates_sidecar_era_writers(spark, tmp_path, monkeypatch):
+    """An engine that keeps table metadata in sidecars reads no
+    ``metadata`` key, so its commit would carry none and drop the
+    constraint for good. Every commit with metadata advertises the
+    ``table_metadata`` writer feature, which such an engine does not
+    implement: it refuses to write, and the constraint survives."""
+    from nrtwithdeltalake_spark.pipeline import log
+    from nrtwithdeltalake_spark.pipeline.tables import ConstraintViolationError
+
+    t = _mk(spark, tmp_path)
+    assert "protocol" not in _raw(t, 0)  # empty metadata binds nothing
+    t.add_constraint("amount_pos", "amount > 0")
+    v = t.latest_version()
+    assert "table_metadata" in _raw(t, v)["protocol"]["writer_features"]
+    # the sidecar-era engine: the same gate without the feature
+    monkeypatch.setattr(
+        log, "SUPPORTED_WRITER_FEATURES", SUPPORTED_WRITER_FEATURES - {"table_metadata"}
+    )
+    with pytest.raises(UnsupportedTableFeatureError, match="table_metadata"):
+        t.append(_df(spark, [(9, "z", 90.0)]))
+    monkeypatch.undo()
+    assert t.latest_version() == v
+    assert _raw(t, v)["metadata"] == {"constraints": {"amount_pos": "amount > 0"}}
+    with pytest.raises(ConstraintViolationError):
+        t.append(_df(spark, [(9, "z", -1.0)]))
