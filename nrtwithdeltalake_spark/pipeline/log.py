@@ -12,7 +12,10 @@ SparkSession-free ``versioned`` DataSource:
 * the reader and writer protocol gates;
 * ``prepare`` — every rule a commit carries from its predecessor
   (protocol features, monotone timestamps, the field-id and identity
-  high-water marks, table metadata, the COPY INTO registry fold);
+  high-water marks, writer-transaction watermarks, table metadata, the
+  COPY INTO registry fold);
+* ``merged_schema`` / ``replaced_schema`` — the commit schema of an
+  append or a full replace, for both writers;
 * ``commit`` — prepare, delta-encode and publish put-if-absent.
 
 Table metadata (CHECK and NOT NULL constraints, properties including
@@ -188,17 +191,17 @@ class Commit:
 
 
 class CommitConflictError(RuntimeError):
-    """Another writer published this commit version first. ``append``
-    retries automatically (blind appends never semantically conflict);
-    ``merge``/``delete``/``update`` rebase-retry when the conflicting
-    commits provably commute — no overlap with the rewritten files,
-    schema and table metadata unchanged, and the concurrently-ADDED
-    files contain no row the operation would have affected (Delta
-    VLDB'20 §3.2 semantics);
-    ``compact`` rebases over any pure file-add. Only genuinely
-    conflicting writes surface — their read was stale, the caller must
-    re-run. ``overwrite`` always surfaces (a full replace has no
-    meaningful rebase)."""
+    """Another writer published this commit version first. The native
+    writers resolve it in one commit loop (``VersionedTable._publish``):
+    ``append`` and DDL re-publish on the fresh snapshot;
+    ``merge``/``delete``/``update`` rebase when the conflicting commits
+    provably commute — no overlap with the rewritten files, schema and
+    table metadata unchanged, and the concurrently-ADDED files contain
+    no row the operation would have affected (Delta VLDB'20 §3.2
+    semantics); ``compact`` rebases over any pure file-add. Only
+    genuinely conflicting writes surface — their read was stale, the
+    caller must re-run. A full ``overwrite``, ``restore`` and the
+    DataSource writers always surface it."""
 
 
 class UnsupportedTableFeatureError(RuntimeError):
@@ -443,6 +446,73 @@ def widened_type(a: T.DataType, b: T.DataType) -> T.DataType | None:
             ):
                 return wide
     return None
+
+
+def merged_schema(
+    prev: T.StructType, new: T.StructType, id_floor: int = 0
+) -> T.StructType:
+    """The commit schema of an append or merge of rows shaped ``new``
+    into a table whose schema is ``prev`` — the one schema-evolution
+    rule of the native writers and the DataSource writers. Previous
+    columns keep their order and field ids; a same-name type change is
+    accepted only as a safe widening (``widened_type``: the commit
+    adopts the wider type and old narrow files read through it) and
+    rejected otherwise — committing it would write parquet that only
+    fails at read time. Evolved-in columns append, nullable (every
+    earlier row holds NULL for them), and on an id-mapped table receive
+    fresh field ids above ``id_floor``, the table's high-water mark."""
+    by_name = {f.name: f for f in prev.fields}
+    widened: dict[str, T.DataType] = {}
+    for f in new.fields:
+        p = by_name.get(f.name)
+        if p is None or p.dataType == f.dataType:
+            continue
+        w = widened_type(p.dataType, f.dataType)
+        if w is None:
+            raise ValueError(
+                f"type change for column {f.name!r} "
+                f"({p.dataType.simpleString()} → "
+                f"{f.dataType.simpleString()}) — append/merge cannot "
+                "retype; use overwrite for a full-replace retype"
+            )
+        if w != p.dataType:
+            widened[f.name] = w
+    added = strip_ids(
+        T.StructType([f for f in new.fields if f.name not in by_name])
+    )
+    merged = T.StructType(
+        [
+            T.StructField(
+                f.name, widened.get(f.name, f.dataType), f.nullable, f.metadata
+            )
+            for f in prev.fields
+        ]
+        + [T.StructField(f.name, f.dataType, True, f.metadata) for f in added]
+    )
+    return with_field_ids(merged, id_floor) if max_field_id(prev) else merged
+
+
+def replaced_schema(
+    prev: T.StructType, new: T.StructType, id_floor: int
+) -> T.StructType:
+    """The commit schema of a full replace by rows shaped ``new``: its
+    columns become the table schema (a full replace may retype — no row
+    survives to misread). A same-name, same-type column keeps its field
+    id (it is the same logical column); every other column gets a fresh
+    id above ``id_floor``, so the table stays id-mapped."""
+    by_name = {f.name: f for f in prev.fields}
+    fields = []
+    for f in strip_ids(new).fields:
+        md = dict(f.metadata or {})
+        p = by_name.get(f.name)
+        if (
+            p is not None
+            and p.dataType == f.dataType
+            and FIELD_ID in (p.metadata or {})
+        ):
+            md[FIELD_ID] = int(p.metadata[FIELD_ID])
+        fields.append(T.StructField(f.name, f.dataType, f.nullable, md))
+    return with_field_ids(T.StructType(fields), id_floor)
 
 
 class LocalLinkCommitStore:
@@ -801,6 +871,11 @@ def prepare(prev: dict | None, record: dict, read_raw_at=None) -> dict:
     * the identity high-water ``stats.identity`` never regresses, per
       column in its step direction — a RESTORE must not reissue ids of
       restored-away rows;
+    * the writer-transaction watermarks ``stats.txn`` (Delta's
+      SetTransaction): per app, the max of the predecessor's version and
+      the record's — so every commit kind carries them, a writer stamps
+      only its own app, and a RESTORE keeps the latest (losing one would
+      re-open the door to a duplicate replay);
     * ``stats.dv_counts`` is dropped with the last deletion vector;
     * ``stats.copy_into_registry`` — the union of every COPY INTO
       loaded-file identity at or below this version — is stamped at
@@ -847,6 +922,12 @@ def prepare(prev: dict | None, record: dict, read_raw_at=None) -> dict:
             else:
                 cur[c] = int(v)
         stats["identity"] = cur
+    prev_txn = prev_stats.get("txn") or {}
+    if prev_txn:
+        txn = dict(prev_txn)
+        for app, v in (stats.get("txn") or {}).items():
+            txn[app] = max(int(v), int(txn.get(app, v)))
+        stats["txn"] = txn
     if not record.get("dv_files"):
         stats.pop("dv_counts", None)
     if version % CHECKPOINT_EVERY:

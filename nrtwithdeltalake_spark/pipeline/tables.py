@@ -58,6 +58,12 @@ from pyspark.sql import types as T
 
 CHANGE_TYPE_COL = "_change_type"
 
+# version collisions a commit rebases over before the conflict surfaces
+# (``VersionedTable._publish``)
+COMMIT_RETRIES = 5
+# how conflict errors name an op
+_OP_NAMES = {"compact": "compaction", "reorg_purge": "REORG PURGE"}
+
 
 def _strip_scheme(p: str) -> str:
     return p[len("file:") :] if p.startswith("file:") else p
@@ -140,6 +146,12 @@ def _as_epoch(timestamp) -> float:
 
 class ConstraintViolationError(RuntimeError):
     """A write contained rows that falsify a table CHECK constraint."""
+
+
+def _identity_defs(md: dict) -> dict:
+    """Identity column definitions held in table metadata ``md``."""
+    props = md.get("properties") or {}
+    return json.loads(props.get(log.IDENTITY_PROP) or "{}")
 
 
 
@@ -350,31 +362,147 @@ class VersionedTable:
         DDL or protocol commit. ``build(prev)`` returns the fields that
         change (``metadata``, ``schema_json``, ``protocol``, and
         ``stats`` keys to add) or raises to refuse. A version collision
-        re-reads the fresh snapshot and builds again, so any validation
-        ``build`` runs covers the snapshot the commit lands on."""
-        for attempt in range(6):
-            prev = self.get_commit()
-            kw = build(prev)
+        builds again on the fresh snapshot, so any validation ``build``
+        runs covers the snapshot the commit lands on."""
+        return self._publish(
+            self.get_commit(), op, build, schema=False, dvs=False
+        )[0]
+
+    def _publish(
+        self,
+        prev: Commit,
+        op: str,
+        build,
+        *,
+        rewritten=frozenset(),
+        depends=None,
+        affects=None,
+        schema: bool = True,
+        dvs: bool = True,
+        identity: bool = False,
+        txn: tuple = (None, None),
+    ) -> tuple[int, dict]:
+        """The one commit loop: optimistic concurrency with rebase
+        (Delta VLDB'20 §3.2). ``prev`` is the snapshot the writer read;
+        ``build(base)`` returns the commit's fields on a base snapshot —
+        ``new_files``, ``cdf_files``, ``schema_json``, ``stats`` keys,
+        ``metadata``, ``protocol``, ``dv_files`` (default: none, or the
+        base's) — or raises to refuse. The commit keeps ``base.files``
+        minus ``rewritten`` plus the new files, carries the kept files'
+        stats (``_carry_stats``), harvests the new files' footers once
+        per schema (a ``file_stats`` entry from ``build`` replaces a
+        kept file's, overlays a new file's), stamps the writer's own
+        ``txn`` (app, version) and, on a later base, the
+        ``rebased_from_version``. It publishes through ``_write_commit``.
+
+        A version collision re-reads the fresh commit: the writer's own
+        ``txn`` already there makes it a no-op (``{"txn_skipped":
+        True}``). Otherwise the rebase holds only if the concurrent
+        commits commute with this one, serialized first — none of them
+        may have:
+
+        * removed a file of ``depends`` (default ``rewritten``): a
+          write-write overlap, rebasing would lose an update;
+        * added rows the op would have changed in a serial run —
+          ``affects = (what, probe)``, ``probe(rows of the added
+          files)`` is true when one matches;
+        * changed the schema or table metadata (``schema``), the
+          deletion vectors (``dvs``) or the identity high-water
+          (``identity``).
+
+        Anything else raises CommitConflictError for the caller to
+        re-run; ``COMMIT_RETRIES`` collisions re-raise the last one.
+        Returns the published version and stats."""
+        what = _OP_NAMES.get(op, op)
+        depends = set(rewritten if depends is None else depends)
+        app, txn_version = txn
+        base, harvested = prev, {}
+        for attempt in range(COMMIT_RETRIES + 1):
+            kw = build(base)
+            new_files = list(kw.get("new_files") or [])
+            schema_json = kw.get("schema_json", base.schema_json)
+            kept = [f for f in base.files if f not in rewritten]
+            extra = dict(kw.get("stats") or {})
+            own = extra.pop("file_stats", {})
+            stats = self._carry_stats(base, kept, extra)
+            key = (schema_json, tuple(new_files))
+            if new_files and key not in harvested:
+                harvested[key] = self._with_new_file_stats(
+                    {}, new_files, schema_json
+                ).get("file_stats", {})
+            footer = harvested.get(key, {})
+            fstats = {**stats.get("file_stats", {}), **footer}
+            for f, s in own.items():
+                fstats[f] = {**footer.get(f, {}), **s}
+            if fstats:
+                stats["file_stats"] = fstats
+            if app is not None:
+                stats["txn"] = {app: txn_version}
+            if base.version != prev.version:
+                stats["rebased_from_version"] = prev.version
             try:
                 self._write_commit(
                     Commit(
-                        prev.version + 1,
+                        base.version + 1,
                         op,
-                        prev.files,
-                        [],
-                        kw.get("schema_json", prev.schema_json),
+                        kept + new_files,
+                        list(kw.get("cdf_files") or []),
+                        schema_json,
                         time.time(),
-                        self._carry_stats(prev, prev.files, kw.get("stats")),
-                        dv_files=list(prev.dv_files),
+                        stats,
+                        dv_files=list(kw.get("dv_files", base.dv_files)),
                         protocol=kw.get("protocol"),
                         metadata=kw.get("metadata"),
                     )
                 )
-                return prev.version + 1
+                return base.version + 1, stats
             except CommitConflictError:
-                if attempt == 5:
+                if attempt == COMMIT_RETRIES:
                     raise
-                time.sleep(0.05 * (attempt + 1))
+            fresh = self.get_commit()
+            if self._txn_skip(fresh, app, txn_version):
+                return fresh.version, {"txn_skipped": True}
+            if schema and (
+                fresh.schema_json != prev.schema_json
+                or fresh.metadata != prev.metadata
+            ):
+                raise CommitConflictError(
+                    f"concurrent schema or metadata change during {what} "
+                    "— re-run"
+                )
+            if identity and (fresh.stats.get("identity") or {}) != (
+                prev.stats.get("identity") or {}
+            ):
+                # ids this op assigned may collide with the winner's
+                raise CommitConflictError(
+                    f"concurrent identity allocation during {what} — re-run"
+                )
+            if dvs and list(fresh.dv_files) != list(prev.dv_files):
+                # a new vector may mark rows this op already rewrote or
+                # imaged without the deletion — they would resurrect
+                raise CommitConflictError(
+                    f"concurrent deletion-vector commit during {what} — "
+                    "re-run on the fresh snapshot"
+                )
+            gone = depends - set(fresh.files)
+            if gone:
+                raise CommitConflictError(
+                    f"concurrent writer rewrote/removed file(s) this "
+                    f"{what} depends on ({sorted(gone)[:3]}…) — "
+                    f"write-write conflict, re-run {what} on the fresh "
+                    "snapshot"
+                )
+            prev_files = set(prev.files)
+            added = [f for f in fresh.files if f not in prev_files]
+            if added and affects is not None:
+                matched, probe = affects
+                if probe(self._read_files(added, prev.schema_json)):
+                    raise CommitConflictError(
+                        f"concurrent commit added rows matching this "
+                        f"{what}'s {matched} — result would differ from a "
+                        "serial execution, re-run"
+                    )
+            base = fresh
 
     def _write_commit(self, commit: Commit) -> None:
         """Publish through the one log writer (``log.commit``: protocol
@@ -1534,7 +1662,7 @@ class VersionedTable:
     def txn_version(self, app: str) -> int | None:
         """Latest committed writer-transaction version for ``app`` (None
         if the app never wrote). Carried forward through every commit
-        kind by ``_carry_stats``."""
+        kind by ``log.prepare``."""
         try:
             return self.get_commit().stats.get("txn", {}).get(app)
         except FileNotFoundError:
@@ -1548,16 +1676,6 @@ class VersionedTable:
             raise ValueError("txn_app requires txn_version")
         seen = prev.stats.get("txn", {}).get(app)
         return seen is not None and version <= seen
-
-    @staticmethod
-    def _txn_record(
-        stats: dict, prev: Commit, app: str | None, version: int | None
-    ) -> dict:
-        if app is not None:
-            txn = dict(stats.get("txn") or prev.stats.get("txn") or {})
-            txn[app] = version
-            stats["txn"] = txn
-        return stats
 
     def _write_files(
         self,
@@ -1783,10 +1901,6 @@ class VersionedTable:
         kept = {f: prev_stats[f] for f in kept_files if f in prev_stats}
         if kept:
             out["file_stats"] = kept
-        # writer-transaction watermarks survive every commit kind — losing
-        # one would silently re-open the door to a duplicate replay
-        if "txn" not in out and prev.stats.get("txn"):
-            out["txn"] = dict(prev.stats["txn"])
         # live DV cardinalities (keyed by DATA file) follow the files
         # they describe: entries for rewritten/dropped files die with
         # them, so `current_row_count` never double-subtracts a
@@ -2073,36 +2187,13 @@ class VersionedTable:
             # full replace commits the NEW dataframe's schema; same-named
             # columns keep their field ids (they are the same logical
             # column), brand-new ones get fresh ids
-            prev_fields = {f.name: f for f in prev_schema.fields}
-            schema = with_field_ids(
-                T.StructType(
-                    [
-                        T.StructField(
-                            f.name,
-                            f.dataType,
-                            f.nullable,
-                            dict(prev_fields[f.name].metadata or {})
-                            if f.name in prev_fields
-                            and prev_fields[f.name].dataType == f.dataType
-                            # strip inherited ids (may come from another
-                            # table's read and collide) — fresh ones below
-                            else {
-                                k: v
-                                for k, v in (f.metadata or {}).items()
-                                if k != FIELD_ID
-                            },
-                        )
-                        for f in df.schema.fields
-                    ]
-                ),
-                int(prev.stats.get("max_field_id", 0)),
+            schema = log.replaced_schema(
+                prev_schema, df.schema, int(prev.stats.get("max_field_id", 0))
             )
             files = self._write_files(df, self.data_dir, schema=schema)
             old = self._snapshot(prev)  # DV-applied: don't retract twice
             stats = self._with_new_file_stats(
-                {**self._carry_stats(prev, []), **(extra_stats or {})},
-                files,
-                schema,
+                dict(extra_stats or {}), files, schema
             )
             if _cdf_representable(prev_schema, schema):
                 # pre-images are ALIGNED (projected + cast losslessly)
@@ -2169,14 +2260,12 @@ class VersionedTable:
             .distinct()
             .collect()
         )
-        carryover = [f for f in prev.files if f not in set(touched)]
         new_files = self._write_files(df, self.data_dir, schema=schema)
-        files = carryover + new_files
         if touched:
             touched_df = self._snapshot(prev, touched)
             kept = touched_df.filter(~pred)
             if kept.take(1):
-                files = files + self._write_files(
+                new_files += self._write_files(
                     kept, self.data_dir, enforce=False, schema=schema
                 )
             removed = touched_df.filter(pred)
@@ -2192,16 +2281,25 @@ class VersionedTable:
             self.cdf_dir,
             schema=schema,
         )
-        ver = self._commit_cow_with_rebase(
+        stats = {
+            "touched_files": len(touched),
+            "replace_where": replace_where,
+            **(extra_stats or {}),
+        }
+        if ident_last:
+            stats["identity"] = dict(ident_last)
+        ver, _ = self._publish(
             prev,
-            touched,
-            [f for f in files if f not in set(carryover)],
-            cdf,
             "overwrite_where",
-            replace_where,
-            schema_json=schema.json(),
-            extra_stats={"replace_where": replace_where, **(extra_stats or {})},
-            identity_stats=ident_last or None,
+            lambda base: {
+                "new_files": new_files,
+                "cdf_files": cdf,
+                "schema_json": schema.json(),
+                "stats": stats,
+            },
+            rewritten=set(touched),
+            affects=self._rows_matching(replace_where),
+            identity=bool(ident_last),
         )
         if ident_cache is not None:
             ident_cache.unpersist()
@@ -2453,7 +2551,6 @@ class VersionedTable:
         df: DataFrame,
         txn_app: str | None = None,
         txn_version: int | None = None,
-        retry_conflicts: int = 5,
         extra_stats: dict | None = None,
         op: str = "append",
     ) -> int:
@@ -2466,15 +2563,14 @@ class VersionedTable:
 
         Concurrent writers: a blind append never semantically conflicts
         with another commit, so a version collision (atomic put-if-
-        absent in ``_write_commit``) is resolved by re-reading the new
-        latest commit and re-publishing the SAME already-written data
-        files on top of it — no data is rewritten, only the metadata
-        record (Delta's optimistic-concurrency resolution for
-        AppendOnly ops). Retries re-check the txn watermark (another
-        attempt of this same job may have won) and stop if the schema or
-        table metadata changed concurrently (a real conflict). Snapshot-
-        dependent writers (merge/delete/update/overwrite/compact) do
-        NOT retry — their result depends on what they read."""
+        absent in ``_write_commit``) is resolved by ``_publish``
+        re-publishing the SAME already-written data files on the fresh
+        snapshot — no data is rewritten, only the metadata record
+        (Delta's optimistic-concurrency resolution for AppendOnly ops),
+        except that identity ids shift past a concurrent winner's.
+        Retries re-check the txn watermark (another attempt of this
+        same job may have won) and stop if the schema or table metadata
+        changed concurrently (a real conflict)."""
         prev = self.get_commit()
         if self._txn_skip(prev, txn_app, txn_version):
             return prev.version
@@ -2511,86 +2607,65 @@ class VersionedTable:
             ident_cache.unpersist()
         if explicit_cache is not None:
             explicit_cache.unpersist()
-        attempt = 0
-        while True:
-            try:
-                base_stats = self._with_new_file_stats(
-                    self._carry_stats(prev, prev.files), new_files, schema
-                )
-                if extra_stats:
-                    # caller-stamped provenance rides the commit record
-                    # itself, atomic with the data (COPY INTO's loaded-
-                    # file registry, ingest batch ids, ...)
-                    base_stats.update(extra_stats)
-                if ident_last:
-                    base_stats["identity"] = dict(ident_last)
-                self._write_commit(
-                    Commit(
-                        prev.version + 1,
-                        op,
-                        prev.files + new_files,
-                        cdf,
-                        schema.json(),
-                        time.time(),
-                        self._txn_record(base_stats, prev, txn_app, txn_version),
-                        dv_files=list(prev.dv_files),
+
+        def build(base: Commit) -> dict:
+            nonlocal ident_plan, ident_last, new_files, cdf
+            if ident_last:
+                # commit arbitration for identity: a concurrent winner
+                # may have consumed the id range this append assumed —
+                # shift the already-written ids past the FRESH
+                # high-water. This is what makes two lockless processes
+                # mint disjoint ids.
+                fresh_plan = self._identity_plan(base)
+                shifts = {
+                    c: fresh_plan[c][0] - ident_plan[c][0]
+                    for c in ident_plan
+                    if fresh_plan[c][0] != ident_plan[c][0]
+                }
+                if shifts:
+                    # the same BIGINT bound _assign_identity enforces: a
+                    # rebase near the int64 edge must refuse, not wrap
+                    # into colliding/negative ids (both ends of the
+                    # shifted range — the fresh first id and the shifted
+                    # last id — must stay representable)
+                    for c, d in shifts.items():
+                        for edge in (fresh_plan[c][0], ident_last[c] + d):
+                            if not (-(1 << 63) <= edge < (1 << 63)):
+                                raise ValueError(
+                                    f"identity rebase for column {c!r} "
+                                    f"would overflow BIGINT (shift={d}, "
+                                    f"edge value={edge})"
+                                )
+                    new_files = self._shift_identity_files(
+                        new_files, self.data_dir, shifts, schema=schema
                     )
-                )
-                return prev.version + 1
-            except CommitConflictError:
-                attempt += 1
-                if attempt > retry_conflicts:
-                    raise
-                fresh = self.get_commit()
-                if self._txn_skip(fresh, txn_app, txn_version):
-                    return fresh.version  # our own replay won the race
-                if (
-                    fresh.schema_json != prev.schema_json
-                    or fresh.metadata != prev.metadata
-                ):
-                    raise  # concurrent schema/metadata change: a real conflict
-                if ident_last:
-                    # commit arbitration for identity: the concurrent
-                    # winner may have consumed the id range this append
-                    # assumed — shift our already-written ids past the
-                    # FRESH high-water and re-publish. This is what
-                    # makes two lockless processes mint disjoint ids.
-                    fresh_plan = self._identity_plan(fresh)
-                    shifts = {
-                        c: fresh_plan[c][0] - ident_plan[c][0]
-                        for c in ident_plan
-                        if fresh_plan[c][0] != ident_plan[c][0]
+                    cdf = self._shift_identity_files(
+                        cdf, self.cdf_dir, shifts, schema=schema
+                    )
+                    ident_last = {
+                        c: ident_last[c] + shifts.get(c, 0) for c in ident_last
                     }
-                    if shifts:
-                        # the same BIGINT bound _assign_identity enforces:
-                        # a rebase near the int64 edge must refuse, not
-                        # wrap into colliding/negative ids (both ends of
-                        # the shifted range — the fresh first id and the
-                        # shifted last id — must stay representable)
-                        for c, d in shifts.items():
-                            for edge in (fresh_plan[c][0], ident_last[c] + d):
-                                if not (-(1 << 63) <= edge < (1 << 63)):
-                                    raise ValueError(
-                                        f"identity rebase for column {c!r} "
-                                        f"would overflow BIGINT (shift={d}, "
-                                        f"edge value={edge})"
-                                    )
-                        new_files = self._shift_identity_files(
-                            new_files, self.data_dir, shifts, schema=schema
-                        )
-                        cdf = self._shift_identity_files(
-                            cdf, self.cdf_dir, shifts, schema=schema
-                        )
-                        ident_last = {
-                            c: ident_last[c] + shifts.get(c, 0)
-                            for c in ident_last
-                        }
-                        # advance the plan baseline ONLY for the columns
-                        # this append assigned — re-admitting an explicit
-                        # BY DEFAULT column here would make a SECOND
-                        # conflict shift the user-supplied values
-                        ident_plan = {c: fresh_plan[c] for c in ident_plan}
-                prev = fresh
+                    # advance the plan baseline ONLY for the columns this
+                    # append assigned — re-admitting an explicit BY
+                    # DEFAULT column here would make a SECOND conflict
+                    # shift the user-supplied values
+                    ident_plan = {c: fresh_plan[c] for c in ident_plan}
+            # caller-stamped provenance rides the commit record itself,
+            # atomic with the data (COPY INTO's loaded-file registry,
+            # ingest batch ids, ...)
+            stats = dict(extra_stats or {})
+            if ident_last:
+                stats["identity"] = dict(ident_last)
+            return {
+                "new_files": new_files,
+                "cdf_files": cdf,
+                "schema_json": schema.json(),
+                "stats": stats,
+            }
+
+        return self._publish(
+            prev, op, build, dvs=False, txn=(txn_app, txn_version)
+        )[0]
 
     # -- COPY INTO (idempotent bulk file ingestion) -------------------------
 
@@ -2800,73 +2875,14 @@ class VersionedTable:
         }
 
     def _merged_schema(self, prev: Commit, df: DataFrame) -> T.StructType:
-        """Schema evolution (README.md:8): union of target schema and new
-        source columns, target first. On an id-mapped table the appended
-        columns receive fresh field ids (existing columns keep theirs).
-
-        Schema ENFORCEMENT (Delta parity, and the same contract the
-        format writer's ``_check_type_compat`` applies): a source column
-        whose type differs from the table's is REJECTED — without this,
-        ``_align_to``'s bare column reference would silently write
-        physically-mismatched parquet that only explodes at read time
-        (found by the column-mapping property test: a renamed string
-        column appended as long). A full ``overwrite`` may retype (no
-        surviving rows to misread)."""
-        existing = T.StructType.fromJson(json.loads(prev.schema_json))
-        by_name = {f.name: f for f in existing.fields}
-        widened: dict[str, T.DataType] = {}
-        for f in df.schema.fields:
-            prev_f = by_name.get(f.name)
-            if prev_f is None or prev_f.dataType == f.dataType:
-                continue
-            w = widened_type(prev_f.dataType, f.dataType)
-            if w is None:
-                raise ValueError(
-                    f"type change for column {f.name!r} "
-                    f"({prev_f.dataType.simpleString()} → "
-                    f"{f.dataType.simpleString()}) — append/merge cannot "
-                    "retype; use overwrite for a full-replace retype"
-                )
-            # safe type WIDENING (Delta table-feature parity): the commit
-            # schema adopts the wider type — metadata (field id) stays, so
-            # old (narrow) files keep reading through id matching, and the
-            # parquet reader upcasts them losslessly. A NARROWER source is
-            # also fine: the table type already holds it (_align_to casts).
-            if w != prev_f.dataType:
-                widened[f.name] = w
-        if widened:
-            existing = T.StructType(
-                [
-                    T.StructField(
-                        f.name,
-                        widened.get(f.name, f.dataType),
-                        f.nullable,
-                        f.metadata,
-                    )
-                    for f in existing.fields
-                ]
-            )
-        names = {f.name for f in existing.fields}
-        # evolved-in columns are nullable by definition — every
-        # pre-existing row holds NULL for them (same rule as the format
-        # writer's _check_type_compat; a non-nullable commit schema over
-        # null-filled history breaks codegen's null checks on read)
-        merged = T.StructType(
-            list(existing.fields)
-            + [
-                T.StructField(f.name, f.dataType, True, f.metadata)
-                for f in strip_ids(
-                    T.StructType(
-                        [f for f in df.schema.fields if f.name not in names]
-                    )
-                ).fields
-            ]
+        """Schema evolution (README.md:8) of ``df`` into ``prev``'s
+        schema, enforcing types — ``log.merged_schema``, the rule the
+        format writers share."""
+        return log.merged_schema(
+            T.StructType.fromJson(json.loads(prev.schema_json)),
+            df.schema,
+            int(prev.stats.get("max_field_id", 0)),
         )
-        if max_field_id(existing):
-            merged = with_field_ids(
-                merged, int(prev.stats.get("max_field_id", 0))
-            )
-        return merged
 
     def merge(
         self,
@@ -2932,10 +2948,17 @@ class VersionedTable:
         ``extra_stats`` rides the commit record (atomic with the data)
         — see ``create``.
 
-        Concurrent writers: a version collision rebase-retries when the
-        conflicting commits provably commute with this merge (see
-        ``_commit_merge_with_rebase``); otherwise CommitConflictError
-        surfaces for the caller to re-run.
+        Concurrent writers (Delta VLDB'20 §3.2): a version collision
+        re-publishes the already-written rewrite on the fresh snapshot
+        (``_publish``) when the concurrent commits provably commute with
+        this merge — every file it rewrote is still live, the schema,
+        table metadata, deletion vectors and (when it assigned ids) the
+        identity high-water are unchanged, and no concurrently added
+        file holds a row matching its keys (a semi-join over ONLY the
+        added files). Blind appends of foreign keys, merges and deletes
+        on disjoint keys, and compactions of untouched files all pass;
+        anything else raises CommitConflictError for the caller to
+        re-run.
         """
         prev = self.get_commit()
         if self._txn_skip(prev, txn_app, txn_version):
@@ -3297,20 +3320,46 @@ class VersionedTable:
             cdf_df = cdf_df.unionByName(nmbs_pre).unionByName(nmbs_post)
         cdf_files = self._write_files(cdf_df, self.cdf_dir, schema=schema)
 
-        src_keys = src.select(*keys).dropDuplicates(keys)
-        v, stats = self._commit_merge_with_rebase(
+        src_keys = src.select(*keys).dropDuplicates(keys).alias("s")
+
+        def keys_match(added: DataFrame) -> bool:
+            on = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys]
+            return bool(
+                added.alias("t")
+                .join(src_keys, on, "left_semi")
+                .limit(1)
+                .count()
+            )
+
+        touched_set = set(touched)
+        own = {"touched_files": len(touched), **(extra_stats or {})}
+        if ident_last:
+            own["identity"] = dict(ident_last)
+        v, stats = self._publish(
             prev,
-            touched,
-            new_files,
-            cdf_files,
-            schema,
-            src_keys,
-            keys,
-            txn_app,
-            txn_version,
-            nmbs_active=nmbs_active,
-            identity_stats=ident_last or None,
-            extra_stats=extra_stats,
+            "merge",
+            lambda base: {
+                "new_files": new_files,
+                "cdf_files": cdf_files,
+                "schema_json": schema.json(),
+                "stats": {
+                    **own,
+                    "carryover_files": sum(
+                        f not in touched_set for f in base.files
+                    ),
+                },
+            },
+            rewritten=touched_set,
+            # with a by-source clause, every concurrently added row is
+            # unmatched-by-source in a serial run, so the clause might
+            # have deleted or updated it: any added file conflicts
+            affects=(
+                ("NOT MATCHED BY SOURCE clause", lambda added: True)
+                if nmbs_active
+                else ("keys", keys_match)
+            ),
+            identity=bool(ident_last),
+            txn=(txn_app, txn_version),
         )
         src.unpersist()
         for c in ident_caches:
@@ -3321,188 +3370,30 @@ class VersionedTable:
             **stats,
         }
 
-    def _commit_merge_with_rebase(
-        self,
-        prev: Commit,
-        touched: list[str],
-        new_files: list[str],
-        cdf_files: list[str],
-        schema: T.StructType,
-        src_keys: DataFrame,
-        keys: list[str],
-        txn_app: str | None,
-        txn_version: int | None,
-        retry_conflicts: int = 5,
-        nmbs_active: bool = False,
-        identity_stats: dict | None = None,
-        extra_stats: dict | None = None,
-    ) -> tuple[int, dict]:
-        """Optimistic-concurrency resolution for merge (Delta VLDB'20
-        §3.2): on a version collision, re-read the new latest commit
-        and REBASE — re-publish the already-written rewrite on top of
-        the fresh snapshot — iff the concurrent commits provably
-        commute with this merge under the serialization "them first,
-        us second":
-
-        * every file this merge rewrote is still live in the fresh
-          snapshot (a concurrent writer removing one means write-write
-          overlap: lost update — raise);
-        * the table schema and metadata are unchanged (a concurrent
-          evolution could invalidate the rewrite's column set, a new
-          constraint its rows — raise, Delta's MetadataChangedException);
-        * files the concurrent commits ADDED contain no rows matching
-          this merge's keys — checked exactly with a semi-join that
-          scans ONLY the added files (a match means a serial execution
-          would have merged those rows too: our rewrite is stale —
-          raise). Blind appends of foreign keys, merges/deletes on
-          disjoint keys, and compactions of untouched files all pass.
-
-        The rebase itself rewrites no data: carryover is recomputed
-        from the fresh snapshot (so concurrent writers' files survive)
-        and the commit record is re-published — same cost model as the
-        append retry above."""
-        touched_set = set(touched)
-        prev_files = set(prev.files)
-        base = prev
-        attempt = 0
-        while True:
-            carryover = [f for f in base.files if f not in touched_set]
-            extra = {
-                "touched_files": len(touched),
-                "carryover_files": len(carryover),
-                **(extra_stats or {}),
-            }
-            if base.version != prev.version:
-                extra["rebased_from_version"] = prev.version
-            stats = self._txn_record(
-                self._with_new_file_stats(
-                    self._carry_stats(base, carryover, extra),
-                    new_files,
-                    schema,
-                ),
-                base,
-                txn_app,
-                txn_version,
-            )
-            if identity_stats:
-                stats["identity"] = dict(identity_stats)
-            try:
-                self._write_commit(
-                    Commit(
-                        base.version + 1,
-                        "merge",
-                        carryover + new_files,
-                        cdf_files,
-                        schema.json(),
-                        time.time(),
-                        stats,
-                        dv_files=list(base.dv_files),
-                    )
-                )
-                return base.version + 1, stats
-            except CommitConflictError:
-                attempt += 1
-                if attempt > retry_conflicts:
-                    raise
-                fresh = self.get_commit()
-                if self._txn_skip(fresh, txn_app, txn_version):
-                    return fresh.version, {"txn_skipped": True}
-                if (
-                    fresh.schema_json != prev.schema_json
-                    or fresh.metadata != prev.metadata
-                ):
-                    raise CommitConflictError(
-                        "concurrent schema or metadata change during "
-                        "merge — re-run"
-                    ) from None
-                if identity_stats and (fresh.stats.get("identity") or {}) != (
-                    prev.stats.get("identity") or {}
-                ):
-                    # a concurrent commit consumed identity ids this
-                    # merge's inserted rows may collide with; the
-                    # rewrite is baked into files — re-run the merge
-                    raise CommitConflictError(
-                        "concurrent identity allocation during merge "
-                        "— re-run"
-                    ) from None
-                if list(fresh.dv_files) != list(prev.dv_files):
-                    # a concurrent DV delete may reference files this
-                    # merge rewrote — its deletions would silently
-                    # resurrect in our output. Conservative: conflict.
-                    raise CommitConflictError(
-                        "concurrent deletion-vector commit during merge "
-                        "— re-run"
-                    ) from None
-                overlap_files = touched_set - set(fresh.files)
-                if overlap_files:
-                    raise CommitConflictError(
-                        "concurrent writer removed file(s) this merge "
-                        f"rewrote ({sorted(overlap_files)[:3]}…) — "
-                        "write-write conflict, re-run"
-                    ) from None
-                added = [f for f in fresh.files if f not in prev_files]
-                if added and nmbs_active:
-                    # any concurrently-added row is by definition
-                    # unmatched-by-source in a serial re-execution of
-                    # this merge, so the by-source clause might have
-                    # deleted/updated it — our rewrite is stale.
-                    raise CommitConflictError(
-                        "concurrent commit added files during a merge "
-                        "with a NOT MATCHED BY SOURCE clause — re-run"
-                    ) from None
-                if added:
-                    probe = self._read_files(added, prev.schema_json).alias("t")
-                    hit = (
-                        probe.join(
-                            src_keys.alias("s"),
-                            [
-                                F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
-                                for k in keys
-                            ],
-                            "left_semi",
-                        )
-                        .limit(1)
-                        .count()
-                    )
-                    if hit:
-                        raise CommitConflictError(
-                            "concurrent commit added rows matching this "
-                            "merge's keys — result would differ from a "
-                            "serial execution, re-run"
-                        ) from None
-                base = fresh
-
     def add_column(self, name: str, dtype: str) -> int:
         """Metadata-only ``ALTER TABLE ADD COLUMN``: commits a widened
         schema without touching a single data file — existing files
         simply lack the column and the schema-driven read path fills it
         with NULLs (the same mechanism merge schema evolution relies
         on). O(1) regardless of table size, like Delta/Iceberg."""
-        prev = self.get_commit()
-        schema = T.StructType.fromJson(json.loads(prev.schema_json))
-        if name in {f.name for f in schema.fields}:
-            raise ValueError(f"column {name!r} already exists")
-        schema = schema.add(name, dtype)
-        if max_field_id(schema):
-            # fresh id for the new column, above the high-water mark so a
-            # previously-dropped column's id can't be reissued
-            schema = with_field_ids(
-                schema, int(prev.stats.get("max_field_id", 0))
-            )
-        v = prev.version + 1
-        self._write_commit(
-            Commit(
-                v,
-                "add_column",
-                prev.files,
-                [],
-                schema.json(),
-                time.time(),
-                self._carry_stats(prev, prev.files, {"added_column": name}),
-                dv_files=list(prev.dv_files),
-            )
-        )
-        return v
+
+        def build(prev: Commit) -> dict:
+            schema = T.StructType.fromJson(json.loads(prev.schema_json))
+            if name in {f.name for f in schema.fields}:
+                raise ValueError(f"column {name!r} already exists")
+            schema = schema.add(name, dtype)
+            if max_field_id(schema):
+                # fresh id for the new column, above the high-water mark
+                # so a previously-dropped column's id can't be reissued
+                schema = with_field_ids(
+                    schema, int(prev.stats.get("max_field_id", 0))
+                )
+            return {
+                "schema_json": schema.json(),
+                "stats": {"added_column": name},
+            }
+
+        return self._commit_same_snapshot("add_column", build)
 
     def rename_column(self, old: str, new: str) -> int:
         """Metadata-only ``ALTER TABLE RENAME COLUMN`` via column
@@ -3530,83 +3421,75 @@ class VersionedTable:
                 "rename, physically rewrite (t.overwrite(t.read())), "
                 "then re-register."
             )
-        prev = self.get_commit()
-        schema = T.StructType.fromJson(json.loads(prev.schema_json))
-        names = {f.name for f in schema.fields}
-        if old not in names:
-            raise ValueError(f"column {old!r} does not exist")
-        if new in names:
-            raise ValueError(f"column {new!r} already exists")
-        field = schema[old]
-        if not (field.metadata and FIELD_ID in field.metadata):
-            raise ValueError(
-                f"column {old!r} has no field id (table predates column "
-                "mapping) — upgrade first: t.overwrite(t.read()) rewrites "
-                "the table with ids, then rename"
-            )
-        for cname, sql in self.constraints().items():
-            if re.search(rf"\b{re.escape(old)}\b", sql):
+
+        def build(prev: Commit) -> dict:
+            schema = T.StructType.fromJson(json.loads(prev.schema_json))
+            names = {f.name for f in schema.fields}
+            if old not in names:
+                raise ValueError(f"column {old!r} does not exist")
+            if new in names:
+                raise ValueError(f"column {new!r} already exists")
+            field = schema[old]
+            if not (field.metadata and FIELD_ID in field.metadata):
                 raise ValueError(
-                    f"column {old!r} is referenced by CHECK constraint "
-                    f"{cname!r} ({sql}) — drop the constraint, rename, "
-                    "and re-add it against the new name"
+                    f"column {old!r} has no field id (table predates "
+                    "column mapping) — upgrade first: t.overwrite(t.read()) "
+                    "rewrites the table with ids, then rename"
                 )
-        for gname, gsql in self.generated_columns().items():
-            if gname == old or re.search(rf"\b{re.escape(old)}\b", gsql):
+            md = dict(prev.metadata)
+            for cname, sql in (md.get("constraints") or {}).items():
+                if re.search(rf"\b{re.escape(old)}\b", sql):
+                    raise ValueError(
+                        f"column {old!r} is referenced by CHECK constraint "
+                        f"{cname!r} ({sql}) — drop the constraint, rename, "
+                        "and re-add it against the new name"
+                    )
+            for gname, gsql in (md.get("generated") or {}).items():
+                if gname == old or re.search(rf"\b{re.escape(old)}\b", gsql):
+                    raise ValueError(
+                        f"column {old!r} is part of generated column "
+                        f"{gname!r} ({gsql}) — drop the generation binding, "
+                        "rename, and re-add it against the new name"
+                    )
+            if old in _identity_defs(md):
                 raise ValueError(
-                    f"column {old!r} is part of generated column "
-                    f"{gname!r} ({gsql}) — drop the generation binding, "
-                    "rename, and re-add it against the new name"
+                    f"column {old!r} is GENERATED ALWAYS AS IDENTITY — "
+                    "rename is unsupported (the definition and high-water "
+                    "mark key on the name)"
                 )
-        if old in self.identity_columns():
-            raise ValueError(
-                f"column {old!r} is GENERATED ALWAYS AS IDENTITY — "
-                "rename is unsupported (the definition and high-water "
-                "mark key on the name)"
+            renamed = T.StructType(
+                [
+                    T.StructField(new, f.dataType, f.nullable, f.metadata)
+                    if f.name == old
+                    else f
+                    for f in schema.fields
+                ]
             )
-        renamed = T.StructType(
-            [
-                T.StructField(new, f.dataType, f.nullable, f.metadata)
-                if f.name == old
-                else f
-                for f in schema.fields
-            ]
-        )
-        stats = self._carry_stats(
-            prev, prev.files, {"renamed_column": f"{old}->{new}"}
-        )
-        # a DEFAULT follows its column (the expr is self-contained,
-        # only the registry key changes), and so does partitioning
-        md = dict(prev.metadata)
-        if old in (md.get("defaults") or {}):
-            md["defaults"] = {
-                (new if c == old else c): e for c, e in md["defaults"].items()
+            # a DEFAULT follows its column (the expr is self-contained,
+            # only the registry key changes), and so does partitioning
+            if old in (md.get("defaults") or {}):
+                md["defaults"] = {
+                    (new if c == old else c): e for c, e in md["defaults"].items()
+                }
+            if old in (md.get("partition_columns") or []):
+                md["partition_columns"] = [
+                    new if c == old else c for c in md["partition_columns"]
+                ]
+            # data-skipping stats follow the logical name: re-key them
+            carried = self._carry_stats(prev, prev.files).get("file_stats", {})
+            return {
+                "schema_json": renamed.json(),
+                "metadata": md,
+                "stats": {
+                    "renamed_column": f"{old}->{new}",
+                    "file_stats": {
+                        f: {(new if c == old else c): v for c, v in s.items()}
+                        for f, s in carried.items()
+                    },
+                },
             }
-        if old in (md.get("partition_columns") or []):
-            md["partition_columns"] = [
-                new if c == old else c for c in md["partition_columns"]
-            ]
-        # data-skipping stats follow the logical name: re-key them
-        if "file_stats" in stats:
-            stats["file_stats"] = {
-                f: {(new if c == old else c): v for c, v in s.items()}
-                for f, s in stats["file_stats"].items()
-            }
-        v = prev.version + 1
-        self._write_commit(
-            Commit(
-                v,
-                "rename_column",
-                prev.files,
-                [],
-                renamed.json(),
-                time.time(),
-                stats,
-                dv_files=list(prev.dv_files),
-                metadata=md,
-            )
-        )
-        return v
+
+        return self._commit_same_snapshot("rename_column", build)
 
     def drop_column(self, name: str) -> int:
         """Metadata-only ``ALTER TABLE DROP COLUMN``: the column leaves
@@ -3615,63 +3498,60 @@ class VersionedTable:
         files are naturally rewritten (Delta column-mapping drop works
         the same way). Time travel to an earlier version still shows
         the column."""
-        prev = self.get_commit()
-        schema = T.StructType.fromJson(json.loads(prev.schema_json))
-        if name not in {f.name for f in schema.fields}:
-            raise ValueError(f"column {name!r} does not exist")
-        kept = T.StructType([f for f in schema.fields if f.name != name])
-        if not kept.fields:
-            raise ValueError("cannot drop the last column")
-        # a constraint or generation expression referencing the dropped
-        # column would make every FUTURE write's probe fail to resolve —
-        # an opaque AnalysisException far from its cause. Refuse here.
-        for cname, sql in self.constraints().items():
-            if re.search(rf"\b{re.escape(name)}\b", sql):
+
+        def build(prev: Commit) -> dict:
+            schema = T.StructType.fromJson(json.loads(prev.schema_json))
+            if name not in {f.name for f in schema.fields}:
+                raise ValueError(f"column {name!r} does not exist")
+            kept = T.StructType([f for f in schema.fields if f.name != name])
+            if not kept.fields:
+                raise ValueError("cannot drop the last column")
+            # a constraint or generation expression referencing the
+            # dropped column would make every FUTURE write's probe fail
+            # to resolve — an opaque AnalysisException far from its
+            # cause. Refuse here.
+            md = dict(prev.metadata)
+            for cname, sql in (md.get("constraints") or {}).items():
+                if re.search(rf"\b{re.escape(name)}\b", sql):
+                    raise ValueError(
+                        f"column {name!r} is referenced by CHECK constraint "
+                        f"{cname!r} ({sql}) — drop the constraint first"
+                    )
+            for gname, gsql in (md.get("generated") or {}).items():
+                if gname == name or re.search(rf"\b{re.escape(name)}\b", gsql):
+                    raise ValueError(
+                        f"column {name!r} is part of generated column "
+                        f"{gname!r} ({gsql}) — drop the generation binding "
+                        "first"
+                    )
+            if name in _identity_defs(md):
                 raise ValueError(
-                    f"column {name!r} is referenced by CHECK constraint "
-                    f"{cname!r} ({sql}) — drop the constraint first"
+                    f"column {name!r} is GENERATED ALWAYS AS IDENTITY — "
+                    "identity columns cannot be dropped (the high-water "
+                    "mark and ALWAYS semantics would dangle)"
                 )
-        for gname, gsql in self.generated_columns().items():
-            if gname == name or re.search(rf"\b{re.escape(name)}\b", gsql):
+            if name in (md.get("partition_columns") or []):
                 raise ValueError(
-                    f"column {name!r} is part of generated column "
-                    f"{gname!r} ({gsql}) — drop the generation binding first"
+                    f"column {name!r} is a PARTITIONED BY column — the "
+                    "write layout and partition pruning depend on it; "
+                    "recreate the table to change partitioning"
                 )
-        if name in self.identity_columns():
-            raise ValueError(
-                f"column {name!r} is GENERATED ALWAYS AS IDENTITY — "
-                "identity columns cannot be dropped (the high-water "
-                "mark and ALWAYS semantics would dangle)"
-            )
-        if name in self.partition_columns():
-            raise ValueError(
-                f"column {name!r} is a PARTITIONED BY column — the "
-                "write layout and partition pruning depend on it; "
-                "recreate the table to change partitioning"
-            )
-        # the DEFAULT dies with its column (defaults are self-contained,
-        # so nothing else can reference it)
-        md = dict(prev.metadata)
-        defaults = {
-            c: e for c, e in (md.pop("defaults", None) or {}).items() if c != name
-        }
-        if defaults:
-            md["defaults"] = defaults
-        v = prev.version + 1
-        self._write_commit(
-            Commit(
-                v,
-                "drop_column",
-                prev.files,
-                [],
-                kept.json(),
-                time.time(),
-                self._carry_stats(prev, prev.files, {"dropped_column": name}),
-                dv_files=list(prev.dv_files),
-                metadata=md,
-            )
-        )
-        return v
+            # the DEFAULT dies with its column (defaults are
+            # self-contained, so nothing else can reference it)
+            defaults = {
+                c: e
+                for c, e in (md.pop("defaults", None) or {}).items()
+                if c != name
+            }
+            if defaults:
+                md["defaults"] = defaults
+            return {
+                "schema_json": kept.json(),
+                "metadata": md,
+                "stats": {"dropped_column": name},
+            }
+
+        return self._commit_same_snapshot("drop_column", build)
 
     def widen_column_type(self, name: str, new_type) -> int:
         """Metadata-only ``ALTER TABLE ... ALTER COLUMN c TYPE <wider>``
@@ -3695,70 +3575,61 @@ class VersionedTable:
         else:
             # full DDL type parser ("bigint", "decimal(12,2)", ...)
             new_dt = T.DataType.fromDDL(new_type)
-        prev = self.get_commit()
-        schema = T.StructType.fromJson(json.loads(prev.schema_json))
-        if name not in {f.name for f in schema.fields}:
-            raise ValueError(f"column {name!r} does not exist")
-        old_dt = schema[name].dataType
-        if new_dt == old_dt:
-            raise ValueError(
-                f"column {name!r} already has type {old_dt.simpleString()}"
+
+        def build(prev: Commit) -> dict:
+            schema = T.StructType.fromJson(json.loads(prev.schema_json))
+            if name not in {f.name for f in schema.fields}:
+                raise ValueError(f"column {name!r} does not exist")
+            old_dt = schema[name].dataType
+            if new_dt == old_dt:
+                raise ValueError(
+                    f"column {name!r} already has type {old_dt.simpleString()}"
+                )
+            if name in _identity_defs(prev.metadata):
+                raise ValueError(
+                    f"column {name!r} is an IDENTITY column — it stays "
+                    "BIGINT (the allocator's high-water arithmetic is "
+                    "64-bit)"
+                )
+            w = widened_type(old_dt, new_dt)
+            if w is None or w != new_dt:
+                raise ValueError(
+                    f"cannot change column {name!r} from "
+                    f"{old_dt.simpleString()} to {new_dt.simpleString()}: "
+                    "not a safe widening (byte→short→int→long, "
+                    "float→double, int32-or-narrower→double, decimal "
+                    "scale/precision growth) — a narrowing or "
+                    "representation change would require rewriting every "
+                    "file and can lose values"
+                )
+            if self._read_registration() is not None:
+                # the registered external parquet table serves the
+                # CATALOG schema, which this metadata-only commit cannot
+                # update — after the first wide-typed write, db.table
+                # consumers would read int64 pages through an int32
+                # catalog schema
+                raise ValueError(
+                    "table is catalog-registered; the registered parquet "
+                    "schema would go stale and break on the first wide "
+                    "write. Deregister, widen, then re-register."
+                )
+            widened = T.StructType(
+                [
+                    T.StructField(f.name, new_dt, f.nullable, f.metadata)
+                    if f.name == name
+                    else f
+                    for f in schema.fields
+                ]
             )
-        if name in self.identity_columns():
-            raise ValueError(
-                f"column {name!r} is an IDENTITY column — it stays "
-                "BIGINT (the allocator's high-water arithmetic is "
-                "64-bit)"
-            )
-        w = widened_type(old_dt, new_dt)
-        if w is None or w != new_dt:
-            raise ValueError(
-                f"cannot change column {name!r} from "
-                f"{old_dt.simpleString()} to {new_dt.simpleString()}: not "
-                "a safe widening (byte→short→int→long, float→double, "
-                "int32-or-narrower→double, decimal scale/precision "
-                "growth) — a narrowing or representation change would "
-                "require rewriting every file and can lose values"
-            )
-        if self._read_registration() is not None:
-            # the registered external parquet table serves the CATALOG
-            # schema, which this metadata-only commit cannot update —
-            # after the first wide-typed write, db.table consumers
-            # would read int64 pages through an int32 catalog schema
-            raise ValueError(
-                "table is catalog-registered; the registered parquet "
-                "schema would go stale and break on the first wide "
-                "write. Deregister, widen, then re-register."
-            )
-        widened = T.StructType(
-            [
-                T.StructField(f.name, new_dt, f.nullable, f.metadata)
-                if f.name == name
-                else f
-                for f in schema.fields
-            ]
-        )
-        v = prev.version + 1
-        self._write_commit(
-            Commit(
-                v,
-                "widen_column",
-                prev.files,
-                [],
-                widened.json(),
-                time.time(),
-                self._carry_stats(
-                    prev,
-                    prev.files,
-                    {
-                        "widened_column": f"{name}: "
-                        f"{old_dt.simpleString()}->{new_dt.simpleString()}"
-                    },
-                ),
-                dv_files=list(prev.dv_files),
-            )
-        )
-        return v
+            return {
+                "schema_json": widened.json(),
+                "stats": {
+                    "widened_column": f"{name}: "
+                    f"{old_dt.simpleString()}->{new_dt.simpleString()}"
+                },
+            }
+
+        return self._commit_same_snapshot("widen_column", build)
 
     def delete(self, condition: str, use_dv: bool = False) -> int:
         """Predicate DELETE — Delta ``DELETE FROM t WHERE ...`` parity
@@ -3798,13 +3669,12 @@ class VersionedTable:
             .distinct()
             .collect()
         )
-        carryover = [f for f in prev.files if f not in set(touched)]
-        files = carryover
+        new_files: list[str] = []
         if touched:
             touched_df = self._snapshot(prev, touched)
             kept = touched_df.filter(~pred)
             if kept.take(1):
-                files = files + self._write_files(
+                new_files = self._write_files(
                     kept, self.data_dir, enforce=False
                 )
             removed = touched_df.filter(pred)
@@ -3815,9 +3685,17 @@ class VersionedTable:
         cdf_files = self._write_files(
             removed.withColumn(CHANGE_TYPE_COL, F.lit("delete")), self.cdf_dir
         )
-        return self._commit_cow_with_rebase(
-            prev, touched, files[len(carryover):], cdf_files, "delete", condition
-        )
+        return self._publish(
+            prev,
+            "delete",
+            lambda base: {
+                "new_files": new_files,
+                "cdf_files": cdf_files,
+                "stats": {"touched_files": len(touched)},
+            },
+            rewritten=set(touched),
+            affects=self._rows_matching(condition),
+        )[0]
 
     def _refuse_dv_on_registered(self) -> None:
         if self._read_registration() is not None:
@@ -3901,140 +3779,45 @@ class VersionedTable:
             )
         finally:
             matched.unpersist()
-        return self._commit_cow_with_rebase(
-            prev,
-            [],  # nothing rewritten: every file stays live
-            [],
-            cdf_files,
-            "delete",
-            condition,
-            extra_stats={"dv_delete": True, "dv_referenced_files": len(referenced)},
-            dv_append=new_dv,
-            dv_referenced=referenced,
-            dv_counts_add=dv_counts,
-        )
 
-    def _commit_cow_with_rebase(
-        self,
-        prev: Commit,
-        touched: list[str],
-        new_files: list[str],
-        cdf_files: list[str],
-        op: str,
-        condition: str,
-        schema_json: str | None = None,
-        extra_stats: dict | None = None,
-        retry_conflicts: int = 5,
-        dv_append: list[str] | None = None,
-        dv_referenced: list[str] | None = None,
-        identity_stats: dict | None = None,
-        dv_counts_add: dict[str, int] | None = None,
-    ) -> int:
-        """Optimistic concurrency for predicate copy-on-write ops
-        (delete/update/overwrite_where) and DV deletes — the same
-        commute law as the merge rebase: on a version collision,
-        re-publish the rewrite on top of the fresh snapshot iff (a) no
-        concurrent commit removed a file this op rewrote (write-write
-        overlap) — for a DV delete the "rewritten" set is the files its
-        vector REFERENCES (a concurrent rewrite of one would resurrect
-        our deletions), (b) the schema and metadata are unchanged, (c) the
-        concurrently-ADDED files contain no row matching the predicate
-        (a serial execution would have affected it) — checked with a
-        filter probe that scans ONLY the added files — and (d) no
-        concurrent commit changed the deletion vectors (our positions /
-        CDF images were computed against the old vector). Blind appends
-        of non-matching rows and disjoint-file writers all pass; the
-        probe cost is the concurrent delta, never the table. The
-        predicate-scoped reload racing the ingest stream is the
-        canonical case at 100 TB."""
-        pred = F.coalesce(F.expr(condition), F.lit(False))
-        touched_set = set(touched)
-        guard_set = touched_set | set(dv_referenced or [])
-        prev_files = set(prev.files)
-        base = prev
-        attempt = 0
-        while True:
-            carryover = [f for f in base.files if f not in touched_set]
-            extra = {"touched_files": len(touched), **(extra_stats or {})}
-            if base.version != prev.version:
-                extra["rebased_from_version"] = prev.version
-            dv = list(base.dv_files) + list(dv_append or [])
-            cow_stats = self._with_new_file_stats(
-                self._carry_stats(base, carryover, extra),
-                new_files,
-                schema_json or prev.schema_json,
-            )
-            if identity_stats:
-                cow_stats["identity"] = dict(identity_stats)
-            if dv_counts_add:
+        def build(base: Commit) -> dict:
+            stats = {
+                "touched_files": 0,
+                "dv_delete": True,
+                "dv_referenced_files": len(referenced),
+            }
+            if dv_counts:
                 # new vector entries ADD to the carried live counts
-                # (entries are disjoint across DV files by
-                # construction — see _write_dv)
-                dvc = dict(cow_stats.get("dv_counts") or {})
-                for f, n in dv_counts_add.items():
+                # (entries are disjoint across DV files — _write_dv)
+                dvc = dict(base.stats.get("dv_counts") or {})
+                for f, n in dv_counts.items():
                     dvc[f] = int(dvc.get(f, 0)) + int(n)
-                cow_stats["dv_counts"] = dvc
-            try:
-                self._write_commit(
-                    Commit(
-                        base.version + 1,
-                        op,
-                        carryover + new_files,
-                        cdf_files,
-                        schema_json or prev.schema_json,
-                        time.time(),
-                        cow_stats,
-                        dv_files=dv,
-                    )
-                )
-                return base.version + 1
-            except CommitConflictError:
-                attempt += 1
-                if attempt > retry_conflicts:
-                    raise
-                fresh = self.get_commit()
-                if (
-                    fresh.schema_json != prev.schema_json
-                    or fresh.metadata != prev.metadata
-                ):
-                    raise CommitConflictError(
-                        f"concurrent schema or metadata change during "
-                        f"{op} — re-run"
-                    ) from None
-                if identity_stats and (fresh.stats.get("identity") or {}) != (
-                    prev.stats.get("identity") or {}
-                ):
-                    # ids this op assigned may collide with the
-                    # concurrent winner's — re-run to re-assign
-                    raise CommitConflictError(
-                        f"concurrent identity allocation during {op} "
-                        "— re-run"
-                    ) from None
-                if list(fresh.dv_files) != list(prev.dv_files):
-                    raise CommitConflictError(
-                        f"concurrent deletion-vector commit during {op} "
-                        "— re-run"
-                    ) from None
-                overlap = guard_set - set(fresh.files)
-                if overlap:
-                    raise CommitConflictError(
-                        f"concurrent writer removed file(s) this {op} "
-                        f"depends on ({sorted(overlap)[:3]}…) — "
-                        "write-write conflict, re-run"
-                    ) from None
-                added = [f for f in fresh.files if f not in prev_files]
-                if added and (
-                    self._read_files(added, prev.schema_json)
-                    .filter(pred)
-                    .limit(1)
-                    .count()
-                ):
-                    raise CommitConflictError(
-                        f"concurrent commit added rows matching this "
-                        f"{op}'s predicate — result would differ from a "
-                        "serial execution, re-run"
-                    ) from None
-                base = fresh
+                stats["dv_counts"] = dvc
+            return {
+                "cdf_files": cdf_files,
+                "dv_files": list(base.dv_files) + new_dv,
+                "stats": stats,
+            }
+
+        # nothing is rewritten, but the vector depends on the files it
+        # references: a concurrent rewrite of one would resurrect rows
+        return self._publish(
+            prev,
+            "delete",
+            build,
+            depends=set(referenced),
+            affects=self._rows_matching(condition),
+        )[0]
+
+    @staticmethod
+    def _rows_matching(condition: str) -> tuple:
+        """The ``affects`` rule of a predicate op (delete, update,
+        overwrite_where) for ``_publish``: a concurrently added row the
+        predicate selects would have been affected by a serial run."""
+        pred = F.coalesce(F.expr(condition), F.lit(False))
+        return "predicate", lambda added: bool(
+            added.filter(pred).limit(1).count()
+        )
 
     def update(self, condition: str, assignments: dict[str, F.Column]) -> int:
         """Conditional UPDATE — the reference's CloseWatermark proc (O28,
@@ -4064,7 +3847,6 @@ class VersionedTable:
             .distinct()
             .collect()
         )
-        carryover = [f for f in prev.files if f not in set(touched)]
         tgt = self._snapshot(prev, touched)
         cond = F.expr(condition)
         # collision-proof marker: a user column literally named "__upd"
@@ -4114,9 +3896,17 @@ class VersionedTable:
             ),
             self.cdf_dir,
         )
-        return self._commit_cow_with_rebase(
-            prev, touched, new_files, cdf_files, "update", condition
-        )
+        return self._publish(
+            prev,
+            "update",
+            lambda base: {
+                "new_files": new_files,
+                "cdf_files": cdf_files,
+                "stats": {"touched_files": len(touched)},
+            },
+            rewritten=set(touched),
+            affects=self._rows_matching(condition),
+        )[0]
 
     def _dv_referenced_files(self, c: Commit) -> set[str]:
         """Scheme-normalized data-file paths the commit's deletion
@@ -4295,106 +4085,39 @@ class VersionedTable:
         # output — surface it; re-running compaction is cheap relative to
         # silently resurrecting rewritten rows. At 100 TB this matters:
         # compaction runs long and WILL collide with the ingest stream.
-        prev_files_set = set(prev.files)
-        # full compaction replaces every prev file; incremental dooms
-        # only the rewritten subset — right-sized files carry through
-        doomed = rewrite_set if rewrite_set is not None else prev_files_set
-        base = prev
-        attempt = 0
-        # new_files never changes across OCC retries, so harvest their
-        # footers/bloom sidecars ONCE per schema (a rebase onto a
-        # concurrent metadata commit can change schema_json, which the
-        # harvest keys stat extraction on — recompute only then).
-        harvested: dict = {}
-        harvest_schema: str | None = None
-        while True:
-            files = new_files + [f for f in base.files if f not in doomed]
+        # Full compaction replaces every prev file; incremental dooms
+        # only the rewritten subset — right-sized files carry through.
+        doomed = rewrite_set if rewrite_set is not None else set(prev.files)
+
+        def build(base: Commit) -> dict:
             stats: dict = {
                 "files_before": len(prev.files),
                 "files_after": len(new_files),
                 "bytes": total,
+                # the exact scan-collected cluster stats overlay the
+                # footer harvest (min/max, + bloom sidecars when
+                # configured — how "enable the property, then OPTIMIZE"
+                # indexes existing data)
+                "file_stats": packed_stats,
             }
             if rewrite_set is not None:
                 stats["files_rewritten"] = len(rewrite_set)
-                stats["files_kept"] = len(files) - len(new_files)
-            # footer-harvest min/max (+ bloom sidecars when configured —
-            # this is how "enable the property, then OPTIMIZE" indexes
-            # existing data) for every packed file; the exact
-            # scan-collected cluster stats overlay per column
-            if harvest_schema != base.schema_json:
-                harvested = dict(
-                    self._with_new_file_stats(
-                        {}, new_files, base.schema_json
-                    ).get("file_stats", {})
-                )
-                harvest_schema = base.schema_json
-            fstats = dict(harvested)
-            for f, s in packed_stats.items():
-                fstats[f] = {**fstats.get(f, {}), **s}
-            base_fstats = base.stats.get("file_stats", {})
-            for f in files:
-                if f not in fstats and f in base_fstats:
-                    fstats[f] = base_fstats[f]
-            if fstats:
-                stats["file_stats"] = fstats
-            if base.stats.get("txn"):
-                stats["txn"] = dict(base.stats["txn"])
-            # a WHERE-scoped compact carries the vectors, so the live
-            # DV counts follow the surviving files (entries for
-            # rewritten files die with them — their deletions are now
-            # materialized); unscoped modes drop dv_files and
-            # log.prepare clears the counts
-            if where and base.stats.get("dv_counts"):
-                live = set(files)
-                dvc = {
-                    f: int(n)
-                    for f, n in base.stats["dv_counts"].items()
-                    if f in live
-                }
-                if dvc:
-                    stats["dv_counts"] = dvc
-            if base.version != prev.version:
-                stats["rebased_from_version"] = prev.version
-            try:
-                self._write_commit(
-                    Commit(
-                        base.version + 1,
-                        "compact",
-                        files,
-                        [],
-                        base.schema_json,
-                        time.time(),
-                        stats,
-                        # unscoped/incremental modes rewrite every
-                        # DV-referenced file, so the vectors are spent;
-                        # a WHERE-scoped compact may keep DV'd files
-                        # outside its range — vectors carry (entries
-                        # for rewritten files go stale harmlessly)
-                        dv_files=list(base.dv_files) if where else [],
-                    )
-                )
-                return base.version + 1
-            except CommitConflictError:
-                attempt += 1
-                if attempt > 5:
-                    raise
-                fresh = self.get_commit()
-                removed = doomed - set(fresh.files)
-                if removed:
-                    raise CommitConflictError(
-                        "concurrent writer rewrote/removed file(s) this "
-                        f"compaction packed ({sorted(removed)[:3]}…) — "
-                        "re-run compaction on the fresh snapshot"
-                    ) from None
-                if list(fresh.dv_files) != list(prev.dv_files):
-                    # a concurrent DV delete marked rows in files this
-                    # compaction already packed WITHOUT those deletions —
-                    # committing would resurrect them
-                    raise CommitConflictError(
-                        "concurrent deletion-vector commit during "
-                        "compaction — re-run on the fresh snapshot"
-                    ) from None
-                base = fresh
+                stats["files_kept"] = sum(f not in doomed for f in base.files)
+            return {
+                "new_files": new_files,
+                "stats": stats,
+                # unscoped/incremental modes rewrite every DV-referenced
+                # file, so the vectors are spent (and log.prepare drops
+                # the live DV counts); a WHERE-scoped compact may keep
+                # DV'd files outside its range — vectors and the counts
+                # of the surviving files carry (entries for rewritten
+                # files go stale harmlessly)
+                "dv_files": list(base.dv_files) if where else [],
+            }
+
+        return self._publish(
+            prev, "compact", build, rewritten=doomed, schema=False
+        )[0]
 
     def _dead_column_files(self, c: Commit) -> set[str]:
         """Files whose parquet footers still carry columns the logical
@@ -4494,75 +4217,26 @@ class VersionedTable:
             else:
                 os.remove(f)
         new_files = kept_new
-        doomed = set(candidates)
-        base = prev
-        attempt = 0
-        harvested: dict = {}
-        harvest_schema: str | None = None
-        while True:
-            files = new_files + [f for f in base.files if f not in doomed]
-            stats: dict = {
-                "files_purged": len(candidates),
-                "files_after": len(new_files),
-                "dv_referenced": len(dv_ref),
-                "dead_column_files": len(dead),
-                "bytes": total,
-            }
-            if harvest_schema != base.schema_json and new_files:
-                harvested = dict(
-                    self._with_new_file_stats(
-                        {}, new_files, base.schema_json
-                    ).get("file_stats", {})
-                )
-                harvest_schema = base.schema_json
-            fstats = dict(harvested)
-            base_fstats = base.stats.get("file_stats", {})
-            for f in files:
-                if f not in fstats and f in base_fstats:
-                    fstats[f] = base_fstats[f]
-            if fstats:
-                stats["file_stats"] = fstats
-            if base.stats.get("txn"):
-                stats["txn"] = dict(base.stats["txn"])
-            if base.version != prev.version:
-                stats["rebased_from_version"] = prev.version
-            try:
-                self._write_commit(
-                    Commit(
-                        base.version + 1,
-                        "reorg_purge",
-                        files,
-                        [],
-                        base.schema_json,
-                        time.time(),
-                        stats,
-                        # every DV-referenced live file was rewritten
-                        # with its deletions applied — vectors spent
-                        # (entries for already-gone files were stale)
-                        dv_files=[],
-                    )
-                )
-                return base.version + 1
-            except CommitConflictError:
-                attempt += 1
-                if attempt > 5:
-                    raise
-                fresh = self.get_commit()
-                removed = doomed - set(fresh.files)
-                if removed:
-                    raise CommitConflictError(
-                        "concurrent writer rewrote/removed file(s) this "
-                        f"purge rewrote ({sorted(removed)[:3]}…) — "
-                        "re-run REORG on the fresh snapshot"
-                    ) from None
-                if list(fresh.dv_files) != list(prev.dv_files):
-                    # new vectors may mark rows in files this purge
-                    # already rewrote without those deletions
-                    raise CommitConflictError(
-                        "concurrent deletion-vector commit during "
-                        "REORG PURGE — re-run on the fresh snapshot"
-                    ) from None
-                base = fresh
+        return self._publish(
+            prev,
+            "reorg_purge",
+            lambda base: {
+                "new_files": new_files,
+                "stats": {
+                    "files_purged": len(candidates),
+                    "files_after": len(new_files),
+                    "dv_referenced": len(dv_ref),
+                    "dead_column_files": len(dead),
+                    "bytes": total,
+                },
+                # every DV-referenced live file was rewritten with its
+                # deletions applied — vectors spent (entries for
+                # already-gone files were stale)
+                "dv_files": [],
+            },
+            rewritten=set(candidates),
+            schema=False,
+        )[0]
 
     # -- data skipping (Delta file-stats analog) ---------------------------
 

@@ -685,97 +685,6 @@ def _write_task_files(path: str, iterator, field_ids: dict[str, int]) -> _WriteR
     return _WriteResult(data_file, cdf_file, tbl.num_rows)
 
 
-def _check_type_compat(
-    prev_schema: T.StructType, new_schema: T.StructType, id_floor: int = 0
-):
-    """Append-style merged schema (previous columns keep their order,
-    new columns append — the read path null-fills by name). Same-name
-    type differences are accepted only as safe WIDENINGS (the shared
-    ``pipeline.tables.widened_type`` set: int chain, float→double,
-    decimal growth) — the commit schema adopts the wider type and old
-    (narrow) files read through it losslessly; anything else is
-    rejected loudly. On an id-mapped table the appended columns receive
-    fresh field ids above ``id_floor`` (the table's high-water mark),
-    matching the native ``_merged_schema`` discipline — mixed id/no-id
-    schemas are never committed."""
-    prev_names = {f.name: f for f in prev_schema.fields}
-    widened: dict[str, T.DataType] = {}
-    for f in new_schema.fields:
-        p = prev_names.get(f.name)
-        if p is None or p.dataType == f.dataType:
-            continue
-        w = log.widened_type(p.dataType, f.dataType)
-        if w is None:
-            raise ValueError(
-                f"type change for column '{f.name}' "
-                f"({p.dataType} → {f.dataType}) — "
-                "evolve via VersionedTable"
-            )
-        if w != p.dataType:
-            widened[f.name] = w
-    if widened:
-        prev_schema = T.StructType(
-            [
-                T.StructField(
-                    f.name,
-                    widened.get(f.name, f.dataType),
-                    f.nullable,
-                    f.metadata,
-                )
-                for f in prev_schema.fields
-            ]
-        )
-    prev_ids = [
-        int(f.metadata[log.FIELD_ID])
-        for f in prev_schema.fields
-        if f.metadata and log.FIELD_ID in f.metadata
-    ]
-    # an evolved-in column is nullable BY DEFINITION: every row that
-    # existed before this append holds NULL for it. Keeping the source
-    # dataframe's nullable=false would hand Spark a non-nullable column
-    # whose Arrow batches contain nulls — codegen then reads the value
-    # slot without a null check (IllegalStateException at Float8Vector).
-    added = [
-        T.StructField(f.name, f.dataType, True, f.metadata)
-        for f in new_schema.fields
-        if f.name not in prev_names
-    ]
-    if prev_ids and added:
-        nxt = max(max(prev_ids), id_floor) + 1
-        stamped = []
-        for f in added:
-            md = dict(f.metadata or {})
-            if log.FIELD_ID not in md:
-                md[log.FIELD_ID] = nxt
-                nxt += 1
-            stamped.append(T.StructField(f.name, f.dataType, True, md))
-        added = stamped
-    return T.StructType(list(prev_schema.fields) + added)
-
-
-def _overwrite_schema(
-    prev_schema: T.StructType, new_schema: T.StructType, id_floor: int
-) -> T.StructType:
-    """Full-replace commit schema, mirroring native
-    ``VersionedTable.overwrite`` (``pipeline/tables.py:619-646``): the
-    NEW dataframe's columns become the table schema; a same-name
-    same-type column keeps its field id (it is the same logical
-    column), everything else gets a fresh id above the table's
-    high-water mark. Committing the id-stripped input instead (the
-    pre-round-8 behavior) silently downgraded id-mapped tables out of
-    column mapping — a later ``rename_column`` refused."""
-    prev_fields = {f.name: f for f in prev_schema.fields}
-    carried = []
-    for f in new_schema.fields:
-        p = prev_fields.get(f.name)
-        md = dict(f.metadata or {})
-        if p is not None and p.dataType == f.dataType and p.metadata:
-            if log.FIELD_ID in p.metadata:
-                md[log.FIELD_ID] = int(p.metadata[log.FIELD_ID])
-        carried.append(T.StructField(f.name, f.dataType, f.nullable, md))
-    return log.with_field_ids(T.StructType(carried), id_floor)
-
-
 def _latest_commit(path: str) -> log.Commit | None:
     """The table's latest commit, or None while it has none."""
     log_dir = log.dir_of(path)
@@ -826,8 +735,8 @@ def _plan_commit_schema(
     prev_schema = T.StructType.fromJson(json.loads(prev.schema_json))
     floor = int(prev.stats.get("max_field_id", 0))
     if overwrite:
-        return _overwrite_schema(prev_schema, new_schema, floor)
-    return _check_type_compat(prev_schema, new_schema, floor)
+        return log.replaced_schema(prev_schema, new_schema, floor)
+    return log.merged_schema(prev_schema, new_schema, floor)
 
 
 def _drop_files(messages) -> None:
@@ -1049,8 +958,6 @@ class _VersionedWriter(DataSourceArrowWriter):
             }
             if kept:
                 stats["file_stats"] = kept
-        if prev.stats.get("txn"):
-            stats["txn"] = dict(prev.stats["txn"])
         log.commit(
             log_dir,
             {
@@ -1143,8 +1050,7 @@ class _VersionedStreamWriter(DataSourceStreamArrowWriter):
         if seen is not None and batchId <= seen:
             _drop_files(messages)  # replayed epoch: structural no-op
             return
-        stats: dict = {"txn": dict(prev.stats.get("txn") or {})}
-        stats["txn"][_STREAM_TXN_APP] = batchId
+        stats: dict = {"txn": {_STREAM_TXN_APP: batchId}}
         kept = {
             f: s
             for f, s in (prev.stats.get("file_stats") or {}).items()

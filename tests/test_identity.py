@@ -25,6 +25,7 @@ from nrtwithdeltalake_spark.pipeline.sqldml import (
     UnsupportedSqlError,
     execute_dml,
 )
+from nrtwithdeltalake_spark.pipeline import tables
 from nrtwithdeltalake_spark.pipeline.tables import VersionedTable
 
 
@@ -116,11 +117,12 @@ def test_overwrite_and_restore_keep_high_water(spark, tmp_path):
     assert rows == [(1, "a"), (2, "b"), (3, "c"), (5, "post")]
 
 
-def test_concurrent_lockless_appends_mint_disjoint_ids(spark, tmp_path):
+def test_concurrent_lockless_appends_mint_disjoint_ids(spark, tmp_path, monkeypatch):
     """The commit-arbitration storm: 4 threads over 2 INDEPENDENT
     VersionedTable instances (no shared python state — the two-process
     simulation) each append 1-row batches; every append's OCC loser
     must shift past the fresh high-water, so ids are exactly 1..N."""
+    monkeypatch.setattr(tables, "COMMIT_RETRIES", 50)
     p = str(tmp_path / "storm")
     VersionedTable.create(
         spark,
@@ -138,7 +140,6 @@ def test_concurrent_lockless_appends_mint_disjoint_ids(spark, tmp_path):
                     spark.createDataFrame(
                         [(f"w{wid}-{i}",)], "s string"
                     ),
-                    retry_conflicts=50,
                 )
             except Exception as e:  # surface, don't deadlock the join
                 errs.append(repr(e))
@@ -505,12 +506,13 @@ def test_legacy_store_upgrades_to_identity_ledger(spark, tmp_path):
     assert tbl == [1, 2, 3, 4]
 
 
-def test_mixed_merge_append_identity_storm(spark, tmp_path):
+def test_mixed_merge_append_identity_storm(spark, tmp_path, monkeypatch):
     """Merges (which conflict loudly on concurrent identity movement)
     and appends (which shift-and-retry) racing on one identity table:
     with caller-side merge retries, everything lands and every id is
     unique — the mixed-writer shape of a real NRT deployment (stream
     merge sink + backfill appends)."""
+    monkeypatch.setattr(tables, "COMMIT_RETRIES", 50)
     from nrtwithdeltalake_spark.pipeline.tables import CommitConflictError
 
     p = str(tmp_path / "mixed")
@@ -530,7 +532,6 @@ def test_mixed_merge_append_identity_storm(spark, tmp_path):
                     spark.createDataFrame(
                         [(1000 + w * 10 + i, f"a{w}-{i}")], "k long, s string"
                     ),
-                    retry_conflicts=50,
                 )
             except Exception as e:
                 errs.append(repr(e))
@@ -872,11 +873,12 @@ def test_always_identity_merge_key_still_refused(spark, tmp_path):
         )
 
 
-def test_by_default_lockless_append_storm(spark, tmp_path):
+def test_by_default_lockless_append_storm(spark, tmp_path, monkeypatch):
     """BY DEFAULT twin of the lockless-append storm: two table handles
     (no shared lock) interleave explicit-id appends and generated
     appends; every generated id must be unique and disjoint from every
     explicit id minted AFTER the explicit batch committed."""
+    monkeypatch.setattr(tables, "COMMIT_RETRIES", 50)
     p = str(tmp_path / "bdstorm")
     VersionedTable.create(
         spark,
@@ -895,7 +897,6 @@ def test_by_default_lockless_append_storm(spark, tmp_path):
                     spark.createDataFrame(
                         [(f"g{n}-{i}-{j}",) for j in range(3)], "s string"
                     ),
-                    retry_conflicts=50,
                 )
             except Exception as e:
                 with lock:
@@ -911,7 +912,6 @@ def test_by_default_lockless_append_storm(spark, tmp_path):
                         [(base + j, f"e{i}-{j}") for j in range(3)],
                         "id long, s string",
                     ),
-                    retry_conflicts=50,
                 )
             except Exception as e:
                 with lock:

@@ -232,3 +232,17 @@ def test_current_metadata_follows_the_latest_commit(tmp_path):
     assert log.current_metadata(log_dir) == {}
     _write(log_dir, _rec(1, metadata={"partition_columns": ["s"]}))
     assert log.current_metadata(log_dir) == {"partition_columns": ["s"]}
+
+
+def test_txn_watermarks_carry_as_a_per_app_max():
+    """Writer-transaction watermarks (Delta's SetTransaction) ride every
+    commit: a writer stamps only its own app, every other app's
+    watermark carries, and none regresses — a record that names no app
+    at all (a restore, a compaction, a DDL) keeps them all."""
+    prev = _rec(4, stats={"txn": {"a": 3, "b": 7}})
+    rec = log.prepare(prev, _rec(5, stats={"txn": {"a": 4}}))
+    assert rec["stats"]["txn"] == {"a": 4, "b": 7}
+    rec = log.prepare(prev, _rec(5, op="restore"))
+    assert rec["stats"]["txn"] == {"a": 3, "b": 7}
+    rec = log.prepare(prev, _rec(5, stats={"txn": {"b": 2, "c": 1}}))
+    assert rec["stats"]["txn"] == {"a": 3, "b": 7, "c": 1}

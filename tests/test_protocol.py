@@ -361,13 +361,16 @@ def test_merge_racing_add_constraint_conflicts(spark, tmp_path, monkeypatch):
     from nrtwithdeltalake_spark.pipeline.log import CommitConflictError
 
     t = _mk(spark, tmp_path)
-    orig = VersionedTable._commit_merge_with_rebase
+    orig = VersionedTable._publish
 
-    def ddl_first(self, *a, **kw):
-        VersionedTable(spark, t.path).add_constraint("amount_pos", "amount > 0")
-        return orig(self, *a, **kw)
+    def ddl_first(self, prev, op, *a, **kw):
+        if op == "merge":
+            VersionedTable(spark, t.path).add_constraint(
+                "amount_pos", "amount > 0"
+            )
+        return orig(self, prev, op, *a, **kw)
 
-    monkeypatch.setattr(VersionedTable, "_commit_merge_with_rebase", ddl_first)
+    monkeypatch.setattr(VersionedTable, "_publish", ddl_first)
     with pytest.raises(CommitConflictError, match="metadata"):
         t.merge(_df(spark, [(9, "z", -5.0)]), ["id"])
     monkeypatch.undo()
