@@ -3,8 +3,8 @@
 Mirrors the reference's control schema (``/root/reference/dbrconfig.sql:20-43``)
 — ``Entities`` / ``Watermarks`` — with the stored procedures
 ``OpenWatermark``/``CloseWatermark`` (``dbrconfig.sql:45-91``) re-expressed
-as versioned-table append/update (O27-O28). PrimaryKeys is a real
-``array<string>`` instead of the reference's comma-packed string
+as one append of an already-closed row per load (O27-O28). PrimaryKeys is
+a real ``array<string>`` instead of the reference's comma-packed string
 (``dbrconfig.sql:28``, split at ``COPY_MSQL_TO_SILVER.py:203``).
 
 The latest-committed-watermark resolution is the reference's entitiesSQL
@@ -13,6 +13,7 @@ The latest-committed-watermark resolution is the reference's entitiesSQL
 
 from __future__ import annotations
 
+import datetime
 import os
 import threading
 
@@ -61,7 +62,7 @@ class ConfigStore:
         self.entities_path = os.path.join(root, "entities")
         self.watermarks_path = os.path.join(root, "watermarks")
         # Ledger writes are serialized: concurrent entity loads (run_pipeline's
-        # thread pool) all append/update the single watermarks table, whose
+        # thread pool) all append to the single watermarks table, whose
         # commit log allows one writer per version.
         self._ledger_lock = threading.Lock()
 
@@ -175,9 +176,22 @@ class ConfigStore:
 
     def open_watermark(
         self, entity_id: int, date_wm: str | None, ct_wm: int | None
-    ) -> int:
-        """OpenWatermark proc (dbrconfig.sql:45-83): append an open ledger
-        row; returns the new WatermarkId (≡ SCOPE_IDENTITY()).
+    ) -> dict:
+        """OpenWatermark proc (dbrconfig.sql:45-83), with no I/O: returns
+        the load's pending ledger row, ``LoadStartDatetime`` set. The
+        row is written only by ``close_watermark``, after the silver
+        commit, so the ledger never holds an open row."""
+        return {
+            "EntityId": entity_id,
+            "DateWatermark": date_wm,
+            "CTWatermark": ct_wm,
+            "LoadStartDatetime": datetime.datetime.now(),
+        }
+
+    def close_watermark(self, row: dict) -> int:
+        """CloseWatermark proc (dbrconfig.sql:85-91): append the load's
+        row with ``LoadEndDatetime`` stamped, as one commit; returns its
+        WatermarkId (≡ SCOPE_IDENTITY()).
 
         The id comes from the ledger table's own IDENTITY column, so
         allocation is arbitrated by the COMMIT (put-if-absent), not by
@@ -186,28 +200,20 @@ class ConfigStore:
         thread lock is kept only to cut same-process OCC retry churn."""
         wt = self.watermarks
         body = T.StructType(WATERMARKS_SCHEMA.fields[1:])
-        row = self.spark.createDataFrame(
-            [(entity_id, date_wm, ct_wm, None, None)], body
-        ).withColumn("LoadStartDatetime", F.current_timestamp())
+        closed = {**row, "LoadEndDatetime": datetime.datetime.now()}
+        df = self.spark.createDataFrame(
+            [tuple(closed[f.name] for f in body.fields)], body
+        )
         with self._ledger_lock:
             if "WatermarkId" not in wt.identity_columns():
                 raise RuntimeError(
                     f"config store at {self.root!r} predates commit-"
                     "arbitrated id allocation — run ConfigStore.init() "
                     "or ConfigStore.upgrade_ledger_identity() once "
-                    "(idempotent) before opening watermarks"
+                    "(idempotent) before closing watermarks"
                 )
-            v = wt.append(row)
+            v = wt.append(df)
             return wt.identity_high_water("WatermarkId", version=v)
-
-    def close_watermark(self, watermark_id: int) -> None:
-        """CloseWatermark proc (dbrconfig.sql:85-91): stamp LoadEndDatetime
-        — the commit point of a load."""
-        with self._ledger_lock:
-            self.watermarks.update(
-                f"WatermarkId = {watermark_id}",
-                {"LoadEndDatetime": F.current_timestamp()},
-            )
 
     # -- watermark resolution (O11-O19) ------------------------------------
 

@@ -3,7 +3,8 @@
 ``load_entity`` is the engine's ``loadToSilverZone``
 (``/root/reference/COPY_MSQL_TO_SILVER.py:94-218``) with the same state
 machine — resolve watermark → open ledger → extract delta → audit columns
-→ merge → close ledger — and the same two watermark strategies:
+→ merge → close ledger — and the same two watermark strategies, each
+pinned to one source snapshot (the version read at the start of the load):
 
 * TMSTP: filter source rows past the committed timestamp watermark,
   compared at second precision through ``date_format`` strings exactly as
@@ -23,10 +24,14 @@ Improvements over the reference, kept explicit:
 * deletes can be applied as deletes (``SyncOperation = 'D'``) rather than
   merged as updates (flagged optional behavior, default on for CT).
 
-Crash-safety invariant (SURVEY.md §7 hard-part 5): ledger close and data
-merge are separate commits; a crash between them re-processes the batch
-on the next run, and merge idempotency by primary key makes the replay a
-no-op.
+Crash-safety invariant (SURVEY.md §7 hard-part 5): the silver commit
+carries the load's application transaction token (Delta VLDB 2020 §3.1)
+``entity:<EntityId>`` → the new watermark (CT: the source version;
+TMSTP: ``yyyyMMddHHmmss``), and the load's one ledger row is appended
+after it, already closed. After a crash between the two, the next run
+re-extracts up to the same watermark, the merge finds its own token and
+publishes nothing (``txn_skipped``), and the load appends its row; if
+the source moved on, the higher token applies the batch as usual.
 """
 
 from __future__ import annotations
@@ -53,6 +58,7 @@ class LoadResult:
     action: str  # 'full' | 'incremental' | 'skipped'
     rows: int
     new_watermark: str | None
+    merge: dict | None = None  # merge()'s result; None: bootstrap or skipped
 
 
 def _with_audit(df: DataFrame, op_col: F.Column) -> DataFrame:
@@ -64,6 +70,12 @@ def _with_audit(df: DataFrame, op_col: F.Column) -> DataFrame:
 def _wm_str(col: F.Column) -> F.Column:
     """Second-truncated watermark string — CONVERT(VARCHAR(21), ts, 120)."""
     return F.date_format(col, "yyyy-MM-dd HH:mm:ss")
+
+
+def _wm_token(wm: str) -> int:
+    """A TMSTP watermark ``yyyy-MM-dd HH:mm:ss`` read as the integer
+    ``yyyyMMddHHmmss``: exact, and ordered as the strings are."""
+    return int(wm.replace("-", "").replace(" ", "").replace(":", ""))
 
 
 def load_entity(
@@ -90,34 +102,38 @@ def load_entity(
     first_load = not VersionedTable.exists(tgt_path)
 
     # -- watermark acquisition (E3 step 2, :128-134) -----------------------
+    # every read below is pinned to this one source snapshot, so the
+    # batch holds exactly the changes up to the watermark it records
+    src_v = src_table.latest_version()  # ≡ CHANGE_TRACKING_CURRENT_VERSION()
     if wm_type == "CT":
         old_wm = int(entity_row["CTWatermark"])
-        new_wm = src_table.latest_version()  # ≡ CHANGE_TRACKING_CURRENT_VERSION()
-        no_change = new_wm <= old_wm
-        new_wm_str = str(new_wm)
+        no_change = src_v <= old_wm
+        new_wm_str = str(src_v)
+        token = src_v
     else:
         ts_col = entity_row["TimestampColumn"]
         old_wm = entity_row["DateWatermark"]
-        row = src_table.read().agg(
+        row = src_table.read(version=src_v).agg(
             F.max(_wm_str(F.col(ts_col))).alias("wm")
         ).first()
         new_wm_str = row["wm"] or old_wm
         no_change = new_wm_str <= old_wm
+        token = _wm_token(new_wm_str)
 
     # no-new-watermark short-circuit (:157) — but never skip the bootstrap
     if no_change and not first_load:
         return LoadResult(eid, "skipped", 0, None)
 
-    # -- ledger open (E3 step 3, :143-152) ---------------------------------
-    wm_id = store.open_watermark(
+    # -- ledger open (E3 step 3, :143-152): the pending row, no I/O --------
+    pending = store.open_watermark(
         eid,
         new_wm_str if wm_type == "TMSTP" else None,
-        int(new_wm_str) if wm_type == "CT" else None,
+        src_v if wm_type == "CT" else None,
     )
 
     # -- extraction (E3 step 4, :157-176) ----------------------------------
     if first_load:
-        batch = _with_audit(src_table.read(), F.lit("I"))
+        batch = _with_audit(src_table.read(version=src_v), F.lit("I"))
         action = "full"
     elif wm_type == "CT":
         from pyspark.sql import Window
@@ -127,7 +143,7 @@ def load_entity(
         # SyncDateTime is constant within a batch, so it can't order this)
         w = Window.partitionBy(*keys).orderBy(F.desc("_commit_version"))
         changes = (
-            src_table.change_feed(old_wm)
+            src_table.change_feed(old_wm, src_v)
             # the feed also carries update_preimage rows (old values, for
             # consumers that need key-change invalidation); state
             # replication wants only the new-state/delete rows
@@ -142,7 +158,9 @@ def load_entity(
         action = "incremental"
     else:
         batch = _with_audit(
-            src_table.read().filter(_wm_str(F.col(ts_col)) > F.lit(old_wm)),
+            src_table.read(version=src_v).filter(
+                _wm_str(F.col(ts_col)) > F.lit(old_wm)
+            ),
             F.lit("I"),
         )
         action = "incremental"
@@ -155,22 +173,30 @@ def load_entity(
 
     obs = Observation(f"load_{eid}")
     batch = batch.observe(obs, F.count(F.lit(1)).alias("n"))
+    app = f"entity:{eid}"
+    merged = None
     if first_load:
-        t = VersionedTable.create(spark, tgt_path, batch)
+        t = VersionedTable.create(
+            spark, tgt_path, batch, extra_stats={"txn": {app: token}}
+        )
         if register_db is not None:
             t.register(register_db, entity_row["ToEntityName"])
     else:
-        VersionedTable(spark, tgt_path).merge(
+        merged = VersionedTable(spark, tgt_path).merge(
             batch,
             keys,
             delete_condition=f"{SYNC_OP} = 'D'" if apply_deletes else None,
             dedup_order_col=SYNC_DT,
+            txn_app=app,
+            txn_version=token,
         )
-    n = obs.get["n"]
+    # a skipped merge may return before its batch ever runs, and the
+    # Observation of a batch that never ran never completes
+    n = 0 if merged and merged.get("txn_skipped") else obs.get["n"]
 
-    # -- ledger close (E3 step 6, :212-218) --------------------------------
-    store.close_watermark(wm_id)
-    return LoadResult(eid, action, n, new_wm_str)
+    # -- ledger close (E3 step 6, :212-218): the load's one ledger row -----
+    store.close_watermark(pending)
+    return LoadResult(eid, action, n, new_wm_str, merged)
 
 
 def _op_from_change_type() -> F.Column:

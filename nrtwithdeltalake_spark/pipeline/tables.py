@@ -4481,8 +4481,12 @@ class VersionedTable:
 
     # -- change feed (O20-O21) --------------------------------------------
 
-    def change_feed(self, starting_version: int) -> DataFrame:
-        """Rows changed in versions > starting_version, with
+    def change_feed(
+        self, starting_version: int, ending_version: int | None = None
+    ) -> DataFrame:
+        """Rows changed in versions > starting_version (and ≤
+        ``ending_version`` when given, so a caller can pin the feed to
+        the snapshot it took its watermark from), with
         ``_change_type`` ∈ {insert, update_postimage, delete} and a
         ``_commit_version`` column — the engine's CHANGETABLE(CHANGES …)
         (O20): the caller resumes from its stored watermark version
@@ -4496,9 +4500,12 @@ class VersionedTable:
         inference + unionByName — the pre-round-8 behavior — split the
         column across old/new names with NULLs after ``rename_column``,
         silently corrupting incremental consumers' deltas), and files
-        predating an evolved-in column null-fill it."""
-        commits = [c for c in self.history() if c.version > starting_version]
-        cur = self.schema()
+        predating an evolved-in column null-fill it. With
+        ``ending_version``, "current" is that version's schema."""
+        hist = self.history()
+        end = hist[-1].version if ending_version is None else ending_version
+        commits = [c for c in hist if starting_version < c.version <= end]
+        cur = self.schema(end)
         out: DataFrame | None = None
         for c in commits:
             if c.stats.get("cdf_schema_break"):
@@ -4568,8 +4575,7 @@ class VersionedTable:
             )
             out = df if out is None else out.unionByName(df)
         if out is None:
-            base = self.schema()
-            fields = base.add(CHANGE_TYPE_COL, T.StringType()).add(
+            fields = cur.add(CHANGE_TYPE_COL, T.StringType()).add(
                 "_commit_version", T.LongType()
             )
             return self.spark.createDataFrame([], fields)

@@ -7,9 +7,9 @@ soak runs 4 entities (2 CT, 2 TMSTP) through ``run_pipeline`` while an
 ingest gate tails a third's change feed — with a crash injected
 BETWEEN the merge and ``close_watermark`` (the reference's E3 step 5→6
 window, ``COPY_MSQL_TO_SILVER.py:185-218``). The invariant: replaying
-the interrupted epoch is a semantic no-op — the final state equals a
-serial recompute, no row is doubled, the ledger converges to closed
-watermarks."""
+the interrupted epoch is a no-op — the final state equals a serial
+recompute, no row is doubled, the ledger converges to closed
+watermarks and never holds an open row."""
 
 from __future__ import annotations
 
@@ -209,27 +209,20 @@ def test_full_nrt_stack_chaos_soak(spark, tmp_path, monkeypatch):
     assert state["crashed"]
     assert pipe_err and "injected crash" in pipe_err[0]
 
-    # the crashed entity's watermark is still open; the ledger must
-    # carry exactly one open row
+    # a load writes its one ledger row after the silver commit, so the
+    # crashed entity left no ledger row at all — and no open row
     wms = store.watermarks.read().collect()
-    open_rows = [r for r in wms if r.LoadEndDatetime is None]
-    assert len(open_rows) == 1
+    assert [r for r in wms if r.LoadEndDatetime is None] == []
 
     # replay: the interrupted epoch re-runs from the last COMMITTED
-    # watermark; merges are keyed + latest-per-key, so re-applying the
-    # same batch is a semantic no-op
+    # watermark; the crashed entity's merge finds its own transaction
+    # token in silver and publishes nothing, then appends its row
     r3 = run_pipeline(spark, store, source_root, target_root)
     assert all(r.action in ("incremental", "skipped") for r in r3)
-    # the abandoned open row stays open FOREVER (the reference's
-    # semantics too: watermark resolution reads only CLOSED rows, so a
-    # crashed epoch's row is dead weight, not a wedge) — but no NEW
-    # open rows accumulate, and every entity's newest ledger row is
+    # still no open row, and every entity's newest ledger row is
     # closed with the final source watermark
     wms = store.watermarks.read().collect()
-    still_open = [r for r in wms if r.LoadEndDatetime is None]
-    assert [r.WatermarkId for r in still_open] == [
-        open_rows[0].WatermarkId
-    ]
+    assert [r for r in wms if r.LoadEndDatetime is None] == []
     by_entity: dict = {}
     for r in wms:
         cur = by_entity.get(r.EntityId)

@@ -265,7 +265,7 @@ def test_ledger_ids_commit_arbitrated_across_stores(spark, tmp_path):
     def worker(cs):
         for _ in range(5):
             try:
-                wid = cs.open_watermark(1, None, 0)
+                wid = cs.close_watermark(cs.open_watermark(1, None, 0))
                 with lock:
                     ids.append(wid)
             except Exception as e:
@@ -488,7 +488,7 @@ def test_legacy_store_upgrades_to_identity_ledger(spark, tmp_path):
     # the read-max+1 fallback is GONE — pre-upgrade ledger writes
     # refuse loudly and name the fix
     with pytest.raises(RuntimeError, match="upgrade_ledger_identity"):
-        cs.open_watermark(1, None, 2)
+        cs.close_watermark(cs.open_watermark(1, None, 2))
     with pytest.raises(RuntimeError, match="upgrade_ledger_identity"):
         cs.register_entity("src.M", "silver.M", "TMSTP", ["k"], "ts")
     # init() (idempotent, called by every pipeline entry) auto-upgrades
@@ -498,7 +498,10 @@ def test_legacy_store_upgrades_to_identity_ledger(spark, tmp_path):
     # post-upgrade: ids continue PAST the legacy max via commit
     # arbitration (two lockless store instances, disjoint ids)
     cs2 = ConfigStore(spark, root)
-    ids = [cs.open_watermark(1, None, 2), cs2.open_watermark(1, None, 3)]
+    ids = [
+        cs.close_watermark(cs.open_watermark(1, None, 2)),
+        cs2.close_watermark(cs2.open_watermark(1, None, 3)),
+    ]
     assert sorted(ids) == [3, 4]
     e2 = cs2.register_entity("src.M", "silver.M", "TMSTP", ["k"], "ts")
     assert e2 == 2

@@ -1,10 +1,5 @@
-"""Pipeline-core tests.
+"""Pipeline-core tests (the load loop itself is in ``test_load.py``).
 
-* Golden two-batch incremental scenario (FIXTURES.md §B) — faithful to the
-  reference's staged replay validation (SURVEY.md §5): batch1 full load →
-  batch2 insert+update+delete → rerun is a no-op. Covers both watermark
-  strategies (CT ≡ change feed versions, TMSTP ≡ timestamp filter), the
-  audit columns, the ledger, and the no-new-watermark short-circuit.
 * Property-based merge test: random upsert/delete batches on composite
   keys; invariant — merged table ≡ latest-per-key over the concatenated
   history (the reference's own ROW_NUMBER idiom as oracle).
@@ -19,177 +14,14 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from nrtwithdeltalake_spark.pipeline.config import ConfigStore
-from nrtwithdeltalake_spark.pipeline.incremental import load_entity, run_pipeline
 from nrtwithdeltalake_spark.pipeline.tables import VersionedTable
 
 from .test_commit_loop import _inject_before_merge_commit
-
-TXN_SCHEMA = T.StructType(
-    [
-        T.StructField("TransactionId", T.LongType()),
-        T.StructField("TransactionName", T.StringType()),
-        T.StructField("TransactionAmount", T.DoubleType()),
-        T.StructField("TransactionDatetime", T.TimestampType()),
-    ]
-)
-
+from .test_load import _txn_df
 
 # Slow tier (see pytest.ini): excluded from the default driver-budget
 # run; executes via `pytest -m slow`.
 pytestmark = pytest.mark.slow
-
-def _txn_df(spark, rows, ts):
-    import datetime
-
-    t = datetime.datetime.fromisoformat(ts)
-    return spark.createDataFrame(
-        [(i, n, a, t) for i, n, a in rows], TXN_SCHEMA
-    )
-
-
-@pytest.fixture()
-def roots(tmp_path):
-    return (
-        str(tmp_path / "source"),
-        str(tmp_path / "silver"),
-        str(tmp_path / "config"),
-    )
-
-
-def _setup_scenario(spark, roots):
-    source_root, target_root, config_root = roots
-    store = ConfigStore(spark, config_root)
-    store.init()
-    batch1 = [(1, "Test Tran 1", 420.69), (2, "Test Tran 2", 694.20)]
-    for name in ("transactions_ct", "transactions_ts"):
-        VersionedTable.create(
-            spark,
-            os.path.join(source_root, name),
-            _txn_df(spark, batch1, "2024-01-01 10:00:00"),
-        )
-    store.register_entity(
-        "transactions_ct", "silver_ct", "CT", ["TransactionId"]
-    )
-    store.register_entity(
-        "transactions_ts",
-        "silver_ts",
-        "TMSTP",
-        ["TransactionId"],
-        timestamp_column="TransactionDatetime",
-    )
-    return store
-
-
-def _apply_batch2(spark, source_root):
-    """Insert 3,4; update amount of id 1; delete id 2."""
-    import datetime
-
-    t2 = datetime.datetime.fromisoformat("2024-01-02 10:00:00")
-    ops = spark.createDataFrame(
-        [
-            (3, "Test Tran 3", 123.45, t2, "U"),
-            (4, "Test Tran 4", 456.78, t2, "U"),
-            (1, "Test Tran 1", 999.99, t2, "U"),
-            (2, "Test Tran 2", 694.20, t2, "D"),
-        ],
-        # StructType.add mutates in place — build a fresh struct
-        T.StructType(TXN_SCHEMA.fields + [T.StructField("op", T.StringType())]),
-    )
-    for name in ("transactions_ct", "transactions_ts"):
-        VersionedTable(spark, os.path.join(source_root, name)).merge(
-            ops,
-            ["TransactionId"],
-            delete_condition="op = 'D'",
-            exclude_cols=["op"],
-        )
-
-
-def test_golden_two_batch_scenario(spark, roots):
-    source_root, target_root, config_root = roots
-    store = _setup_scenario(spark, roots)
-
-    # ---- run 1: bootstrap full loads -------------------------------------
-    res1 = {r.entity_id: r for r in run_pipeline(spark, store, source_root, target_root)}
-    assert all(r.action == "full" and r.rows == 2 for r in res1.values())
-
-    ct = VersionedTable(spark, os.path.join(target_root, "silver_ct"))
-    rows = {r.TransactionId: r for r in ct.read().collect()}
-    assert set(rows) == {1, 2}
-    assert all(r.SyncOperation == "I" for r in rows.values())
-
-    # ---- run with no changes: short-circuit (reference :157) -------------
-    res_noop = {r.entity_id: r for r in run_pipeline(spark, store, source_root, target_root)}
-    assert all(r.action == "skipped" for r in res_noop.values())
-
-    # ---- batch 2: insert + update + delete -------------------------------
-    _apply_batch2(spark, source_root)
-    res2 = {r.entity_id: r for r in run_pipeline(spark, store, source_root, target_root)}
-    assert all(r.action == "incremental" for r in res2.values())
-
-    # CT silver: deletes applied, ops faithful to the change feed
-    rows = {r.TransactionId: r for r in ct.read().collect()}
-    assert set(rows) == {1, 3, 4}
-    assert rows[1].TransactionAmount == 999.99
-    assert rows[1].SyncOperation == "U"
-    assert rows[3].SyncOperation == "I" and rows[4].SyncOperation == "I"
-
-    # TMSTP silver: deletes invisible (timestamp watermarks can't see them —
-    # reference semantics), updates re-loaded as 'I' (reference :176)
-    ts = VersionedTable(spark, os.path.join(target_root, "silver_ts"))
-    trows = {r.TransactionId: r for r in ts.read().collect()}
-    assert set(trows) == {1, 2, 3, 4}
-    assert trows[1].TransactionAmount == 999.99
-    assert trows[1].SyncOperation == "I"
-
-    # ---- ledger: two committed loads per entity, watermarks advanced -----
-    wm = store.watermarks.read().filter(F.col("LoadEndDatetime").isNotNull())
-    per_entity = {
-        r.EntityId: r.n for r in wm.groupBy("EntityId").agg(F.count("*").alias("n")).collect()
-    }
-    assert per_entity == {1: 2, 2: 2}
-
-    # ---- idempotent rerun ------------------------------------------------
-    res3 = {r.entity_id: r for r in run_pipeline(spark, store, source_root, target_root)}
-    assert all(r.action == "skipped" for r in res3.values())
-    assert {r.TransactionId for r in ct.read().collect()} == {1, 3, 4}
-
-
-def test_crash_replay_is_idempotent(spark, roots):
-    """Crash between data merge and ledger close (SURVEY.md §7 hard-part 5):
-    replaying the batch must converge to the same state."""
-    source_root, target_root, config_root = roots
-    store = _setup_scenario(spark, roots)
-    entities = {e.EntityId: e for e in store.entities_with_watermarks().collect()}
-    ct_entity = next(e for e in entities.values() if e.WatermarkType == "CT")
-
-    load_entity(spark, store, ct_entity, source_root, target_root)
-    _apply_batch2(spark, source_root)
-
-    # simulated crash: run the load but drop the ledger close by monkeypatch
-    real_close = store.close_watermark
-    store.close_watermark = lambda wm_id: None  # crash before close
-    e2 = next(
-        e
-        for e in store.entities_with_watermarks().collect()
-        if e.EntityId == ct_entity.EntityId
-    )
-    load_entity(spark, store, e2, source_root, target_root)
-    store.close_watermark = real_close
-
-    # watermark still old → the batch replays; result must be identical
-    e3 = next(
-        e
-        for e in store.entities_with_watermarks().collect()
-        if e.EntityId == ct_entity.EntityId
-    )
-    res = load_entity(spark, store, e3, source_root, target_root)
-    assert res.action == "incremental"
-    ct = VersionedTable(spark, os.path.join(target_root, "silver_ct"))
-    rows = {r.TransactionId: r for r in ct.read().collect()}
-    assert set(rows) == {1, 3, 4}
-    assert rows[1].TransactionAmount == 999.99
-
 
 def test_schema_evolution_on_merge(spark, tmp_path):
     """New source column flows into the target with nulls for old rows
@@ -994,34 +826,6 @@ def test_register_follows_schema_evolution(spark, tmp_path):
         assert vals == {1: None, 2: "x"}
     finally:
         spark.sql("DROP DATABASE IF EXISTS reg_db2 CASCADE")
-
-
-def test_pipeline_bootstrap_registers_when_asked(spark, roots):
-    """run_pipeline(register_db=...) makes every bootstrapped silver
-    table name-addressable — the reference's CREATE DATABASE/CREATE
-    TABLE step (COPY_MSQL_TO_SILVER.py:187-196)."""
-    source_root, target_root, _ = roots
-    store = _setup_scenario(spark, roots)
-    try:
-        run_pipeline(
-            spark, store, source_root, target_root, register_db="reg_silver"
-        )
-        fresh = spark.newSession()
-        for name in ("silver_ct", "silver_ts"):
-            assert fresh.table(f"reg_silver.{name}").count() == 2
-        # incremental pass keeps the registered names current
-        _apply_batch2(spark, source_root)
-        run_pipeline(
-            spark, store, source_root, target_root, register_db="reg_silver"
-        )
-        fresh.sql("REFRESH TABLE reg_silver.silver_ct")
-        got = {
-            r.TransactionId: r.TransactionAmount
-            for r in fresh.table("reg_silver.silver_ct").collect()
-        }
-        assert got == {1: 999.99, 3: 123.45, 4: 456.78}
-    finally:
-        spark.sql("DROP DATABASE IF EXISTS reg_silver CASCADE")
 
 
 def test_check_constraints_gate_writes(spark, tmp_path):
