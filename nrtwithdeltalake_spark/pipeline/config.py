@@ -7,8 +7,13 @@ as one append of an already-closed row per load (O27-O28). PrimaryKeys is
 a real ``array<string>`` instead of the reference's comma-packed string
 (``dbrconfig.sql:28``, split at ``COPY_MSQL_TO_SILVER.py:203``).
 
-The latest-committed-watermark resolution is the reference's entitiesSQL
-(O11-O19, ``COPY_MSQL_TO_SILVER.py:223-249``) as a DataFrame query.
+The control plane runs on the driver and starts no Spark job, the way
+Delta keeps transaction state in a log the driver reads and writes
+(VLDB 2020 §3): the latest-committed-watermark resolution is the
+reference's entitiesSQL (O11-O19, ``COPY_MSQL_TO_SILVER.py:223-249``)
+computed in Python over the rows the ``versioned`` DataSource's
+per-file pyarrow reader returns, and entity and ledger rows are
+appended as pyarrow tables through ``VersionedTable.append``.
 """
 
 from __future__ import annotations
@@ -17,10 +22,10 @@ import datetime
 import os
 import threading
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import Row, SparkSession
 from pyspark.sql import types as T
 
+from ..sources.datasource import _BatchReader
 from .tables import VersionedTable
 
 # sentinel defaults for first loads (COPY_MSQL_TO_SILVER.py:231: COALESCE to
@@ -51,6 +56,44 @@ WATERMARKS_SCHEMA = T.StructType(
         T.StructField("LoadEndDatetime", T.TimestampType()),  # null = open
     ]
 )
+
+
+# the entity columns resolution passes through, ahead of the watermarks
+_ENTITY_COLS = (
+    "EntityId",
+    "FromEntityName",
+    "ToEntityName",
+    "WatermarkType",
+    "TimestampColumn",
+    "PrimaryKeys",
+)
+
+
+def _arrow_row(schema: T.StructType, values: dict):
+    """One row of ``schema`` (fields named in ``values``) as a pyarrow
+    Table. A naive datetime is local time, as Spark's createDataFrame
+    reads it (``time.mktime``), so driver-written and Spark-written
+    ledger rows order by the same instant."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    row = {
+        f.name: values[f.name].astimezone(datetime.timezone.utc)
+        if isinstance(values[f.name], datetime.datetime)
+        else values[f.name]
+        for f in schema.fields
+    }
+    return pa.Table.from_pylist([row], schema=to_arrow_schema(schema))
+
+
+def _read_rows(path: str) -> list[dict]:
+    """A table's latest snapshot as Python rows, read on the driver by
+    the ``versioned`` DataSource's per-file reader (field-id column
+    mapping and deletion-vector masking included)."""
+    reader = _BatchReader(path, None, None)
+    return [
+        r for p in reader.partitions() for b in reader.read(p) for r in b.to_pylist()
+    ]
 
 
 class ConfigStore:
@@ -141,22 +184,9 @@ class ConfigStore:
         from_zone: str = "source",
         to_zone: str = "silver",
     ) -> int:
+        """Append one entity row on the driver; returns its EntityId."""
         assert watermark_type in ("CT", "TMSTP")
         ents = self.entities
-        row = self.spark.createDataFrame(
-            [
-                (
-                    from_name,
-                    to_name,
-                    from_zone,
-                    to_zone,
-                    watermark_type,
-                    timestamp_column,
-                    primary_keys,
-                )
-            ],
-            T.StructType(ENTITIES_SCHEMA.fields[1:]),
-        )
         if "EntityId" not in ents.identity_columns():
             # a legacy (pre-identity) store only reaches here when the
             # caller bypassed init(); read-max+1 allocation is not
@@ -167,7 +197,20 @@ class ConfigStore:
                 "ConfigStore.upgrade_ledger_identity() once (idempotent) "
                 "before registering entities"
             )
-        v = ents.append(row)
+        v = ents.append(
+            _arrow_row(
+                T.StructType(ENTITIES_SCHEMA.fields[1:]),
+                {
+                    "FromEntityName": from_name,
+                    "ToEntityName": to_name,
+                    "FromZone": from_zone,
+                    "ToZone": to_zone,
+                    "WatermarkType": watermark_type,
+                    "TimestampColumn": timestamp_column,
+                    "PrimaryKeys": primary_keys,
+                },
+            )
+        )
         # the id THIS append assigned = the commit's own high-water
         # (commit records are immutable, so this read is race-free)
         return ents.identity_high_water("EntityId", version=v)
@@ -190,19 +233,20 @@ class ConfigStore:
 
     def close_watermark(self, row: dict) -> int:
         """CloseWatermark proc (dbrconfig.sql:85-91): append the load's
-        row with ``LoadEndDatetime`` stamped, as one commit; returns its
-        WatermarkId (≡ SCOPE_IDENTITY()).
+        row with ``LoadEndDatetime`` stamped, as one commit written on
+        the driver (no Spark job); returns its WatermarkId (≡
+        SCOPE_IDENTITY()).
 
         The id comes from the ledger table's own IDENTITY column, so
         allocation is arbitrated by the COMMIT (put-if-absent), not by
         the in-process lock — two separate driver processes running
         pipelines against the same config store mint disjoint ids. The
-        thread lock is kept only to cut same-process OCC retry churn."""
+        thread lock, which now guards milliseconds of driver I/O, is
+        kept only to cut same-process OCC retry churn."""
         wt = self.watermarks
-        body = T.StructType(WATERMARKS_SCHEMA.fields[1:])
-        closed = {**row, "LoadEndDatetime": datetime.datetime.now()}
-        df = self.spark.createDataFrame(
-            [tuple(closed[f.name] for f in body.fields)], body
+        closed = _arrow_row(
+            T.StructType(WATERMARKS_SCHEMA.fields[1:]),
+            {**row, "LoadEndDatetime": datetime.datetime.now()},
         )
         with self._ledger_lock:
             if "WatermarkId" not in wt.identity_columns():
@@ -212,41 +256,46 @@ class ConfigStore:
                     "or ConfigStore.upgrade_ledger_identity() once "
                     "(idempotent) before closing watermarks"
                 )
-            v = wt.append(df)
+            v = wt.append(closed)
             return wt.identity_high_water("WatermarkId", version=v)
 
     # -- watermark resolution (O11-O19) ------------------------------------
 
-    def entities_with_watermarks(self) -> DataFrame:
-        """The reference's entitiesSQL (COPY_MSQL_TO_SILVER.py:223-249):
-        each entity left-joined to its latest *committed* watermark
-        (LoadEndDatetime IS NOT NULL → O14; ROW_NUMBER latest-per-key →
-        O12-O13; sentinel defaults via COALESCE → O16; per-type choice via
-        CASE WHEN → O15)."""
-        ents = self.entities.read()
-        wms = self.watermarks.read()
-        w = Window.partitionBy("EntityId").orderBy(
-            F.desc("LoadStartDatetime"), F.desc("WatermarkId")
-        )
-        latest = (
-            wms.filter(F.col("LoadEndDatetime").isNotNull())
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("EntityId", "DateWatermark", "CTWatermark")
-        )
-        return ents.join(latest, "EntityId", "left").select(
-            "EntityId",
-            "FromEntityName",
-            "ToEntityName",
-            "WatermarkType",
-            "TimestampColumn",
-            "PrimaryKeys",
-            F.when(
-                F.col("WatermarkType") == "TMSTP",
-                F.coalesce(F.col("DateWatermark"), F.lit(DEFAULT_DATE_WM)),
-            ).alias("DateWatermark"),
-            F.when(
-                F.col("WatermarkType") == "CT",
-                F.coalesce(F.col("CTWatermark"), F.lit(DEFAULT_CT_WM)),
-            ).alias("CTWatermark"),
-        )
+    def entities_with_watermarks(self) -> list[Row]:
+        """The reference's entitiesSQL (COPY_MSQL_TO_SILVER.py:223-249),
+        computed on the driver with no Spark job: each entity (ordered
+        by EntityId) left-joined to its latest *committed* watermark
+        (LoadEndDatetime IS NOT NULL → O14; latest per EntityId by
+        LoadStartDatetime DESC, WatermarkId DESC, nulls last → O12-O13;
+        sentinel defaults as COALESCE → O16; per-type choice as CASE
+        WHEN → O15)."""
+        latest: dict = {}
+        for w in _read_rows(self.watermarks_path):
+            if w["LoadEndDatetime"] is None:
+                continue
+            # DESC NULLS LAST: a null ranks below every value
+            ts, wid = w["LoadStartDatetime"], w["WatermarkId"]
+            w["rank"] = (ts is not None, ts, wid is not None, wid)
+            cur = latest.get(w["EntityId"])
+            if cur is None or w["rank"] > cur["rank"]:
+                latest[w["EntityId"]] = w
+        out = []
+        for e in sorted(_read_rows(self.entities_path), key=lambda e: e["EntityId"]):
+            wm = latest.get(e["EntityId"], {})
+            date_wm, ct_wm = wm.get("DateWatermark"), wm.get("CTWatermark")
+            out.append(
+                Row(
+                    **{c: e[c] for c in _ENTITY_COLS},
+                    DateWatermark=(
+                        (DEFAULT_DATE_WM if date_wm is None else date_wm)
+                        if e["WatermarkType"] == "TMSTP"
+                        else None
+                    ),
+                    CTWatermark=(
+                        (DEFAULT_CT_WM if ct_wm is None else ct_wm)
+                        if e["WatermarkType"] == "CT"
+                        else None
+                    ),
+                )
+            )
+        return out

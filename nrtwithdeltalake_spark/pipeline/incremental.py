@@ -44,12 +44,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import ConfigStore, DEFAULT_CT_WM
-from .tables import VersionedTable
+from .tables import CommitConflictError, VersionedTable
 
 SYNC_DT = "SyncDateTime"
 SYNC_OP = "SyncOperation"
 
 _CHANGE_TO_OP = {"insert": "I", "update_postimage": "U", "delete": "D"}
+
+# The ledger gains one file per load and resolution reads every live
+# file, so run_pipeline compacts it (files under LEDGER_SMALL_FILE_BYTES)
+# once its latest commit lists more than LEDGER_MAX_FILES.
+LEDGER_MAX_FILES = 64
+LEDGER_SMALL_FILE_BYTES = 1 << 20
 
 
 @dataclass
@@ -218,9 +224,11 @@ def run_pipeline(
     """E1, the control plane (:223-260) — but entities load concurrently:
     Spark job scheduling is thread-safe, so a thread pool turns the
     reference's serial per-entity loop into overlapping jobs (the
-    single biggest structural bottleneck listed in BASELINE.md)."""
+    single biggest structural bottleneck listed in BASELINE.md).
+    Watermark resolution runs on the driver, before any load; after the
+    loads, a ledger past ``LEDGER_MAX_FILES`` live files is compacted."""
     store.init()  # idempotent; sweeps a pre-identity store forward
-    entities = store.entities_with_watermarks().collect()  # config rows: tiny
+    entities = store.entities_with_watermarks()  # on the driver: no Spark job
     with ThreadPoolExecutor(max_workers=max_parallel) as pool:
         futures = [
             pool.submit(
@@ -235,4 +243,11 @@ def run_pipeline(
             )
             for e in entities
         ]
-        return [f.result() for f in futures]
+        results = [f.result() for f in futures]
+    ledger = store.watermarks
+    if len(ledger.get_commit().files) > LEDGER_MAX_FILES:
+        try:
+            ledger.compact(small_file_bytes=LEDGER_SMALL_FILE_BYTES)
+        except CommitConflictError:
+            pass  # a racing compactor rewrote the same files first
+    return results

@@ -35,6 +35,7 @@ import shutil
 import tempfile
 import time
 import uuid
+from typing import TYPE_CHECKING
 
 from . import log
 from .log import (
@@ -55,6 +56,9 @@ from .log import (
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 CHANGE_TYPE_COL = "_change_type"
 
@@ -154,6 +158,20 @@ def _identity_defs(md: dict) -> dict:
     return json.loads(props.get(log.IDENTITY_PROP) or "{}")
 
 
+
+
+def _check_identity_range(plan: dict, total: int) -> None:
+    """Refuse assigning ``total`` ids from ``plan`` ({col: (next,
+    step)}) when either end of a range would overflow BIGINT."""
+    for c, (nxt, step) in plan.items():
+        last = nxt + step * (total - 1)
+        if not (-(1 << 63) <= last < (1 << 63)) or not (
+            -(1 << 63) <= nxt < (1 << 63)
+        ):
+            raise ValueError(
+                f"identity column {c!r} would overflow BIGINT "
+                f"(next={nxt}, rows={total}, step={step})"
+            )
 
 
 def _attach_ids(df: DataFrame, schema: T.StructType) -> DataFrame:
@@ -1517,15 +1535,7 @@ class VersionedTable:
         for r in parts:
             offsets[r["__pid"]] = acc
             acc += r["count"]
-        for c, (nxt, step) in plan.items():
-            last = nxt + step * (total - 1)
-            if not (-(1 << 63) <= last < (1 << 63)) or not (
-                -(1 << 63) <= nxt < (1 << 63)
-            ):
-                raise ValueError(
-                    f"identity column {c!r} would overflow BIGINT "
-                    f"(next={nxt}, rows={total}, step={step})"
-                )
+        _check_identity_range(plan, total)
         pairs: list = []
         for pid, off in offsets.items():
             pairs += [F.lit(int(pid)), F.lit(int(off))]
@@ -2548,7 +2558,7 @@ class VersionedTable:
 
     def append(
         self,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         txn_app: str | None = None,
         txn_version: int | None = None,
         extra_stats: dict | None = None,
@@ -2560,6 +2570,14 @@ class VersionedTable:
         (txnAppId/txnVersion): a retry carrying an already-committed
         (app, version) is a structural no-op — the at-least-once safety
         a scheduler-restarted ingest job needs without a dedup pass.
+
+        ``df`` may be a ``pyarrow.Table`` holding exactly the current
+        schema's non-identity columns: when the table binds no rule the
+        driver cannot apply (``_driver_appendable``), the rows are
+        numbered and written on the driver with pyarrow and no Spark job
+        runs — the config store's one-row appends. Otherwise it is
+        converted with ``spark.createDataFrame`` and takes the Spark
+        path, which enforces every rule.
 
         Concurrent writers: a blind append never semantically conflicts
         with another commit, so a version collision (atomic put-if-
@@ -2574,39 +2592,66 @@ class VersionedTable:
         prev = self.get_commit()
         if self._txn_skip(prev, txn_app, txn_version):
             return prev.version
-        df = self._fill_generated(self._fill_defaults(df))
+        on_driver = not isinstance(df, DataFrame)
+        if on_driver and not self._driver_appendable(prev, df):
+            df, on_driver = self.spark.createDataFrame(df), False
+        if not on_driver:
+            df = self._fill_generated(self._fill_defaults(df))
+        cols = df.column_names if on_driver else df.columns
         ident_plan: dict = {}
-        ident_last: dict = {}
-        ident_cache = None
-        explicit_cache = None
+        explicit: list = []
         if self.identity_columns():
-            self._refuse_explicit_identity(df.columns, "append to")
-            explicit = self._explicit_identity_split(df.columns)
+            self._refuse_explicit_identity(cols, "append to")
+            explicit = self._explicit_identity_split(cols)
+            ident_plan = {
+                c: p
+                for c, p in self._identity_plan(prev).items()
+                if c not in explicit
+            }
+        if on_driver:
+            schema = T.StructType.fromJson(json.loads(prev.schema_json))
+            new_files, cdf, ident_last = self._write_arrow(df, schema, ident_plan)
+
+            def rewrite(shifts: dict) -> tuple[list, list]:
+                # the rows are in hand: number them again and rewrite
+                plan = {
+                    c: (nxt + shifts.get(c, 0), step)
+                    for c, (nxt, step) in ident_plan.items()
+                }
+                return self._write_arrow(df, schema, plan)[:2]
+        else:
+            explicit_cache = None
             if explicit:
                 # BY DEFAULT columns the batch carries: values pass
                 # through; one bounded aggregate advances the high-water
                 # past them (pinned to one materialization)
                 df = explicit_cache = df.persist()
             explicit_ext = self._explicit_identity_extremes(df, explicit)
-            ident_plan = {
-                c: p
-                for c, p in self._identity_plan(prev).items()
-                if c not in explicit
-            }
             df, ident_last, ident_cache = self._assign_identity(df, ident_plan)
             ident_last.update(explicit_ext)
-        schema = self._merged_schema(prev, df)
-        df = _align_to(df, schema)
-        new_files = self._write_files(df, self.data_dir, schema=schema)
-        cdf = self._write_files(
-            df.withColumn(CHANGE_TYPE_COL, F.lit("insert")),
-            self.cdf_dir,
-            schema=schema,
-        )
-        if ident_cache is not None:
-            ident_cache.unpersist()
-        if explicit_cache is not None:
-            explicit_cache.unpersist()
+            schema = self._merged_schema(prev, df)
+            df = _align_to(df, schema)
+            new_files = self._write_files(df, self.data_dir, schema=schema)
+            cdf = self._write_files(
+                df.withColumn(CHANGE_TYPE_COL, F.lit("insert")),
+                self.cdf_dir,
+                schema=schema,
+            )
+            if ident_cache is not None:
+                ident_cache.unpersist()
+            if explicit_cache is not None:
+                explicit_cache.unpersist()
+
+            def rewrite(shifts: dict) -> tuple[list, list]:
+                return tuple(
+                    self._shift_identity_files(
+                        files, out_dir, shifts, schema=schema
+                    )
+                    for files, out_dir in (
+                        (new_files, self.data_dir),
+                        (cdf, self.cdf_dir),
+                    )
+                )
 
         def build(base: Commit) -> dict:
             nonlocal ident_plan, ident_last, new_files, cdf
@@ -2636,12 +2681,7 @@ class VersionedTable:
                                     f"would overflow BIGINT (shift={d}, "
                                     f"edge value={edge})"
                                 )
-                    new_files = self._shift_identity_files(
-                        new_files, self.data_dir, shifts, schema=schema
-                    )
-                    cdf = self._shift_identity_files(
-                        cdf, self.cdf_dir, shifts, schema=schema
-                    )
+                    new_files, cdf = rewrite(shifts)
                     ident_last = {
                         c: ident_last[c] + shifts.get(c, 0) for c in ident_last
                     }
@@ -2666,6 +2706,65 @@ class VersionedTable:
         return self._publish(
             prev, op, build, dvs=False, txn=(txn_app, txn_version)
         )[0]
+
+    def _driver_appendable(self, prev: Commit, tbl: pa.Table) -> bool:
+        """True when an Arrow batch can be appended on the driver: the
+        table binds no rule that needs Spark (CHECK or NOT NULL
+        constraints, generated or DEFAULT columns, partition or bloom
+        columns) and the batch holds exactly the current schema's
+        non-identity columns with their Arrow types (so no explicit BY
+        DEFAULT identity value and no schema evolution)."""
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        md = prev.metadata or {}
+        schema = T.StructType.fromJson(json.loads(prev.schema_json))
+        if (
+            log.metadata_features(md) - {"identity_columns"}
+            or md.get("partition_columns")
+            or self._bloom_columns(schema)
+        ):
+            return False
+        ident = _identity_defs(md)
+        want = [
+            (f.name, to_arrow_type(f.dataType))
+            for f in schema.fields
+            if f.name not in ident
+        ]
+        have = list(zip(tbl.column_names, tbl.schema.types))
+        return len(have) == len(want) and dict(have) == dict(want)
+
+    def _write_arrow(
+        self, tbl: pa.Table, schema: T.StructType, plan: dict
+    ) -> tuple[list[str], list[str], dict[str, int]]:
+        """The driver half of an Arrow append: number the rows from
+        ``plan`` ({col: (next, step)}), lay them out as ``schema`` and
+        write one data file and one insert-image CDF file with the
+        format's pyarrow writer. Returns (data files, CDF files, {col:
+        last value assigned}) — {} for an empty batch."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        from ..sources.datasource import _ids_of, _write_task_files
+
+        n = tbl.num_rows
+        _check_identity_range(plan, n)
+        cols = [
+            pa.array(
+                [plan[f.name][0] + plan[f.name][1] * i for i in range(n)],
+                to_arrow_type(f.dataType),
+            )
+            if f.name in plan
+            else tbl.column(f.name)
+            for f in schema.fields
+        ]
+        out = pa.table(cols, names=schema.names)
+        res = _write_task_files(self.path, out.to_batches(), _ids_of(schema))
+        last = {c: nxt + step * (n - 1) for c, (nxt, step) in plan.items()}
+        return (
+            [res.data_file] if res.data_file else [],
+            [res.cdf_file] if res.cdf_file else [],
+            last if n else {},
+        )
 
     # -- COPY INTO (idempotent bulk file ingestion) -------------------------
 

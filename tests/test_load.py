@@ -6,22 +6,37 @@ batch2 insert+update+delete → rerun is a no-op, for both watermark
 strategies (CT ≡ change feed versions, TMSTP ≡ timestamp filter). Then
 the failure cases: a crash at each kill point converges on the next run
 without re-merging, a source commit racing a load lands on the next
-load, and two config stores racing one batch apply it once. Tier-1:
-these run in the default (fast) tier."""
+load, and two config stores racing one batch apply it once. Last, the
+control plane on the driver: it starts no Spark job, resolves as the
+entitiesSQL query does, keeps the ledger compacted, and writes rows
+that read back the same through every reader. Tier-1: these run in the
+default (fast) tier."""
 
 from __future__ import annotations
 
+import datetime
 import os
 import threading
+import time
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from nrtwithdeltalake_spark.pipeline import incremental
-from nrtwithdeltalake_spark.pipeline.config import ConfigStore
+from nrtwithdeltalake_spark.pipeline.config import (
+    DEFAULT_CT_WM,
+    DEFAULT_DATE_WM,
+    WATERMARKS_SCHEMA,
+    ConfigStore,
+)
 from nrtwithdeltalake_spark.pipeline.incremental import load_entity, run_pipeline
-from nrtwithdeltalake_spark.pipeline.tables import VersionedTable
+from nrtwithdeltalake_spark.pipeline.tables import (
+    ConstraintViolationError,
+    VersionedTable,
+)
+from nrtwithdeltalake_spark.sources import datasource
 
 TXN_SCHEMA = T.StructType(
     [
@@ -154,7 +169,7 @@ def test_crash_replay_is_idempotent(spark, roots):
     replaying the batch must converge to the same state."""
     source_root, target_root, config_root = roots
     store = _setup_scenario(spark, roots)
-    entities = {e.EntityId: e for e in store.entities_with_watermarks().collect()}
+    entities = {e.EntityId: e for e in store.entities_with_watermarks()}
     ct_entity = next(e for e in entities.values() if e.WatermarkType == "CT")
 
     load_entity(spark, store, ct_entity, source_root, target_root)
@@ -165,7 +180,7 @@ def test_crash_replay_is_idempotent(spark, roots):
     store.close_watermark = lambda wm_id: None  # crash before close
     e2 = next(
         e
-        for e in store.entities_with_watermarks().collect()
+        for e in store.entities_with_watermarks()
         if e.EntityId == ct_entity.EntityId
     )
     load_entity(spark, store, e2, source_root, target_root)
@@ -174,7 +189,7 @@ def test_crash_replay_is_idempotent(spark, roots):
     # watermark still old → the batch replays; result must be identical
     e3 = next(
         e
-        for e in store.entities_with_watermarks().collect()
+        for e in store.entities_with_watermarks()
         if e.EntityId == ct_entity.EntityId
     )
     res = load_entity(spark, store, e3, source_root, target_root)
@@ -229,7 +244,7 @@ TMSTP_WM_B2 = "2024-01-02 10:00:00"
 def _entity(store, wm_type):
     return next(
         e
-        for e in store.entities_with_watermarks().collect()
+        for e in store.entities_with_watermarks()
         if e.WatermarkType == wm_type
     )
 
@@ -442,3 +457,249 @@ def test_two_stores_race_one_incremental_batch(spark, roots, monkeypatch):
         assert "error" not in out, out.get("error")
         assert all(r.action == "incremental" for r in out["result"])
     _assert_converged_b2(spark, store, roots)
+
+
+# -- the control plane on the driver ------------------------------------------
+
+LEDGER_BODY = T.StructType(WATERMARKS_SCHEMA.fields[1:])
+
+
+def _last_job(spark) -> int:
+    """The newest Spark job id so far (ids are sequential)."""
+    ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+    return max(ids, default=-1)
+
+
+def _jobs_during(spark, fn):
+    """(Spark jobs started while ``fn`` ran, its result)."""
+    before = _last_job(spark)
+    out = fn()
+    return _last_job(spark) - before, out
+
+
+def _spark_resolution(store):
+    """The entitiesSQL as a DataFrame query: the oracle for the driver
+    resolution (O11-O19)."""
+    w = Window.partitionBy("EntityId").orderBy(
+        F.desc("LoadStartDatetime"), F.desc("WatermarkId")
+    )
+    latest = (
+        store.watermarks.read()
+        .filter(F.col("LoadEndDatetime").isNotNull())
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("EntityId", "DateWatermark", "CTWatermark")
+    )
+    return store.entities.read().join(latest, "EntityId", "left").select(
+        "EntityId",
+        "FromEntityName",
+        "ToEntityName",
+        "WatermarkType",
+        "TimestampColumn",
+        "PrimaryKeys",
+        F.when(
+            F.col("WatermarkType") == "TMSTP",
+            F.coalesce(F.col("DateWatermark"), F.lit(DEFAULT_DATE_WM)),
+        ).alias("DateWatermark"),
+        F.when(
+            F.col("WatermarkType") == "CT",
+            F.coalesce(F.col("CTWatermark"), F.lit(DEFAULT_CT_WM)),
+        ).alias("CTWatermark"),
+    )
+
+
+def test_control_plane_starts_no_spark_job(spark, roots):
+    """Resolution, ledger open and ledger close run on the driver: no
+    Spark job. Resolution agrees with the entitiesSQL DataFrame query
+    over a ledger holding a replayed row, a LoadStartDatetime tie that
+    WatermarkId breaks, an open row written through the Spark path, and
+    entities with no row at all."""
+    store = _bootstrapped_batch2(spark, roots)
+    ct, tmstp = 1, 2  # registration order; CT was bootstrapped at version 0
+
+    # a replayed row: the same watermark again
+    n, pending = _jobs_during(spark, lambda: store.open_watermark(ct, None, 0))
+    assert n == 0
+    n, _ = _jobs_during(spark, lambda: store.close_watermark(pending))
+    assert n == 0
+    n, ents = _jobs_during(spark, store.entities_with_watermarks)
+    assert n == 0
+    assert [(e.EntityId, e.WatermarkType) for e in ents] == [
+        (ct, "CT"),
+        (tmstp, "TMSTP"),
+    ]
+
+    # a tie on LoadStartDatetime: the higher WatermarkId wins
+    tie = datetime.datetime.now() + datetime.timedelta(hours=1)
+    for wm in ("2030-01-01 00:00:00", TMSTP_WM_B2):
+        store.close_watermark(
+            {**store.open_watermark(tmstp, wm, None), "LoadStartDatetime": tie}
+        )
+    # an open row, newest of all, written through the Spark path (O14)
+    later = tie + datetime.timedelta(hours=1)
+    store.watermarks.append(
+        spark.createDataFrame([(ct, None, 99, later, None)], LEDGER_BODY)
+    )
+    # entities with no ledger row: the sentinels (O16)
+    n, _ = _jobs_during(
+        spark, lambda: store.register_entity("none_ct", "silver_none_ct", "CT", ["k"])
+    )
+    assert n == 0
+    store.register_entity(
+        "none_ts", "silver_none_ts", "TMSTP", ["k"], timestamp_column="ts"
+    )
+
+    n, got = _jobs_during(spark, store.entities_with_watermarks)
+    assert n == 0
+    want = sorted(_spark_resolution(store).collect(), key=lambda r: r.EntityId)
+    assert [r.asDict() for r in got] == [r.asDict() for r in want]
+    assert [(r.EntityId, r.DateWatermark, r.CTWatermark) for r in got] == [
+        (ct, None, 0),
+        (tmstp, TMSTP_WM_B2, None),
+        (3, None, DEFAULT_CT_WM),
+        (4, DEFAULT_DATE_WM, None),
+    ]
+
+
+def test_ledger_compaction_keeps_resolution(spark, roots):
+    """More than LEDGER_MAX_FILES ledger rows: run_pipeline compacts
+    the ledger to at most that many live files, and resolution returns
+    the same watermarks as before."""
+    source_root, target_root, _ = roots
+    store = _setup_scenario(spark, roots)
+    run_pipeline(spark, store, source_root, target_root)
+    ents = store.entities_with_watermarks()
+    ct = next(e for e in ents if e.WatermarkType == "CT")
+    tmstp = next(e for e in ents if e.WatermarkType == "TMSTP")
+    # watermarks past the sources' own, so the next run loads nothing
+    for i in range(incremental.LEDGER_MAX_FILES):
+        if i % 2:
+            row = store.open_watermark(ct.EntityId, None, 10 + i)
+        else:
+            row = store.open_watermark(
+                tmstp.EntityId, f"2030-01-01 00:00:{i:02d}", None
+            )
+        store.close_watermark(row)
+    ledger = store.watermarks
+    assert len(ledger.get_commit().files) > incremental.LEDGER_MAX_FILES
+    before = store.entities_with_watermarks()
+    ids = sorted(r.WatermarkId for r in ledger.read().collect())
+
+    res = run_pipeline(spark, store, source_root, target_root)
+    assert all(r.action == "skipped" for r in res)
+    assert ledger.get_commit().op == "compact"
+    assert len(ledger.get_commit().files) <= incremental.LEDGER_MAX_FILES
+    assert store.entities_with_watermarks() == before
+    assert [(r.CTWatermark, r.DateWatermark) for r in before] == [
+        (10 + incremental.LEDGER_MAX_FILES - 1, None),
+        (None, f"2030-01-01 00:00:{incremental.LEDGER_MAX_FILES - 2:02d}"),
+    ]
+    assert sorted(r.WatermarkId for r in ledger.read().collect()) == ids
+
+
+def _by_id(rows, key):
+    return {r[key]: r.asDict() for r in rows}
+
+
+def test_driver_rows_round_trip(spark, tmp_path, monkeypatch):
+    """Entity and ledger rows written on the driver read back the same
+    through Spark, the ``versioned`` DataSource and the change feed,
+    under a non-UTC session time zone and process TZ. Spark-written and
+    driver-written ledger rows share one ledger and order by the same
+    instant, so the latest row wins either way. An Arrow append that
+    loses its commit slot to a racing Spark-path append renumbers its
+    row: the ids stay contiguous and unique."""
+    root = str(tmp_path / "cfg")
+    old_tz = os.environ.get("TZ")
+    session_tz = spark.conf.get("spark.sql.session.timeZone")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try:
+        store = ConfigStore(spark, root)
+        store.init()
+        ct = store.register_entity("src_a", "silver_a", "CT", ["k1", "k2"])
+        ts = store.register_entity(
+            "src_b", "silver_b", "TMSTP", ["k"], timestamp_column="ts"
+        )
+        wt = store.watermarks
+        t0 = datetime.datetime(2024, 3, 1, 12, 0, 0, 123456)
+        hour = datetime.timedelta(hours=1)
+
+        def spark_row(eid, date_wm, ct_wm, start):
+            wt.append(
+                spark.createDataFrame(
+                    [(eid, date_wm, ct_wm, start, start)], LEDGER_BODY
+                )
+            )
+
+        def driver_row(eid, date_wm, ct_wm, start):
+            return store.close_watermark(
+                {
+                    "EntityId": eid,
+                    "DateWatermark": date_wm,
+                    "CTWatermark": ct_wm,
+                    "LoadStartDatetime": start,
+                }
+            )
+
+        spark_row(ct, None, 5, t0)
+        driver_row(ct, None, 7, t0 + hour)  # newer: wins
+        driver_row(ts, "2024-01-01 00:00:00", None, t0)
+        spark_row(ts, "2024-02-02 00:00:00", None, t0 + hour)  # newer: wins
+        got = {r.EntityId: r for r in store.entities_with_watermarks()}
+        assert got[ct].CTWatermark == 7
+        assert got[ts].DateWatermark == "2024-02-02 00:00:00"
+
+        # a Spark-path append from another store takes the slot first
+        real = VersionedTable._write_commit
+        raced = []
+
+        def racing(self, commit):
+            if self.path == wt.path and not raced:
+                raced.append(commit.version)
+                spark_row(ts, "2024-02-03 00:00:00", None, t0)
+            return real(self, commit)
+
+        monkeypatch.setattr(VersionedTable, "_write_commit", racing)
+        wid = driver_row(ct, None, 9, t0 + 2 * hour)
+        monkeypatch.setattr(VersionedTable, "_write_commit", real)
+        assert raced and wt.get_commit().stats["rebased_from_version"] == raced[0] - 1
+        assert store.entities_with_watermarks()[0].CTWatermark == 9
+
+        datasource.register(spark)
+        for table, key in ((wt, "WatermarkId"), (store.entities, "EntityId")):
+            native = _by_id(table.read().collect(), key)
+            assert sorted(native) == list(range(1, len(native) + 1))
+            ds = spark.read.format("versioned").option("path", table.path).load()
+            assert _by_id(ds.collect(), key) == native
+            feed = table.change_feed(0).filter(F.col("_change_type") == "insert")
+            assert _by_id(feed.drop("_change_type", "_commit_version").collect(), key) == native
+        ledger = _by_id(wt.read().collect(), "WatermarkId")
+        assert wid == max(ledger)
+        assert ledger[wid]["LoadStartDatetime"] == t0 + 2 * hour
+        assert ledger[2]["LoadStartDatetime"] == t0 + hour
+        ents = _by_id(store.entities.read().collect(), "EntityId")
+        assert ents[ct]["PrimaryKeys"] == ["k1", "k2"]
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+        spark.conf.set("spark.sql.session.timeZone", session_tz)
+
+
+def test_arrow_append_takes_spark_path_for_bound_rules(spark, tmp_path):
+    """A table with a CHECK constraint cannot take the driver path: the
+    Arrow batch is converted and the Spark path enforces the rule."""
+    import pyarrow as pa
+
+    t = VersionedTable.create(
+        spark, str(tmp_path / "t"), spark.createDataFrame([(1,)], "k long")
+    )
+    t.add_constraint("positive", "k > 0")
+    with pytest.raises(ConstraintViolationError):
+        t.append(pa.table({"k": pa.array([-1], pa.int64())}))
+    t.append(pa.table({"k": pa.array([2], pa.int64())}))
+    assert sorted(r.k for r in t.read().collect()) == [1, 2]

@@ -3,7 +3,7 @@
 Usage: python tools/capture_plans.py <tag>/<suffix> [query ...]
 e.g. ``capture_plans.py r14/before`` writes plans/r14/<query>_before.txt
 for each query (default: all 40 headline queries); a bare ``<suffix>``
-goes to plans/<suffix-dir-less> is not allowed — always pass tag/suffix.
+writes plans/<suffix>/<query>_<suffix>.txt.
 Plans are captured against $SPARK_GRAFT_SF_DIR (default sf0.1) on the
 engine's own session — the same shape the bench times. Explain only,
 with one exception: q_join_bloom_prefilter runs its bounded bloom-build
