@@ -18,9 +18,9 @@ pinned to one source snapshot (the version read at the start of the load):
 Improvements over the reference, kept explicit:
 * entities load in a thread pool (Spark schedules concurrent jobs from
   threads) instead of the serial driver loop (``:259-260``);
-* the CT batch is deduped to the latest row per key before merging
-  (Delta-style formats reject duplicate matches; the reference never
-  dedups — SURVEY.md §7 hard-part 1);
+* the CT batch is deduped to the latest row per key by commit version,
+  in the merge's own dedup step (Delta-style formats reject duplicate
+  matches; the reference never dedups — SURVEY.md §7 hard-part 1);
 * deletes can be applied as deletes (``SyncOperation = 'D'``) rather than
   merged as updates (flagged optional behavior, default on for CT).
 
@@ -142,25 +142,13 @@ def load_entity(
         batch = _with_audit(src_table.read(version=src_v), F.lit("I"))
         action = "full"
     elif wm_type == "CT":
-        from pyspark.sql import Window
-
-        # a key changed in several commits appears once per commit in the
-        # feed; keep only its newest state (dedup by commit version here —
-        # SyncDateTime is constant within a batch, so it can't order this)
-        w = Window.partitionBy(*keys).orderBy(F.desc("_commit_version"))
-        changes = (
-            src_table.change_feed(old_wm, src_v)
-            # the feed also carries update_preimage rows (old values, for
-            # consumers that need key-change invalidation); state
-            # replication wants only the new-state/delete rows
-            .filter(F.col("_change_type") != "update_preimage")
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
+        # the feed also carries update_preimage rows (old values, for
+        # consumers that need key-change invalidation); state replication
+        # wants only the new-state/delete rows
+        changes = src_table.change_feed(old_wm, src_v).filter(
+            F.col("_change_type") != "update_preimage"
         )
-        batch = _with_audit(changes, _op_from_change_type()).drop(
-            "_change_type", "_commit_version"
-        )
+        batch = _with_audit(changes, _op_from_change_type()).drop("_change_type")
         action = "incremental"
     else:
         batch = _with_audit(
@@ -192,7 +180,11 @@ def load_entity(
             batch,
             keys,
             delete_condition=f"{SYNC_OP} = 'D'" if apply_deletes else None,
-            dedup_order_col=SYNC_DT,
+            # a key changed in several commits appears once per commit in
+            # the CT feed: merge keeps its newest state by commit version
+            # (SyncDateTime is constant within a batch, so it can't order it)
+            dedup_order_col="_commit_version" if wm_type == "CT" else SYNC_DT,
+            exclude_cols=["_commit_version"] if wm_type == "CT" else None,
             txn_app=app,
             txn_version=token,
         )

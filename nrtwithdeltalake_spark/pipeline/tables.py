@@ -53,7 +53,7 @@ from .log import (
     with_field_ids,
 )
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -67,6 +67,21 @@ CHANGE_TYPE_COL = "_change_type"
 COMMIT_RETRIES = 5
 # how conflict errors name an op
 _OP_NAMES = {"compact": "compaction", "reorg_purge": "REORG PURGE"}
+# a merge's row counts, by the change-feed image each row leaves
+_COUNTED_IMAGES = {
+    "rows_inserted": "insert",
+    "rows_updated": "update_postimage",
+    "rows_deleted": "delete",
+}
+# merge key types Arrow's join compares as Spark's eqNullSafe does on
+# non-NULL values (floats and decimals differ: NaN, -0.0, scale), with
+# the default-collation StringType (a collated one compares by collation)
+_DRIVER_KEY_TYPES = (
+    T.IntegralType,
+    T.DateType,
+    T.TimestampType,
+    T.TimestampNTZType,
+)
 
 
 def _strip_scheme(p: str) -> str:
@@ -2707,24 +2722,33 @@ class VersionedTable:
             prev, op, build, dvs=False, txn=(txn_app, txn_version)
         )[0]
 
-    def _driver_appendable(self, prev: Commit, tbl: pa.Table) -> bool:
-        """True when an Arrow batch can be appended on the driver: the
-        table binds no rule that needs Spark (CHECK or NOT NULL
-        constraints, generated or DEFAULT columns, partition or bloom
-        columns) and the batch holds exactly the current schema's
-        non-identity columns with their Arrow types (so no explicit BY
-        DEFAULT identity value and no schema evolution)."""
-        from pyspark.sql.pandas.types import to_arrow_type
-
+    def _driver_writable(self, prev: Commit) -> bool:
+        """True when the table binds no rule that needs Spark to write
+        rows: no CHECK or NOT NULL constraint, generated or DEFAULT
+        column, partition or bloom column. Identity columns are each
+        caller's call: an Arrow append numbers its rows, a merge takes
+        the Spark path. Shared by the driver append and merge."""
         md = prev.metadata or {}
-        schema = T.StructType.fromJson(json.loads(prev.schema_json))
-        if (
+        return not (
             log.metadata_features(md) - {"identity_columns"}
             or md.get("partition_columns")
-            or self._bloom_columns(schema)
-        ):
+            or self._bloom_columns(
+                T.StructType.fromJson(json.loads(prev.schema_json))
+            )
+        )
+
+    def _driver_appendable(self, prev: Commit, tbl: pa.Table) -> bool:
+        """True when an Arrow batch can be appended on the driver: the
+        table allows driver writes (``_driver_writable``) and the batch
+        holds exactly the current schema's non-identity columns with
+        their Arrow types (so no explicit BY DEFAULT identity value and
+        no schema evolution)."""
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        if not self._driver_writable(prev):
             return False
-        ident = _identity_defs(md)
+        schema = T.StructType.fromJson(json.loads(prev.schema_json))
+        ident = _identity_defs(prev.metadata or {})
         want = [
             (f.name, to_arrow_type(f.dataType))
             for f in schema.fields
@@ -3012,6 +3036,30 @@ class VersionedTable:
         Copy-on-write: only data files containing matched keys are
         rewritten; all other files carry over by reference.
 
+        Two paths, one merge (Delta VLDB'20 §3: one pass finds the
+        touched files, one rewrites them). Both share the txn skip, the
+        source dedup, generated columns, schema evolution, the
+        stats-based probe pruning and the commit. A SMALL batch — its
+        deduped plan's ``sizeInBytes`` at most
+        ``spark.sql.autoBroadcastJoinThreshold``, Spark's own rule for a
+        relation small enough to ship whole (``-1`` disables it) — is
+        collected once as Arrow (``_merge_arrow``): one Spark action
+        returns the target rows matching its keys, the driver pairs them
+        and writes the change-feed images with the format's pyarrow
+        writer, and one Spark write rewrites the touched files' other
+        rows together with the new ones, in at most as many files as it
+        removes (an insert-only batch is one pyarrow file). Three Spark
+        actions; the only shuffle is the batch's own dedup. The table
+        must allow driver writes (``_driver_writable``) and hold no
+        identity column; the merge must have no by-source clause and no
+        ``matched_update_condition``; the keys must be integral, string,
+        date or timestamp (Arrow's join equality is Spark's there) and
+        never NULL. Anything else takes the Spark path: a full outer
+        join, written once as data and once as the change feed. The
+        result and the commit's stats carry ``rows_inserted``,
+        ``rows_updated``, ``rows_deleted`` (Delta's operation metrics)
+        and ``images`` ("driver" | "spark", the path that ran).
+
         ``exclude_cols``: marker columns (e.g. an op flag feeding
         ``delete_condition`` or ``dedup_order_col``) consumed here but
         not persisted to the table.
@@ -3129,6 +3177,65 @@ class VersionedTable:
         src = self._fill_generated(src.drop(*(exclude_cols or [])))
         schema = self._merged_schema(prev, src.drop("__is_delete"))
         src = _align_to(src, schema, keep=["__is_delete"])
+
+        def commit(
+            new_files, cdf_files, touched, probe_files, key_rows, counts,
+            ident_last=None,
+        ) -> dict:
+            # the publish both paths share; key_rows holds the batch's keys
+            def keys_match(added: DataFrame) -> bool:
+                on = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys]
+                return bool(
+                    added.alias("t")
+                    .join(key_rows.alias("s"), on, "left_semi")
+                    .limit(1)
+                    .count()
+                )
+
+            touched_set = set(touched)
+            own = {"touched_files": len(touched), **counts, **(extra_stats or {})}
+            if ident_last:
+                own["identity"] = dict(ident_last)
+            v, stats = self._publish(
+                prev,
+                "merge",
+                lambda base: {
+                    "new_files": new_files,
+                    "cdf_files": cdf_files,
+                    "schema_json": schema.json(),
+                    "stats": {
+                        **own,
+                        "carryover_files": sum(
+                            f not in touched_set for f in base.files
+                        ),
+                    },
+                },
+                rewritten=touched_set,
+                # with a by-source clause, every concurrently added row is
+                # unmatched-by-source in a serial run, so the clause might
+                # have deleted or updated it: any added file conflicts
+                affects=(
+                    ("NOT MATCHED BY SOURCE clause", lambda added: True)
+                    if nmbs_active
+                    else ("keys", keys_match)
+                ),
+                identity=bool(ident_last),
+                txn=(txn_app, txn_version),
+            )
+            return {
+                "version": v,
+                "probe_candidate_files": len(probe_files),
+                **stats,
+            }
+
+        # 0. a small batch pairs on the driver (``_merge_arrow``); a NULL
+        #    key, which eqNullSafe matches, keeps it on the Spark path
+        if not (
+            ident_defs or nmbs_active or matched_update_condition
+        ) and self._driver_mergeable(prev, src, keys):
+            batch = src.toArrow()
+            if not any(batch.column(k).null_count for k in keys):
+                return commit(**self._merge_arrow(prev, batch, schema, keys))
         src = src.cache()
 
         # 1. touched files: semi-join target rows against source keys on
@@ -3136,16 +3243,10 @@ class VersionedTable:
         tgt_all = self._snapshot(prev)  # DV-applied: deleted rows are gone
         probe_files = list(prev.files)
         if prev.files:
-            # range-prune the PROBE's scan set: one 1-row aggregate on
-            # the (cached) source gives per-key [min, max] + null
-            # counts; files whose committed stats can't overlap the
-            # batch's key range provably contain no match and skip the
-            # probe scan entirely. The NRT design case: a CT batch's
-            # keys cluster in recent ranges, so a continuous merge
-            # probes the recent files, not 100 TB of history. Strictly
-            # conservative — missing/unparseable stats keep the file,
-            # and ANY null source key disables pruning (footer min/max
-            # ignore nulls, but eqNullSafe matches them).
+            # one 1-row aggregate on the (cached) source gives per-key
+            # [min, max] + null counts for ``_key_range_files``; ANY null
+            # source key disables pruning (footer min/max ignore nulls,
+            # but eqNullSafe matches them).
             aggs = []
             for k in keys:
                 aggs += [
@@ -3155,31 +3256,15 @@ class VersionedTable:
                 ]
             b = src.agg(*aggs).collect()[0]
             if all(b[f"__nulls_{k}"] == 0 for k in keys):
-                terms = []
-                for k in keys:
-                    lo, hi = b[f"__lo_{k}"], b[f"__hi_{k}"]
-                    # NaN bounds (float/double keys: F.max treats NaN as
-                    # largest) compare False against every file stat, so
-                    # pruning would drop ALL candidate files and the
-                    # merge would duplicate matched rows — skip this
-                    # key's terms instead (conservative: no pruning).
-                    if lo != lo or hi != hi:
-                        continue
-                    if lo is not None and hi is not None:
-                        terms += [(k, ">=", lo), (k, "<=", hi)]
-                if terms:
-                    fstats = prev.stats.get("file_stats", {})
-                    probe_files = [
-                        f
-                        for f in probe_files
-                        if file_stats_may_match(fstats.get(f), terms)
-                    ]
+                probe_files = self._key_range_files(
+                    prev, {k: (b[f"__lo_{k}"], b[f"__hi_{k}"]) for k in keys}
+                )
         if probe_files:
             # null-safe semi-join: the rewrite join below matches NULL keys
             # via eqNullSafe, so touched-file detection must too — otherwise
             # a NULL-keyed target row's file is carried over unrewritten and
             # the merged row duplicates it.
-            src_keys = src.select(*keys).dropDuplicates(keys).alias("s")
+            src_keys = src.select(*keys).alias("s")
             probe = self._snapshot(prev, files=probe_files).withColumn(
                 "__file", F.col("_metadata.file_path")
             ).alias("t")
@@ -3214,7 +3299,7 @@ class VersionedTable:
                     if not_matched_by_source_update_condition
                     else F.lit(True)
                 )
-            src_keys_probe = src.select(*keys).dropDuplicates(keys).alias("s")
+            src_keys_probe = src.select(*keys).alias("s")
             unmatched = (
                 tgt_all.withColumn("__file", F.col("_metadata.file_path"))
                 .filter(nmbs_pred)
@@ -3417,56 +3502,210 @@ class VersionedTable:
                 F.lit("update_postimage").alias(CHANGE_TYPE_COL),
             )
             cdf_df = cdf_df.unionByName(nmbs_pre).unionByName(nmbs_post)
+        # the row counts ride the CDF write itself: no extra job
+        obs = Observation()
+        cdf_df = cdf_df.observe(
+            obs,
+            *[
+                F.count(F.when(F.col(CHANGE_TYPE_COL) == ct, 1)).alias(name)
+                for name, ct in _COUNTED_IMAGES.items()
+            ],
+        )
         cdf_files = self._write_files(cdf_df, self.cdf_dir, schema=schema)
 
-        src_keys = src.select(*keys).dropDuplicates(keys).alias("s")
-
-        def keys_match(added: DataFrame) -> bool:
-            on = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys]
-            return bool(
-                added.alias("t")
-                .join(src_keys, on, "left_semi")
-                .limit(1)
-                .count()
-            )
-
-        touched_set = set(touched)
-        own = {"touched_files": len(touched), **(extra_stats or {})}
-        if ident_last:
-            own["identity"] = dict(ident_last)
-        v, stats = self._publish(
-            prev,
-            "merge",
-            lambda base: {
-                "new_files": new_files,
-                "cdf_files": cdf_files,
-                "schema_json": schema.json(),
-                "stats": {
-                    **own,
-                    "carryover_files": sum(
-                        f not in touched_set for f in base.files
-                    ),
-                },
-            },
-            rewritten=touched_set,
-            # with a by-source clause, every concurrently added row is
-            # unmatched-by-source in a serial run, so the clause might
-            # have deleted or updated it: any added file conflicts
-            affects=(
-                ("NOT MATCHED BY SOURCE clause", lambda added: True)
-                if nmbs_active
-                else ("keys", keys_match)
-            ),
-            identity=bool(ident_last),
-            txn=(txn_app, txn_version),
+        out = commit(
+            new_files,
+            cdf_files,
+            touched,
+            probe_files,
+            src.select(*keys),
+            {**obs.get, "images": "spark"},
+            ident_last,
         )
         src.unpersist()
         for c in ident_caches:
             c.unpersist()
+        return out
+
+    @staticmethod
+    def _key_range_files(prev: Commit, bounds: dict) -> list[str]:
+        """``prev``'s files a merge must probe for a batch whose keys
+        lie in ``bounds`` ({key: (min, max)}, NULLs aside): files whose
+        committed stats can't overlap the range provably hold no match.
+        The NRT design case: a CT batch's keys cluster in recent ranges,
+        so a continuous merge probes the recent files, not 100 TB of
+        history. Strictly conservative — missing/unparseable stats keep
+        the file."""
+        terms = []
+        for k, (lo, hi) in bounds.items():
+            # NaN bounds (float/double keys: F.max treats NaN as largest)
+            # compare False against every file stat, so pruning would
+            # drop ALL candidate files and the merge would duplicate
+            # matched rows — skip this key's terms instead.
+            if lo != lo or hi != hi:
+                continue
+            if lo is not None and hi is not None:
+                terms += [(k, ">=", lo), (k, "<=", hi)]
+        if not terms:
+            return list(prev.files)
+        fstats = prev.stats.get("file_stats", {})
+        return [
+            f for f in prev.files if file_stats_may_match(fstats.get(f), terms)
+        ]
+
+    def _driver_mergeable(
+        self, prev: Commit, src: DataFrame, keys: list[str]
+    ) -> bool:
+        """True when a merge may pair its deduped batch ``src`` on the
+        driver (the caller rules out identity columns and the clauses
+        that need the full outer join): the table allows driver writes
+        (``_driver_writable``), every column has an Arrow type, every key
+        type compares in Arrow exactly as ``eqNullSafe`` does on non-NULL
+        values, and the optimized plan's ``sizeInBytes`` is at most
+        ``spark.sql.autoBroadcastJoinThreshold`` — Spark's own rule for a
+        relation small enough to ship whole (``-1`` disables the path).
+        Decided before any job runs."""
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        if not self._driver_writable(prev):
+            return False
+        types = {f.name: f.dataType for f in src.schema.fields}
+        if not all(
+            isinstance(types[k], _DRIVER_KEY_TYPES) or types[k] == T.StringType()
+            for k in keys
+        ):
+            return False
+        try:
+            for t in types.values():
+                to_arrow_type(t)
+        except Exception:  # noqa: BLE001 - any type Arrow can't carry
+            return False
+        jss = self.spark._jsparkSession
+        limit = jss.sessionState().conf().autoBroadcastJoinThreshold()
+        size = src._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        return 0 <= int(size) <= limit
+
+    def _merge_arrow(
+        self, prev: Commit, batch: pa.Table, schema: T.StructType, keys: list[str]
+    ) -> dict:
+        """The small-batch merge (see ``merge``). ``batch`` is the
+        deduped, aligned source with ``__is_delete``, collected once;
+        its keys are unique and non-NULL. One Spark action returns the
+        target rows matching its keys (DV-applied, with their file); the
+        driver pairs them with the batch and writes every change-feed
+        image with the format's pyarrow writer; one Spark write rewrites
+        the touched files' unmatched rows with the new and updated ones
+        (with no touched file, those are a pyarrow file too). Returns
+        ``commit``'s arguments."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        from ..sources.datasource import _ids_of, _write_arrow_files
+
+        arrow = pa.schema(
+            [pa.field(f.name, to_arrow_type(f.dataType)) for f in schema.fields]
+        )
+        rows = batch.select(schema.names).cast(arrow)
+        deletes = pc.fill_null(batch.column("__is_delete"), False).to_numpy(
+            zero_copy_only=False
+        )
+        # the batch's keys as a local relation: a broadcast side, no shuffle
+        key_rows = self.spark.createDataFrame(
+            rows.select(keys), T.StructType([schema[k] for k in keys])
+        )
+        probe_files = []
+        if rows.num_rows:
+            probe_files = self._key_range_files(
+                prev,
+                {k: _min_max(rows.column(k)) for k in keys},
+            )
+        old = arrow.empty_table()
+        touched: list[str] = []
+        if probe_files:
+            found = (
+                _align_to(
+                    self._snapshot(prev, probe_files).withColumn(
+                        "__file", F.col("_metadata.file_path")
+                    ),
+                    schema,
+                    keep=["__file"],
+                )
+                .join(key_rows, keys, "left_semi")
+                .toArrow()
+            )
+            touched = sorted(
+                {_strip_scheme(p) for p in found.column("__file").to_pylist()}
+            )
+            old = found.select(schema.names).cast(arrow)
+
+        # pair each matched target row with the batch row of its key
+        def numbered(tbl: pa.Table, name: str) -> pa.Table:
+            return tbl.select(keys).append_column(
+                name, pa.array(np.arange(tbl.num_rows, dtype=np.int64))
+            )
+
+        pairs = numbered(old, "__t").join(
+            numbered(rows, "__s"), keys, join_type="inner"
+        )
+        t_idx = pairs.column("__t").to_numpy()
+        s_idx = pairs.column("__s").to_numpy()
+        gone = deletes[s_idx]
+        matched = np.zeros(rows.num_rows, dtype=bool)
+        matched[s_idx] = True
+        ins = np.flatnonzero(~matched & ~deletes)
+        images = [
+            (rows.take(ins), "insert"),
+            (rows.take(s_idx[~gone]), "update_postimage"),
+            (old.take(t_idx[~gone]), "update_preimage"),
+            (old.take(t_idx[gone]), "delete"),
+        ]
+        new_rows = rows.take(np.concatenate([s_idx[~gone], ins]))
+        data_file, cdf_file = _write_arrow_files(
+            self.path,
+            # with files to rewrite, the new rows ride that write instead
+            new_rows.slice(0, 0) if touched else new_rows,
+            pa.concat_tables(
+                [
+                    t.append_column(
+                        CHANGE_TYPE_COL, pa.array([ct] * t.num_rows, pa.string())
+                    )
+                    for t, ct in images
+                ]
+            ),
+            _ids_of(schema),
+        )
+        new_files = [data_file] if data_file else []
+        if touched:
+            # the touched files' unmatched rows plus the new ones, in at
+            # most as many files as the merge removes
+            rewrite = (
+                _align_to(self._snapshot(prev, touched), schema)
+                .join(key_rows, keys, "left_anti")
+                .unionByName(self.spark.createDataFrame(new_rows, schema))
+                .coalesce(len(touched))
+            )
+            for f in self._write_files(rewrite, self.data_dir, schema=schema):
+                # Spark writes a schema-only file for an empty result
+                if pq.read_metadata(f).num_rows:
+                    new_files.append(f)
+                else:
+                    os.remove(f)
+        counts = {
+            "rows_inserted": len(ins),
+            "rows_updated": int((~gone).sum()),
+            "rows_deleted": int(gone.sum()),
+            "images": "driver",
+        }
         return {
-            "version": v,
-            "probe_candidate_files": len(probe_files),
-            **stats,
+            "new_files": new_files,
+            "cdf_files": [cdf_file] if cdf_file else [],
+            "touched": touched,
+            "probe_files": probe_files,
+            "key_rows": key_rows,
+            "counts": counts,
         }
 
     def add_column(self, name: str, dtype: str) -> int:
@@ -4679,6 +4918,14 @@ class VersionedTable:
             )
             return self.spark.createDataFrame([], fields)
         return out
+
+
+def _min_max(col) -> tuple:
+    """(min, max) of an Arrow column as Python values."""
+    import pyarrow.compute as pc
+
+    mm = pc.min_max(col)
+    return mm["min"].as_py(), mm["max"].as_py()
 
 
 def _align_by_id(

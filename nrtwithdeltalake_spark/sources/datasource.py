@@ -657,32 +657,46 @@ def _stamp_field_ids(tbl, field_ids: dict[str, int]):
     return tbl.cast(pa.schema(fields))
 
 
-def _write_task_files(path: str, iterator, field_ids: dict[str, int]) -> _WriteResult:
-    """Executor half of the write protocols: stream this task's Arrow
-    batches into one immutable data file + one insert-image CDF file.
-    Files become live only if a later driver commit references them."""
+def _write_arrow_files(
+    path: str, data, cdf, field_ids: dict[str, int]
+) -> tuple[str | None, str | None]:
+    """Write the Arrow tables ``data`` and ``cdf`` (its change-feed
+    images, with ``_change_type``) as one immutable parquet file each
+    under the table's ``_data`` and ``_cdf`` dirs; an empty table writes
+    no file (None). Files become live only if a later driver commit
+    references them."""
     import uuid
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
+
+    token = uuid.uuid4().hex
+    out = []
+    for sub, tbl in (("_data", data), ("_cdf", cdf)):
+        if not tbl.num_rows:
+            out.append(None)
+            continue
+        d = os.path.join(path, sub, f"ds-{token}")
+        os.makedirs(d, exist_ok=True)
+        out.append(os.path.join(d, "part-00000.parquet"))
+        pq.write_table(_stamp_field_ids(tbl, field_ids), out[-1])
+    return out[0], out[1]
+
+
+def _write_task_files(path: str, iterator, field_ids: dict[str, int]) -> _WriteResult:
+    """Executor half of the write protocols: stream this task's Arrow
+    batches into one immutable data file + one insert-image CDF file."""
+    import pyarrow as pa
 
     batches = [b for b in iterator if b.num_rows]
     if not batches:
         return _WriteResult(None, None, 0)
-    tbl = _stamp_field_ids(pa.Table.from_batches(batches), field_ids)
-    token = uuid.uuid4().hex
-    data_dir = os.path.join(path, "_data", f"ds-{token}")
-    cdf_dir = os.path.join(path, "_cdf", f"ds-{token}")
-    os.makedirs(data_dir, exist_ok=True)
-    os.makedirs(cdf_dir, exist_ok=True)
-    data_file = os.path.join(data_dir, "part-00000.parquet")
-    cdf_file = os.path.join(cdf_dir, "part-00000.parquet")
-    pq.write_table(tbl, data_file)
-    pq.write_table(
-        tbl.append_column(CHANGE_TYPE_COL, pa.array(["insert"] * tbl.num_rows)),
-        cdf_file,
+    tbl = pa.Table.from_batches(batches)
+    images = tbl.append_column(
+        CHANGE_TYPE_COL, pa.array(["insert"] * tbl.num_rows)
     )
-    return _WriteResult(data_file, cdf_file, tbl.num_rows)
+    return _WriteResult(
+        *_write_arrow_files(path, tbl, images, field_ids), tbl.num_rows
+    )
 
 
 def _latest_commit(path: str) -> log.Commit | None:

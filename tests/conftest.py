@@ -29,3 +29,10 @@ def spark_global(spark):
     """Session-scoped alias usable inside hypothesis @given tests (which
     reject function-scoped fixtures)."""
     return spark
+
+
+@pytest.fixture(scope="session")
+def tmp_sup(tmp_path_factory):
+    """A session-scoped scratch dir for hypothesis tests (one table per
+    example, under a fresh name)."""
+    return str(tmp_path_factory.mktemp("prop_merge"))

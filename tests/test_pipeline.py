@@ -40,109 +40,6 @@ def test_schema_evolution_on_merge(spark, tmp_path):
     assert rows[3].extra == 1.0
 
 
-def test_time_travel_and_change_feed(spark, tmp_path):
-    p = str(tmp_path / "tbl")
-    t = VersionedTable.create(
-        spark, p, spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    )
-    t.merge(spark.createDataFrame([(2, "b2"), (3, "c")], "id long, v string"), ["id"])
-    assert {r.id for r in t.read(0).collect()} == {1, 2}
-    assert {(r.id, r.v) for r in t.read().collect()} == {(1, "a"), (2, "b2"), (3, "c")}
-    feed = t.change_feed(0).collect()
-    types = {(r.id, r._change_type, r.v) for r in feed if r._commit_version == 1}
-    # Delta-CDF shape: post-image with new values, pre-image with old
-    assert (2, "update_postimage", "b2") in types
-    assert (2, "update_preimage", "b") in types
-    assert (3, "insert", "c") in types
-    assert t.change_feed(t.latest_version()).count() == 0
-
-
-def test_merge_only_rewrites_touched_files(spark, tmp_path):
-    """Copy-on-write efficiency: merging a single key must carry over the
-    files that don't contain it."""
-    p = str(tmp_path / "tbl")
-    df = spark.range(0, 1000).select(
-        F.col("id"), (F.col("id") % 7).alias("v")
-    ).repartition(8)
-    t = VersionedTable.create(spark, p, df)
-    assert len(t.get_commit().files) >= 8
-    stats = t.merge(
-        spark.createDataFrame([(5, 99)], "id long, v long"), ["id"]
-    )
-    assert stats["touched_files"] == 1
-    assert stats["carryover_files"] == len(t.get_commit(0).files) - 1
-    rows = {r.id: r.v for r in t.read().collect()}
-    assert rows[5] == 99 and len(rows) == 1000
-
-
-@settings(max_examples=5, deadline=None)
-@given(
-    batches=st.lists(
-        st.lists(
-            st.tuples(
-                st.integers(0, 6),  # k1
-                st.sampled_from(["a", "b"]),  # k2
-                st.integers(0, 100),  # value
-                st.booleans(),  # delete?
-            ),
-            min_size=1,
-            max_size=12,
-        ),
-        min_size=1,
-        max_size=4,
-    )
-)
-def test_merge_equals_latest_per_key_oracle(spark_global, tmp_sup, batches):
-    """merge(history) ≡ row_number-latest-per-key(concatenated history),
-    with delete-wins semantics — O12/O13 as its own oracle."""
-    import uuid as _uuid
-
-    spark = spark_global
-    p = os.path.join(tmp_sup, _uuid.uuid4().hex)
-    t = VersionedTable.create(
-        spark,
-        p,
-        spark.createDataFrame([], "k1 long, k2 string, v long, seq long"),
-    )
-    seq = 0
-    for batch in batches:
-        rows = []
-        for k1, k2, v, is_del in batch:
-            rows.append((k1, k2, v, is_del, seq))
-            seq += 1
-        t.merge(
-            spark.createDataFrame(
-                rows, "k1 long, k2 string, v long, is_del boolean, seq long"
-            ),
-            ["k1", "k2"],
-            delete_condition="is_del",
-            dedup_order_col="seq",
-            exclude_cols=["is_del"],
-        )
-
-    # oracle: apply the history sequentially; deletes remove the key.
-    latest: dict = {}
-    for batch in batches:
-        for k1, k2, v, is_del in batch:
-            if is_del:
-                latest.pop((k1, k2), None)
-            else:
-                latest[(k1, k2)] = v
-
-    got = {(r.k1, r.k2): r.v for r in t.read().drop("seq").collect()}
-    assert got == latest, f"batches={batches}"
-
-
-@pytest.fixture(scope="session")
-def spark_global(spark):
-    return spark
-
-
-@pytest.fixture(scope="session")
-def tmp_sup(tmp_path_factory):
-    return str(tmp_path_factory.mktemp("prop_merge"))
-
-
 def test_compact_binpacks_preserving_content_and_history(spark, tmp_path):
     """compact() shrinks the file count, keeps content identical, emits no
     CDF rows, and leaves prior versions time-travelable."""
@@ -565,27 +462,6 @@ def test_overwrite_emits_delete_cdf(spark, tmp_path):
     inserts = {(r.id, r.v) for r in feed if r._change_type == "insert"}
     assert deletes == {(1, "a"), (2, "b")}
     assert inserts == {(3, "c")}
-
-
-def test_merge_null_key_is_updated_not_duplicated(spark, tmp_path):
-    """ADVICE r1: NULL-keyed target rows must be treated null-safely by
-    touched-file detection — merging a NULL-keyed source row updates the
-    existing NULL-keyed target row instead of carrying the original file
-    AND writing a new merged row (duplicate key)."""
-    t = VersionedTable.create(
-        spark,
-        str(tmp_path / "t_null_merge"),
-        spark.createDataFrame([(None, "x"), (1, "a")], "id long, v string"),
-    )
-    t.merge(
-        spark.createDataFrame([(None, "x2"), (2, "b")], "id long, v string"),
-        ["id"],
-    )
-    rows = [(r.id, r.v) for r in t.read().collect()]
-    assert sorted(rows, key=str) == sorted(
-        [(None, "x2"), (1, "a"), (2, "b")], key=str
-    )
-    assert len(rows) == 3, f"duplicate produced: {rows}"
 
 
 def test_zorder_multi_range_prunes_multiplicatively(spark, tmp_path):
