@@ -1,8 +1,6 @@
-"""Pipeline-core tests (the load loop itself is in ``test_load.py``).
-
-* Property-based merge test: random upsert/delete batches on composite
-  keys; invariant — merged table ≡ latest-per-key over the concatenated
-  history (the reference's own ROW_NUMBER idiom as oracle).
+"""Pipeline-core tests (the load loop itself is in ``test_load.py``, the
+core merge semantics and the latest-per-key property test in
+``test_merge.py``).
 """
 
 from __future__ import annotations
