@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import ConfigStore, DEFAULT_CT_WM
-from .tables import CommitConflictError, VersionedTable
+from .tables import MERGE_COUNTS, CommitConflictError, VersionedTable
 
 SYNC_DT = "SyncDateTime"
 SYNC_OP = "SyncOperation"
@@ -62,7 +62,7 @@ LEDGER_SMALL_FILE_BYTES = 1 << 20
 class LoadResult:
     entity_id: int
     action: str  # 'full' | 'incremental' | 'skipped'
-    rows: int
+    rows: int  # the bootstrap's rows, or the merge's inserted + updated + deleted
     new_watermark: str | None
     merge: dict | None = None  # merge()'s result; None: bootstrap or skipped
 
@@ -160,21 +160,24 @@ def load_entity(
         action = "incremental"
 
     # -- sink (E3 step 5, :185-209) ----------------------------------------
-    # The reference caches + counts the batch as a SEPARATE pass
-    # (:180-183). Observation folds the row count into the write job
-    # itself — at 100 TB that deletes one full batch scan per load.
-    from pyspark.sql import Observation
-
-    obs = Observation(f"load_{eid}")
-    batch = batch.observe(obs, F.count(F.lit(1)).alias("n"))
     app = f"entity:{eid}"
     merged = None
     if first_load:
+        # The reference caches + counts the batch as a SEPARATE pass
+        # (:180-183). Observation folds the row count into the write job
+        # itself — at 100 TB that deletes one full batch scan per load.
+        from pyspark.sql import Observation
+
+        obs = Observation(f"load_{eid}")
         t = VersionedTable.create(
-            spark, tgt_path, batch, extra_stats={"txn": {app: token}}
+            spark,
+            tgt_path,
+            batch.observe(obs, F.count(F.lit(1)).alias("n")),
+            extra_stats={"txn": {app: token}},
         )
         if register_db is not None:
             t.register(register_db, entity_row["ToEntityName"])
+        n = obs.get["n"]
     else:
         merged = VersionedTable(spark, tgt_path).merge(
             batch,
@@ -188,9 +191,9 @@ def load_entity(
             txn_app=app,
             txn_version=token,
         )
-    # a skipped merge may return before its batch ever runs, and the
-    # Observation of a batch that never ran never completes
-    n = 0 if merged and merged.get("txn_skipped") else obs.get["n"]
+        # the rows the merge applied, from its own counts: a key changed
+        # in several source commits counts once; a skipped merge, none
+        n = sum(merged.get(c, 0) for c in MERGE_COUNTS)
 
     # -- ledger close (E3 step 6, :212-218): the load's one ledger row -----
     store.close_watermark(pending)

@@ -6,8 +6,9 @@ driver; anything else takes the Spark full-outer-join path. The parity
 test runs each case on both paths (``-1`` forces the Spark one) and
 requires equal snapshots, change feeds and row counts. Then the job
 budget of a change-tracking batch, the file count of a pipeline that
-keeps merging, and the core merge semantics: time travel and the change
-feed, the touched-file rewrite, the latest-per-key oracle and NULL keys.
+keeps merging, a table left with no file, and the core merge semantics:
+time travel and the change feed, the touched-file rewrite, the
+latest-per-key oracle (on both paths) and NULL keys.
 """
 
 from __future__ import annotations
@@ -82,6 +83,22 @@ def _case(name, spark):
         return _mix_target, _local(spark, _MIX, mix_ddl), {}, "driver", (), None
     if name == "empty":
         return _mix_target, _local(spark, [], mix_ddl), {}, "driver", (), None
+    if name == "insert_only":
+        src = _local(spark, [(50, 1, False), (51, 2, False)], mix_ddl)
+        return _mix_target, src, {}, "driver", (), None
+    if name == "delete_file":
+
+        def target(spark, p):
+            # keys 1 and 2 in one file, key 3 in another
+            ddl = "id long, v long"
+            t = VersionedTable.create(
+                spark, p, spark.createDataFrame([(1, 10), (2, 20)], ddl).coalesce(1)
+            )
+            t.append(spark.createDataFrame([(3, 30)], ddl))
+            return t
+
+        src = _local(spark, [(1, 0, True), (2, 0, True)], mix_ddl)
+        return target, src, {}, "driver", (), None
     if name == "new_column":
         src = _local(
             spark,
@@ -139,7 +156,17 @@ def _case(name, spark):
 
 
 @pytest.mark.parametrize(
-    "case", ["mix", "empty", "new_column", "null_key", "identity", "time_zone"]
+    "case",
+    [
+        "mix",
+        "empty",
+        "insert_only",
+        "delete_file",
+        "new_column",
+        "null_key",
+        "identity",
+        "time_zone",
+    ],
 )
 def test_merge_paths_agree(spark, tmp_path, case):
     """Both merge paths give the same snapshot, change feed and row
@@ -189,6 +216,14 @@ def test_merge_paths_agree(spark, tmp_path, case):
         assert d_res["files"] <= 0
     if case == "empty":
         assert d_cdf == Counter() and d_res["touched_files"] == 0
+    if case == "insert_only":
+        # no file to rewrite: the new rows are one pyarrow file
+        assert d_res["touched_files"] == 0 and d_res["files"] == 1
+    if case == "delete_file":
+        # the touched file's rows are all deleted: it goes, and no
+        # zero-row file replaces it on either path
+        assert d_res["touched_files"] == s_res["touched_files"] == 1
+        assert d_res["files"] == s_res["files"] == -1
 
 
 @pytest.mark.parametrize("race_key, conflicts", [(50, False), (1, True)])
@@ -300,6 +335,33 @@ def test_pipeline_cycles_keep_silver_file_count(spark, roots):
     )
 
 
+def test_empty_results_commit_no_file(spark, tmp_path):
+    """No writer commits the schema-only file Spark writes for an empty
+    result, and every operation works on a table with no file."""
+    t = VersionedTable.create(
+        spark, str(tmp_path / "t"), spark.createDataFrame([], "id long, v long")
+    )
+    assert t.get_commit().files == []
+    t.update("id = 1", {"v": F.lit(0)})
+    t.delete("id = 1")
+    t.delete("id = 1", use_dv=True)
+    t.overwrite(spark.createDataFrame([], "id long, v long"), replace_where="id > 5")
+    t.compact(cluster_by=["id"])
+    src = _local(spark, [(1, 10, False), (2, 20, False)], "id long, v long, d boolean")
+    assert t.merge(src, ["id"], delete_condition="d", exclude_cols=["d"])[
+        "images"
+    ] == "driver"
+    # a merge that deletes every row leaves the table with no file again
+    gone = _local(spark, [(1, 0, True), (2, 0, True)], "id long, v long, d boolean")
+    t.merge(gone, ["id"], delete_condition="d", exclude_cols=["d"])
+    assert t.get_commit().files == [] and t.read().count() == 0
+    t.update("id = 1", {"v": F.lit(0)})
+    t.delete("id = 2", use_dv=True)
+    assert _rows(t.change_feed(0), ("_commit_version",)) == Counter(
+        {(1, 10, "insert"): 1, (2, 20, "insert"): 1, (1, 10, "delete"): 1, (2, 20, "delete"): 1}
+    )
+
+
 def test_time_travel_and_change_feed(spark, tmp_path):
     p = str(tmp_path / "tbl")
     t = VersionedTable.create(
@@ -354,31 +416,41 @@ def test_merge_only_rewrites_touched_files(spark, tmp_path):
 )
 def test_merge_equals_latest_per_key_oracle(spark_global, tmp_sup, batches):
     """merge(history) ≡ row_number-latest-per-key(concatenated history),
-    with delete-wins semantics — O12/O13 as its own oracle."""
+    with delete-wins semantics — O12/O13 as its own oracle — on both
+    merge paths: the history runs once on the driver path and once with
+    the threshold at -1 on the Spark path, and the two give the same
+    snapshot and change feed."""
     import uuid as _uuid
 
     spark = spark_global
-    p = os.path.join(tmp_sup, _uuid.uuid4().hex)
-    t = VersionedTable.create(
-        spark,
-        p,
-        spark.createDataFrame([], "k1 long, k2 string, v long, seq long"),
-    )
-    seq = 0
-    for batch in batches:
-        rows = []
-        for k1, k2, v, is_del in batch:
-            rows.append((k1, k2, v, is_del, seq))
-            seq += 1
-        t.merge(
-            spark.createDataFrame(
-                rows, "k1 long, k2 string, v long, is_del boolean, seq long"
-            ),
-            ["k1", "k2"],
-            delete_condition="is_del",
-            dedup_order_col="seq",
-            exclude_cols=["is_del"],
-        )
+    ddl = "k1 long, k2 string, v long, is_del boolean, seq long"
+    threshold = spark.conf.get(THRESHOLD)
+    got = {}
+    try:
+        for path, th in (("driver", threshold), ("spark", "-1")):
+            spark.conf.set(THRESHOLD, th)
+            t = VersionedTable.create(
+                spark,
+                os.path.join(tmp_sup, _uuid.uuid4().hex),
+                spark.createDataFrame([], "k1 long, k2 string, v long, seq long"),
+            )
+            seq = 0
+            for batch in batches:
+                rows = []
+                for k1, k2, v, is_del in batch:
+                    rows.append((k1, k2, v, is_del, seq))
+                    seq += 1
+                res = t.merge(
+                    _local(spark, rows, ddl),
+                    ["k1", "k2"],
+                    delete_condition="is_del",
+                    dedup_order_col="seq",
+                    exclude_cols=["is_del"],
+                )
+                assert res["images"] == path
+            got[path] = (_rows(t.read(), ("seq",)), _rows(t.change_feed(0)))
+    finally:
+        spark.conf.set(THRESHOLD, threshold)
 
     # oracle: apply the history sequentially; deletes remove the key.
     latest: dict = {}
@@ -389,8 +461,9 @@ def test_merge_equals_latest_per_key_oracle(spark_global, tmp_sup, batches):
             else:
                 latest[(k1, k2)] = v
 
-    got = {(r.k1, r.k2): r.v for r in t.read().drop("seq").collect()}
-    assert got == latest, f"batches={batches}"
+    want = Counter((k1, k2, v) for (k1, k2), v in latest.items())
+    assert got["driver"][0] == want, f"batches={batches}"
+    assert got["spark"] == got["driver"], f"batches={batches}"
 
 
 def test_merge_null_key_is_updated_not_duplicated(spark, tmp_path):
