@@ -3051,15 +3051,19 @@ class VersionedTable:
         deduped plan's ``sizeInBytes`` at most
         ``spark.sql.autoBroadcastJoinThreshold``, Spark's own rule for a
         relation small enough to ship whole (``-1`` disables it) — is
-        collected once as Arrow (``_merge_arrow``): one Spark action
-        returns the target rows matching its keys, the driver pairs them
-        and writes the change-feed images with the format's pyarrow
-        writer, and one Spark write rewrites the touched files' other
-        rows together with the new ones, in at most as many files as it
-        removes (an insert-only batch is one pyarrow file). Three Spark
-        actions; the only shuffle is the batch's own dedup. The table
-        must allow driver writes (``_driver_writable``) and hold no
-        identity column; the merge must have no by-source clause and no
+        collected once as Arrow (``_merge_arrow``), and the driver pairs
+        it with the target and writes the change-feed images with the
+        format's pyarrow writer. When the probe's candidate files
+        (``_key_range_files``) total at most the same threshold on disk,
+        so both sides of the join are small, the driver also reads them
+        (the format's per-file reader) and writes the touched files'
+        other rows with the new ones as ONE pyarrow data file: the batch
+        collect is the merge's only Spark action, two jobs with its dedup
+        shuffle. Larger candidates take one Spark action that returns
+        the target rows matching the batch's keys and one Spark write
+        that rewrites the touched files in at most as many files as it
+        removes. The table must allow driver writes
+        (``_driver_writable``) and hold no identity column; the merge must have no by-source clause and no
         ``matched_update_condition``; the keys must be integral, string,
         date or timestamp (Arrow's join equality is Spark's there) and
         never NULL. Anything else takes the Spark path: a full outer
@@ -3074,11 +3078,18 @@ class VersionedTable:
         driver path took 0.2–0.46x the Spark path's time up to 300k
         rows (6 MB as a change feed), 0.6–0.7x at 1M rows (20 MB) and
         0.93–1.03x at 2.5–2.9M rows (55–63 MB), where it held ~1.1 GB
-        more in the Python driver. No larger batch was measured.
+        more in the Python driver. No larger batch was measured. For a
+        600-row batch touching every candidate file, the driver rewrite
+        took 0.14–0.28x the Spark rewrite's time at 1 MB of candidates,
+        0.31–0.51x at 8 MB, 0.64–0.97x at 35 MB and 0.67–0.83x at 66 MB
+        (three runs each), holding at most ~0.6 GB more in the Python
+        driver; no crossover below the threshold.
 
         The result and the commit's stats carry ``rows_inserted``,
-        ``rows_updated``, ``rows_deleted`` (Delta's operation metrics)
-        and ``images`` ("driver" | "spark", the path that ran).
+        ``rows_updated``, ``rows_deleted`` (Delta's operation metrics),
+        ``images`` ("driver" | "spark", the path that paired the rows)
+        and ``rewrite`` ("driver" | "spark", the one that probed and
+        rewrote the target's files).
 
         ``exclude_cols``: marker columns (e.g. an op flag feeding
         ``delete_condition`` or ``dedup_order_col``) consumed here but
@@ -3539,7 +3550,7 @@ class VersionedTable:
             touched,
             probe_files,
             src.select(*keys),
-            {**obs.get, "images": "spark"},
+            {**obs.get, "images": "spark", "rewrite": "spark"},
             ident_last,
         )
         src.unpersist()
@@ -3600,29 +3611,47 @@ class VersionedTable:
                 to_arrow_type(t)
         except Exception:  # noqa: BLE001 - any type Arrow can't carry
             return False
-        jss = self.spark._jsparkSession
-        limit = jss.sessionState().conf().autoBroadcastJoinThreshold()
         size = src._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        return 0 <= int(size) <= limit
+        return 0 <= int(size) <= self._broadcast_limit()
+
+    def _broadcast_limit(self) -> int:
+        """``spark.sql.autoBroadcastJoinThreshold`` in bytes (``-1``:
+        nothing is small enough to ship whole)."""
+        jss = self.spark._jsparkSession
+        return int(jss.sessionState().conf().autoBroadcastJoinThreshold())
 
     def _merge_arrow(
         self, prev: Commit, batch: pa.Table, schema: T.StructType, keys: list[str]
     ) -> dict:
         """The small-batch merge (see ``merge``). ``batch`` is the
         deduped, aligned source with ``__is_delete``, collected once;
-        its keys are unique and non-NULL. One Spark action returns the
-        target rows matching its keys (DV-applied, with their file); the
-        driver pairs them with the batch and writes every change-feed
-        image with the format's pyarrow writer; one Spark write rewrites
-        the touched files' unmatched rows with the new and updated ones
-        (with no touched file, those are a pyarrow file too). Returns
-        ``commit``'s arguments."""
+        its keys are unique and non-NULL. The probe's candidate files
+        (``_key_range_files``) are read on the driver when their bytes
+        on disk are at most ``spark.sql.autoBroadcastJoinThreshold``,
+        the rule the batch passed, so both sides of the join are small:
+        each file once, with the format's per-file reader
+        (``_arrow_batches``: field ids, evolved columns, deletion
+        vectors). Larger candidates are probed by one Spark action that
+        returns the target rows matching the batch's keys. The driver
+        pairs the matched rows with the batch and writes every
+        change-feed image with the format's pyarrow writer. The touched
+        files' unmatched rows plus the new and updated ones become one
+        pyarrow data file when the candidates were read on the driver;
+        otherwise one Spark write rewrites them in at most as many files
+        as the merge removes. Up to the session's 64 MB threshold the
+        driver rewrite was the faster one at every measured size (see
+        ``merge``). Returns ``commit``'s arguments."""
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
         from pyspark.sql.pandas.types import to_arrow_type
 
-        from ..sources.datasource import _ids_of, _write_arrow_files
+        from ..sources.datasource import (
+            _arrow_batches,
+            _FilePartition,
+            _ids_of,
+            _write_arrow_files,
+        )
 
         arrow = pa.schema(
             [pa.field(f.name, to_arrow_type(f.dataType)) for f in schema.fields]
@@ -3641,9 +3670,30 @@ class VersionedTable:
                 prev,
                 {k: _min_max(rows.column(k)) for k in keys},
             )
-        old = arrow.empty_table()
-        touched: list[str] = []
-        if probe_files:
+        on_driver = (
+            sum(os.path.getsize(f) for f in probe_files) <= self._broadcast_limit()
+        )
+        # ``old`` holds target rows, at least every matched one;
+        # ``file_of`` is each row's index in ``probe_files``
+        if on_driver:
+            parts = [
+                pa.Table.from_batches(
+                    _arrow_batches(
+                        _FilePartition(
+                            file=f,
+                            schema_json=schema.json(),
+                            dv_files=tuple(prev.dv_files),
+                        )
+                    ),
+                    schema=arrow,
+                )
+                for f in probe_files
+            ]
+            old = pa.concat_tables([arrow.empty_table(), *parts])
+            file_of = np.repeat(
+                np.arange(len(parts)), [t.num_rows for t in parts]
+            )
+        else:
             found = (
                 _align_to(
                     self._snapshot(prev, probe_files).withColumn(
@@ -3655,8 +3705,10 @@ class VersionedTable:
                 .join(key_rows, keys, "left_semi")
                 .toArrow()
             )
-            touched = sorted(
-                {_strip_scheme(p) for p in found.column("__file").to_pylist()}
+            pos = {f: i for i, f in enumerate(probe_files)}
+            file_of = np.array(
+                [pos[_strip_scheme(p)] for p in found.column("__file").to_pylist()],
+                dtype=np.int64,
             )
             old = found.select(schema.names).cast(arrow)
 
@@ -3675,6 +3727,10 @@ class VersionedTable:
         matched = np.zeros(rows.num_rows, dtype=bool)
         matched[s_idx] = True
         ins = np.flatnonzero(~matched & ~deletes)
+        hit = np.zeros(len(probe_files), dtype=bool)
+        hit[file_of[t_idx]] = True
+        touched = [f for f, h in zip(probe_files, hit) if h]
+        spark_rewrite = bool(touched) and not on_driver
         images = [
             (rows.take(ins), "insert"),
             (rows.take(s_idx[~gone]), "update_postimage"),
@@ -3682,10 +3738,15 @@ class VersionedTable:
             (old.take(t_idx[gone]), "delete"),
         ]
         new_rows = rows.take(np.concatenate([s_idx[~gone], ins]))
+        if on_driver:
+            # the touched files' unmatched rows ride the new ones' file
+            carry = hit[file_of]
+            carry[t_idx] = False
+            new_rows = pa.concat_tables([old.filter(carry), new_rows])
         data_file, cdf_file = _write_arrow_files(
             self.path,
-            # with files to rewrite, the new rows ride that write instead
-            new_rows.slice(0, 0) if touched else new_rows,
+            # with files to rewrite in Spark, the new rows ride that write
+            new_rows.slice(0, 0) if spark_rewrite else new_rows,
             pa.concat_tables(
                 [
                     t.append_column(
@@ -3697,7 +3758,7 @@ class VersionedTable:
             _ids_of(schema),
         )
         new_files = [data_file] if data_file else []
-        if touched:
+        if spark_rewrite:
             # the touched files' unmatched rows plus the new ones, in at
             # most as many files as the merge removes
             rewrite = (
@@ -3712,6 +3773,7 @@ class VersionedTable:
             "rows_updated": int((~gone).sum()),
             "rows_deleted": int(gone.sum()),
             "images": "driver",
+            "rewrite": "driver" if on_driver else "spark",
         }
         return {
             "new_files": new_files,

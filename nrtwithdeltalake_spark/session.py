@@ -26,6 +26,13 @@ from nrtwithdeltalake_spark._protobuf_compat import ensure_protobuf
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def _default_driver_memory() -> str:
+    """48g, capped at half the host's physical memory: the JVM heap
+    must leave room for the Python driver and the host's other work."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(48 * 1024, half_mb)}m"
+
+
 def build_spark(
     app_name: str = "nrtwithdeltalake_spark",
     master: str | None = None,
@@ -61,7 +68,10 @@ def build_spark(
         # skipping in sources/datasource.py); off by default in Spark 4.1
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # events.ts is parquet TIMESTAMP(NANOS), which Spark's reader rejects
         # by default; read as long and convert in sources.catalog.

@@ -133,13 +133,17 @@ def _arrow_batches(part: _FilePartition):
         # row-group skipping is disabled when a vector applies (Spark
         # re-applies every filter; only the IO saving is lost)
         kwargs["filters"] = usable  # conjunctive list → row-group skipping
+    # Spark writes timestamps as INT96, which pyarrow reads as
+    # nanoseconds by default: 9999-12-31 or 1500-01-01 would overflow
+    kwargs["coerce_int96_timestamp_unit"] = "us"
     try:
         tbl = pq.read_table(part.file, **kwargs)
     except (pa.ArrowInvalid, pa.ArrowNotImplementedError, TypeError):
         # a filter pyarrow can't evaluate on this column type: fall back
         # to the unfiltered (still column-pruned) read — Spark's residual
         # filter keeps the result exact either way
-        tbl = pq.read_table(part.file, columns=read_cols)
+        kwargs.pop("filters", None)
+        tbl = pq.read_table(part.file, **kwargs)
     if part.dv_files:
         tbl = _mask_deleted(tbl, part)
     n = tbl.num_rows
@@ -678,8 +682,43 @@ def _write_arrow_files(
         d = os.path.join(path, sub, f"ds-{token}")
         os.makedirs(d, exist_ok=True)
         out.append(os.path.join(d, "part-00000.parquet"))
-        pq.write_table(_stamp_field_ids(tbl, field_ids), out[-1])
+        pq.write_table(
+            _stamp_field_ids(tbl, field_ids),
+            out[-1],
+            use_dictionary=_dictionary_columns(tbl),
+        )
     return out[0], out[1]
+
+
+def _dictionary_columns(tbl) -> list[str]:
+    """The parquet column paths of ``tbl`` worth dictionary encoding:
+    a column's leaves when its distinct count is at most half its rows
+    (parquet-mr, Spark's writer, falls back to PLAIN where a dictionary
+    doesn't pay; pyarrow's default of a dictionary on every column
+    wrote the bench's rows 40% larger), and always when
+    ``count_distinct`` can't take its type (nested), as pyarrow's
+    default would."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    def leaves(t) -> int:
+        return sum(leaves(t.field(i).type) for i in range(t.num_fields)) or 1
+
+    buf = pa.BufferOutputStream()
+    pq.write_table(tbl.schema.empty_table(), buf)
+    paths = pq.read_metadata(pa.BufferReader(buf.getvalue())).schema
+    out, i = [], 0
+    for fld, col in zip(tbl.schema, tbl.columns):
+        n = leaves(fld.type)
+        try:
+            worth = 2 * pc.count_distinct(col).as_py() <= tbl.num_rows
+        except pa.ArrowNotImplementedError:
+            worth = True
+        if worth:
+            out += [paths.column(j).path for j in range(i, i + n)]
+        i += n
+    return out
 
 
 def _write_task_files(path: str, iterator, field_ids: dict[str, int]) -> _WriteResult:

@@ -13,8 +13,15 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
-def spark():
-    s = build_spark(app_name="nrt_tests", shuffle_partitions=8)
+def spark(tmp_path_factory):
+    # the session's own warehouse: managed tables a killed run left
+    # behind can't collide with this run's (LOCATION_ALREADY_EXISTS)
+    warehouse = str(tmp_path_factory.mktemp("warehouse"))
+    s = build_spark(
+        app_name="nrt_tests",
+        shuffle_partitions=8,
+        extra_conf={"spark.sql.warehouse.dir": warehouse},
+    )
     yield s
     s.stop()
 

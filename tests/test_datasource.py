@@ -51,6 +51,22 @@ def test_batch_read_snapshot_and_time_travel(spark, tmp_path):
     assert sorted(r.id for r in v0.collect()) == [1, 2]
 
 
+def test_batch_read_int96_timestamps_outside_nanosecond_range(spark, tmp_path):
+    """Spark writes timestamps as INT96; the per-file reader reads ones
+    a nanosecond timestamp can't hold exactly as the native read does."""
+    t = VersionedTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.sql(
+            "SELECT 1L AS id, timestamp'9999-12-31 23:59:59' AS ts "
+            "UNION ALL SELECT 2L, timestamp'1500-01-01 00:00:00' "
+            "UNION ALL SELECT 3L, timestamp'2024-01-01 00:00:00.123456'"
+        ),
+    )
+    df = spark.read.format("versioned").option("path", t.path).load()
+    assert sorted(df.collect()) == sorted(t.read().collect())
+
+
 def test_batch_read_schema_evolution_null_fill(spark, tmp_path):
     p, t = _mk(spark, tmp_path)
     t.add_column("score", "double")

@@ -2,13 +2,15 @@
 
 A batch whose deduped plan is small (``sizeInBytes`` at most
 ``spark.sql.autoBroadcastJoinThreshold``) pairs with the target on the
-driver; anything else takes the Spark full-outer-join path. The parity
-test runs each case on both paths (``-1`` forces the Spark one) and
-requires equal snapshots, change feeds and row counts. Then the job
-budget of a change-tracking batch, the file count of a pipeline that
-keeps merging, a table left with no file, and the core merge semantics:
-time travel and the change feed, the touched-file rewrite, the
-latest-per-key oracle (on both paths) and NULL keys.
+driver, which also reads and rewrites the touched files when the
+probe's candidate files are that small; anything else takes the Spark
+full-outer-join path. The parity test runs each case on both paths
+(``-1`` forces the Spark one) and requires equal snapshots, change
+feeds and row counts. Then the job budget of a change-tracking batch,
+the file count of a pipeline that keeps merging, a table left with no
+file, and the core merge semantics: time travel and the change feed,
+the touched-file rewrite, the latest-per-key oracle (on both paths) and
+NULL keys.
 """
 
 from __future__ import annotations
@@ -77,15 +79,57 @@ _MIX = [  # id, v, delete?
 
 def _case(name, spark):
     """(target builder, source batch, merge kwargs, expected images,
-    compared-away columns, session time zone) for one parity case."""
+    compared-away columns, session conf) for one parity case."""
     mix_ddl = "id long, v long, d boolean"
     if name == "mix":
-        return _mix_target, _local(spark, _MIX, mix_ddl), {}, "driver", (), None
+        return _mix_target, _local(spark, _MIX, mix_ddl), {}, "driver", (), {}
+    if name == "above_threshold":
+        # the batch (~200 bytes) is under the threshold, the candidate
+        # files (5 parquet files) are over it: the touched files are
+        # probed and rewritten by Spark
+        src = _local(spark, _MIX, mix_ddl)
+        return _mix_target, src, {}, "driver", (), {THRESHOLD: "1024"}
     if name == "empty":
-        return _mix_target, _local(spark, [], mix_ddl), {}, "driver", (), None
+        return _mix_target, _local(spark, [], mix_ddl), {}, "driver", (), {}
     if name == "insert_only":
         src = _local(spark, [(50, 1, False), (51, 2, False)], mix_ddl)
-        return _mix_target, src, {}, "driver", (), None
+        return _mix_target, src, {}, "driver", (), {}
+    if name == "dv_delete":
+
+        def target(spark, p):
+            t = _mix_target(spark, p)
+            t.delete("id IN (5, 6)", use_dv=True)
+            return t
+
+        # a live row, a DV-deleted row updated (an insert) and one
+        # deleted (no image), an absent key
+        src = _local(
+            spark,
+            [(1, 3, False), (5, 4, False), (6, 0, True), (60, 5, False)],
+            mix_ddl,
+        )
+        return target, src, {}, "driver", (), {}
+    if name == "int96_edges":
+        edge = datetime.datetime(9999, 12, 31, 23, 59, 59)
+        old = datetime.datetime(1500, 1, 1)
+
+        def target(spark, p):
+            # Spark writes timestamps as INT96, outside the nanosecond range here
+            return VersionedTable.create(
+                spark,
+                p,
+                spark.createDataFrame(
+                    [(1, edge, "a"), (2, old, "b"), (3, old, "c")],
+                    "id long, ts timestamp, s string",
+                ).coalesce(1),
+            )
+
+        src = _local(
+            spark,
+            [(1, old, "u", False), (3, edge, "x", True), (4, edge, "n", False)],
+            "id long, ts timestamp, s string, d boolean",
+        )
+        return target, src, {}, "driver", (), {}
     if name == "delete_file":
 
         def target(spark, p):
@@ -98,14 +142,14 @@ def _case(name, spark):
             return t
 
         src = _local(spark, [(1, 0, True), (2, 0, True)], mix_ddl)
-        return target, src, {}, "driver", (), None
+        return target, src, {}, "driver", (), {}
     if name == "new_column":
         src = _local(
             spark,
             [(r[0], r[1], r[2], 0.5) for r in _MIX],
             mix_ddl + ", w double",
         )
-        return _mix_target, src, {}, "driver", (), None
+        return _mix_target, src, {}, "driver", (), {}
     if name == "null_key":
 
         def target(spark, p):
@@ -116,7 +160,7 @@ def _case(name, spark):
             )
 
         src = _local(spark, [(None, 2, False), (2, 3, False)], mix_ddl)
-        return target, src, {}, "spark", (), None
+        return target, src, {}, "spark", (), {}
     if name == "identity":
 
         def target(spark, p):
@@ -129,7 +173,7 @@ def _case(name, spark):
 
         src = _local(spark, [(2, 3, False), (5, 4, False)], mix_ddl)
         # ids assigned to inserts are compared by count, not value
-        return target, src, {}, "spark", ("sk",), None
+        return target, src, {}, "spark", ("sk",), {}
     assert name == "time_zone"
     t0 = datetime.datetime(2024, 3, 10, 6, 30)  # a New York DST change
 
@@ -152,16 +196,20 @@ def _case(name, spark):
         ],
         "id long, ts timestamp, s string, d boolean",
     )
-    return target, src, {"keys": ["id", "ts"]}, "driver", (), "America/New_York"
+    tz = {"spark.sql.session.timeZone": "America/New_York"}
+    return target, src, {"keys": ["id", "ts"]}, "driver", (), tz
 
 
 @pytest.mark.parametrize(
     "case",
     [
         "mix",
+        "above_threshold",
         "empty",
         "insert_only",
         "delete_file",
+        "dv_delete",
+        "int96_edges",
         "new_column",
         "null_key",
         "identity",
@@ -171,34 +219,39 @@ def _case(name, spark):
 def test_merge_paths_agree(spark, tmp_path, case):
     """Both merge paths give the same snapshot, change feed and row
     counts; the result names the path that ran."""
-    target, src, kw, images, away, tz = _case(case, spark)
+    target, src, kw, images, away, case_conf = _case(case, spark)
     keys = kw.get("keys", ["id"])
-    conf = {THRESHOLD: spark.conf.get(THRESHOLD)}
-    if tz:
-        conf["spark.sql.session.timeZone"] = spark.conf.get(
-            "spark.sql.session.timeZone"
-        )
-        spark.conf.set("spark.sql.session.timeZone", tz)
+    saved = {k: spark.conf.get(k) for k in (THRESHOLD, *case_conf)}
     got = {}
     try:
         for path, threshold in (("driver", None), ("spark", "-1")):
+            for k, v in case_conf.items():
+                spark.conf.set(k, v)
             t = target(spark, str(tmp_path / path))
-            v0, n0 = t.latest_version(), len(t.get_commit().files)
+            before = set(t.get_commit().files)
+            v0 = t.latest_version()
             if threshold:
                 spark.conf.set(THRESHOLD, threshold)
             res = t.merge(src, keys, delete_condition="d", exclude_cols=["d"])
-            spark.conf.set(THRESHOLD, conf[THRESHOLD])
+            after = set(t.get_commit().files)
             got[path] = (
-                {**res, "files": len(t.get_commit().files) - n0},
+                {
+                    **res,
+                    "files": len(after) - len(before),
+                    "added": len(after - before),
+                },
                 _rows(t.read(), away),
                 _rows(t.change_feed(v0), ("_commit_version", *away)),
             )
     finally:
-        for k, v in conf.items():
+        for k, v in saved.items():
             spark.conf.set(k, v)
     (d_res, d_snap, d_cdf), (s_res, s_snap, s_cdf) = got["driver"], got["spark"]
     assert d_res["images"] == images
-    assert s_res["images"] == "spark"
+    assert s_res["images"] == s_res["rewrite"] == "spark"
+    if images == "driver":
+        spark_rewrite = case == "above_threshold"
+        assert d_res["rewrite"] == ("spark" if spark_rewrite else "driver")
     assert d_snap == s_snap
     assert d_cdf == s_cdf
     counts = ("rows_inserted", "rows_updated", "rows_deleted")
@@ -209,11 +262,16 @@ def test_merge_paths_agree(spark, tmp_path, case):
         changed["update_postimage"],
         changed["delete"],
     ]
-    if case == "mix":
+    if case in ("mix", "above_threshold"):
         assert [d_res[c] for c in counts] == [2, 5, 1]
         assert d_res["touched_files"] == s_res["touched_files"] > 1
         # the rewrite never leaves more files than it removes
         assert d_res["files"] <= 0
+    if case in ("mix", "dv_delete", "int96_edges"):
+        # the touched files' other rows and the new ones: one data file
+        assert d_res["touched_files"] >= 1 and d_res["added"] == 1
+    if case == "dv_delete":
+        assert [d_res[c] for c in counts] == [2, 1, 0]
     if case == "empty":
         assert d_cdf == Counter() and d_res["touched_files"] == 0
     if case == "insert_only":
@@ -252,9 +310,9 @@ def test_driver_merge_rebases_or_conflicts(spark, tmp_path, race_key, conflicts)
 
 def test_ct_batch_merges_within_job_budget(spark, tmp_path):
     """A change-tracking batch (the source's change feed, deduped by
-    commit version in merge) merges in at most 7 Spark jobs: collecting
-    the batch (its dedup shuffle), probing the target, rewriting the
-    touched files."""
+    commit version in merge) merges in at most 2 Spark jobs: collecting
+    the batch, with its dedup shuffle. The small target's touched files
+    are probed and rewritten on the driver."""
     src = VersionedTable.create(
         spark,
         str(tmp_path / "src"),
@@ -291,8 +349,8 @@ def test_ct_batch_merges_within_job_budget(spark, tmp_path):
             exclude_cols=["_commit_version", "op"],
         ),
     )
-    assert n <= 7, f"{n} Spark jobs"
-    assert res["images"] == "driver"
+    assert n <= 2, f"{n} Spark jobs"
+    assert res["images"] == res["rewrite"] == "driver"
     assert _rows(silver.read()) == _rows(src.read())
 
 
