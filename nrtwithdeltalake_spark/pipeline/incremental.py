@@ -22,7 +22,16 @@ Improvements over the reference, kept explicit:
   in the merge's own dedup step (Delta-style formats reject duplicate
   matches; the reference never dedups — SURVEY.md §7 hard-part 1);
 * deletes can be applied as deletes (``SyncOperation = 'D'``) rather than
-  merged as updates (flagged optional behavior, default on for CT).
+  merged as updates (flagged optional behavior, default on for CT);
+* a small incremental load runs on the driver with no Spark job
+  (``_extract``): when its inputs — CT's change-data files of
+  ``(old, new]``, TMSTP's snapshot files — total at most
+  ``spark.sql.autoBroadcastJoinThreshold`` on disk, the merge's own rule,
+  the format's per-file reader reads them into a ``pyarrow.Table``; TMSTP
+  takes its watermark from that read, as ``date_format`` in the session
+  time zone with the second floored; and ``VersionedTable.merge`` pairs
+  the Arrow batch on the driver. Larger inputs build the same batch as a
+  DataFrame. ``LoadResult.merge["extract"]`` names the path.
 
 Crash-safety invariant (SURVEY.md §7 hard-part 5): the silver commit
 carries the load's application transaction token (Delta VLDB 2020 §3.1)
@@ -36,15 +45,24 @@ the source moved on, the higher token applies the batch as usual.
 
 from __future__ import annotations
 
+import datetime
 import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .config import ConfigStore, DEFAULT_CT_WM
-from .tables import MERGE_COUNTS, CommitConflictError, VersionedTable
+from .tables import (
+    CHANGE_TYPE_COL,
+    MERGE_COUNTS,
+    CommitConflictError,
+    VersionedTable,
+)
 
 SYNC_DT = "SyncDateTime"
 SYNC_OP = "SyncOperation"
@@ -84,6 +102,120 @@ def _wm_token(wm: str) -> int:
     return int(wm.replace("-", "").replace(" ", "").replace(":", ""))
 
 
+def _extract(
+    src_table: VersionedTable, wm_type: str, ts_col: str, old_wm, src_v: int
+):
+    """The incremental batch of the pinned source snapshot ``src_v``
+    past ``old_wm``, with its audit columns: (batch, new watermark
+    string, extract). A batch whose inputs total at most
+    ``spark.sql.autoBroadcastJoinThreshold`` on disk, the merge's own
+    rule, is read on the driver by the format's per-file reader and is
+    a ``pyarrow.Table`` (extract "driver", no Spark job): CT's
+    change-data files of ``(old_wm, src_v]``, or TMSTP's snapshot files.
+    Otherwise it is a DataFrame (extract "spark")."""
+    limit = src_table._broadcast_limit()
+    if wm_type == "CT":
+        # the feed also carries update_preimage rows (old values, for
+        # consumers that need key-change invalidation); state replication
+        # wants only the new-state/delete rows
+        feed = src_table._change_feed_arrow(old_wm, src_v, limit)
+        if feed is None:
+            changes = src_table.change_feed(old_wm, src_v).filter(
+                F.col(CHANGE_TYPE_COL) != "update_preimage"
+            )
+            batch = _with_audit(changes, _op_from_change_type())
+            return batch.drop(CHANGE_TYPE_COL), str(src_v), "spark"
+        feed = feed.filter(pc.not_equal(feed[CHANGE_TYPE_COL], "update_preimage"))
+        op = pa.array(list(_CHANGE_TO_OP.values())).take(
+            pc.index_in(feed[CHANGE_TYPE_COL], pa.array(list(_CHANGE_TO_OP)))
+        )
+        batch = _with_audit_arrow(feed.drop_columns([CHANGE_TYPE_COL]), op)
+        return batch, str(src_v), "driver"
+    snap = None
+    if isinstance(
+        src_table.schema(src_v)[ts_col].dataType,
+        (T.TimestampType, T.TimestampNTZType),
+    ):
+        snap = src_table._snapshot_arrow(src_v, limit)
+    secs = None if snap is None else _wm_seconds(snap[ts_col], src_table.spark)
+    since = _wm_seconds_of(old_wm)
+    if secs is None or since is None:
+        snapshot = src_table.read(version=src_v)
+        batch = snapshot.filter(_wm_str(F.col(ts_col)) > F.lit(old_wm))
+        return (
+            _with_audit(batch, F.lit("I")),
+            _max_wm(snapshot, ts_col, old_wm),
+            "spark",
+        )
+    batch = _with_audit_arrow(snap.filter(pc.greater(secs, since)), "I")
+    newest = pc.max(secs).as_py()
+    return batch, old_wm if newest is None else _wm_text(newest), "driver"
+
+
+def _max_wm(snapshot: DataFrame, ts_col: str, old_wm: str) -> str:
+    """The TMSTP watermark of a snapshot: its greatest ``_wm_str``, or
+    ``old_wm`` when it has none."""
+    row = snapshot.agg(F.max(_wm_str(F.col(ts_col))).alias("wm")).first()
+    return row["wm"] or old_wm
+
+
+# ``_wm_str`` as a number: local seconds since 1970-01-01 00:00:00. Years
+# 1-9999 print as four digits, so there the numbers order as the strings
+_EPOCH = datetime.datetime(1970, 1, 1)
+_WM_RANGE = (-62135596800, 253402300799)  # 0001-01-01 .. 9999-12-31 23:59:59
+
+
+def _wm_seconds(
+    ts: pa.ChunkedArray, spark: SparkSession
+) -> pa.ChunkedArray | None:
+    """``_wm_str`` of each timestamp on the driver, as local seconds:
+    floored to the second (not truncated, which differs before 1970),
+    then as local time in ``spark.sql.session.timeZone`` for a
+    TIMESTAMP (a TIMESTAMP_NTZ as it is). None for a value outside
+    years 1-9999 or a time zone Arrow does not know."""
+    secs = pc.floor_temporal(ts, unit="second").cast(pa.timestamp("s", ts.type.tz))
+    if ts.type.tz is not None:
+        tz = spark.conf.get("spark.sql.session.timeZone")
+        try:
+            secs = pc.local_timestamp(secs.cast(pa.timestamp("s", tz)))
+        except pa.ArrowInvalid:
+            return None
+    secs = secs.cast(pa.int64())
+    lo, hi = (v.as_py() for v in pc.min_max(secs).values())
+    if lo is not None and (lo < _WM_RANGE[0] or hi > _WM_RANGE[1]):
+        return None
+    return secs
+
+
+def _wm_seconds_of(wm: str) -> int | None:
+    """A watermark string as local seconds; None unless it is exactly
+    ``yyyy-MM-dd HH:mm:ss``."""
+    try:
+        t = datetime.datetime.strptime(wm, "%Y-%m-%d %H:%M:%S")
+    except ValueError:
+        return None
+    if t.isoformat(sep=" ") != wm:
+        return None
+    return (t - _EPOCH) // datetime.timedelta(seconds=1)
+
+
+def _wm_text(secs: int) -> str:
+    """Local seconds as the watermark string ``yyyy-MM-dd HH:mm:ss``."""
+    return (_EPOCH + datetime.timedelta(seconds=secs)).isoformat(sep=" ")
+
+
+def _with_audit_arrow(tbl: pa.Table, op) -> pa.Table:
+    """``_with_audit`` on the driver: the load's UTC time and ``op``
+    (one value, or one per row) as the audit columns."""
+    now = datetime.datetime.now(datetime.timezone.utc)
+    n = tbl.num_rows
+    if isinstance(op, str):
+        op = pa.array([op] * n, pa.string())
+    return tbl.append_column(
+        SYNC_DT, pa.array([now] * n, pa.timestamp("us", "UTC"))
+    ).append_column(SYNC_OP, op)
+
+
 def load_entity(
     spark: SparkSession,
     store: ConfigStore,
@@ -111,24 +243,32 @@ def load_entity(
     # every read below is pinned to this one source snapshot, so the
     # batch holds exactly the changes up to the watermark it records
     src_v = src_table.latest_version()  # ≡ CHANGE_TRACKING_CURRENT_VERSION()
+    ts_col = entity_row["TimestampColumn"]
     if wm_type == "CT":
         old_wm = int(entity_row["CTWatermark"])
-        no_change = src_v <= old_wm
-        new_wm_str = str(src_v)
-        token = src_v
     else:
-        ts_col = entity_row["TimestampColumn"]
         old_wm = entity_row["DateWatermark"]
-        row = src_table.read(version=src_v).agg(
-            F.max(_wm_str(F.col(ts_col))).alias("wm")
-        ).first()
-        new_wm_str = row["wm"] or old_wm
-        no_change = new_wm_str <= old_wm
-        token = _wm_token(new_wm_str)
-
-    # no-new-watermark short-circuit (:157) — but never skip the bootstrap
-    if no_change and not first_load:
+    if first_load:
+        action = "full"
+        snapshot = src_table.read(version=src_v)
+        batch = _with_audit(snapshot, F.lit("I"))
+        if wm_type == "CT":
+            new_wm_str = str(src_v)
+        else:
+            new_wm_str = _max_wm(snapshot, ts_col, old_wm)
+    elif wm_type == "CT" and src_v <= old_wm:
+        # no-new-watermark short-circuit (:157)
         return LoadResult(eid, "skipped", 0, None)
+    else:
+        # -- extraction (E3 step 4, :157-176): TMSTP takes its new
+        # watermark from the same snapshot read
+        action = "incremental"
+        batch, new_wm_str, extract = _extract(
+            src_table, wm_type, ts_col, old_wm, src_v
+        )
+        if wm_type == "TMSTP" and new_wm_str <= old_wm:
+            return LoadResult(eid, "skipped", 0, None)
+    token = src_v if wm_type == "CT" else _wm_token(new_wm_str)
 
     # -- ledger open (E3 step 3, :143-152): the pending row, no I/O --------
     pending = store.open_watermark(
@@ -136,28 +276,6 @@ def load_entity(
         new_wm_str if wm_type == "TMSTP" else None,
         src_v if wm_type == "CT" else None,
     )
-
-    # -- extraction (E3 step 4, :157-176) ----------------------------------
-    if first_load:
-        batch = _with_audit(src_table.read(version=src_v), F.lit("I"))
-        action = "full"
-    elif wm_type == "CT":
-        # the feed also carries update_preimage rows (old values, for
-        # consumers that need key-change invalidation); state replication
-        # wants only the new-state/delete rows
-        changes = src_table.change_feed(old_wm, src_v).filter(
-            F.col("_change_type") != "update_preimage"
-        )
-        batch = _with_audit(changes, _op_from_change_type()).drop("_change_type")
-        action = "incremental"
-    else:
-        batch = _with_audit(
-            src_table.read(version=src_v).filter(
-                _wm_str(F.col(ts_col)) > F.lit(old_wm)
-            ),
-            F.lit("I"),
-        )
-        action = "incremental"
 
     # -- sink (E3 step 5, :185-209) ----------------------------------------
     app = f"entity:{eid}"
@@ -190,6 +308,7 @@ def load_entity(
             exclude_cols=["_commit_version"] if wm_type == "CT" else None,
             txn_app=app,
             txn_version=token,
+            extra_stats={"extract": extract},
         )
         # the rows the merge applied, from its own counts: a key changed
         # in several source commits counts once; a skipped merge, none

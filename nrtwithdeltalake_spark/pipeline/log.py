@@ -710,6 +710,48 @@ def read_raw(log_dir: str, version: int) -> dict:
         return json.loads(f.read())
 
 
+def change_records(
+    log_dir: str, start: int, end: int, where: str = ""
+) -> list[dict]:
+    """The raw records of versions ``(start, end]``, the change feed's
+    one walk of the log: each read once, with no parent chain
+    (``cdf_files``, ``schema_json`` and the stats flags are never
+    delta-encoded). A consumer resuming past a version whose changes
+    can't be delivered must re-bootstrap from a snapshot, so this
+    refuses, at that version:
+
+    * ``cdf_schema_break``: an incompatible retype (overwrite/restore
+      with a non-widening type change) has no expressible pre-images;
+    * ``cdf_absent``: clone/convert commits carry no change-data files
+      by design (insert images of the whole snapshot would defeat
+      zero-copy adoption);
+    * a vacuumed change-data file (Delta fails here too)."""
+    out = []
+    for v in range(max(start, -1) + 1, end + 1):
+        rec = read_raw(log_dir, v)
+        check_read_protocol(rec, where)
+        stats = rec.get("stats") or {}
+        if stats.get("cdf_schema_break"):
+            raise ValueError(
+                f"{where}change feed crosses an incompatible schema change "
+                f"at version {v}; reload from a snapshot at or after it and "
+                f"restart from version {v}"
+            )
+        if stats.get("cdf_absent"):
+            raise ValueError(
+                f"{where}version {v} is a {rec.get('op')} commit with no "
+                f"change-data files; bootstrap from a snapshot read and "
+                f"restart from version {v}"
+            )
+        if not all(os.path.exists(f) for f in rec.get("cdf_files", [])):
+            raise ValueError(
+                f"{where}change feed for version {v} was vacuumed; reload "
+                "from a snapshot and restart the watermark"
+            )
+        out.append(rec)
+    return out
+
+
 def read_record(log_dir: str, version: int) -> dict:
     """The commit record with full file lists — delta-encoded records
     resolve through the parent chain, bounded by the checkpoint

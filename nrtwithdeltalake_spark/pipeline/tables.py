@@ -84,6 +84,12 @@ _DRIVER_KEY_TYPES = (
 )
 
 
+def _driver_key(t: T.DataType) -> bool:
+    """True for a key type Arrow's join compares exactly as
+    ``eqNullSafe`` does on non-NULL values."""
+    return isinstance(t, _DRIVER_KEY_TYPES) or t == T.StringType()
+
+
 def _strip_scheme(p: str) -> str:
     return p[len("file:") :] if p.startswith("file:") else p
 
@@ -2292,7 +2298,7 @@ class VersionedTable:
                 f"replace_where source contains rows not matching "
                 f"{replace_where!r}"
             )
-        schema = self._merged_schema(prev, df)
+        schema = self._merged_schema(prev, df.schema)
         df = _align_to(df, schema)
         touched = self._files_where(prev, pred)
         new_files = self._write_files(df, self.data_dir, schema=schema)
@@ -2652,7 +2658,7 @@ class VersionedTable:
             explicit_ext = self._explicit_identity_extremes(df, explicit)
             df, ident_last, ident_cache = self._assign_identity(df, ident_plan)
             ident_last.update(explicit_ext)
-            schema = self._merged_schema(prev, df)
+            schema = self._merged_schema(prev, df.schema)
             df = _align_to(df, schema)
             new_files = self._write_files(df, self.data_dir, schema=schema)
             cdf = self._write_files(
@@ -3005,19 +3011,19 @@ class VersionedTable:
             "files_skipped": len(found) - len(todo),
         }
 
-    def _merged_schema(self, prev: Commit, df: DataFrame) -> T.StructType:
-        """Schema evolution (README.md:8) of ``df`` into ``prev``'s
-        schema, enforcing types — ``log.merged_schema``, the rule the
-        format writers share."""
+    def _merged_schema(self, prev: Commit, new: T.StructType) -> T.StructType:
+        """Schema evolution (README.md:8) of rows shaped ``new`` into
+        ``prev``'s schema, enforcing types — ``log.merged_schema``, the
+        rule the format writers share."""
         return log.merged_schema(
             T.StructType.fromJson(json.loads(prev.schema_json)),
-            df.schema,
+            new,
             int(prev.stats.get("max_field_id", 0)),
         )
 
     def merge(
         self,
-        source: DataFrame,
+        source: DataFrame | pa.Table,
         keys: list[str],
         delete_condition: str | None = None,
         dedup_order_col: str | None = None,
@@ -3046,33 +3052,40 @@ class VersionedTable:
 
         Two paths, one merge (Delta VLDB'20 §3: one pass finds the
         touched files, one rewrites them). Both share the txn skip, the
-        source dedup, generated columns, schema evolution, the
-        stats-based probe pruning and the commit. A SMALL batch — its
-        deduped plan's ``sizeInBytes`` at most
-        ``spark.sql.autoBroadcastJoinThreshold``, Spark's own rule for a
-        relation small enough to ship whole (``-1`` disables it) — is
-        collected once as Arrow (``_merge_arrow``), and the driver pairs
-        it with the target and writes the change-feed images with the
-        format's pyarrow writer. When the probe's candidate files
+        source dedup (the latest row per key by ``dedup_order_col``; on
+        a tie a delete ranks below the key's other row, so an
+        overwrite's delete and insert images of one key leave the
+        insert), generated columns, schema evolution, the stats-based
+        probe pruning and the commit. A SMALL batch pairs on the driver
+        (``_merge_arrow``): a DataFrame whose deduped plan's
+        ``sizeInBytes`` is at most ``spark.sql.autoBroadcastJoinThreshold``
+        — Spark's own rule for a relation small enough to ship whole
+        (``-1`` disables it) — collected once as Arrow, or a
+        ``pyarrow.Table`` source whose ``nbytes`` is at most it, deduped
+        and aligned on the driver with no Spark job (``_arrow_source``;
+        Spark evaluates ``delete_condition`` over it as a local
+        relation, which runs no job). The driver pairs the batch with the
+        target and writes the change-feed images with the format's
+        pyarrow writer. When the probe's candidate files
         (``_key_range_files``) total at most the same threshold on disk,
         so both sides of the join are small, the driver also reads them
         (the format's per-file reader) and writes the touched files'
-        other rows with the new ones as ONE pyarrow data file: the batch
-        collect is the merge's only Spark action, two jobs with its dedup
-        shuffle. Larger candidates take one Spark action that returns
+        other rows with the new ones as ONE pyarrow data file: a
+        DataFrame batch's collect is then the merge's only Spark action,
+        two jobs with its dedup shuffle, and an Arrow batch's merge runs
+        none. Larger candidates take one Spark action that returns
         the target rows matching the batch's keys and one Spark write
         that rewrites the touched files in at most as many files as it
         removes. The table must allow driver writes
         (``_driver_writable``) and hold no identity column; the merge must have no by-source clause and no
         ``matched_update_condition``; the keys must be integral, string,
         date or timestamp (Arrow's join equality is Spark's there) and
-        never NULL. Anything else takes the Spark path: a full outer
-        join, written once as data and once as the change feed.
-        ``sizeInBytes`` is Spark's estimate from the files the plan
-        reads: a change feed's files for a CT batch, but the whole
-        source table for a filtered (TMSTP) batch — a filter does not
-        shrink the estimate — so such a batch takes the Spark path once
-        its table outgrows the threshold, however few rows pass.
+        never NULL. Anything else takes the Spark path — an Arrow source
+        as ``spark.createDataFrame(source)``, as ``append`` converts one:
+        a full outer join, written once as data and once as the change
+        feed. ``sizeInBytes`` is Spark's estimate from the files the
+        plan reads, so a filtered DataFrame is sized as its whole source
+        table; an Arrow batch is sized as itself.
         Measured range (4 vCPUs, 3 GB driver heap, 2M-row target, one
         or two runs per size at the session's 64 MB threshold): the
         driver path took 0.2–0.46x the Spark path's time up to 300k
@@ -3089,7 +3102,8 @@ class VersionedTable:
         ``rows_updated``, ``rows_deleted`` (Delta's operation metrics),
         ``images`` ("driver" | "spark", the path that paired the rows)
         and ``rewrite`` ("driver" | "spark", the one that probed and
-        rewrote the target's files).
+        rewrote the target's files); ``load_entity`` adds ``extract``
+        (the path that read its batch) through ``extra_stats``.
 
         ``exclude_cols``: marker columns (e.g. an op flag feeding
         ``delete_condition`` or ``dedup_order_col``) consumed here but
@@ -3143,6 +3157,9 @@ class VersionedTable:
             return {"version": prev.version, "txn_skipped": True}
         if not keys:
             raise ValueError("merge requires at least one key column")
+        columns = (
+            source.columns if isinstance(source, DataFrame) else source.column_names
+        )
         ident_defs = self.identity_columns()
         ident_carried: list[str] = []
         if ident_defs:
@@ -3151,8 +3168,8 @@ class VersionedTable:
             # supplied value (Delta's merge-insert parity); matched rows
             # keep the target's id in both modes (identity is never
             # updated).
-            self._refuse_explicit_identity(source.columns, "merge into")
-            ident_carried = self._explicit_identity_split(source.columns)
+            self._refuse_explicit_identity(columns, "merge into")
+            ident_carried = self._explicit_identity_split(columns)
             if not_matched_by_source_update:
                 self._refuse_explicit_identity(
                     not_matched_by_source_update,
@@ -3168,7 +3185,7 @@ class VersionedTable:
                     "— the source cannot carry them (GENERATED ALWAYS)"
                 )
         tgt_cols = {f.name for f in self.schema().fields}
-        src_cols = set(source.columns)
+        src_cols = set(columns)
         missing = [k for k in keys if k not in src_cols or k not in tgt_cols]
         if missing:
             raise ValueError(
@@ -3188,37 +3205,19 @@ class VersionedTable:
                 f"not_matched_by_source_update targets unknown "
                 f"column(s) {bad_assign}"
             )
-        # evaluate the delete predicate on the source BEFORE the join so
-        # column references stay unambiguous
-        src = source.withColumn(
-            "__is_delete",
-            F.expr(delete_condition) if delete_condition else F.lit(False),
-        )
-        if dedup_order_col is not None:
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(*keys).orderBy(F.desc(dedup_order_col))
-            src = (
-                src.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-        else:
-            src = src.dropDuplicates(keys)
-        src = self._fill_generated(src.drop(*(exclude_cols or [])))
-        schema = self._merged_schema(prev, src.drop("__is_delete"))
-        src = _align_to(src, schema, keep=["__is_delete"])
+        pairable = not (ident_defs or nmbs_active or matched_update_condition)
 
         def commit(
-            new_files, cdf_files, touched, probe_files, key_rows, counts,
-            ident_last=None,
+            schema, new_files, cdf_files, touched, probe_files, key_rows,
+            counts, ident_last=None,
         ) -> dict:
-            # the publish both paths share; key_rows holds the batch's keys
+            # the publish both paths share; key_rows() gives the batch's
+            # keys, needed only to rebase over a concurrent commit
             def keys_match(added: DataFrame) -> bool:
                 on = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys]
                 return bool(
                     added.alias("t")
-                    .join(key_rows.alias("s"), on, "left_semi")
+                    .join(key_rows().alias("s"), on, "left_semi")
                     .limit(1)
                     .count()
                 )
@@ -3259,14 +3258,52 @@ class VersionedTable:
                 **stats,
             }
 
+        if not isinstance(source, DataFrame):
+            # an Arrow source pairs on the driver unless it must not
+            # (``_arrow_source``); otherwise it is converted, as ``append``
+            # converts one
+            prepared = pairable and self._arrow_source(
+                prev, source, keys, delete_condition, dedup_order_col,
+                exclude_cols,
+            )
+            if prepared:
+                batch, schema = prepared
+                return commit(schema, **self._merge_arrow(prev, batch, schema, keys))
+            source = self.spark.createDataFrame(source)
+        # evaluate the delete predicate on the source BEFORE the join so
+        # column references stay unambiguous
+        src = source.withColumn(
+            "__is_delete",
+            F.coalesce(F.expr(delete_condition), F.lit(False))
+            if delete_condition
+            else F.lit(False),
+        )
+        if dedup_order_col is not None:
+            from pyspark.sql import Window
+
+            # within one order value a delete ranks below the key's other
+            # rows: an overwrite's commit images a key's delete and its
+            # insert, and the insert is the state it leaves
+            w = Window.partitionBy(*keys).orderBy(
+                F.desc(dedup_order_col), F.asc("__is_delete")
+            )
+            src = (
+                src.withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") == 1)
+                .drop("__rn")
+            )
+        else:
+            src = src.dropDuplicates(keys)
+        src = self._fill_generated(src.drop(*(exclude_cols or [])))
+        schema = self._merged_schema(prev, src.drop("__is_delete").schema)
+        src = _align_to(src, schema, keep=["__is_delete"])
+
         # 0. a small batch pairs on the driver (``_merge_arrow``); a NULL
         #    key, which eqNullSafe matches, keeps it on the Spark path
-        if not (
-            ident_defs or nmbs_active or matched_update_condition
-        ) and self._driver_mergeable(prev, src, keys):
+        if pairable and self._driver_mergeable(prev, src, keys):
             batch = src.toArrow()
             if not any(batch.column(k).null_count for k in keys):
-                return commit(**self._merge_arrow(prev, batch, schema, keys))
+                return commit(schema, **self._merge_arrow(prev, batch, schema, keys))
         src = src.cache()
 
         # 1. touched files: semi-join target rows against source keys on
@@ -3545,11 +3582,12 @@ class VersionedTable:
         cdf_files = self._write_files(cdf_df, self.cdf_dir, schema=schema)
 
         out = commit(
+            schema,
             new_files,
             cdf_files,
             touched,
             probe_files,
-            src.select(*keys),
+            lambda: src.select(*keys),
             {**obs.get, "images": "spark", "rewrite": "spark"},
             ident_last,
         )
@@ -3584,6 +3622,74 @@ class VersionedTable:
             f for f in prev.files if file_stats_may_match(fstats.get(f), terms)
         ]
 
+    def _arrow_source(
+        self,
+        prev: Commit,
+        tbl: pa.Table,
+        keys: list[str],
+        delete_condition: str | None,
+        dedup_order_col: str | None,
+        exclude_cols: list[str] | None,
+    ) -> tuple[pa.Table, T.StructType] | None:
+        """An Arrow merge source made ``_merge_arrow``'s batch on the
+        driver, with the merged schema: deduped as the Spark path dedups,
+        aligned to that schema, with ``__is_delete``. None when it must
+        take the Spark path: the table binds a rule the driver can't
+        apply (``_driver_writable``), a key has a type Arrow can't pair
+        (``_driver_key``) or a NULL, or ``tbl.nbytes`` is above
+        ``spark.sql.autoBroadcastJoinThreshold``. ``delete_condition``
+        keeps its SQL meaning: Spark evaluates it over the rows as a
+        local relation, whose collect runs no job."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        def spark_schema(t: pa.Table) -> T.StructType:
+            return from_arrow_schema(t.schema, prefer_timestamp_ntz=True)
+
+        types = spark_schema(tbl)
+        if not (
+            self._driver_writable(prev)
+            and all(_driver_key(types[k].dataType) for k in keys)
+            and not any(tbl.column(k).null_count for k in keys)
+            and tbl.nbytes <= self._broadcast_limit()
+        ):
+            return None
+        deletes = np.zeros(tbl.num_rows, dtype=bool)
+        if delete_condition and tbl.num_rows:
+            # only the deleting rows' positions come back as Python rows
+            pos = pa.array(np.arange(tbl.num_rows))
+            rows = (
+                self.spark.createDataFrame(tbl.append_column("__pos", pos))
+                .filter(F.expr(delete_condition))
+                .select("__pos")
+                .collect()
+            )
+            deletes[[r[0] for r in rows]] = True
+        tbl = tbl.append_column("__is_delete", pa.array(deletes))
+        # the latest row per key by ``dedup_order_col`` (descending, NULLs
+        # last), a delete below the key's other rows on a tie: the first
+        # row of each key in that order
+        order = [(dedup_order_col, "descending")] if dedup_order_col else []
+        tbl = tbl.take(
+            pc.sort_indices(
+                tbl, order + [("__is_delete", "ascending")], null_placement="at_end"
+            )
+        )
+        first = (
+            tbl.select(keys)
+            .append_column("__row", pa.array(np.arange(tbl.num_rows)))
+            .group_by(keys, use_threads=False)
+            .aggregate([("__row", "min")])
+        )
+        tbl = tbl.take(np.sort(first.column("__row_min").to_numpy()))
+        tbl = tbl.drop_columns([c for c in exclude_cols or [] if c in tbl.column_names])
+        rows = tbl.drop_columns(["__is_delete"])
+        schema = self._merged_schema(prev, spark_schema(rows))
+        batch = _align_arrow_by_id(rows, spark_schema(rows), schema)
+        return batch.append_column("__is_delete", tbl.column("__is_delete")), schema
+
     def _driver_mergeable(
         self, prev: Commit, src: DataFrame, keys: list[str]
     ) -> bool:
@@ -3601,10 +3707,7 @@ class VersionedTable:
         if not self._driver_writable(prev):
             return False
         types = {f.name: f.dataType for f in src.schema.fields}
-        if not all(
-            isinstance(types[k], _DRIVER_KEY_TYPES) or types[k] == T.StringType()
-            for k in keys
-        ):
+        if not all(_driver_key(types[k]) for k in keys):
             return False
         try:
             for t in types.values():
@@ -3624,8 +3727,9 @@ class VersionedTable:
         self, prev: Commit, batch: pa.Table, schema: T.StructType, keys: list[str]
     ) -> dict:
         """The small-batch merge (see ``merge``). ``batch`` is the
-        deduped, aligned source with ``__is_delete``, collected once;
-        its keys are unique and non-NULL. The probe's candidate files
+        deduped, aligned source with ``__is_delete``, collected once or
+        prepared from an Arrow source (``_arrow_source``); its keys are
+        unique and non-NULL. The probe's candidate files
         (``_key_range_files``) are read on the driver when their bytes
         on disk are at most ``spark.sql.autoBroadcastJoinThreshold``,
         the rule the batch passed, so both sides of the join are small:
@@ -3640,30 +3744,28 @@ class VersionedTable:
         otherwise one Spark write rewrites them in at most as many files
         as the merge removes. Up to the session's 64 MB threshold the
         driver rewrite was the faster one at every measured size (see
-        ``merge``). Returns ``commit``'s arguments."""
+        ``merge``). Returns ``commit``'s arguments but the schema, with
+        ``key_rows`` a function that builds the batch's keys as a Spark
+        relation, called only by a Spark probe, rewrite or rebase."""
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
-        from pyspark.sql.pandas.types import to_arrow_type
 
-        from ..sources.datasource import (
-            _arrow_batches,
-            _FilePartition,
-            _ids_of,
-            _write_arrow_files,
-        )
+        from ..sources.datasource import _ids_of, _write_arrow_files
 
-        arrow = pa.schema(
-            [pa.field(f.name, to_arrow_type(f.dataType)) for f in schema.fields]
-        )
+        arrow = _arrow_schema(schema)
         rows = batch.select(schema.names).cast(arrow)
         deletes = pc.fill_null(batch.column("__is_delete"), False).to_numpy(
             zero_copy_only=False
         )
-        # the batch's keys as a local relation: a broadcast side, no shuffle
-        key_rows = self.spark.createDataFrame(
-            rows.select(keys), T.StructType([schema[k] for k in keys])
-        )
+
+        def key_rows() -> DataFrame:
+            # the batch's keys as a local relation: a broadcast side, no
+            # shuffle; built only for a Spark probe, rewrite or rebase
+            return self.spark.createDataFrame(
+                rows.select(keys), T.StructType([schema[k] for k in keys])
+            )
+
         probe_files = []
         if rows.num_rows:
             probe_files = self._key_range_files(
@@ -3677,17 +3779,7 @@ class VersionedTable:
         # ``file_of`` is each row's index in ``probe_files``
         if on_driver:
             parts = [
-                pa.Table.from_batches(
-                    _arrow_batches(
-                        _FilePartition(
-                            file=f,
-                            schema_json=schema.json(),
-                            dv_files=tuple(prev.dv_files),
-                        )
-                    ),
-                    schema=arrow,
-                )
-                for f in probe_files
+                self._arrow_files([f], schema, prev.dv_files) for f in probe_files
             ]
             old = pa.concat_tables([arrow.empty_table(), *parts])
             file_of = np.repeat(
@@ -3702,7 +3794,7 @@ class VersionedTable:
                     schema,
                     keep=["__file"],
                 )
-                .join(key_rows, keys, "left_semi")
+                .join(key_rows(), keys, "left_semi")
                 .toArrow()
             )
             pos = {f: i for i, f in enumerate(probe_files)}
@@ -3763,7 +3855,7 @@ class VersionedTable:
             # most as many files as the merge removes
             rewrite = (
                 _align_to(self._snapshot(prev, touched), schema)
-                .join(key_rows, keys, "left_anti")
+                .join(key_rows(), keys, "left_anti")
                 .unionByName(self.spark.createDataFrame(new_rows, schema))
                 .coalesce(len(touched))
             )
@@ -4905,85 +4997,125 @@ class VersionedTable:
         column across old/new names with NULLs after ``rename_column``,
         silently corrupting incremental consumers' deltas), and files
         predating an evolved-in column null-fill it. With
-        ``ending_version``, "current" is that version's schema."""
-        hist = self.history()
-        end = hist[-1].version if ending_version is None else ending_version
-        commits = [c for c in hist if starting_version < c.version <= end]
-        cur = self.schema(end)
+        ``ending_version``, "current" is that version's schema. Only the
+        commits in the range are read (``_change_files``), and the feed
+        refuses to cross one whose changes can't be delivered
+        (``log.change_records``)."""
+        end = self.latest_version() if ending_version is None else ending_version
+        cur = _with_change_type(self.schema(end))
         out: DataFrame | None = None
-        for c in commits:
-            if c.stats.get("cdf_schema_break"):
-                # an incompatible retype (overwrite/restore with a
-                # non-widening type change) has no expressible pre-images
-                # — continuing would silently retain rows a serial
-                # consumer would have retracted. Same contract as the
-                # vacuum gate: re-bootstrap.
-                raise ValueError(
-                    f"change feed crosses an incompatible schema change "
-                    f"at version {c.version}; reload from a snapshot at "
-                    f"or after it and restart the watermark from "
-                    f"starting_version={c.version}"
-                )
-            if c.stats.get("cdf_absent"):
-                # clone/convert commits carry no change-data files by
-                # design (insert images of the whole snapshot would
-                # defeat zero-copy adoption): consumers bootstrap from a
-                # snapshot read.
-                raise ValueError(
-                    f"version {c.version} is a {c.op} commit with no "
-                    f"change-data files; bootstrap from a snapshot read "
-                    f"and watermark from starting_version={c.version}"
-                )
-            if not c.cdf_files:
-                continue
-            gone = [f for f in c.cdf_files if not os.path.exists(f)]
-            if gone:
-                # vacuumed past this consumer's watermark: resuming would
-                # silently lose changes — fail loudly (Delta does too);
-                # the consumer must re-bootstrap from a snapshot read.
-                raise ValueError(
-                    f"change feed for version {c.version} was vacuumed; "
-                    "reload from a snapshot and restart the watermark"
-                )
+        for v, vschema, files in self._change_files(starting_version, end):
             # read THIS version's CDF with THIS version's schema (types
             # physically match the files — a retype overwrite's
             # pre-images stay exact), then project to current names and
-            # types: field-id match first (rename-proof), name for
-            # id-free fields, null for columns that didn't exist yet,
-            # cast for safely-widened types.
-            vschema = T.StructType.fromJson(json.loads(c.schema_json))
-            read_schema = T.StructType(
-                list(vschema.fields)
-                + [T.StructField(CHANGE_TYPE_COL, T.StringType())]
-            ).json()
-            v_by_id = {
-                int(f.metadata[FIELD_ID]): f
-                for f in vschema.fields
-                if f.metadata and FIELD_ID in f.metadata
-            }
-            v_by_name = {f.name: f for f in vschema.fields}
-            cols = []
-            for f in cur.fields:
-                src = _match_field(f, v_by_id, v_by_name)
-                if src is None:
-                    cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-                elif src.dataType == f.dataType:
-                    cols.append(F.col(src.name).alias(f.name))
-                else:
-                    cols.append(F.col(src.name).cast(f.dataType).alias(f.name))
-            cols.append(F.col(CHANGE_TYPE_COL))
-            df = (
-                self._read_files(c.cdf_files, read_schema)
-                .select(*cols)
-                .withColumn("_commit_version", F.lit(c.version))
-            )
+            # types (``_align_by_id``)
+            df = _align_by_id(
+                self._read_files(files, vschema.json()), vschema, cur
+            ).withColumn("_commit_version", F.lit(v))
             out = df if out is None else out.unionByName(df)
         if out is None:
-            fields = cur.add(CHANGE_TYPE_COL, T.StringType()).add(
-                "_commit_version", T.LongType()
-            )
+            fields = cur.add("_commit_version", T.LongType())
             return self.spark.createDataFrame([], fields)
         return out
+
+    def _change_files(
+        self, start: int, end: int
+    ) -> list[tuple[int, T.StructType, list[str]]]:
+        """(version, its schema with ``_change_type``, its change-data
+        files) for each version in ``(start, end]`` that has any —
+        ``log.change_records``, the walk every change-feed reader
+        shares, with its refusals."""
+        return [
+            (
+                rec["version"],
+                _with_change_type(
+                    T.StructType.fromJson(json.loads(rec["schema_json"]))
+                ),
+                rec["cdf_files"],
+            )
+            for rec in log.change_records(
+                self.log_dir, start, end, where=f"{self.path}: "
+            )
+            if rec.get("cdf_files")
+        ]
+
+    def _change_feed_arrow(self, start: int, end: int, max_bytes: int):
+        """``change_feed(start, end)`` read on the driver as one
+        ``pyarrow.Table`` (``_commit_version`` as int64), or None when
+        its change-data files total more than ``max_bytes`` on disk."""
+        import numpy as np
+        import pyarrow as pa
+
+        parts = self._change_files(start, end)
+        if sum(os.path.getsize(f) for _, _, fs in parts for f in fs) > max_bytes:
+            return None
+        cur = _with_change_type(self.schema(end))
+        tables = []
+        for v, vschema, files in parts:
+            tbl = _align_arrow_by_id(self._arrow_files(files, vschema), vschema, cur)
+            tables.append(
+                tbl.append_column(
+                    "_commit_version", pa.array(np.full(tbl.num_rows, v, np.int64))
+                )
+            )
+        empty = _arrow_schema(cur).append(pa.field("_commit_version", pa.int64()))
+        return pa.concat_tables([empty.empty_table(), *tables])
+
+    def _snapshot_arrow(self, version: int, max_bytes: int):
+        """The snapshot at ``version`` read on the driver as one
+        ``pyarrow.Table``, or None when its live files total more than
+        ``max_bytes`` on disk."""
+        c = self.get_commit(version)
+        if sum(os.path.getsize(f) for f in c.files) > max_bytes:
+            return None
+        schema = T.StructType.fromJson(json.loads(c.schema_json))
+        return self._arrow_files(c.files, schema, c.dv_files)
+
+    def _arrow_files(
+        self, files: list[str], schema: T.StructType, dv_files=()
+    ):
+        """``files`` as one ``pyarrow.Table`` laid out as ``schema``,
+        read on the driver with the format's per-file reader
+        (``_arrow_batches``: field ids, evolved columns, deletion
+        vectors ``dv_files``)."""
+        import pyarrow as pa
+
+        from ..sources.datasource import _arrow_batches, _FilePartition
+
+        arrow = _arrow_schema(schema)
+        return pa.concat_tables(
+            [arrow.empty_table()]
+            + [
+                pa.Table.from_batches(
+                    _arrow_batches(
+                        _FilePartition(
+                            file=f,
+                            schema_json=schema.json(),
+                            dv_files=tuple(dv_files),
+                        )
+                    ),
+                    schema=arrow,
+                )
+                for f in files
+            ]
+        )
+
+
+def _with_change_type(schema: T.StructType) -> T.StructType:
+    """``schema`` plus the change feed's ``_change_type`` column."""
+    return T.StructType(
+        list(schema.fields) + [T.StructField(CHANGE_TYPE_COL, T.StringType())]
+    )
+
+
+def _arrow_schema(schema: T.StructType):
+    """The Arrow layout of ``schema`` the per-file reader yields."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    return pa.schema(
+        [pa.field(f.name, to_arrow_type(f.dataType)) for f in schema.fields]
+    )
 
 
 def _min_max(col) -> tuple:
@@ -5003,15 +5135,8 @@ def _align_by_id(
     columns null-fill, type differences cast (loud under ANSI when
     lossy). Used where two schemas of the SAME table meet across
     metadata history (restore, change-feed projection)."""
-    by_id = {
-        int(f.metadata[FIELD_ID]): f
-        for f in from_schema.fields
-        if f.metadata and FIELD_ID in f.metadata
-    }
-    by_name = {f.name: f for f in from_schema.fields}
     cols = []
-    for f in to_schema.fields:
-        src = _match_field(f, by_id, by_name)
+    for f, src in _field_sources(from_schema, to_schema):
         if src is None:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
         elif src.dataType == f.dataType:
@@ -5019,6 +5144,39 @@ def _align_by_id(
         else:
             cols.append(F.col(src.name).cast(f.dataType).alias(f.name))
     return df.select(*cols)
+
+
+def _align_arrow_by_id(tbl, from_schema: T.StructType, to_schema: T.StructType):
+    """``_align_by_id`` for a ``pyarrow.Table`` laid out as
+    ``from_schema`` (only safe widenings reach a cast here)."""
+    import pyarrow as pa
+
+    arrow = _arrow_schema(to_schema)
+    return pa.table(
+        [
+            pa.nulls(tbl.num_rows, at)
+            if src is None
+            else tbl.column(src.name).cast(at)
+            for (f, src), at in zip(
+                _field_sources(from_schema, to_schema), arrow.types
+            )
+        ],
+        schema=arrow,
+    )
+
+
+def _field_sources(
+    from_schema: T.StructType, to_schema: T.StructType
+) -> list[tuple[T.StructField, T.StructField | None]]:
+    """Each field of ``to_schema`` with the ``from_schema`` field it
+    maps to across two schemas of the same table (``_match_field``)."""
+    by_id = {
+        int(f.metadata[FIELD_ID]): f
+        for f in from_schema.fields
+        if f.metadata and FIELD_ID in f.metadata
+    }
+    by_name = {f.name: f for f in from_schema.fields}
+    return [(f, _match_field(f, by_id, by_name)) for f in to_schema.fields]
 
 
 def _match_field(
@@ -5045,17 +5203,10 @@ def _cdf_representable(
     incompatible retype: no pre-image can carry the old values, so CDF
     continuity breaks at that commit (Delta's overwriteSchema contract)
     and the change feed must refuse to cross it."""
-    by_id = {
-        int(f.metadata[FIELD_ID]): f
-        for f in from_schema.fields
-        if f.metadata and FIELD_ID in f.metadata
-    }
-    by_name = {f.name: f for f in from_schema.fields}
-    for f in to_schema.fields:
-        src = _match_field(f, by_id, by_name)
-        if src is not None and widened_type(src.dataType, f.dataType) != f.dataType:
-            return False
-    return True
+    return all(
+        src is None or widened_type(src.dataType, f.dataType) == f.dataType
+        for f, src in _field_sources(from_schema, to_schema)
+    )
 
 
 def _align_to(

@@ -587,36 +587,15 @@ class _ChangeFeedStreamReader(DataSourceStreamReader):
         if hi <= lo:
             return parts
         schema_json = self._read_schema_json(hi)
-        for v in range(lo + 1, hi + 1):
-            # stats flags and cdf_files are never delta-encoded: the
-            # raw record suffices, no parent-chain materialization
-            c = log.read_raw(log_dir, v)
-            if (c.get("stats") or {}).get("cdf_schema_break"):
-                # incompatible retype: no pre-images exist for this
-                # commit — the tail cannot cross it (same contract as
-                # the native change_feed); fail the query loudly so
-                # the consumer re-bootstraps from a snapshot
-                raise ValueError(
-                    f"change feed crosses an incompatible schema "
-                    f"change at version {v}; restart the stream from "
-                    f"a snapshot with startingVersion={v}"
+        for c in log.change_records(log_dir, lo, hi, where=f"{self.path}: "):
+            parts.extend(
+                _FilePartition(
+                    file=f,
+                    schema_json=schema_json,
+                    extra=((VERSION_COL, c["version"]),),
                 )
-            if (c.get("stats") or {}).get("cdf_absent"):
-                # clone commits carry no CDF files by design — same
-                # re-bootstrap contract as the native change_feed
-                raise ValueError(
-                    f"version {v} is a clone commit with no change-data "
-                    f"files; restart the stream from a snapshot with "
-                    f"startingVersion={v}"
-                )
-            for f in c.get("cdf_files", []):
-                parts.append(
-                    _FilePartition(
-                        file=f,
-                        schema_json=schema_json,
-                        extra=((VERSION_COL, v),),
-                    )
-                )
+                for f in c.get("cdf_files", [])
+            )
         return parts
 
     def read(self, partition: _FilePartition):

@@ -6,11 +6,13 @@ batch2 insert+update+delete → rerun is a no-op, for both watermark
 strategies (CT ≡ change feed versions, TMSTP ≡ timestamp filter). Then
 the failure cases: a crash at each kill point converges on the next run
 without re-merging, a source commit racing a load lands on the next
-load, and two config stores racing one batch apply it once. Last, the
-control plane on the driver: it starts no Spark job, resolves as the
-entitiesSQL query does, keeps the ledger compacted, and writes rows
-that read back the same through every reader. Tier-1: these run in the
-default (fast) tier."""
+load, and two config stores racing one batch apply it once. Then the
+extraction on the driver: a steady-state cycle starts no Spark job, the
+driver and Spark extractions give the same loads, and a CT load after a
+source overwrite keeps every row. Last, the control plane on the
+driver: it starts no Spark job, resolves as the entitiesSQL query does,
+keeps the ledger compacted, and writes rows that read back the same
+through every reader. Tier-1: these run in the default (fast) tier."""
 
 from __future__ import annotations
 
@@ -33,6 +35,7 @@ from nrtwithdeltalake_spark.pipeline.config import (
 )
 from nrtwithdeltalake_spark.pipeline.incremental import load_entity, run_pipeline
 from nrtwithdeltalake_spark.pipeline.tables import (
+    MERGE_COUNTS,
     ConstraintViolationError,
     VersionedTable,
 )
@@ -55,6 +58,21 @@ def _txn_df(spark, rows, ts):
     return spark.createDataFrame(
         [(i, n, a, t) for i, n, a in rows], TXN_SCHEMA
     )
+
+
+THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+
+
+def _with_threshold(spark, threshold, fn):
+    """``fn()`` with ``THRESHOLD`` set to ``threshold`` (None: as it is;
+    ``"-1"`` forces every extraction and merge onto Spark)."""
+    saved = spark.conf.get(THRESHOLD)
+    if threshold is not None:
+        spark.conf.set(THRESHOLD, threshold)
+    try:
+        return fn()
+    finally:
+        spark.conf.set(THRESHOLD, saved)
 
 
 @pytest.fixture()
@@ -347,32 +365,40 @@ def test_kill_point_matrix_converges_without_remerge(
     _assert_converged_b2(spark, store, roots)
 
 
-@pytest.mark.parametrize("wm_type", ["CT", "TMSTP"])
-def test_load_pins_one_source_snapshot(spark, roots, monkeypatch, wm_type):
+@pytest.mark.parametrize(
+    "wm_type, extract",
+    [("CT", "driver"), ("TMSTP", "driver"), ("CT", "spark"), ("TMSTP", "spark")],
+    ids=["CT", "TMSTP", "CT-spark", "TMSTP-spark"],
+)
+def test_load_pins_one_source_snapshot(spark, roots, monkeypatch, wm_type, extract):
     """A source commit that lands between watermark acquisition and
     extraction is not in the batch: silver equals the source snapshot
     at the watermark the ledger records, and the change lands on the
-    next load. The extraction is CT's change-feed read and TMSTP's
-    second source read (its first takes the watermark)."""
+    next load. The commit lands as the extraction starts, after the
+    load pinned its source version; TMSTP takes its new watermark from
+    that extraction's own read. Both extractions: on the driver, and in
+    Spark (forced with a threshold of -1)."""
     store = _bootstrapped_batch2(spark, roots)
     src = VersionedTable(spark, os.path.join(roots[0], SOURCE[wm_type]))
-    method, nth = ("change_feed", 1) if wm_type == "CT" else ("read", 2)
-    real = getattr(VersionedTable, method)
+    real = incremental._extract
     calls = []
 
-    def hooked(self, *a, **k):
-        if self.path == src.path:
-            calls.append(method)
-            if len(calls) == nth:
-                src.append(
-                    _txn_df(spark, [(5, "Test Tran 5", 5.55)], "2024-01-03 10:00:00")
-                )
-        return real(self, *a, **k)
+    def hooked(src_table, *a, **k):
+        calls.append(src_table.path)
+        src.append(
+            _txn_df(spark, [(5, "Test Tran 5", 5.55)], "2024-01-03 10:00:00")
+        )
+        return real(src_table, *a, **k)
 
-    monkeypatch.setattr(VersionedTable, method, hooked)
-    res = load_entity(spark, store, _entity(store, wm_type), roots[0], roots[1])
+    monkeypatch.setattr(incremental, "_extract", hooked)
+    res = _with_threshold(
+        spark,
+        None if extract == "driver" else "-1",
+        lambda: load_entity(spark, store, _entity(store, wm_type), roots[0], roots[1]),
+    )
     monkeypatch.undo()
-    assert len(calls) >= nth and src.latest_version() == 2
+    assert calls == [src.path] and src.latest_version() == 2
+    assert res.merge["extract"] == extract
 
     silver = _silver(spark, roots, wm_type)
     assert _amounts(silver.read()) == ORACLE_B2[wm_type]
@@ -457,6 +483,178 @@ def test_two_stores_race_one_incremental_batch(spark, roots, monkeypatch):
         assert "error" not in out, out.get("error")
         assert all(r.action == "incremental" for r in out["result"])
     _assert_converged_b2(spark, store, roots)
+
+
+# -- extraction on the driver -------------------------------------------------
+
+
+def test_steady_state_cycle_starts_no_spark_job(spark, roots):
+    """A cycle of small CDC batches runs on the driver end to end: both
+    entities extract with the format's per-file reader and merge the
+    Arrow batch, and ``run_pipeline`` starts no Spark job."""
+    store = _bootstrapped_batch2(spark, roots)
+    n, res = _jobs_during(spark, lambda: run_pipeline(spark, store, roots[0], roots[1]))
+    assert n == 0, f"{n} Spark jobs"
+    assert [(r.action, r.merge["extract"], r.merge["images"]) for r in res] == [
+        ("incremental", "driver", "driver")
+    ] * 2
+    _assert_converged_b2(spark, store, roots)
+
+
+_UTC = datetime.timezone.utc
+_INT96_HIGH = datetime.datetime(9999, 12, 31, 23, 59, 59, 999999, _UTC)
+_TS_ROWS = [  # id, name, ts: the bootstrap
+    (1, "pre-1970", datetime.datetime(1969, 12, 31, 23, 59, 59, 700000, _UTC)),
+    (2, "int96 low", datetime.datetime(1500, 1, 1, tzinfo=_UTC)),
+    # 01:59:59.999 in New York, just before its DST change: the watermark
+    (3, "sub-second", datetime.datetime(2024, 3, 10, 6, 59, 59, 999000, _UTC)),
+]
+_TS_CYCLES = [  # id, name, ts, op per cycle
+    [
+        # the watermark's own second: excluded by TMSTP
+        (4, "at wm", datetime.datetime(2024, 3, 10, 6, 59, 59, 200000, _UTC), "U"),
+        (5, "past wm", datetime.datetime(2024, 3, 10, 7, 0, 0, 1, _UTC), "U"),
+        (1, "pre-1970 2", datetime.datetime(1969, 12, 31, 23, 59, 59, 1, _UTC), "U"),
+        (2, "", datetime.datetime(1500, 1, 1, tzinfo=_UTC), "D"),
+        # the new watermark
+        (6, "int96 high", _INT96_HIGH, "U"),
+    ],
+    [
+        (7, "late", datetime.datetime(2024, 3, 11, tzinfo=_UTC), "U"),
+        (3, "", datetime.datetime(2024, 3, 10, 6, 59, 59, 999000, _UTC), "D"),
+    ],
+]
+
+
+def test_driver_and_spark_extraction_agree(spark, tmp_path):
+    """Both extractions, and the merges they feed, give the same loads:
+    the same silver rows (SyncDateTime aside), watermarks and counts,
+    for both entity types over three cycles in a New York session.
+    Covered: sub-second, pre-1970 and INT96-edge timestamps, a row in
+    the watermark's own second (excluded), New York's DST change, and
+    deletes. Spark writes the sources, so their timestamps are INT96.
+    The driver's watermark strings equal ``date_format``'s, TIMESTAMP
+    and TIMESTAMP_NTZ, with the second floored before 1970."""
+    schema = "id long, name string, ts timestamp"
+    saved = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    loads, silver, extracts = {}, {}, {}
+    try:
+        edges = [r[2] for r in _TS_ROWS] + [r[2] for c in _TS_CYCLES for r in c]
+        edges += [
+            datetime.datetime(1969, 12, 31, 23, 59, 59, 1, _UTC),
+            datetime.datetime(2024, 11, 3, 5, 30, 0, 500000, _UTC),  # DST ends
+            datetime.datetime(2024, 11, 3, 6, 30, 0, 500000, _UTC),
+        ]
+        ts = spark.createDataFrame([(t,) for t in edges], "ts timestamp")
+        for df in (ts, ts.select(F.col("ts").cast("timestamp_ntz").alias("ts"))):
+            want = [r[0] for r in df.select(incremental._wm_str(F.col("ts"))).collect()]
+            secs = incremental._wm_seconds(df.toArrow().column("ts"), spark)
+            assert [incremental._wm_text(x) for x in secs.to_pylist()] == want
+        # past 9999-12-31 in local time the strings stop ordering as
+        # times: the driver leaves such a snapshot to Spark
+        spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+        assert incremental._wm_seconds(ts.toArrow().column("ts"), spark) is None
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+
+        for extract, threshold in (("driver", None), ("spark", "-1")):
+            roots = [str(tmp_path / extract / r) for r in ("src", "silver", "cfg")]
+            store = ConfigStore(spark, roots[2])
+            store.init()
+            for name, wm_type in (("ct", "CT"), ("ts", "TMSTP")):
+                VersionedTable.create(
+                    spark,
+                    os.path.join(roots[0], name),
+                    spark.createDataFrame(_TS_ROWS, schema).coalesce(1),
+                )
+                store.register_entity(
+                    name, f"silver_{name}", wm_type, ["id"],
+                    timestamp_column="ts" if wm_type == "TMSTP" else None,
+                )
+            run_pipeline(spark, store, roots[0], roots[1])
+            loads[extract], silver[extract], extracts[extract] = [], [], set()
+            for ops in _TS_CYCLES + [[]]:
+                for name in ("ct", "ts"):
+                    if ops:
+                        VersionedTable(spark, os.path.join(roots[0], name)).merge(
+                            spark.createDataFrame(ops, schema + ", op string"),
+                            ["id"],
+                            delete_condition="op = 'D'",
+                            exclude_cols=["op"],
+                        )
+                res = _with_threshold(
+                    spark,
+                    threshold,
+                    lambda: run_pipeline(spark, store, roots[0], roots[1]),
+                )
+                loads[extract].append(
+                    [
+                        (r.action, r.new_watermark, r.rows)
+                        + tuple(r.merge[c] for c in MERGE_COUNTS if r.merge)
+                        for r in res
+                    ]
+                )
+                extracts[extract] |= {r.merge["extract"] for r in res if r.merge}
+                silver[extract].append(
+                    [
+                        sorted(
+                            tuple(r)
+                            for r in VersionedTable(spark, os.path.join(roots[1], n))
+                            .read()
+                            .drop("SyncDateTime")
+                            .collect()
+                        )
+                        for n in ("silver_ct", "silver_ts")
+                    ]
+                )
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", saved)
+    assert extracts == {"driver": {"driver"}, "spark": {"spark"}}
+    assert loads["driver"] == loads["spark"]
+    assert silver["driver"] == silver["spark"]
+    # CT applies every change; TMSTP leaves out the row in the
+    # watermark's second and the older ones, and the high edge sets its
+    # watermark (in New York time), so it finds nothing newer after
+    assert loads["driver"] == [
+        [
+            ("incremental", "1", 5, 3, 1, 1),
+            ("incremental", "9999-12-31 18:59:59", 2, 2, 0, 0),
+        ],
+        [("incremental", "2", 2, 1, 0, 1), ("skipped", None, 0)],
+        [("skipped", None, 0), ("skipped", None, 0)],
+    ]
+    assert [r[0] for r in silver["driver"][0][1]] == [1, 2, 3, 5, 6]
+
+
+@pytest.mark.parametrize("extract", ["driver", "spark"])
+def test_ct_load_after_source_overwrite_keeps_every_row(spark, roots, extract):
+    """A source overwrite of the same keys images each key's delete and
+    its insert in one commit; the CT load keeps the insert, so silver
+    equals the source after a full overwrite and after an
+    ``overwrite(replace_where=...)``."""
+    source_root, target_root, config_root = roots
+    store = ConfigStore(spark, config_root)
+    store.init()
+    src = VersionedTable.create(
+        spark,
+        os.path.join(source_root, "s"),
+        spark.range(200).select("id", F.lit(0).alias("v")),
+    )
+    store.register_entity("s", "silver_s", "CT", ["id"])
+    run_pipeline(spark, store, source_root, target_root)
+    silver = VersionedTable(spark, os.path.join(target_root, "silver_s"))
+    for n, where in ((1, None), (2, "id >= 100"), (3, None)):
+        rows = spark.range(100 if where else 0, 200).select("id", F.lit(n).alias("v"))
+        src.overwrite(rows, replace_where=where)
+        res = _with_threshold(
+            spark,
+            None if extract == "driver" else "-1",
+            lambda: run_pipeline(spark, store, source_root, target_root),
+        )
+        assert res[0].merge["extract"] == extract
+        assert sorted(silver.read().select("id", "v").collect()) == sorted(
+            src.read().collect()
+        ), (n, where)
 
 
 # -- the control plane on the driver ------------------------------------------

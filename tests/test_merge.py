@@ -6,11 +6,13 @@ driver, which also reads and rewrites the touched files when the
 probe's candidate files are that small; anything else takes the Spark
 full-outer-join path. The parity test runs each case on both paths
 (``-1`` forces the Spark one) and requires equal snapshots, change
-feeds and row counts. Then the job budget of a change-tracking batch,
-the file count of a pipeline that keeps merging, a table left with no
-file, and the core merge semantics: time travel and the change feed,
-the touched-file rewrite, the latest-per-key oracle (on both paths) and
-NULL keys.
+feeds and row counts; an Arrow source (``pyarrow.Table``) pairs on the
+driver when its ``nbytes`` is that small and is otherwise converted to a
+DataFrame. Then the job budget of a change-tracking batch, the file
+count of a pipeline that keeps merging, a table left with no file, and
+the core merge semantics: txn tokens (a replay is a no-op, for an
+Arrow batch too), time travel and the change feed, the touched-file
+rewrite, the latest-per-key oracle (on both paths) and NULL keys.
 """
 
 from __future__ import annotations
@@ -38,14 +40,17 @@ from .test_load import _jobs_during, _setup_scenario, _txn_df, roots  # noqa: F4
 THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
 
 
+def _arrow(rows, ddl):
+    schema = T._parse_datatype_string(ddl)
+    return pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+
+
 def _local(spark, rows, ddl):
     """``rows`` as a local relation (built from Arrow), so the plan
     knows its size — a ``createDataFrame`` of a Python list does not."""
-    schema = T._parse_datatype_string(ddl)
-    tbl = pa.Table.from_pylist(
-        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
-    )
-    return spark.createDataFrame(tbl, schema)
+    return spark.createDataFrame(_arrow(rows, ddl), T._parse_datatype_string(ddl))
 
 
 def _rows(df, drop=()):
@@ -89,6 +94,24 @@ def _case(name, spark):
         # probed and rewritten by Spark
         src = _local(spark, _MIX, mix_ddl)
         return _mix_target, src, {}, "driver", (), {THRESHOLD: "1024"}
+    if name == "arrow":
+        return _mix_target, _arrow(_MIX, mix_ddl), {}, "driver", (), {}
+    if name == "arrow_dedup":
+        # several rows per key, latest by seq; on a tie a delete ranks
+        # below the key's other row
+        rows = [
+            (1, 3, False, 1),
+            (1, 4, False, 2),
+            (3, 0, True, 5),
+            (3, 9, False, 5),
+            (17, 0, True, 1),
+            (17, 8, False, 2),
+            (40, 1, False, 1),
+            (40, 0, True, 1),
+        ]
+        kw = {"dedup_order_col": "seq", "exclude_cols": ["d", "seq"]}
+        src = _arrow(rows, mix_ddl + ", seq long")
+        return _mix_target, src, kw, "driver", (), {}
     if name == "empty":
         return _mix_target, _local(spark, [], mix_ddl), {}, "driver", (), {}
     if name == "insert_only":
@@ -204,6 +227,8 @@ def _case(name, spark):
     "case",
     [
         "mix",
+        "arrow",
+        "arrow_dedup",
         "above_threshold",
         "empty",
         "insert_only",
@@ -218,9 +243,11 @@ def _case(name, spark):
 )
 def test_merge_paths_agree(spark, tmp_path, case):
     """Both merge paths give the same snapshot, change feed and row
-    counts; the result names the path that ran."""
+    counts; the result names the path that ran. An Arrow source (the
+    ``arrow`` cases) takes the Spark path as a DataFrame."""
     target, src, kw, images, away, case_conf = _case(case, spark)
-    keys = kw.get("keys", ["id"])
+    keys = kw.pop("keys", ["id"])
+    kw = {"delete_condition": "d", "exclude_cols": ["d"], **kw}
     saved = {k: spark.conf.get(k) for k in (THRESHOLD, *case_conf)}
     got = {}
     try:
@@ -232,7 +259,7 @@ def test_merge_paths_agree(spark, tmp_path, case):
             v0 = t.latest_version()
             if threshold:
                 spark.conf.set(THRESHOLD, threshold)
-            res = t.merge(src, keys, delete_condition="d", exclude_cols=["d"])
+            res = t.merge(src, keys, **kw)
             after = set(t.get_commit().files)
             got[path] = (
                 {
@@ -262,16 +289,21 @@ def test_merge_paths_agree(spark, tmp_path, case):
         changed["update_postimage"],
         changed["delete"],
     ]
-    if case in ("mix", "above_threshold"):
+    if case in ("mix", "arrow", "above_threshold"):
         assert [d_res[c] for c in counts] == [2, 5, 1]
         assert d_res["touched_files"] == s_res["touched_files"] > 1
         # the rewrite never leaves more files than it removes
         assert d_res["files"] <= 0
-    if case in ("mix", "dv_delete", "int96_edges"):
+    if case in ("mix", "arrow", "dv_delete", "int96_edges"):
         # the touched files' other rows and the new ones: one data file
         assert d_res["touched_files"] >= 1 and d_res["added"] == 1
     if case == "dv_delete":
         assert [d_res[c] for c in counts] == [2, 1, 0]
+    if case == "arrow_dedup":
+        assert [d_res[c] for c in counts] == [1, 3, 0]
+        assert {r[0]: r[1] for r in d_snap if r[0] in (1, 3, 17, 40)} == {
+            1: 4, 3: 9, 17: 8, 40: 1
+        }
     if case == "empty":
         assert d_cdf == Counter() and d_res["touched_files"] == 0
     if case == "insert_only":
@@ -418,6 +450,68 @@ def test_empty_results_commit_no_file(spark, tmp_path):
     assert _rows(t.change_feed(0), ("_commit_version",)) == Counter(
         {(1, 10, "insert"): 1, (2, 20, "insert"): 1, (1, 10, "delete"): 1, (2, 20, "delete"): 1}
     )
+
+
+def test_txn_tokens_make_retries_idempotent(spark, tmp_path):
+    """Delta txnAppId/txnVersion parity: a replayed (app, version)
+    append or merge is a structural no-op; the watermark survives
+    unrelated commits (compact) and is tracked per app."""
+    path = str(tmp_path / "t")
+    t = VersionedTable.create(
+        spark,
+        path,
+        spark.createDataFrame([(1, "a")], "id bigint, v string"),
+    )
+    b = spark.createDataFrame([(2, "b")], "id bigint, v string")
+    v1 = t.append(b, txn_app="ingest", txn_version=7)
+    assert t.txn_version("ingest") == 7
+    assert t.append(b, txn_app="ingest", txn_version=7) == v1  # replay
+    assert t.read().count() == 2  # not duplicated
+    t.compact()  # unrelated commit must not lose the watermark
+    assert t.txn_version("ingest") == 7
+    assert t.append(b, txn_app="ingest", txn_version=6) == t.latest_version()
+    assert t.read().count() == 2  # stale txn skipped
+    r = t.merge(
+        spark.createDataFrame([(2, "b2")], "id bigint, v string"),
+        keys=["id"],
+        txn_app="merger",
+        txn_version=1,
+    )
+    assert not r.get("txn_skipped")
+    r2 = t.merge(
+        spark.createDataFrame([(2, "b3")], "id bigint, v string"),
+        keys=["id"],
+        txn_app="merger",
+        txn_version=1,
+    )
+    assert r2.get("txn_skipped")
+    rows = {x.id: x.v for x in t.read().collect()}
+    assert rows[2] == "b2"  # replayed merge did not apply
+    assert t.txn_version("ingest") == 7 and t.txn_version("merger") == 1
+    with pytest.raises(ValueError):
+        t.append(b, txn_app="ingest")  # app without version
+
+
+def test_arrow_merge_replay_is_txn_skipped(spark, tmp_path):
+    """A replayed (app, version) merge of an Arrow batch is skipped
+    before the batch is read, on the driver path as on the Spark one."""
+    t = VersionedTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame([(1, "a")], "id long, v string"),
+    )
+    first = t.merge(
+        _arrow([(1, "b"), (2, "c")], "id long, v string"),
+        ["id"],
+        txn_app="load",
+        txn_version=3,
+    )
+    assert first["images"] == "driver" and not first.get("txn_skipped")
+    replay = t.merge(
+        _arrow([(1, "z")], "id long, v string"), ["id"], txn_app="load", txn_version=3
+    )
+    assert replay == {"version": first["version"], "txn_skipped": True}
+    assert {r.id: r.v for r in t.read().collect()} == {1: "b", 2: "c"}
 
 
 def test_time_travel_and_change_feed(spark, tmp_path):

@@ -1,6 +1,6 @@
 """Pipeline-core tests (the load loop itself is in ``test_load.py``, the
-core merge semantics and the latest-per-key property test in
-``test_merge.py``).
+core merge semantics, txn tokens and the latest-per-key property test
+in ``test_merge.py``).
 """
 
 from __future__ import annotations
@@ -750,46 +750,6 @@ def test_check_constraints_gate_writes(spark, tmp_path):
         spark.createDataFrame([(4, -1.0)], "id bigint, amount double")
     )
     assert t.read().filter("amount < 0").count() == 1
-
-
-def test_txn_tokens_make_retries_idempotent(spark, tmp_path):
-    """Delta txnAppId/txnVersion parity: a replayed (app, version)
-    append or merge is a structural no-op; the watermark survives
-    unrelated commits (compact) and is tracked per app."""
-    path = str(tmp_path / "t")
-    t = VersionedTable.create(
-        spark,
-        path,
-        spark.createDataFrame([(1, "a")], "id bigint, v string"),
-    )
-    b = spark.createDataFrame([(2, "b")], "id bigint, v string")
-    v1 = t.append(b, txn_app="ingest", txn_version=7)
-    assert t.txn_version("ingest") == 7
-    assert t.append(b, txn_app="ingest", txn_version=7) == v1  # replay
-    assert t.read().count() == 2  # not duplicated
-    t.compact()  # unrelated commit must not lose the watermark
-    assert t.txn_version("ingest") == 7
-    assert t.append(b, txn_app="ingest", txn_version=6) == t.latest_version()
-    assert t.read().count() == 2  # stale txn skipped
-    r = t.merge(
-        spark.createDataFrame([(2, "b2")], "id bigint, v string"),
-        keys=["id"],
-        txn_app="merger",
-        txn_version=1,
-    )
-    assert not r.get("txn_skipped")
-    r2 = t.merge(
-        spark.createDataFrame([(2, "b3")], "id bigint, v string"),
-        keys=["id"],
-        txn_app="merger",
-        txn_version=1,
-    )
-    assert r2.get("txn_skipped")
-    rows = {x.id: x.v for x in t.read().collect()}
-    assert rows[2] == "b2"  # replayed merge did not apply
-    assert t.txn_version("ingest") == 7 and t.txn_version("merger") == 1
-    with pytest.raises(ValueError):
-        t.append(b, txn_app="ingest")  # app without version
 
 
 def test_delete_where_copy_on_write_and_cdf(spark, tmp_path):
