@@ -12,8 +12,9 @@ Delta keeps transaction state in a log the driver reads and writes
 (VLDB 2020 §3): the latest-committed-watermark resolution is the
 reference's entitiesSQL (O11-O19, ``COPY_MSQL_TO_SILVER.py:223-249``)
 computed in Python over the rows the ``versioned`` DataSource's
-per-file pyarrow reader returns, and entity and ledger rows are
-appended as pyarrow tables through ``VersionedTable.append``.
+per-file pyarrow reader returns, both tables are created from empty
+pyarrow tables and entity and ledger rows appended as pyarrow tables,
+through ``VersionedTable.create`` and ``VersionedTable.append``.
 """
 
 from __future__ import annotations
@@ -119,24 +120,20 @@ class ConfigStore:
         writer wins each version slot, so two lockless PROCESSES
         appending ledger rows mint disjoint ids (a read-max+1 scheme
         under an in-process lock cannot promise that)."""
-        if not VersionedTable.exists(self.entities_path):
-            VersionedTable.create(
-                self.spark,
-                self.entities_path,
-                self.spark.createDataFrame(
-                    [], T.StructType(ENTITIES_SCHEMA.fields[1:])
-                ),
-                identity={"EntityId": (1, 1)},
-            )
-        if not VersionedTable.exists(self.watermarks_path):
-            VersionedTable.create(
-                self.spark,
-                self.watermarks_path,
-                self.spark.createDataFrame(
-                    [], T.StructType(WATERMARKS_SCHEMA.fields[1:])
-                ),
-                identity={"WatermarkId": (1, 1)},
-            )
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        for path, schema in (
+            (self.entities_path, ENTITIES_SCHEMA),
+            (self.watermarks_path, WATERMARKS_SCHEMA),
+        ):
+            if not VersionedTable.exists(path):
+                # empty, so written on the driver: no Spark job
+                VersionedTable.create(
+                    self.spark,
+                    path,
+                    to_arrow_schema(T.StructType(schema.fields[1:])).empty_table(),
+                    identity={schema.fields[0].name: (1, 1)},
+                )
         # a pre-identity store (created before commit-arbitrated ids)
         # is swept forward HERE — init() is idempotent and every
         # pipeline entry point calls it, so no silent single-process

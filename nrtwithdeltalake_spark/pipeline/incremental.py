@@ -23,15 +23,17 @@ Improvements over the reference, kept explicit:
   matches; the reference never dedups — SURVEY.md §7 hard-part 1);
 * deletes can be applied as deletes (``SyncOperation = 'D'``) rather than
   merged as updates (flagged optional behavior, default on for CT);
-* a small incremental load runs on the driver with no Spark job
-  (``_extract``): when its inputs — CT's change-data files of
-  ``(old, new]``, TMSTP's snapshot files — total at most
+* a small load runs on the driver with no Spark job (``_extract``):
+  when its inputs — CT's change-data files of ``(old, new]``, TMSTP's
+  snapshot files, the bootstrap's snapshot files — total at most
   ``spark.sql.autoBroadcastJoinThreshold`` on disk, the merge's own rule,
   the format's per-file reader reads them into a ``pyarrow.Table``; TMSTP
   takes its watermark from that read, as ``date_format`` in the session
-  time zone with the second floored; and ``VersionedTable.merge`` pairs
-  the Arrow batch on the driver. Larger inputs build the same batch as a
-  DataFrame. ``LoadResult.merge["extract"]`` names the path.
+  time zone with the second floored; ``VersionedTable.merge`` pairs the
+  Arrow batch on the driver, and the bootstrap's ``VersionedTable.create``
+  writes it there. Larger inputs build the same batch as a DataFrame.
+  The commit's ``stats["extract"]`` names the path (and
+  ``LoadResult.merge["extract"]`` for a merge).
 
 Crash-safety invariant (SURVEY.md §7 hard-part 5): the silver commit
 carries the load's application transaction token (Delta VLDB 2020 §3.1)
@@ -52,7 +54,7 @@ from dataclasses import dataclass
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -103,21 +105,26 @@ def _wm_token(wm: str) -> int:
 
 
 def _extract(
-    src_table: VersionedTable, wm_type: str, ts_col: str, old_wm, src_v: int
+    src_table: VersionedTable,
+    wm_type: str,
+    ts_col: str,
+    old_wm,
+    src_v: int,
+    full: bool = False,
 ):
-    """The incremental batch of the pinned source snapshot ``src_v``
-    past ``old_wm``, with its audit columns: (batch, new watermark
-    string, extract). A batch whose inputs total at most
-    ``spark.sql.autoBroadcastJoinThreshold`` on disk, the merge's own
-    rule, is read on the driver by the format's per-file reader and is
-    a ``pyarrow.Table`` (extract "driver", no Spark job): CT's
-    change-data files of ``(old_wm, src_v]``, or TMSTP's snapshot files.
-    Otherwise it is a DataFrame (extract "spark")."""
-    limit = src_table._broadcast_limit()
-    if wm_type == "CT":
+    """The batch of the pinned source snapshot ``src_v`` past ``old_wm``
+    (``full``: the whole snapshot, the bootstrap), with its audit
+    columns: (batch, new watermark string, extract). A batch whose
+    inputs total at most ``spark.sql.autoBroadcastJoinThreshold`` on
+    disk, the merge's own rule, is read on the driver by the format's
+    per-file reader and is a ``pyarrow.Table`` (extract "driver", no
+    Spark job): CT's change-data files of ``(old_wm, src_v]``, or the
+    snapshot's files. Otherwise it is a DataFrame (extract "spark")."""
+    if wm_type == "CT" and not full:
         # the feed also carries update_preimage rows (old values, for
         # consumers that need key-change invalidation); state replication
         # wants only the new-state/delete rows
+        limit = src_table._broadcast_limit()
         feed = src_table._change_feed_arrow(old_wm, src_v, limit)
         if feed is None:
             changes = src_table.change_feed(old_wm, src_v).filter(
@@ -131,25 +138,46 @@ def _extract(
         )
         batch = _with_audit_arrow(feed.drop_columns([CHANGE_TYPE_COL]), op)
         return batch, str(src_v), "driver"
-    snap = None
-    if isinstance(
-        src_table.schema(src_v)[ts_col].dataType,
-        (T.TimestampType, T.TimestampNTZType),
-    ):
-        snap = src_table._snapshot_arrow(src_v, limit)
-    secs = None if snap is None else _wm_seconds(snap[ts_col], src_table.spark)
-    since = _wm_seconds_of(old_wm)
-    if secs is None or since is None:
-        snapshot = src_table.read(version=src_v)
-        batch = snapshot.filter(_wm_str(F.col(ts_col)) > F.lit(old_wm))
-        return (
-            _with_audit(batch, F.lit("I")),
-            _max_wm(snapshot, ts_col, old_wm),
-            "spark",
-        )
-    batch = _with_audit_arrow(snap.filter(pc.greater(secs, since)), "I")
+    read = _snapshot_wm(src_table, wm_type, ts_col, old_wm, src_v)
+    if read is None:
+        snapshot = batch = src_table.read(version=src_v)
+        if not full:
+            batch = snapshot.filter(_wm_str(F.col(ts_col)) > F.lit(old_wm))
+        new_wm = str(src_v) if wm_type == "CT" else _max_wm(snapshot, ts_col, old_wm)
+        return _with_audit(batch, F.lit("I")), new_wm, "spark"
+    snap, secs = read
+    if wm_type == "CT":
+        return _with_audit_arrow(snap, "I"), str(src_v), "driver"
+    batch = snap if full else snap.filter(pc.greater(secs, _wm_seconds_of(old_wm)))
     newest = pc.max(secs).as_py()
-    return batch, old_wm if newest is None else _wm_text(newest), "driver"
+    new_wm = old_wm if newest is None else _wm_text(newest)
+    return _with_audit_arrow(batch, "I"), new_wm, "driver"
+
+
+def _snapshot_wm(
+    src_table: VersionedTable, wm_type: str, ts_col: str, old_wm, src_v: int
+) -> tuple[pa.Table, pa.ChunkedArray | None] | None:
+    """The snapshot ``src_v`` read on the driver with its rows' TMSTP
+    watermarks as local seconds (``_wm_seconds``; None for CT), or None
+    when Spark reads it: its live files total more than
+    ``spark.sql.autoBroadcastJoinThreshold`` on disk, or for TMSTP the
+    column is not a timestamp, or a value or ``old_wm`` is outside what
+    the driver compares as ``_wm_str`` does."""
+    if wm_type == "TMSTP" and (
+        _wm_seconds_of(old_wm) is None
+        or not isinstance(
+            src_table.schema(src_v)[ts_col].dataType,
+            (T.TimestampType, T.TimestampNTZType),
+        )
+    ):
+        return None
+    snap = src_table._snapshot_arrow(src_v, src_table._broadcast_limit())
+    if snap is None:
+        return None
+    if wm_type == "CT":
+        return snap, None
+    secs = _wm_seconds(snap[ts_col], src_table.spark)
+    return None if secs is None else (snap, secs)
 
 
 def _max_wm(snapshot: DataFrame, ts_col: str, old_wm: str) -> str:
@@ -211,9 +239,11 @@ def _with_audit_arrow(tbl: pa.Table, op) -> pa.Table:
     n = tbl.num_rows
     if isinstance(op, str):
         op = pa.array([op] * n, pa.string())
+    # non-null, as Spark types current_timestamp() and lit(op)
     return tbl.append_column(
-        SYNC_DT, pa.array([now] * n, pa.timestamp("us", "UTC"))
-    ).append_column(SYNC_OP, op)
+        pa.field(SYNC_DT, pa.timestamp("us", "UTC"), nullable=False),
+        pa.array([now] * n, pa.timestamp("us", "UTC")),
+    ).append_column(pa.field(SYNC_OP, pa.string(), nullable=False), op)
 
 
 def load_entity(
@@ -248,26 +278,17 @@ def load_entity(
         old_wm = int(entity_row["CTWatermark"])
     else:
         old_wm = entity_row["DateWatermark"]
-    if first_load:
-        action = "full"
-        snapshot = src_table.read(version=src_v)
-        batch = _with_audit(snapshot, F.lit("I"))
-        if wm_type == "CT":
-            new_wm_str = str(src_v)
-        else:
-            new_wm_str = _max_wm(snapshot, ts_col, old_wm)
-    elif wm_type == "CT" and src_v <= old_wm:
+    if not first_load and wm_type == "CT" and src_v <= old_wm:
         # no-new-watermark short-circuit (:157)
         return LoadResult(eid, "skipped", 0, None)
-    else:
-        # -- extraction (E3 step 4, :157-176): TMSTP takes its new
-        # watermark from the same snapshot read
-        action = "incremental"
-        batch, new_wm_str, extract = _extract(
-            src_table, wm_type, ts_col, old_wm, src_v
-        )
-        if wm_type == "TMSTP" and new_wm_str <= old_wm:
-            return LoadResult(eid, "skipped", 0, None)
+    # -- extraction (E3 step 4, :157-176): TMSTP takes its new watermark
+    # from the same snapshot read
+    action = "full" if first_load else "incremental"
+    batch, new_wm_str, extract = _extract(
+        src_table, wm_type, ts_col, old_wm, src_v, full=first_load
+    )
+    if not first_load and wm_type == "TMSTP" and new_wm_str <= old_wm:
+        return LoadResult(eid, "skipped", 0, None)
     token = src_v if wm_type == "CT" else _wm_token(new_wm_str)
 
     # -- ledger open (E3 step 3, :143-152): the pending row, no I/O --------
@@ -284,18 +305,19 @@ def load_entity(
         # The reference caches + counts the batch as a SEPARATE pass
         # (:180-183). Observation folds the row count into the write job
         # itself — at 100 TB that deletes one full batch scan per load.
-        from pyspark.sql import Observation
-
-        obs = Observation(f"load_{eid}")
+        obs = None
+        if isinstance(batch, DataFrame):
+            obs = Observation(f"load_{eid}")
+            batch = batch.observe(obs, F.count(F.lit(1)).alias("n"))
         t = VersionedTable.create(
             spark,
             tgt_path,
-            batch.observe(obs, F.count(F.lit(1)).alias("n")),
-            extra_stats={"txn": {app: token}},
+            batch,
+            extra_stats={"txn": {app: token}, "extract": extract},
         )
         if register_db is not None:
             t.register(register_db, entity_row["ToEntityName"])
-        n = obs.get["n"]
+        n = batch.num_rows if obs is None else obs.get["n"]
     else:
         merged = VersionedTable(spark, tgt_path).merge(
             batch,

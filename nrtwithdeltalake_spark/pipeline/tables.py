@@ -181,6 +181,25 @@ def _identity_defs(md: dict) -> dict:
 
 
 
+def _identity_spec(sk) -> dict:
+    """An identity spec — ``start``, ``(start, step)`` or ``{"start":,
+    "step":, "mode": "always"|"default"}`` — as the definition table
+    metadata stores: ``{"start", "step", "mode"}``."""
+    if isinstance(sk, dict):
+        start, step, mode = sk["start"], sk.get("step", 1), sk.get("mode", "always")
+    elif isinstance(sk, int):
+        start, step, mode = sk, 1, "always"
+    else:
+        (start, step), mode = sk, "always"
+    if int(step) == 0:
+        raise ValueError("identity step must be nonzero")
+    if mode not in ("always", "default"):
+        raise ValueError(
+            f"identity mode must be 'always' or 'default', got {mode!r}"
+        )
+    return {"start": int(start), "step": int(step), "mode": mode}
+
+
 def _check_identity_range(plan: dict, total: int) -> None:
     """Refuse assigning ``total`` ids from ``plan`` ({col: (next,
     step)}) when either end of a range would overflow BIGINT."""
@@ -1620,12 +1639,7 @@ class VersionedTable:
 
         Not safe to run concurrently with active writers (standard DDL
         discipline — same as add/drop/rename column)."""
-        if step == 0:
-            raise ValueError("identity step must be nonzero")
-        if mode not in ("always", "default"):
-            raise ValueError(
-                f"identity mode must be 'always' or 'default', got {mode!r}"
-            )
+        spec = _identity_spec({"start": start, "step": step, "mode": mode})
         if name in self.identity_columns():
             raise ValueError(f"column {name!r} is already an identity column")
         prev = self.get_commit()
@@ -1677,7 +1691,7 @@ class VersionedTable:
             props = dict(prev.metadata.get("properties") or {})
             # preserve existing specs VERBATIM (incl. their mode keys)
             defs = json.loads(props.get(self._IDENTITY_PROP) or "{}")
-            defs[name] = {"start": int(start), "step": int(step), "mode": mode}
+            defs[name] = spec
             props[self._IDENTITY_PROP] = json.dumps(defs)
             # an adopted column's high-water rides the same commit, so
             # the next writer's plan starts past existing values
@@ -1972,7 +1986,7 @@ class VersionedTable:
         cls,
         spark: SparkSession,
         path: str,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         extra_stats: dict | None = None,
         identity: dict | None = None,
         column_order: list[str] | None = None,
@@ -1993,96 +2007,103 @@ class VersionedTable:
         carry explicit initial values (validated non-null, high-water
         starts past them). Generated columns are prepended unless
         ``column_order`` gives the full final order (the SQL CREATE
-        path uses it to keep the DDL-declared positions)."""
+        path uses it to keep the DDL-declared positions).
+
+        ``df`` may be a ``pyarrow.Table``, rows already in the driver's
+        memory (the config store's empty tables, a small bootstrap):
+        unless it asks for ``partition_by``, ``column_order`` or a BY
+        DEFAULT identity column, or a column's Arrow type is not the
+        one the format reads back, commit 0 is written on the driver
+        with pyarrow (ALWAYS identity columns numbered from their
+        ``(start, step)``) and no Spark job runs. Otherwise it is
+        converted with ``spark.createDataFrame`` and takes the Spark
+        path, as ``append`` does."""
         t = cls(spark, path)
         if cls.exists(path):
             raise RuntimeError(f"table already exists at {path}")
-        ident_last: dict[str, int] = {}
+        cols = df.columns if isinstance(df, DataFrame) else df.column_names
+        defs = {c: _identity_spec(sk) for c, sk in (identity or {}).items()}
+        for col, d in defs.items():
+            if col in cols and d["mode"] == "always":
+                raise ValueError(
+                    f"cannot supply values for GENERATED ALWAYS "
+                    f"AS IDENTITY column {col!r} at create — "
+                    "drop it from the dataframe"
+                )
+        plan = {c: (d["start"], d["step"]) for c, d in defs.items() if c not in cols}
         md: dict = {}  # the table metadata commit 0 carries
-        if identity:
-            defs = {}
-            plan = {}
-            explicit: list[str] = []
-            for col, sk in identity.items():
-                mode = "always"
-                if isinstance(sk, dict):
-                    start = int(sk["start"])
-                    step = int(sk.get("step", 1))
-                    mode = sk.get("mode", "always")
-                elif isinstance(sk, int):
-                    start, step = sk, 1
-                else:
-                    start, step = tuple(sk)
-                if step == 0:
-                    raise ValueError("identity step must be nonzero")
-                if mode not in ("always", "default"):
-                    raise ValueError(
-                        f"identity mode must be 'always' or 'default', "
-                        f"got {mode!r}"
-                    )
-                if col in df.columns:
-                    if mode == "always":
-                        raise ValueError(
-                            f"cannot supply values for GENERATED ALWAYS "
-                            f"AS IDENTITY column {col!r} at create — "
-                            "drop it from the dataframe"
-                        )
-                    explicit.append(col)
-                defs[col] = {
-                    "start": int(start),
-                    "step": int(step),
-                    "mode": mode,
-                }
-                if col not in df.columns:
-                    plan[col] = (int(start), int(step))
+        if defs:
             md["properties"] = {cls._IDENTITY_PROP: json.dumps(defs)}
-            explicit_cache = None
-            if explicit:
-                # pin ONE materialization so the extremes aggregate and
-                # the file writes see identical explicit values
-                df = explicit_cache = df.persist()
-            ident_last = t._explicit_identity_extremes(
-                df,
-                explicit,
-                {c: (d["start"], d["step"]) for c, d in defs.items()},
+        driver = None  # the Arrow table's schema, when the driver writes it
+        if not (
+            isinstance(df, DataFrame)
+            or partition_by
+            or column_order
+            or any(d["mode"] != "always" for d in defs.values())
+        ):
+            driver = _driver_schema(df)
+        if driver is not None:
+            schema = with_field_ids(
+                T.StructType(
+                    [T.StructField(c, T.LongType()) for c in plan] + driver.fields
+                )
             )
-            df, assigned_last, ident_cache = t._assign_identity(df, plan)
-            ident_last.update(assigned_last)
-            order = column_order or (
-                list(identity)
-                + [c for c in df.columns if c not in identity]
+            files, cdf, ident_last = t._write_arrow(df, schema, plan)
+        else:
+            if not isinstance(df, DataFrame):
+                df = spark.createDataFrame(df)
+            ident_last: dict[str, int] = {}
+            ident_cache = explicit_cache = None
+            if defs:
+                explicit = [c for c in defs if c in df.columns]
+                if explicit:
+                    # pin ONE materialization so the extremes aggregate and
+                    # the file writes see identical explicit values
+                    df = explicit_cache = df.persist()
+                ident_last = t._explicit_identity_extremes(
+                    df,
+                    explicit,
+                    {c: (d["start"], d["step"]) for c, d in defs.items()},
+                )
+                df, assigned_last, ident_cache = t._assign_identity(df, plan)
+                ident_last.update(assigned_last)
+                order = column_order or (
+                    list(defs) + [c for c in df.columns if c not in defs]
+                )
+                if sorted(order) != sorted(df.columns):
+                    raise ValueError(
+                        f"column_order {order} is not a permutation of the "
+                        f"created columns {sorted(df.columns)}"
+                    )
+                df = df.select(*order)
+            if partition_by:
+                pcols = list(partition_by)
+                missing = [c for c in pcols if c not in df.columns]
+                if missing:
+                    raise ValueError(
+                        f"PARTITIONED BY column(s) {missing} not in the "
+                        f"created columns {sorted(df.columns)}"
+                    )
+                if len(set(pcols)) != len(pcols):
+                    raise ValueError(f"duplicate PARTITIONED BY columns {pcols}")
+                bad = [c for c in df.columns if c.startswith("__part__")]
+                if bad:
+                    raise ValueError(
+                        f"column name(s) {bad} collide with the reserved "
+                        "__part__ shadow-column prefix of partitioned writes"
+                    )
+                md["partition_columns"] = pcols
+            schema = with_field_ids(strip_ids(df.schema))  # mapping from birth
+            files = t._write_files(df, t.data_dir, schema=schema, metadata=md)
+            cdf = t._write_files(
+                df.withColumn(CHANGE_TYPE_COL, F.lit("insert")),
+                t.cdf_dir,
+                schema=schema,
+                metadata=md,
             )
-            if sorted(order) != sorted(df.columns):
-                raise ValueError(
-                    f"column_order {order} is not a permutation of the "
-                    f"created columns {sorted(df.columns)}"
-                )
-            df = df.select(*order)
-        if partition_by:
-            pcols = list(partition_by)
-            missing = [c for c in pcols if c not in df.columns]
-            if missing:
-                raise ValueError(
-                    f"PARTITIONED BY column(s) {missing} not in the "
-                    f"created columns {sorted(df.columns)}"
-                )
-            if len(set(pcols)) != len(pcols):
-                raise ValueError(f"duplicate PARTITIONED BY columns {pcols}")
-            bad = [c for c in df.columns if c.startswith("__part__")]
-            if bad:
-                raise ValueError(
-                    f"column name(s) {bad} collide with the reserved "
-                    "__part__ shadow-column prefix of partitioned writes"
-                )
-            md["partition_columns"] = pcols
-        schema = with_field_ids(strip_ids(df.schema))  # mapping from birth
-        files = t._write_files(df, t.data_dir, schema=schema, metadata=md)
-        cdf = t._write_files(
-            df.withColumn(CHANGE_TYPE_COL, F.lit("insert")),
-            t.cdf_dir,
-            schema=schema,
-            metadata=md,
-        )
+            for cache in (ident_cache, explicit_cache):
+                if cache is not None:
+                    cache.unpersist()
         stats = dict(extra_stats or {})
         if ident_last:
             stats["identity"] = ident_last
@@ -2101,10 +2122,6 @@ class VersionedTable:
                 metadata=md,
             )
         )
-        if identity and ident_cache is not None:
-            ident_cache.unpersist()
-        if identity and explicit_cache is not None:
-            explicit_cache.unpersist()
         return t
 
     @classmethod
@@ -2774,11 +2791,11 @@ class VersionedTable:
     def _write_arrow(
         self, tbl: pa.Table, schema: T.StructType, plan: dict
     ) -> tuple[list[str], list[str], dict[str, int]]:
-        """The driver half of an Arrow append: number the rows from
-        ``plan`` ({col: (next, step)}), lay them out as ``schema`` and
-        write one data file and one insert-image CDF file with the
-        format's pyarrow writer. Returns (data files, CDF files, {col:
-        last value assigned}) — {} for an empty batch."""
+        """The driver half of an Arrow append or create: number the
+        rows from ``plan`` ({col: (next, step)}), lay them out as
+        ``schema`` and write one data file and one insert-image CDF file
+        with the format's pyarrow writer. Returns (data files, CDF
+        files, {col: last value assigned}) — {} for an empty batch."""
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_type
 
@@ -5116,6 +5133,20 @@ def _arrow_schema(schema: T.StructType):
     return pa.schema(
         [pa.field(f.name, to_arrow_type(f.dataType)) for f in schema.fields]
     )
+
+
+def _driver_schema(tbl) -> T.StructType | None:
+    """The schema of a ``pyarrow.Table`` the driver can write as it is,
+    or None when a column's Arrow type is not the one the format's
+    per-file reader yields for its Spark type (``_arrow_schema``)."""
+    from pyspark.errors import PySparkTypeError
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    try:
+        schema = from_arrow_schema(tbl.schema, prefer_timestamp_ntz=True)
+    except PySparkTypeError:
+        return None
+    return schema if _arrow_schema(schema).types == tbl.schema.types else None
 
 
 def _min_max(col) -> tuple:

@@ -7,12 +7,12 @@ strategies (CT ≡ change feed versions, TMSTP ≡ timestamp filter). Then
 the failure cases: a crash at each kill point converges on the next run
 without re-merging, a source commit racing a load lands on the next
 load, and two config stores racing one batch apply it once. Then the
-extraction on the driver: a steady-state cycle starts no Spark job, the
-driver and Spark extractions give the same loads, and a CT load after a
-source overwrite keeps every row. Last, the control plane on the
-driver: it starts no Spark job, resolves as the entitiesSQL query does,
-keeps the ledger compacted, and writes rows that read back the same
-through every reader. Tier-1: these run in the default (fast) tier."""
+extraction on the driver: a steady-state cycle and an onboarding start
+no Spark job, the driver and Spark extractions give the same loads and
+bootstrap commits, and a CT load after a source overwrite keeps every
+row. Last, the control plane on the driver: it starts no Spark job,
+resolves as the entitiesSQL query does, keeps the ledger compacted, and
+writes rows that read back the same through every reader. Tier-1: these run in the default (fast) tier."""
 
 from __future__ import annotations
 
@@ -21,10 +21,12 @@ import os
 import threading
 import time
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from nrtwithdeltalake_spark.pipeline import incremental
 from nrtwithdeltalake_spark.pipeline.config import (
@@ -501,6 +503,55 @@ def test_steady_state_cycle_starts_no_spark_job(spark, roots):
     _assert_converged_b2(spark, store, roots)
 
 
+def test_onboarding_starts_no_spark_job(spark, roots):
+    """Adding entities runs on the driver end to end: the config store's
+    empty tables, a small source created from Arrow, the registrations
+    and the CT and TMSTP bootstraps start no Spark job, and each
+    bootstrap commit records its extraction."""
+    source_root, target_root, config_root = roots
+    t = datetime.datetime(2024, 1, 1, 10, tzinfo=datetime.timezone.utc)
+    src = pa.Table.from_pylist(
+        [
+            dict(zip(TXN_SCHEMA.names, (1, "Test Tran 1", 420.69, t))),
+            dict(zip(TXN_SCHEMA.names, (2, "Test Tran 2", 694.20, t))),
+        ],
+        schema=to_arrow_schema(TXN_SCHEMA),
+    )
+
+    def onboard():
+        store = ConfigStore(spark, config_root)
+        store.init()
+        for name in ("transactions_ct", "transactions_ts"):
+            VersionedTable.create(spark, os.path.join(source_root, name), src)
+        store.register_entity("transactions_ct", "silver_ct", "CT", ["TransactionId"])
+        store.register_entity(
+            "transactions_ts",
+            "silver_ts",
+            "TMSTP",
+            ["TransactionId"],
+            timestamp_column="TransactionDatetime",
+        )
+        return run_pipeline(spark, store, source_root, target_root)
+
+    n, res = _jobs_during(spark, onboard)
+    assert n == 0, f"{n} Spark jobs"
+    assert [(r.action, r.rows, r.new_watermark) for r in res] == [
+        ("full", 2, "0"),
+        ("full", 2, "2024-01-01 10:00:00"),
+    ]
+    want = sorted(
+        tuple(r) + ("I",)
+        for r in VersionedTable(spark, os.path.join(source_root, "transactions_ct"))
+        .read()
+        .collect()
+    )
+    for wm_type in SILVER:
+        silver = _silver(spark, roots, wm_type)
+        assert silver.get_commit(0).stats["extract"] == "driver"
+        got = silver.read().drop("SyncDateTime").collect()
+        assert sorted(tuple(r) for r in got) == want
+
+
 _UTC = datetime.timezone.utc
 _INT96_HIGH = datetime.datetime(9999, 12, 31, 23, 59, 59, 999999, _UTC)
 _TS_ROWS = [  # id, name, ts: the bootstrap
@@ -529,7 +580,9 @@ _TS_CYCLES = [  # id, name, ts, op per cycle
 def test_driver_and_spark_extraction_agree(spark, tmp_path):
     """Both extractions, and the merges they feed, give the same loads:
     the same silver rows (SyncDateTime aside), watermarks and counts,
-    for both entity types over three cycles in a New York session.
+    for both entity types over three cycles in a New York session, and
+    the same bootstraps: commit 0's schema, token, change feed and
+    stats columns.
     Covered: sub-second, pre-1970 and INT96-edge timestamps, a row in
     the watermark's own second (excluded), New York's DST change, and
     deletes. Spark writes the sources, so their timestamps are INT96.
@@ -538,7 +591,7 @@ def test_driver_and_spark_extraction_agree(spark, tmp_path):
     schema = "id long, name string, ts timestamp"
     saved = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-    loads, silver, extracts = {}, {}, {}
+    loads, silver, extracts, created = {}, {}, {}, {}
     try:
         edges = [r[2] for r in _TS_ROWS] + [r[2] for c in _TS_CYCLES for r in c]
         edges += [
@@ -571,8 +624,30 @@ def test_driver_and_spark_extraction_agree(spark, tmp_path):
                     name, f"silver_{name}", wm_type, ["id"],
                     timestamp_column="ts" if wm_type == "TMSTP" else None,
                 )
-            run_pipeline(spark, store, roots[0], roots[1])
-            loads[extract], silver[extract], extracts[extract] = [], [], set()
+            boot = _with_threshold(
+                spark, threshold, lambda: run_pipeline(spark, store, roots[0], roots[1])
+            )
+            created[extract] = [(r.action, r.new_watermark, r.rows) for r in boot]
+            extracts[extract] = set()
+            for n in ("silver_ct", "silver_ts"):
+                t = VersionedTable(spark, os.path.join(roots[1], n))
+                c = t.get_commit(0)
+                extracts[extract].add(c.stats["extract"])
+                feed = t.change_feed(-1, 0).drop("SyncDateTime").collect()
+                created[extract].append(
+                    (
+                        c.schema_json,
+                        c.stats["txn"],
+                        # Spark writes timestamps as INT96, whose
+                        # footers carry no min/max
+                        [
+                            sorted(set(f) - {"ts", "SyncDateTime"})
+                            for f in c.stats["file_stats"].values()
+                        ],
+                        sorted(tuple(r) for r in feed),
+                    )
+                )
+            loads[extract], silver[extract] = [], []
             for ops in _TS_CYCLES + [[]]:
                 for name in ("ct", "ts"):
                     if ops:
@@ -610,6 +685,7 @@ def test_driver_and_spark_extraction_agree(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.session.timeZone", saved)
     assert extracts == {"driver": {"driver"}, "spark": {"spark"}}
+    assert created["driver"] == created["spark"]
     assert loads["driver"] == loads["spark"]
     assert silver["driver"] == silver["spark"]
     # CT applies every change; TMSTP leaves out the row in the

@@ -9,10 +9,12 @@ full-outer-join path. The parity test runs each case on both paths
 feeds and row counts; an Arrow source (``pyarrow.Table``) pairs on the
 driver when its ``nbytes`` is that small and is otherwise converted to a
 DataFrame. Then the job budget of a change-tracking batch, the file
-count of a pipeline that keeps merging, a table left with no file, and
-the core merge semantics: txn tokens (a replay is a no-op, for an
-Arrow batch too), time travel and the change feed, the touched-file
-rewrite, the latest-per-key oracle (on both paths) and NULL keys.
+count of a pipeline that keeps merging, a table left with no file, a
+table created from Arrow on the driver, the config store's idempotent
+``init``, and the core merge semantics: txn tokens (a replay is a
+no-op, for an Arrow batch too), time travel and the change feed, the
+touched-file rewrite, the latest-per-key oracle (on both paths) and
+NULL keys.
 """
 
 from __future__ import annotations
@@ -28,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from nrtwithdeltalake_spark.pipeline.config import ConfigStore
 from nrtwithdeltalake_spark.pipeline.incremental import run_pipeline
 from nrtwithdeltalake_spark.pipeline.tables import (
     CommitConflictError,
@@ -450,6 +453,80 @@ def test_empty_results_commit_no_file(spark, tmp_path):
     assert _rows(t.change_feed(0), ("_commit_version",)) == Counter(
         {(1, 10, "insert"): 1, (2, 20, "insert"): 1, (1, 10, "delete"): 1, (2, 20, "delete"): 1}
     )
+
+
+def test_arrow_create_writes_on_driver(spark, tmp_path):
+    """``create`` of a ``pyarrow.Table`` writes commit 0 on the driver
+    with no Spark job: ALWAYS identity ids, high-water and schema as the
+    Spark path gives them, and a zero-row table lists no file. A BY
+    DEFAULT identity, ``partition_by`` or ``column_order`` takes the
+    Spark path."""
+    rows = _arrow([(f"r{i}",) for i in range(5)], "s string")
+    made = {}
+    for side, df in (("driver", rows), ("spark", spark.createDataFrame(rows))):
+        n, made[side] = _jobs_during(
+            spark,
+            lambda: VersionedTable.create(
+                spark, str(tmp_path / side), df, identity={"id": (10, 5)}
+            ),
+        )
+        assert (n == 0) == (side == "driver"), (side, n)
+    t, s = made["driver"], made["spark"]
+    assert sorted(tuple(r) for r in t.read().collect()) == [
+        (10 + 5 * i, f"r{i}") for i in range(5)
+    ]
+    assert _rows(t.read()) == _rows(s.read())
+    assert _rows(t.change_feed(-1)) == _rows(s.change_feed(-1))
+    assert t.identity_high_water("id") == s.identity_high_water("id") == 30
+    assert t.get_commit(0).schema_json == s.get_commit(0).schema_json
+    assert t.append(_arrow([("r5",)], "s string")) == 1
+    assert t.identity_high_water("id") == 35
+
+    n, e = _jobs_during(
+        spark,
+        lambda: VersionedTable.create(
+            spark, str(tmp_path / "empty"), _arrow([], "id long, v string")
+        ),
+    )
+    assert n == 0
+    c = e.get_commit(0)
+    assert (c.files, c.cdf_files, e.read().count()) == ([], [], 0)
+    assert e.schema().simpleString() == "struct<id:bigint,v:string>"
+
+    for i, (kw, names) in enumerate(
+        [
+            ({"identity": {"id": {"start": 1, "mode": "default"}}}, ["id", "s"]),
+            ({"partition_by": ["s"]}, ["s"]),
+            ({"identity": {"id": (1, 1)}, "column_order": ["s", "id"]}, ["s", "id"]),
+        ]
+    ):
+        n, f = _jobs_during(
+            spark,
+            lambda: VersionedTable.create(spark, str(tmp_path / f"f{i}"), rows, **kw),
+        )
+        assert n > 0, kw
+        assert f.schema().names == names and f.read().count() == 5
+
+
+def test_config_store_init_is_idempotent(spark, tmp_path):
+    """``ConfigStore.init`` creates both control tables on the driver
+    with no Spark job; on an existing store it commits nothing, and the
+    ids it declared keep counting."""
+    store = ConfigStore(spark, str(tmp_path / "cfg"))
+    n, _ = _jobs_during(spark, store.init)
+    assert n == 0
+    tables = (store.entities, store.watermarks)
+    assert [t.identity_columns() for t in tables] == [
+        {"EntityId": (1, 1)},
+        {"WatermarkId": (1, 1)},
+    ]
+    assert [t.get_commit().files for t in tables] == [[], []]
+    assert store.register_entity("a", "silver_a", "CT", ["k"]) == 1
+    versions = [t.latest_version() for t in tables]
+    store.init()
+    assert [t.latest_version() for t in tables] == versions
+    assert store.register_entity("b", "silver_b", "CT", ["k"]) == 2
+    assert [e.EntityId for e in store.entities_with_watermarks()] == [1, 2]
 
 
 def test_txn_tokens_make_retries_idempotent(spark, tmp_path):
