@@ -11,22 +11,23 @@ The control plane runs on the driver and starts no Spark job, the way
 Delta keeps transaction state in a log the driver reads and writes
 (VLDB 2020 §3): the latest-committed-watermark resolution is the
 reference's entitiesSQL (O11-O19, ``COPY_MSQL_TO_SILVER.py:223-249``)
-computed in Python over the rows the ``versioned`` DataSource's
-per-file pyarrow reader returns, both tables are created from empty
-pyarrow tables and entity and ledger rows appended as pyarrow tables,
-through ``VersionedTable.create`` and ``VersionedTable.append``.
+computed in Python over the latest snapshot read with the format's
+per-file pyarrow reader (``pipeline/files.py``), both tables are created
+from empty pyarrow tables and entity and ledger rows appended as pyarrow
+tables, through ``VersionedTable.create`` and ``VersionedTable.append``.
 """
 
 from __future__ import annotations
 
 import datetime
+import json
 import os
 import threading
 
 from pyspark.sql import Row, SparkSession
 from pyspark.sql import types as T
 
-from ..sources.datasource import _BatchReader
+from . import log
 from .tables import VersionedTable
 
 # sentinel defaults for first loads (COPY_MSQL_TO_SILVER.py:231: COALESCE to
@@ -89,12 +90,12 @@ def _arrow_row(schema: T.StructType, values: dict):
 
 def _read_rows(path: str) -> list[dict]:
     """A table's latest snapshot as Python rows, read on the driver by
-    the ``versioned`` DataSource's per-file reader (field-id column
-    mapping and deletion-vector masking included)."""
-    reader = _BatchReader(path, None, None)
-    return [
-        r for p in reader.partitions() for b in reader.read(p) for r in b.to_pylist()
-    ]
+    the format's per-file reader (field-id column mapping and
+    deletion-vector masking included)."""
+    log_dir = log.dir_of(path)
+    c = log.read_commit(log_dir, log.latest_version_in(log_dir), where=f"{path}: ")
+    schema = T.StructType.fromJson(json.loads(c.schema_json))
+    return VersionedTable._arrow_files(c.files, schema, c.dv_files).to_pylist()
 
 
 class ConfigStore:

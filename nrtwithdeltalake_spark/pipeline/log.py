@@ -4,8 +4,8 @@ A table is a set of immutable data files plus an ordered log of JSON
 commit records (``_log/<version>.json``), each naming the version's full
 live file list, schema, stats, reader/writer protocol and table
 metadata (Delta Lake's log, VLDB'20 §3.1). This module owns that log
-for both writers — the native ``VersionedTable`` and the
-SparkSession-free ``versioned`` DataSource:
+for its one writer, ``VersionedTable``, and for its readers, the
+SparkSession-free ``versioned`` DataSource among them:
 
 * raw and materialized record reads, the version list and the
   ``_last_checkpoint`` pointer;
@@ -15,7 +15,7 @@ SparkSession-free ``versioned`` DataSource:
   high-water marks, writer-transaction watermarks, table metadata, the
   COPY INTO registry fold);
 * ``merged_schema`` / ``replaced_schema`` — the commit schema of an
-  append or a full replace, for both writers;
+  append or a full replace;
 * ``commit`` — prepare, delta-encode and publish put-if-absent.
 
 Table metadata (CHECK and NOT NULL constraints, properties including
@@ -200,8 +200,8 @@ class CommitConflictError(RuntimeError):
     no row the operation would have affected (Delta VLDB'20 §3.2
     semantics); ``compact`` rebases over any pure file-add. Only
     genuinely conflicting writes surface — their read was stale, the
-    caller must re-run. A full ``overwrite``, ``restore`` and the
-    DataSource writers always surface it."""
+    caller must re-run. A full ``overwrite`` and ``restore`` always
+    surface it."""
 
 
 class UnsupportedTableFeatureError(RuntimeError):
@@ -453,7 +453,7 @@ def merged_schema(
 ) -> T.StructType:
     """The commit schema of an append or merge of rows shaped ``new``
     into a table whose schema is ``prev`` — the one schema-evolution
-    rule of the native writers and the DataSource writers. Previous
+    rule of every ``VersionedTable`` writer. Previous
     columns keep their order and field ids; a same-name type change is
     accepted only as a safe widening (``widened_type``: the commit
     adopts the wider type and old narrow files read through it) and
@@ -600,8 +600,8 @@ def storm_commit_store(store, scratch_dir: str, racers: int = 16) -> None:
 
 def publish_commit_file(log_dir: str, version: int, payload: str) -> None:
     """Atomic put-if-absent commit publish — the last step of
-    ``commit``, which every writer of the ``versioned`` log (the native
-    API and both DataSource writers) goes through. The atomicity itself
+    ``commit``, which every commit of the ``versioned`` log (all made
+    by ``VersionedTable``) goes through. The atomicity itself
     is the commit-store seam's contract (``LocalLinkCommitStore``): two
     racing writers can never both believe they own a version — a bare
     rename or blind PUT would let the second silently overwrite the
@@ -1019,8 +1019,8 @@ def prepare(prev: dict | None, record: dict, read_raw_at=None) -> dict:
 
 
 def commit(log_dir: str, record: dict, where: str = "") -> None:
-    """Publish ``record`` as the next commit — the one commit writer of
-    both the native API and the DataSource writers. Gates on the
+    """Publish ``record`` as the next commit — the one commit writer,
+    called only by ``VersionedTable._write_commit``. Gates on the
     predecessor (may this engine build on it at all?), completes the
     record with ``prepare``, delta-encodes it against the materialized
     parent and publishes it put-if-absent; raises CommitConflictError

@@ -38,6 +38,7 @@ import uuid
 from typing import TYPE_CHECKING
 
 from . import log
+from .files import _arrow_batches, _FilePartition, _ids_of, _write_arrow_files
 from .log import (
     FIELD_ID,
     SUPPORTED_READER_FEATURES,
@@ -2483,8 +2484,8 @@ class VersionedTable:
             os.makedirs(dest.data_dir, exist_ok=True)
             for i, f in enumerate(files):
                 # index-prefix the copies: basenames are NOT unique
-                # across commits (the format writer names every task
-                # file part-00000.parquet inside per-commit dirs), and
+                # across commits (the pyarrow writer names every file
+                # part-00000.parquet inside per-write dirs), and
                 # a flat basename copy would silently overwrite
                 out = os.path.join(
                     dest.data_dir, f"{i:06d}_{os.path.basename(f)}"
@@ -2799,8 +2800,6 @@ class VersionedTable:
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_type
 
-        from ..sources.datasource import _ids_of, _write_task_files
-
         n = tbl.num_rows
         _check_identity_range(plan, n)
         cols = [
@@ -2813,11 +2812,16 @@ class VersionedTable:
             for f in schema.fields
         ]
         out = pa.table(cols, names=schema.names)
-        res = _write_task_files(self.path, out.to_batches(), _ids_of(schema))
+        data_file, cdf_file = _write_arrow_files(
+            self.path,
+            out,
+            out.append_column(CHANGE_TYPE_COL, pa.array(["insert"] * n)),
+            _ids_of(schema),
+        )
         last = {c: nxt + step * (n - 1) for c, (nxt, step) in plan.items()}
         return (
-            [res.data_file] if res.data_file else [],
-            [res.cdf_file] if res.cdf_file else [],
+            [data_file] if data_file else [],
+            [cdf_file] if cdf_file else [],
             last if n else {},
         )
 
@@ -3030,8 +3034,7 @@ class VersionedTable:
 
     def _merged_schema(self, prev: Commit, new: T.StructType) -> T.StructType:
         """Schema evolution (README.md:8) of rows shaped ``new`` into
-        ``prev``'s schema, enforcing types — ``log.merged_schema``, the
-        rule the format writers share."""
+        ``prev``'s schema, enforcing types — ``log.merged_schema``."""
         return log.merged_schema(
             T.StructType.fromJson(json.loads(prev.schema_json)),
             new,
@@ -3767,8 +3770,6 @@ class VersionedTable:
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
-
-        from ..sources.datasource import _ids_of, _write_arrow_files
 
         arrow = _arrow_schema(schema)
         rows = batch.select(schema.names).cast(arrow)
@@ -5088,18 +5089,16 @@ class VersionedTable:
         schema = T.StructType.fromJson(json.loads(c.schema_json))
         return self._arrow_files(c.files, schema, c.dv_files)
 
-    def _arrow_files(
-        self, files: list[str], schema: T.StructType, dv_files=()
-    ):
+    @staticmethod
+    def _arrow_files(files: list[str], schema: T.StructType, dv_files=()):
         """``files`` as one ``pyarrow.Table`` laid out as ``schema``,
         read on the driver with the format's per-file reader
         (``_arrow_batches``: field ids, evolved columns, deletion
         vectors ``dv_files``)."""
         import pyarrow as pa
 
-        from ..sources.datasource import _arrow_batches, _FilePartition
-
         arrow = _arrow_schema(schema)
+        schema_json = schema.json()
         return pa.concat_tables(
             [arrow.empty_table()]
             + [
@@ -5107,7 +5106,7 @@ class VersionedTable:
                     _arrow_batches(
                         _FilePartition(
                             file=f,
-                            schema_json=schema.json(),
+                            schema_json=schema_json,
                             dv_files=tuple(dv_files),
                         )
                     ),

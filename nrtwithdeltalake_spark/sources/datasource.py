@@ -1,5 +1,5 @@
 """``versioned`` — a Spark 4 Python DataSource exposing VersionedTable
-as a first-class format:
+as a first-class, read-only format:
 
 * batch: ``spark.read.format("versioned").option("path", p).load()``
   (plus ``option("version", n)`` time travel) — one input partition per
@@ -18,11 +18,18 @@ restated through the public DataSource V2 Python API
 DataSource needs no SparkSession — schema and planning are driver-side
 file metadata reads, the same cost profile as the native path.
 
+The format has no writer: every write commits through ``VersionedTable``
+and its one commit loop, so ``df.write.format("versioned")`` and
+``writeStream.format("versioned")`` fail in pyspark's base
+``DataSource`` before any file is written. Streams write through
+``foreachBatch`` and ``VersionedTable.merge(txn_app=...)``.
+
 Scale notes: partition planning is O(files) metadata; each partition
-reads one parquet file via pyarrow and yields its record batches
-(Arrow end-to-end — the Python layer never touches rows). Schema
-evolution is honored the same way ``VersionedTable._read_files`` does
-it: carried-over files physically missing newer columns yield nulls.
+reads one parquet file with ``pipeline/files.py``'s per-file reader and
+yields its record batches (Arrow end-to-end — the Python layer never
+touches rows). Schema evolution is honored the same way
+``VersionedTable._read_files`` does it: carried-over files physically
+missing newer columns yield nulls.
 Pushdown (the reference's whole extract model,
 ``COPY_MSQL_TO_SILVER.py:86-89``): ``pushFilters`` skips whole data
 files via the committed per-file min/max stats, surviving files hand
@@ -39,162 +46,16 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
 
 from pyspark.sql import types as T
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceArrowWriter,
-    DataSourceReader,
-    DataSourceStreamArrowWriter,
-    DataSourceStreamReader,
-    InputPartition,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, DataSourceStreamReader
 
 from ..pipeline import bloom as _bloom
 from ..pipeline import log
+from ..pipeline.files import _arrow_batches, _FilePartition
 
 CHANGE_TYPE_COL = "_change_type"
 VERSION_COL = "_commit_version"
-
-
-@dataclass
-class _FilePartition(InputPartition):
-    file: str
-    schema_json: str
-    extra: tuple = ()  # ((colname, value), ...) appended constants
-    # ((col, op, value), ...) conjunctive residual predicates forwarded to
-    # pyarrow for row-group/page skipping (Spark re-applies them after the
-    # scan, so they are purely an IO reducer — never a correctness input)
-    filters: tuple = ()
-    # deletion-vector sidecar files of the commit being read: rows of
-    # THIS file whose position appears there are logically deleted and
-    # masked out executor-side (merge-on-read)
-    dv_files: tuple = ()
-    # bloom sidecar path for THIS file (committed under the stats
-    # __bloom__ key): the executor probes it against the pushed
-    # equality literals BEFORE opening the data file — a KB read that
-    # can prove the multi-MB decode pointless (see pipeline/bloom.py)
-    bloom_sidecar: str = ""
-
-
-def _arrow_batches(part: _FilePartition):
-    """One parquet file → aligned Arrow batches: project to the commit
-    schema by NAME, null-fill columns the file predates (schema
-    evolution), append constant columns (the CDF's commit version).
-
-    IO discipline (the reference's whole extract model is pushdown —
-    ``COPY_MSQL_TO_SILVER.py:86-89`` ships the entire SQL to the
-    source): only the columns present in BOTH the requested schema and
-    the file's footer are read (a schema-dropped or pruned column's
-    bytes are never decoded), and any pushed conjunctive filters are
-    handed to pyarrow, which skips whole row groups via footer
-    statistics before decoding a page."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    if part.bloom_sidecar:
-        eq = [
-            (col, op, v) for (col, op, v) in part.filters if op in ("=", "in")
-        ]
-        if eq and not _bloom.file_may_match_bloom(part.bloom_sidecar, eq):
-            return  # provably no matching row: skip the data read entirely
-    want = T.StructType.fromJson(json.loads(part.schema_json))
-    pf = pq.ParquetFile(part.file)
-    file_cols = set(pf.schema_arrow.names)
-    file_by_id = {}
-    for fld in pf.schema_arrow:
-        fid = (fld.metadata or {}).get(b"PARQUET:field_id")
-        if fid is not None:
-            file_by_id[int(fid)] = fld.name
-    pf.close()
-    # column mapping: a field that carries a field id reading an
-    # id-bearing file matches BY ID ONLY (a renamed column finds its
-    # data under the old physical name; a re-added column must NOT
-    # name-match a dropped column's leftover bytes). Name matching
-    # applies to id-free fields and id-free (legacy) files.
-    phys: dict[str, str] = {}
-    for f in want.fields:
-        fid = (f.metadata or {}).get(log.FIELD_ID)
-        if fid is not None and file_by_id:
-            if int(fid) in file_by_id:
-                phys[f.name] = file_by_id[int(fid)]
-        elif f.name in file_cols:
-            phys[f.name] = f.name
-    read_cols = sorted(set(phys.values()))
-    kwargs = {"columns": read_cols}
-    usable = [
-        (phys[c], op, v) for (c, op, v) in part.filters if c in phys
-    ]
-    if usable and not part.dv_files:
-        # DV masking needs whole-file row positions, so predicate
-        # row-group skipping is disabled when a vector applies (Spark
-        # re-applies every filter; only the IO saving is lost)
-        kwargs["filters"] = usable  # conjunctive list → row-group skipping
-    # Spark writes timestamps as INT96, which pyarrow reads as
-    # nanoseconds by default: 9999-12-31 or 1500-01-01 would overflow
-    kwargs["coerce_int96_timestamp_unit"] = "us"
-    try:
-        tbl = pq.read_table(part.file, **kwargs)
-    except (pa.ArrowInvalid, pa.ArrowNotImplementedError, TypeError):
-        # a filter pyarrow can't evaluate on this column type: fall back
-        # to the unfiltered (still column-pruned) read — Spark's residual
-        # filter keeps the result exact either way
-        kwargs.pop("filters", None)
-        tbl = pq.read_table(part.file, **kwargs)
-    if part.dv_files:
-        tbl = _mask_deleted(tbl, part)
-    n = tbl.num_rows
-    cols = []
-    names = []
-    for f in want.fields:
-        names.append(f.name)
-        at = to_arrow_type(f.dataType)
-        if f.name in phys:
-            col = tbl.column(phys[f.name])
-            if col.type != at:
-                col = col.cast(at)
-            cols.append(col)
-        else:
-            cols.append(pa.nulls(n, type=at))
-    for cname, cval in part.extra:
-        names.append(cname)
-        at = pa.string() if isinstance(cval, str) else pa.int64()
-        cols.append(pa.array([cval] * n, type=at))
-    out = pa.table(dict(zip(names, cols)))
-    for batch in out.to_batches():
-        yield batch
-
-
-def _mask_deleted(tbl, part: _FilePartition):
-    """Drop rows whose position appears in the commit's deletion
-    vector for this file. The vector stores ``_metadata.file_path``
-    URIs (``file://...``); the partition file is a plain path — both
-    spellings are pushed to pyarrow so only this file's positions are
-    decoded, then matched exactly."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    spellings = [
-        part.file,
-        f"file:{part.file}",
-        f"file://{part.file}",
-    ]
-    import pyarrow.dataset as pads
-
-    dvs = pq.ParquetDataset(
-        list(part.dv_files),
-        filters=pads.field("file").isin(spellings),
-    ).read(columns=["pos"])
-    if not dvs.num_rows:
-        return tbl
-    pos = dvs.column("pos").to_numpy(zero_copy_only=False)
-    mask = np.ones(tbl.num_rows, dtype=bool)
-    mask[pos[pos < tbl.num_rows]] = False
-    return tbl.filter(pa.array(mask))
 
 
 _PYARROW_OPS = {
@@ -602,513 +463,6 @@ class _ChangeFeedStreamReader(DataSourceStreamReader):
         return _arrow_batches(partition)
 
 
-@dataclass
-class _WriteResult(WriterCommitMessage):
-    data_file: str | None
-    cdf_file: str | None
-    rows: int
-
-
-def _ids_of(schema: T.StructType) -> dict[str, int]:
-    return {
-        f.name: int(f.metadata[log.FIELD_ID])
-        for f in schema.fields
-        if f.metadata and log.FIELD_ID in f.metadata
-    }
-
-
-def _stamp_field_ids(tbl, field_ids: dict[str, int]):
-    """Stamp the PLANNED commit schema's field ids (computed on the
-    driver before any task ran — so columns being evolved in by this
-    very write carry their fresh ids too) into the Arrow schema, so
-    pyarrow writes real parquet field_ids. Stamping from the previous
-    commit instead (the pre-round-8 behavior) silently lost added
-    columns: their data files had no id for the id-matching read path
-    to find. No-op for legacy (id-free) tables."""
-    import pyarrow as pa
-
-    if not field_ids:
-        return tbl
-    fields = []
-    for fld in tbl.schema:
-        if fld.name in field_ids:
-            md = dict(fld.metadata or {})
-            md[b"PARQUET:field_id"] = str(field_ids[fld.name]).encode()
-            fields.append(fld.with_metadata(md))
-        else:
-            fields.append(fld)
-    return tbl.cast(pa.schema(fields))
-
-
-def _write_arrow_files(
-    path: str, data, cdf, field_ids: dict[str, int]
-) -> tuple[str | None, str | None]:
-    """Write the Arrow tables ``data`` and ``cdf`` (its change-feed
-    images, with ``_change_type``) as one immutable parquet file each
-    under the table's ``_data`` and ``_cdf`` dirs; an empty table writes
-    no file (None). Files become live only if a later driver commit
-    references them."""
-    import uuid
-
-    import pyarrow.parquet as pq
-
-    token = uuid.uuid4().hex
-    out = []
-    for sub, tbl in (("_data", data), ("_cdf", cdf)):
-        if not tbl.num_rows:
-            out.append(None)
-            continue
-        d = os.path.join(path, sub, f"ds-{token}")
-        os.makedirs(d, exist_ok=True)
-        out.append(os.path.join(d, "part-00000.parquet"))
-        pq.write_table(
-            _stamp_field_ids(tbl, field_ids),
-            out[-1],
-            use_dictionary=_dictionary_columns(tbl),
-        )
-    return out[0], out[1]
-
-
-def _dictionary_columns(tbl) -> list[str]:
-    """The parquet column paths of ``tbl`` worth dictionary encoding:
-    a column's leaves when its distinct count is at most half its rows
-    (parquet-mr, Spark's writer, falls back to PLAIN where a dictionary
-    doesn't pay; pyarrow's default of a dictionary on every column
-    wrote the bench's rows 40% larger), and always when
-    ``count_distinct`` can't take its type (nested), as pyarrow's
-    default would."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    def leaves(t) -> int:
-        return sum(leaves(t.field(i).type) for i in range(t.num_fields)) or 1
-
-    buf = pa.BufferOutputStream()
-    pq.write_table(tbl.schema.empty_table(), buf)
-    paths = pq.read_metadata(pa.BufferReader(buf.getvalue())).schema
-    out, i = [], 0
-    for fld, col in zip(tbl.schema, tbl.columns):
-        n = leaves(fld.type)
-        try:
-            worth = 2 * pc.count_distinct(col).as_py() <= tbl.num_rows
-        except pa.ArrowNotImplementedError:
-            worth = True
-        if worth:
-            out += [paths.column(j).path for j in range(i, i + n)]
-        i += n
-    return out
-
-
-def _write_task_files(path: str, iterator, field_ids: dict[str, int]) -> _WriteResult:
-    """Executor half of the write protocols: stream this task's Arrow
-    batches into one immutable data file + one insert-image CDF file."""
-    import pyarrow as pa
-
-    batches = [b for b in iterator if b.num_rows]
-    if not batches:
-        return _WriteResult(None, None, 0)
-    tbl = pa.Table.from_batches(batches)
-    images = tbl.append_column(
-        CHANGE_TYPE_COL, pa.array(["insert"] * tbl.num_rows)
-    )
-    return _WriteResult(
-        *_write_arrow_files(path, tbl, images, field_ids), tbl.num_rows
-    )
-
-
-def _latest_commit(path: str) -> log.Commit | None:
-    """The table's latest commit, or None while it has none."""
-    log_dir = log.dir_of(path)
-    try:
-        v = log.latest_version_in(log_dir)
-    except FileNotFoundError:
-        return None
-    return log.read_commit(log_dir, v, where=f"{path}: ")
-
-
-def _refuse_unmaintainable(path: str, prev: log.Commit | None) -> None:
-    """The format writers maintain none of the invariants table metadata
-    can bind (CHECK and NOT NULL enforcement needs a validation scan;
-    generated, identity and DEFAULT columns need values computed per
-    row), nor a catalog registration (its sync needs DDL): refuse such
-    a table loudly instead of committing rows that break them. Checked
-    when a write starts and again on the commit it publishes on
-    (``prev``, the latest): a DDL landing after that read takes version
-    prev+1 first, so the publish conflicts."""
-    bound = log.metadata_features((prev.metadata or {}) if prev else {})
-    if bound:
-        raise ValueError(
-            "format('versioned') writers cannot maintain the table's "
-            "CHECK/NOT NULL constraints or generated, identity and "
-            f"DEFAULT columns (bound: {sorted(bound)}); use "
-            "VersionedTable.append/overwrite (foreachBatch for streams)"
-        )
-    if os.path.exists(os.path.join(path, "_registration.json")):
-        raise ValueError(
-            "table is catalog-registered; the registration sync needs "
-            "a SparkSession — use VersionedTable.append/overwrite "
-            "(foreachBatch for streams)"
-        )
-
-
-def _plan_commit_schema(
-    path: str, new_schema: T.StructType, overwrite: bool
-) -> T.StructType:
-    """Driver-side schema planning against the table's CURRENT commit:
-    returns the exact schema a commit made now would publish — merged
-    with fresh ids for evolved-in columns (append), carried/fresh ids
-    (overwrite), or id-mapped-from-birth (create). Run BEFORE tasks
-    write files so the files holding a new column's data carry its id;
-    re-run at commit time as the concurrency guard."""
-    prev = _latest_commit(path)
-    if prev is None:
-        return log.with_field_ids(new_schema)
-    prev_schema = T.StructType.fromJson(json.loads(prev.schema_json))
-    floor = int(prev.stats.get("max_field_id", 0))
-    if overwrite:
-        return log.replaced_schema(prev_schema, new_schema, floor)
-    return log.merged_schema(prev_schema, new_schema, floor)
-
-
-def _drop_files(messages) -> None:
-    for m in messages:
-        if m is None:
-            continue
-        for f in (m.data_file, m.cdf_file):
-            if f and os.path.exists(f):
-                os.remove(f)
-
-
-class _VersionedWriter(DataSourceArrowWriter):
-    """Distributed write with an atomic driver-side commit — the
-    DataSource V2 writer protocol mapped 1:1 onto the table format's
-    own commit protocol:
-
-    * each write TASK streams its Arrow batches into one immutable
-      parquet data file plus one insert-image CDF file (no row ever
-      passes through the driver);
-    * ``commit(messages)`` publishes ONE commit record referencing the
-      task files through the shared log writer (``log.commit``,
-      put-if-absent), so a failed/duplicated task attempt leaves only
-      invisible garbage (Spark retries tasks; only the files named in
-      the committed messages become live);
-    * ``abort()`` deletes whatever the failed attempt wrote.
-
-    Refused (use the native ``VersionedTable`` API, which holds a
-    SparkSession): see ``_refuse_unmaintainable``.
-    ``mode("overwrite")`` emits delete pre-images for the previous
-    snapshot to the change feed — converted file-by-file on the driver
-    via pyarrow (delta-sized driver IO; the JVM-path ``overwrite()``
-    remains the hot path for large replaces)."""
-
-    def __init__(self, path: str, schema: T.StructType, overwrite: bool):
-        self.path = os.path.abspath(path)
-        # strip inherited field ids: the input df may come from reading
-        # other versioned tables (ids in column metadata, possibly
-        # colliding), while this writer's task files carry only the ids
-        # the TARGET table's commit schema defines (_stamp_field_ids)
-        self.schema_json = log.strip_ids(schema).json()
-        self.overwrite = overwrite
-        _refuse_unmaintainable(self.path, _latest_commit(self.path))
-        # plan the commit schema NOW, before any task writes a file:
-        # evolved-in columns get their fresh field ids here, so the very
-        # files holding their data carry the ids the read path matches
-        # on (also rejects append-retypes before paying any write IO)
-        planned = _plan_commit_schema(
-            self.path,
-            T.StructType.fromJson(json.loads(self.schema_json)),
-            overwrite,
-        )
-        self.task_field_ids = _ids_of(planned)
-
-    def _guard_ids(self, planned_now: T.StructType) -> None:
-        """Commit-time concurrency guard: if re-planning against the
-        now-current commit assigns any of THIS write's columns a
-        different field id than was stamped into its task files (a
-        concurrent writer evolved the schema in between), committing
-        would publish files whose ids lie — fail loudly instead."""
-        ours = {
-            f.name
-            for f in T.StructType.fromJson(json.loads(self.schema_json)).fields
-        }
-        now = {n: i for n, i in _ids_of(planned_now).items() if n in ours}
-        then = {n: i for n, i in self.task_field_ids.items() if n in ours}
-        if now != then:
-            raise log.CommitConflictError(
-                "concurrent schema change invalidated the field ids "
-                "stamped into this write's task files — re-run the write"
-            )
-
-    # -- executor side ------------------------------------------------------
-
-    def write(self, iterator):
-        return _write_task_files(self.path, iterator, self.task_field_ids)
-
-    # -- driver side ----------------------------------------------------------
-
-    def _delete_preimages(
-        self, prev: log.Commit, new_schema: T.StructType
-    ) -> list[str]:
-        """Overwrite CDF: previous snapshot rows re-emitted as deletes,
-        one CDF file per previous data file (pyarrow, driver-local).
-        Pre-images are ALIGNED to the NEW commit schema — one commit's
-        CDF files share one schema (same rule as the native overwrite:
-        the per-commit-schema change feed would misread a mixed-schema
-        commit after a full-replace retype). Columns map by field id
-        first (rename-proof), by name otherwise; dropped columns fall
-        away, added ones null-fill, retypes cast."""
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        out = []
-        prev_schema = T.StructType.fromJson(json.loads(prev.schema_json))
-        prev_by_id = {
-            int(f.metadata[log.FIELD_ID]): f
-            for f in prev_schema.fields
-            if f.metadata and log.FIELD_ID in f.metadata
-        }
-        prev_names = {f.name for f in prev_schema.fields}
-        new_ids = _ids_of(new_schema)
-        prev_dv = tuple(prev.dv_files)
-        for f in prev.files:
-            # DV-applied: a row already deleted by vector must not be
-            # retracted a second time by the overwrite's pre-images
-            part = _FilePartition(
-                file=f, schema_json=prev.schema_json, dv_files=prev_dv
-            )
-            batches = list(_arrow_batches(part))
-            if not batches:
-                continue
-            src = pa.Table.from_batches(batches)  # prev logical layout
-            cols, names = [], []
-            for fld in new_schema.fields:
-                names.append(fld.name)
-                at = to_arrow_type(fld.dataType)
-                fid = (fld.metadata or {}).get(log.FIELD_ID)
-                src_f = (
-                    prev_by_id.get(int(fid))
-                    if fid is not None and int(fid) in prev_by_id
-                    else (
-                        prev_schema[fld.name]
-                        if fld.name in prev_names
-                        else None
-                    )
-                )
-                if src_f is None:
-                    cols.append(pa.nulls(src.num_rows, type=at))
-                else:
-                    col = src.column(src_f.name)
-                    cols.append(col.cast(at) if col.type != at else col)
-            tbl = _stamp_field_ids(pa.table(dict(zip(names, cols))), new_ids)
-            d = os.path.join(self.path, "_cdf", f"ds-{uuid.uuid4().hex}")
-            os.makedirs(d, exist_ok=True)
-            dst = os.path.join(d, "part-00000.parquet")
-            pq.write_table(
-                tbl.append_column(
-                    CHANGE_TYPE_COL, pa.array(["delete"] * tbl.num_rows)
-                ),
-                dst,
-            )
-            out.append(dst)
-        return out
-
-    def commit(self, messages):
-        import time
-
-        new_files = sorted(m.data_file for m in messages if m.data_file)
-        new_cdf = sorted(m.cdf_file for m in messages if m.cdf_file)
-        # re-plan against the NOW-current commit (a writer may have
-        # landed since __init__) and verify our task files' stamped ids
-        # still agree — then commit the re-planned schema, which also
-        # folds in any columns a concurrent plain append introduced
-        planned_now = _plan_commit_schema(
-            self.path,
-            T.StructType.fromJson(json.loads(self.schema_json)),
-            self.overwrite,
-        )
-        self._guard_ids(planned_now)
-        log_dir = log.dir_of(self.path)
-        prev = _latest_commit(self.path)
-        _refuse_unmaintainable(self.path, prev)
-        if prev is None:
-            log.commit(
-                log_dir,
-                {
-                    "version": 0,
-                    "op": "create",
-                    "files": new_files,
-                    "cdf_files": new_cdf,
-                    # id-mapped from birth, like native create
-                    "schema_json": planned_now.json(),
-                    "ts": time.time(),
-                    "stats": {},
-                },
-                where=f"{self.path}: ",
-            )
-            return
-        stats: dict = {}
-        if self.overwrite:
-            # full replace: the NEW dataframe's columns become the table
-            # schema, exactly as native VersionedTable.overwrite —
-            # merging would resurrect dropped columns as phantom
-            # all-null columns, and a full replace may legitimately
-            # retype (no surviving rows to misread). Same-name/same-type
-            # columns keep their field ids; the table stays id-mapped.
-            from ..pipeline.tables import _cdf_representable
-
-            schema_json = planned_now.json()
-            files = new_files
-            op = "overwrite"
-            if _cdf_representable(
-                T.StructType.fromJson(json.loads(prev.schema_json)),
-                planned_now,
-            ):
-                cdf = self._delete_preimages(prev, planned_now) + new_cdf
-            else:
-                # incompatible retype: old values have no pre-image in
-                # the new schema — CDF continuity breaks (same contract
-                # as native overwrite); the task-written insert images
-                # are dropped too, a half-feed would mislead consumers
-                _drop_files(
-                    [_WriteResult(None, f, 0) for f in new_cdf]
-                )
-                cdf = []
-                stats["cdf_schema_break"] = True
-        else:
-            schema_json = planned_now.json()
-            files = list(prev.files) + new_files
-            cdf = new_cdf
-            op = "append"
-            kept = {
-                f: s
-                for f, s in (prev.stats.get("file_stats") or {}).items()
-                if f in set(prev.files)
-            }
-            if kept:
-                stats["file_stats"] = kept
-        log.commit(
-            log_dir,
-            {
-                "version": prev.version + 1,
-                "op": op,
-                "files": files,
-                "cdf_files": cdf,
-                "schema_json": schema_json,
-                "ts": time.time(),
-                "stats": stats,
-                # append preserves the deletion vectors (its new files
-                # have no entries); overwrite replaces every data file,
-                # so the vectors are spent
-                "dv_files": [] if self.overwrite else list(prev.dv_files),
-            },
-            where=f"{self.path}: ",
-        )
-
-    def abort(self, messages):
-        _drop_files(messages)
-
-
-_STREAM_TXN_APP = "__versioned_stream_sink"
-
-
-class _VersionedStreamWriter(DataSourceStreamArrowWriter):
-    """Streaming sink: every micro-batch is one append commit, made
-    exactly-once by the same writer-transaction watermark the native
-    API uses (``txn_app``/``txn_version``): the epoch id rides the
-    commit's txn stats, and a replayed epoch (restart from checkpoint
-    between sink commit and engine commit) is detected on the driver —
-    its freshly written task files are deleted as garbage instead of
-    committed twice."""
-
-    def __init__(self, path: str, schema: T.StructType):
-        self.path = os.path.abspath(path)
-        self.schema_json = log.strip_ids(schema).json()  # see batch writer
-        _refuse_unmaintainable(self.path, _latest_commit(self.path))
-        # same driver-side planning as the batch writer: evolved-in
-        # columns' fresh field ids are known before epoch 0's tasks
-        # write a single file (and an append-retype fails the query
-        # at start instead of per-epoch at commit)
-        planned = _plan_commit_schema(
-            self.path,
-            T.StructType.fromJson(json.loads(self.schema_json)),
-            overwrite=False,
-        )
-        self.task_field_ids = _ids_of(planned)
-
-    _guard_ids = _VersionedWriter._guard_ids
-
-    def write(self, iterator):
-        return _write_task_files(self.path, iterator, self.task_field_ids)
-
-    def commit(self, messages, batchId: int) -> None:
-        import time
-
-        new_files = sorted(m.data_file for m in messages if m and m.data_file)
-        new_cdf = sorted(m.cdf_file for m in messages if m and m.cdf_file)
-        # re-plan + id guard per epoch (see batch writer): after OUR
-        # first evolving commit the merged schema IS the current commit
-        # schema, so re-planning is a fixed point and the guard passes;
-        # a concurrent writer moving the ids under us conflicts loudly
-        merged = _plan_commit_schema(
-            self.path,
-            T.StructType.fromJson(json.loads(self.schema_json)),
-            overwrite=False,
-        )
-        self._guard_ids(merged)
-        log_dir = log.dir_of(self.path)
-        prev = _latest_commit(self.path)
-        _refuse_unmaintainable(self.path, prev)
-        if prev is None:
-            log.commit(
-                log_dir,
-                {
-                    "version": 0,
-                    "op": "create",
-                    "files": new_files,
-                    "cdf_files": new_cdf,
-                    # id-mapped from birth, like native create
-                    "schema_json": merged.json(),
-                    "ts": time.time(),
-                    "stats": {"txn": {_STREAM_TXN_APP: batchId}},
-                },
-                where=f"{self.path}: ",
-            )
-            return
-        seen = (prev.stats.get("txn") or {}).get(_STREAM_TXN_APP)
-        if seen is not None and batchId <= seen:
-            _drop_files(messages)  # replayed epoch: structural no-op
-            return
-        stats: dict = {"txn": {_STREAM_TXN_APP: batchId}}
-        kept = {
-            f: s
-            for f, s in (prev.stats.get("file_stats") or {}).items()
-            if f in set(prev.files)
-        }
-        if kept:
-            stats["file_stats"] = kept
-        log.commit(
-            log_dir,
-            {
-                "version": prev.version + 1,
-                "op": "append",
-                "files": list(prev.files) + new_files,
-                "cdf_files": new_cdf,
-                "schema_json": merged.json(),
-                "ts": time.time(),
-                "stats": stats,
-                "dv_files": list(prev.dv_files),
-            },
-            where=f"{self.path}: ",
-        )
-
-    def abort(self, messages, batchId: int) -> None:
-        _drop_files(messages)
-
-
 class VersionedTableDataSource(DataSource):
     """Format name ``versioned``. Options: ``path`` (required),
     ``version`` / ``timestampAsOf`` (batch time travel), ``feed=changes``
@@ -1116,8 +470,7 @@ class VersionedTableDataSource(DataSource):
     (current snapshot as insert images first, then the tail — the
     bootstrap for clones and vacuumed histories) +
     ``maxFilesPerTrigger`` / ``maxBytesPerTrigger`` (streaming CDF
-    tail); writable via
-    ``df.write.format("versioned").mode("append"|"overwrite")``."""
+    tail). Read-only: write through ``VersionedTable``."""
 
     @classmethod
     def name(cls) -> str:
@@ -1210,12 +563,6 @@ class VersionedTableDataSource(DataSource):
             self._columns(),
             bloom_driver_max=int(bdm) if bdm is not None else None,
         )
-
-    def writer(self, schema, overwrite: bool):
-        return _VersionedWriter(self._path(), schema, overwrite)
-
-    def streamWriter(self, schema, overwrite: bool):
-        return _VersionedStreamWriter(self._path(), schema)
 
     def streamReader(self, schema):
         if self.options.get("feed") != "changes":

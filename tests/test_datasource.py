@@ -1,6 +1,7 @@
 """The `versioned` Python DataSource: batch reads (snapshot + time
 travel + schema evolution), per-file partition parallelism, and the
-commit-version-offset change-feed stream, including checkpoint resume."""
+commit-version-offset change-feed stream, including checkpoint resume;
+and the refusal of writes through the format."""
 
 from __future__ import annotations
 
@@ -133,170 +134,51 @@ def test_stream_requires_changes_feed(spark, tmp_path):
         )
 
 
-# -- writer ------------------------------------------------------------------
+# -- writes ------------------------------------------------------------------
 
 
-def test_writer_creates_and_appends_with_evolution(spark, tmp_path):
-    """df.write.format('versioned'): first write creates version 0, an
-    append with a new column commits an evolved union schema and the
-    old rows null-fill; the change feed carries the insert images."""
-    from pyspark.sql import functions as F
-
-    p = str(tmp_path / "w")
-    spark.range(50).select(
-        F.col("id"), (F.col("id") % 3).alias("grp")
-    ).write.format("versioned").mode("append").save(p)
-    t = VersionedTable(spark, p)
-    assert t.get_commit().op == "create"
-    assert t.read().count() == 50
-
-    spark.range(50, 60).select(
-        F.col("id"), (F.col("id") % 3).alias("grp"), F.lit(1.5).alias("w")
-    ).write.format("versioned").mode("append").save(p)
-    assert t.latest_version() == 1
-    assert t.get_commit().op == "append"
-    got = t.read()
-    assert got.count() == 60 and "w" in got.columns
-    assert got.filter("w is null").count() == 50
-    assert t.change_feed(0).filter("_change_type='insert'").count() == 10
-
-
-def test_writer_overwrite_emits_delete_preimages(spark, tmp_path):
-    """mode('overwrite') replaces the snapshot AND retracts every prior
-    row through the CDF — so downstream incremental views (rollup,
-    checksum) stay exact across format-writer overwrites."""
-    from pyspark.sql import functions as F
-
-    from nrtwithdeltalake_spark.pipeline.checksum_view import IncrementalChecksum
-
-    p = str(tmp_path / "w")
-    spark.range(40).select(F.col("id"), F.lit("x").alias("v")).write.format(
-        "versioned"
-    ).mode("append").save(p)
-    t = VersionedTable(spark, p)
-    cs = IncrementalChecksum(spark, t, str(tmp_path / "cs"))
-    cs.refresh()
-
-    spark.range(7).select(F.col("id"), F.lit("z").alias("v")).write.format(
-        "versioned"
-    ).mode("overwrite").save(p)
-    assert t.get_commit().op == "overwrite"
-    assert t.read().count() == 7
-    cf = t.change_feed(0)
-    assert cf.filter("_change_type='delete'").count() == 40
-    assert cf.filter("_change_type='insert'").count() == 7
-    cs.refresh()
-    assert cs.current() == cs.compute_now()
-
-
-def test_writer_interops_with_native_merge(spark, tmp_path):
-    """A DS-written table is a first-class VersionedTable: native merge
-    lands on top of format-writer commits."""
-    from pyspark.sql import functions as F
-
-    p = str(tmp_path / "w")
-    spark.range(10).select(F.col("id"), F.lit("a").alias("v")).write.format(
-        "versioned"
-    ).mode("append").save(p)
-    t = VersionedTable(spark, p)
-    t.merge(
-        spark.createDataFrame([(3, "upd"), (99, "new")], "id long, v string"),
-        ["id"],
-    )
-    got = {r.id: r.v for r in t.read().collect()}
-    assert got[3] == "upd" and got[99] == "new" and len(got) == 11
-
-
-def test_writer_rejects_type_change_and_guarded_tables(spark, tmp_path):
-    """Type changes and tables whose invariants need a SparkSession
-    (CHECK constraints, catalog registration) refuse the format write
-    path loudly instead of silently bypassing enforcement."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.utils import AnalysisException
-
-    p = str(tmp_path / "w")
-    spark.range(5).select(F.col("id"), (F.col("id") % 2).alias("grp")).write.format(
-        "versioned"
-    ).mode("append").save(p)
-    # an int source over a bigint column is a legal NARROWER append
-    # since round-8 type widening — the unsafe retype (string) is what
-    # must reject
-    with pytest.raises(Exception, match="type change"):
-        spark.range(5).select(
-            F.col("id"), (F.col("id") % 2).cast("string").alias("grp")
-        ).write.format("versioned").mode("append").save(p)
-
-    t = VersionedTable(spark, p)
-    t.add_constraint("grp_nonneg", "grp >= 0")
-    v = t.latest_version()
-    with pytest.raises(Exception, match="CHECK"):
-        spark.range(5, 8).select(
-            F.col("id"), (F.col("id") % 2).alias("grp")
-        ).write.format("versioned").mode("append").save(p)
-    # constraint refusal left no new commit behind
-    assert t.latest_version() == v
-
-
-def test_stream_sink_appends_with_epoch_idempotency(spark, tmp_path):
-    """writeStream.format('versioned'): each micro-batch is one append
-    commit stamped with the epoch id in the commit's txn stats; an idle
-    restart from the same checkpoint adds no commit, and a replayed
-    epoch is a structural no-op (the exactly-once contract)."""
+def test_format_writes_are_refused(spark, tmp_path):
+    """The format is read-only: every write commits through
+    ``VersionedTable``. A batch write and a stream write through
+    ``format('versioned')`` both fail, and leave the table's version,
+    data files and change-data files as they were."""
     import os as _os
 
-    from pyspark.sql import functions as F
+    p, t = _mk(spark, tmp_path)
 
-    from nrtwithdeltalake_spark.sources.datasource import (
-        _STREAM_TXN_APP,
-        _VersionedStreamWriter,
-        _WriteResult,
-    )
+    def listing():
+        return {
+            sub: sorted(
+                _os.path.join(d, f)
+                for d, _, fs in _os.walk(_os.path.join(p, sub))
+                for f in fs
+            )
+            for sub in ("_data", "_cdf")
+        }
+
+    v, before = t.latest_version(), listing()
+    # pyspark's base DataSource raises NOT_IMPLEMENTED for "writer"
+    # and "streamWriter"; the JVM re-wraps it, so match the message
+    with pytest.raises(Exception, match="[Ww]riter is not implemented"):
+        spark.createDataFrame([(9, "z")], "id long, v string").write.format(
+            "versioned"
+        ).mode("append").save(p)
 
     src = str(tmp_path / "src")
-    tgt = str(tmp_path / "tgt")
-    ck = str(tmp_path / "ck")
-    _os.makedirs(src)
-    spark.range(10).select(F.col("id"), F.lit("a").alias("v")).coalesce(
-        1
-    ).write.parquet(f"{src}/b1.parquet")
-    stream = spark.readStream.schema("id long, v string").parquet(f"{src}/*.parquet")
-
-    def drain():
-        q = (
-            stream.writeStream.format("versioned")
-            .option("checkpointLocation", ck)
+    spark.createDataFrame([(8, "y")], "id long, v string").write.parquet(src)
+    with pytest.raises(Exception, match="[Ww]riter is not implemented"):
+        (
+            spark.readStream.schema("id long, v string")
+            .parquet(src)
+            .writeStream.format("versioned")
+            .option("checkpointLocation", str(tmp_path / "ck"))
             .trigger(availableNow=True)
-            .start(tgt)
+            .start(p)
+            .awaitTermination()
         )
-        q.awaitTermination()
-
-    drain()
-    t = VersionedTable(spark, tgt)
-    assert t.read().count() == 10
-    assert t.get_commit().stats["txn"][_STREAM_TXN_APP] == 0
-
-    spark.range(10, 25).select(F.col("id"), F.lit("b").alias("v")).coalesce(
-        1
-    ).write.parquet(f"{src}/b2.parquet")
-    drain()
-    assert t.read().count() == 25
-    assert t.latest_version() == 1
-    assert t.change_feed(-1).filter("_change_type='insert'").count() == 25
-
-    drain()  # idle restart: nothing new → no commit
-    assert t.latest_version() == 1
-
-    # replayed epoch (sink committed, engine checkpoint didn't): the
-    # driver detects batchId <= watermark and drops the replayed files
-    w = _VersionedStreamWriter(tgt, t.schema())
-    import pyarrow as pa
-
-    fake = w.write(iter([pa.record_batch({"id": pa.array([99], type=pa.int64()),
-                                          "v": pa.array(["r"])})]))
-    w.commit([fake], batchId=1)  # epoch 1 already applied
-    assert t.latest_version() == 1
-    assert t.read().filter("id = 99").count() == 0
-    assert not _os.path.exists(fake.data_file)
+    assert t.latest_version() == v
+    assert listing() == before
+    assert sorted(r.id for r in t.read().collect()) == [1, 2, 3]
 
 
 # -- pushdown / pruning ------------------------------------------------------
@@ -312,10 +194,9 @@ def test_format_pushdown_skips_pruned_files(spark, tmp_path):
     from pyspark.sql import functions as F
 
     p = str(tmp_path / "t")
-    spark.range(10_000).select(
-        F.col("id"), (F.col("id") * 2).alias("val")
-    ).write.format("versioned").mode("append").save(p)
-    t = VersionedTable(spark, p)
+    t = VersionedTable.create(
+        spark, p, spark.range(10_000).select(F.col("id"), (F.col("id") * 2).alias("val"))
+    )
     t.compact(target_file_bytes=16 * 1024, cluster_by=["id"])
     c = t.get_commit()
     fstats = c.stats["file_stats"]
@@ -412,105 +293,6 @@ def test_format_columns_option_prunes_projection(spark, tmp_path):
         )
 
 
-def test_format_overwrite_commits_new_schema(spark, tmp_path):
-    """mode('overwrite') commits the NEW dataframe's schema exactly as
-    native VersionedTable.overwrite does — dropped columns don't
-    resurrect as phantom all-null columns, and a full replace may
-    legitimately retype (ADVICE r5: datasource.py overwrite branch)."""
-    from pyspark.sql import functions as F
-
-    p = str(tmp_path / "w")
-    spark.range(10).select(
-        F.col("id"), F.lit("x").alias("v"), F.lit(1.0).alias("extra")
-    ).write.format("versioned").mode("append").save(p)
-    spark.range(3).select(
-        F.col("id").cast("int").alias("id")
-    ).write.format("versioned").mode("overwrite").save(p)
-    t = VersionedTable(spark, p)
-    got = t.read()
-    assert got.columns == ["id"]
-    assert [f.dataType.simpleString() for f in got.schema.fields] == ["int"]
-    assert got.count() == 3
-
-
-def test_stream_sink_schema_evolution_and_type_guard(spark, tmp_path):
-    """The streaming sink applies the same schema discipline as batch
-    append (ADVICE r5): added columns union-evolve into the commit
-    schema (data visible, old rows null-fill); a type change is
-    rejected loudly at commit time, not as a read-time Arrow failure."""
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from nrtwithdeltalake_spark.sources.datasource import (
-        _VersionedStreamWriter,
-    )
-
-    tgt = str(tmp_path / "tgt")
-    base = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("v", T.StringType())]
-    )
-    w0 = _VersionedStreamWriter(tgt, base)
-    m0 = w0.write(
-        iter([pa.record_batch({"id": pa.array([1], type=pa.int64()),
-                               "v": pa.array(["a"])})])
-    )
-    w0.commit([m0], batchId=0)
-
-    evolved = base.add("score", T.DoubleType())
-    w1 = _VersionedStreamWriter(tgt, evolved)
-    m1 = w1.write(
-        iter([pa.record_batch({"id": pa.array([2], type=pa.int64()),
-                               "v": pa.array(["b"]),
-                               "score": pa.array([1.5], type=pa.float64())})])
-    )
-    w1.commit([m1], batchId=1)
-    t = VersionedTable(spark, tgt)
-    got = {r.id: r.score for r in t.read().collect()}
-    assert got == {1: None, 2: 1.5}
-
-    # round 8: an UNSAFE retype (string over long — not a widening) is
-    # rejected at writer CONSTRUCTION (driver-side schema planning,
-    # before any task file is written) — strictly earlier than the old
-    # commit-time rejection. (id int would now be a legal narrower
-    # source: type widening accepts it.)
-    retyped = T.StructType(
-        [T.StructField("id", T.StringType()), T.StructField("v", T.StringType())]
-    )
-    with pytest.raises(ValueError, match="type change"):
-        _VersionedStreamWriter(tgt, retyped)
-
-
-def test_format_writers_publish_put_if_absent(spark, tmp_path):
-    """Both DataSource writers publish through the SAME os.link-based
-    put-if-absent helper as the native VersionedTable (ADVICE r5
-    medium): a racing writer that loses the link gets
-    CommitConflictError — never a silently clobbered commit."""
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    from nrtwithdeltalake_spark.pipeline.tables import CommitConflictError
-    from nrtwithdeltalake_spark.sources.datasource import _VersionedWriter
-
-    tgt = str(tmp_path / "w")
-    schema = T.StructType([T.StructField("id", T.LongType())])
-    w = _VersionedWriter(tgt, schema, overwrite=False)
-    m = w.write(iter([pa.record_batch({"id": pa.array([1], type=pa.int64())})]))
-    w.commit([m])
-
-    # the race: a second writer computed the same next version; the
-    # loser of the os.link must get CommitConflictError, not a silent
-    # rename-over (commit() funnels every publish through log.commit)
-    rec = {"version": 1, "op": "append", "files": [], "cdf_files": [],
-           "schema_json": schema.json(), "ts": 0.0, "stats": {}}
-    log.commit(log.dir_of(tgt), dict(rec))
-    with pytest.raises(CommitConflictError, match="concurrent write"):
-        log.commit(log.dir_of(tgt), dict(rec))
-    # native readers still see the winner's commit intact
-    assert VersionedTable(spark, tgt).latest_version() == 1
-
-
 def test_format_pushdown_on_renamed_column(spark, tmp_path):
     """Column mapping × pushdown: after a rename, a filter on the NEW
     name still skips files via the re-keyed committed stats AND
@@ -544,12 +326,11 @@ def test_format_pushdown_on_renamed_column(spark, tmp_path):
 
 
 def test_format_append_evolution_onto_id_mapped_table(spark, tmp_path):
-    """ROUND-8 HIGH fix (VERDICT r7 #1): a schema-evolving format append
-    into an id-mapped table must stamp the NEW column's fresh field id
-    into the task files themselves — planning from the previous commit
-    schema left the files id-free for that column, and the id-matching
-    read path silently null-filled it (native read) or crashed (format
-    read). Both read paths must return the appended data."""
+    """ROUND-8 HIGH fix (VERDICT r7 #1): a schema-evolving append into
+    an id-mapped table must stamp the NEW column's fresh field id into
+    the files it writes — files id-free for that column made the
+    id-matching read path silently null-fill it (native read) or crash
+    (format read). Both read paths must return the appended data."""
     from pyspark.sql import functions as F
 
     p = str(tmp_path / "t")
@@ -559,9 +340,11 @@ def test_format_append_evolution_onto_id_mapped_table(spark, tmp_path):
         spark.range(20).select(F.col("id"), (F.col("id") % 3).alias("grp")),
     )
 
-    spark.range(20, 25).select(
-        F.col("id"), (F.col("id") % 3).alias("grp"), (F.col("id") * 1.5).alias("score")
-    ).write.format("versioned").mode("append").save(p)
+    t.append(
+        spark.range(20, 25).select(
+            F.col("id"), (F.col("id") % 3).alias("grp"), (F.col("id") * 1.5).alias("score")
+        )
+    )
 
     # the committed schema evolved with a fresh id for 'score'…
     import json as _json
@@ -591,45 +374,6 @@ def test_format_append_evolution_onto_id_mapped_table(spark, tmp_path):
     # evolution survives a subsequent rename (pure metadata, ids stable)
     t.rename_column("score", "metric")
     assert t.read().filter("metric is not null").count() == 5
-
-
-def test_format_overwrite_keeps_column_mapping(spark, tmp_path):
-    """ROUND-8 fix (VERDICT r7 #3): format mode('overwrite') must keep
-    an id-mapped table id-mapped — same-name/same-type columns carry
-    their ids, new ones get fresh ids above the high-water mark — so a
-    later rename_column still works (it used to refuse: the overwrite
-    committed an id-stripped schema)."""
-    from pyspark.sql import functions as F
-
-    p = str(tmp_path / "t")
-    VersionedTable.create(
-        spark,
-        p,
-        spark.range(10).select(F.col("id"), F.lit("x").alias("v")),
-    )
-
-    spark.range(4).select(
-        F.col("id"), F.lit("y").alias("v"), F.lit(2.0).alias("w")
-    ).write.format("versioned").mode("overwrite").save(p)
-
-    t = VersionedTable(spark, p)
-    t.rename_column("v", "label")  # used to raise: "has no field id"
-    got = {r.id: (r.label, r.w) for r in t.read().collect()}
-    assert got == {i: ("y", 2.0) for i in range(4)}
-
-
-def test_format_create_is_id_mapped_from_birth(spark, tmp_path):
-    """Round 8: format-path CREATE mirrors native create — id-mapped
-    from birth, so rename_column works on format-created tables too."""
-    from pyspark.sql import functions as F
-
-    p = str(tmp_path / "t")
-    spark.range(6).select(F.col("id"), F.lit(1).alias("n")).write.format(
-        "versioned"
-    ).mode("append").save(p)
-    t = VersionedTable(spark, p)
-    t.rename_column("n", "count")
-    assert t.read().filter("count = 1").count() == 6
 
 
 def test_stream_reader_plans_one_partition_per_cdf_file(spark, tmp_path):
@@ -704,10 +448,9 @@ def test_stream_changes_id_matches_across_rename(spark, tmp_path):
 
 
 def test_format_append_type_widening(spark, tmp_path):
-    """Format-writer parity for safe type widening: an int→bigint /
-    float→double / decimal-growth append through
-    df.write.format('versioned') widens the commit schema; old narrow
-    files and the new wide files read back correctly on BOTH paths."""
+    """Safe type widening read through the format: an int→bigint /
+    float→double append widens the commit schema; old narrow files and
+    the new wide files read back correctly on BOTH paths."""
     from decimal import Decimal
 
     from pyspark.sql import functions as F
@@ -718,9 +461,7 @@ def test_format_append_type_widening(spark, tmp_path):
         p,
         spark.createDataFrame([(1, 10, 1.5)], "id long, n int, x float"),
     )
-    spark.createDataFrame(
-        [(2, 2**40, 2.5)], "id long, n long, x double"
-    ).write.format("versioned").mode("append").save(p)
+    t.append(spark.createDataFrame([(2, 2**40, 2.5)], "id long, n long, x double"))
 
     sch = {f.name: f.dataType.simpleString() for f in t.schema().fields}
     assert sch == {"id": "bigint", "n": "bigint", "x": "double"}
@@ -731,19 +472,15 @@ def test_format_append_type_widening(spark, tmp_path):
     }
     assert native == fmt == {1: (10, 1.5), 2: (2**40, 2.5)}
 
-    # a narrower format append into the widened table also lands
-    spark.createDataFrame([(3, 7, 3.5)], "id long, n int, x float").write.format(
-        "versioned"
-    ).mode("append").save(p)
+    # a narrower append into the widened table also lands
+    t.append(spark.createDataFrame([(3, 7, 3.5)], "id long, n int, x float"))
     assert t.read().filter("id = 3").collect()[0].n == 7
 
-    # incompatible retype still rejected at writer construction
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="type change"):
-        spark.createDataFrame([(4, "s", 1.0)], "id long, n string, x double").write.format(
-            "versioned"
-        ).mode("append").save(p)
+    # an incompatible retype is still rejected
+    with pytest.raises(Exception, match="type change"):
+        t.append(
+            spark.createDataFrame([(4, "s", 1.0)], "id long, n string, x double")
+        )
 
 
 def test_stream_max_files_per_trigger_bounds_catchup(spark, tmp_path):
@@ -868,20 +605,13 @@ def test_timestamp_as_of_time_travel(spark, tmp_path):
 
 
 def test_format_overwrite_incompatible_retype_breaks_cdf(spark, tmp_path):
-    """Format-path parity with the native break contract: a
-    df.write.format('versioned').mode('overwrite') that retypes a
-    column incompatibly (string → bigint) commits with NO CDF files
-    and the cdf_schema_break flag (its task-written insert images are
-    deleted — a half-feed would mislead consumers); a streaming tail
-    crossing the break fails loudly."""
-    import json as _json
-
-    from nrtwithdeltalake_spark.pipeline.tables import VersionedTable
-
+    """The format's change-feed stream honours the break contract: an
+    overwrite that retypes a column incompatibly (string → bigint)
+    commits with NO CDF files and the cdf_schema_break flag (a
+    half-feed would mislead consumers); a streaming tail crossing the
+    break fails loudly."""
     p, t = _mk(spark, tmp_path)  # v0 create, v1 append (id long, v string)
-    spark.createDataFrame([(1, 7)], "id long, v long").write.format(
-        "versioned"
-    ).mode("overwrite").option("path", p).save()
+    t.overwrite(spark.createDataFrame([(1, 7)], "id long, v long"))
     c = t.get_commit(2)
     assert c.stats.get("cdf_schema_break") is True
     assert c.cdf_files == []
@@ -903,9 +633,7 @@ def test_format_overwrite_incompatible_retype_breaks_cdf(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="incompatible schema change"):
+    with pytest.raises(Exception, match="incompatible schema change"):
         q.awaitTermination()
 
 
@@ -1098,22 +826,6 @@ def test_stream_initial_snapshot_available_now_drains_with_budget(
     assert sorted(rows) == list(range(8))
 
 
-def test_format_write_allowed_after_unbinding_sidecars(spark, tmp_path):
-    """Dropping the last constraint/generated column leaves an empty
-    sidecar file — the format writers must look at content, not
-    existence."""
-    p = str(tmp_path / "t")
-    t = VersionedTable.create(
-        spark, p, spark.createDataFrame([(1, 100)], "id long, cents long")
-    )
-    t.add_constraint("c_pos", "cents > 0")
-    t.drop_constraint("c_pos")
-    spark.createDataFrame([(2, 200)], "id long, cents long").write.format(
-        "versioned"
-    ).mode("append").save(p)
-    assert VersionedTable(spark, p).read().count() == 2
-
-
 def test_stream_max_bytes_per_trigger_bounds_catchup(spark, tmp_path):
     """maxBytesPerTrigger (Delta's byte-budget twin of
     maxFilesPerTrigger): backlog catch-up admits commits only up to the
@@ -1239,50 +951,3 @@ def test_snapshot_byte_budget_resolves_commit_once_per_trigger(
         assert triggers < 100
     assert triggers >= 2  # budget actually sliced the snapshot
 
-
-def test_format_write_refuses_identity_table(spark, tmp_path):
-    """A format('versioned') append cannot assign identity values. It
-    used to commit the row with a NULL id and drop the committed
-    high-water, so the next native append reissued ids 1 and 2; it must
-    refuse the table instead, leaving the allocation intact."""
-    p = str(tmp_path / "ident")
-    t = VersionedTable.create(
-        spark, p, spark.createDataFrame([], "s string"), identity={"id": (1, 1)}
-    )
-    t.append(spark.createDataFrame([("a",), ("b",), ("c",)], "s string"))
-    with pytest.raises(Exception, match="identity"):
-        spark.createDataFrame([("d",)], "s string").write.format(
-            "versioned"
-        ).mode("append").save(p)
-    t.append(spark.createDataFrame([("e",), ("f",)], "s string"))
-    rows = sorted((r.id, r.s) for r in t.read().collect())
-    assert rows == [(1, "a"), (2, "b"), (3, "c"), (4, "e"), (5, "f")]
-    assert t.get_commit().stats["identity"] == {"id": 5}
-
-
-def test_format_writers_recheck_metadata_at_commit(spark, tmp_path):
-    """A constraint added while a format write is in flight binds that
-    write: both writers re-check the metadata of the commit they publish
-    on, so the violating rows never land."""
-    import pyarrow as pa
-
-    from nrtwithdeltalake_spark.sources.datasource import (
-        _VersionedStreamWriter,
-        _VersionedWriter,
-    )
-
-    p, t = _mk(spark, tmp_path)
-    v = t.latest_version()
-    batch = pa.record_batch(
-        {"id": pa.array([-5], type=pa.int64()), "v": pa.array(["x"])}
-    )
-    w = _VersionedWriter(p, t.schema(), overwrite=False)
-    s = _VersionedStreamWriter(p, t.schema())
-    mw, ms = w.write(iter([batch])), s.write(iter([batch]))
-    t.add_constraint("id_pos", "id > 0")  # the DDL lands in between
-    with pytest.raises(ValueError, match="check_constraints"):
-        w.commit([mw])
-    with pytest.raises(ValueError, match="check_constraints"):
-        s.commit([ms], 0)
-    assert t.latest_version() == v + 1
-    assert t.read().filter("id < 0").count() == 0

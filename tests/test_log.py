@@ -1,11 +1,13 @@
 """The log layer's carry rules (``pipeline/log.py::prepare``) on plain
 dict records, and its table-metadata reads on hand-written log files —
-no SparkSession. Every commit writer (the native ``VersionedTable`` and
-both ``versioned`` DataSource writers) publishes through ``prepare``,
-so these rules hold for all of them."""
+no SparkSession. The one commit writer, ``VersionedTable``, publishes
+through ``prepare``, so these rules hold for every commit. Also the
+layering rule that keeps ``pipeline/`` free of ``sources/``."""
 
 from __future__ import annotations
 
+import ast
+import glob
 import json
 import os
 
@@ -246,3 +248,33 @@ def test_txn_watermarks_carry_as_a_per_app_max():
     assert rec["stats"]["txn"] == {"a": 3, "b": 7}
     rec = log.prepare(prev, _rec(5, stats={"txn": {"b": 2, "c": 1}}))
     assert rec["stats"]["txn"] == {"a": 3, "b": 7, "c": 1}
+
+
+def test_pipeline_imports_nothing_from_sources():
+    """``pipeline/`` is the engine and ``sources/`` reads through it,
+    never the other way round: the per-file Arrow reader and writer the
+    engine shares with the ``versioned`` DataSource live in
+    ``pipeline/files.py``."""
+    pkg = os.path.dirname(os.path.dirname(os.path.abspath(log.__file__)))
+    bad = []
+    for path in sorted(glob.glob(os.path.join(pkg, "pipeline", "*.py"))):
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.level in (0, 2):
+                # ``from ..sources.x import y``, ``from .. import sources``
+                # or the absolute spellings of either
+                pkg_level = node.module in (None, "nrtwithdeltalake_spark")
+                names = [node.module or ""] + (
+                    [a.name for a in node.names] if pkg_level else []
+                )
+            elif isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            else:
+                continue
+            if any(
+                n.removeprefix("nrtwithdeltalake_spark.").split(".")[0] == "sources"
+                for n in names
+            ):
+                bad.append(f"{os.path.basename(path)}:{node.lineno}")
+    assert not bad, f"pipeline/ imports from sources/: {bad}"

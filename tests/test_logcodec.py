@@ -141,25 +141,6 @@ def test_encoded_log_roundtrips_every_op_and_reader(spark, tmp_path):
     assert {r.id: r.g for r in t.read().collect()} == want
 
 
-def test_format_writer_delta_encodes_too(spark, tmp_path):
-    ds.register(spark)
-    p = str(tmp_path / "t")
-    t = VersionedTable.create(
-        spark,
-        p,
-        spark.range(32).select(F.col("id")).repartition(8),
-    )
-    spark.createDataFrame([(900,)], "id long").write.format("versioned").mode(
-        "append"
-    ).save(p)
-    raw = _raw(t, 1)
-    assert "files" not in raw and raw["files_base"] == 0
-    assert t.read().count() == 33
-    assert (
-        spark.read.format("versioned").option("path", p).load().count() == 33
-    )
-
-
 def test_legacy_full_list_log_reads_unchanged(spark, tmp_path):
     """A log written before the codec (full lists everywhere) needs no
     migration — and new commits on top of it delta-encode."""

@@ -953,22 +953,20 @@ def test_rename_requires_column_mapping_with_upgrade_path(spark, tmp_path):
     """A genuinely legacy table (committed before column mapping, so its
     schema carries no field ids) refuses rename with actionable
     guidance; one self-overwrite assigns ids and unlocks it — the
-    upgrade path. Since round 8 the format writer is id-mapped from
-    birth, so the legacy state is simulated by stripping the ids out of
-    the commit record, exactly what a pre-mapping commit looked like."""
+    upgrade path. Every writer is id-mapped from birth, so the legacy
+    state is simulated by stripping the ids out of the commit record,
+    exactly what a pre-mapping commit looked like."""
     import json as _json
 
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     from nrtwithdeltalake_spark.pipeline import log
-    from nrtwithdeltalake_spark.sources import datasource as ds
 
-    ds.register(spark)
     p = str(tmp_path / "legacy")
-    spark.range(5).select(F.col("id"), F.lit("x").alias("v")).write.format(
-        "versioned"
-    ).mode("append").save(p)
+    VersionedTable.create(
+        spark, p, spark.range(5).select(F.col("id"), F.lit("x").alias("v"))
+    )
     # simulate a pre-column-mapping commit: strip field ids from the log
     v = log.latest_version_in(log.dir_of(p))
     cpath = log.commit_path(log.dir_of(p), v)
@@ -996,8 +994,8 @@ def test_rename_requires_column_mapping_with_upgrade_path(spark, tmp_path):
 def test_rename_visible_through_format_and_format_appends(spark, tmp_path):
     """Interop after rename: the registered 'versioned' format reads the
     renamed column BY FIELD ID from pre-rename files (pyarrow path), and
-    a format-writer append lands id-stamped files the native reader
-    unions correctly."""
+    an append after the rename lands id-stamped files both readers
+    union correctly."""
     from pyspark.sql import functions as F
 
     from nrtwithdeltalake_spark.sources import datasource as ds
@@ -1020,9 +1018,7 @@ def test_rename_visible_through_format_and_format_appends(spark, tmp_path):
     )
     assert sorted(r.label for r in only.collect()) == ["a", "b"]
 
-    spark.range(7, 9).select(
-        F.col("id"), F.lit("z").alias("label")
-    ).write.format("versioned").mode("append").save(p)
+    t.append(spark.range(7, 9).select(F.col("id"), F.lit("z").alias("label")))
     got = {r.id: r.label for r in t.read().collect()}
     assert got == {1: "a", 2: "b", 7: "z", 8: "z"}
 
@@ -1858,14 +1854,7 @@ def test_generated_column_guards_rename_drop_and_format(spark, tmp_path):
         t.rename_column("cents", "pennies")
     with pytest.raises(ValueError, match="generated"):
         t.drop_column("cents")
-    from nrtwithdeltalake_spark.sources import datasource as _ds
-
-    _ds.register(spark)
-    with pytest.raises(Exception, match="generated"):
-        spark.createDataFrame([(9, 900)], "id long, cents long").write.format(
-            "versioned"
-        ).mode("append").save(t.path)
-    # unbinding re-opens all three paths
+    # unbinding re-opens the rename
     t.drop_generated_column("dollars")
     t.rename_column("cents", "pennies")
 
