@@ -12,7 +12,8 @@ Delta keeps transaction state in a log the driver reads and writes
 (VLDB 2020 §3): the latest-committed-watermark resolution is the
 reference's entitiesSQL (O11-O19, ``COPY_MSQL_TO_SILVER.py:223-249``)
 computed in Python over the latest snapshot read with the format's
-per-file pyarrow reader (``pipeline/files.py``), both tables are created
+per-file pyarrow reader (``pipeline/files.py``; each live file is read
+once per ``ConfigStore``), both tables are created
 from empty pyarrow tables and entity and ledger rows appended as pyarrow
 tables, through ``VersionedTable.create`` and ``VersionedTable.append``.
 """
@@ -88,16 +89,6 @@ def _arrow_row(schema: T.StructType, values: dict):
     return pa.Table.from_pylist([row], schema=to_arrow_schema(schema))
 
 
-def _read_rows(path: str) -> list[dict]:
-    """A table's latest snapshot as Python rows, read on the driver by
-    the format's per-file reader (field-id column mapping and
-    deletion-vector masking included)."""
-    log_dir = log.dir_of(path)
-    c = log.read_commit(log_dir, log.latest_version_in(log_dir), where=f"{path}: ")
-    schema = T.StructType.fromJson(json.loads(c.schema_json))
-    return VersionedTable._arrow_files(c.files, schema, c.dv_files).to_pylist()
-
-
 class ConfigStore:
     """Owns the entities + watermarks tables under ``root``."""
 
@@ -110,6 +101,9 @@ class ConfigStore:
         # thread pool) all append to the single watermarks table, whose
         # commit log allows one writer per version.
         self._ledger_lock = threading.Lock()
+        # table path -> {(file, schema_json, dv_files): the file's rows as
+        # Arrow} for the live files of the latest commit read (``_rows``)
+        self._file_rows: dict[str, dict[tuple, object]] = {}
 
     def init(self) -> None:
         """Both control tables are born with their surrogate key as a
@@ -259,6 +253,26 @@ class ConfigStore:
 
     # -- watermark resolution (O11-O19) ------------------------------------
 
+    def _rows(self, path: str) -> list[dict]:
+        """A table's latest snapshot as Python rows, read on the driver by
+        the format's per-file reader (field-id column mapping and
+        deletion-vector masking included). The latest commit is read on
+        every call; its files are immutable, so each one is read once
+        per store and schema and deletion-vector set, and a call reads
+        only the files committed since the previous one."""
+        log_dir = log.dir_of(path)
+        c = log.read_commit(log_dir, log.latest_version_in(log_dir), where=f"{path}: ")
+        cached = self._file_rows.get(path, {})
+        live = {}
+        for f in c.files:
+            key = (f, c.schema_json, tuple(c.dv_files))
+            if key not in cached:
+                schema = T.StructType.fromJson(json.loads(c.schema_json))
+                cached[key] = VersionedTable._arrow_files([f], schema, c.dv_files)
+            live[key] = cached[key]
+        self._file_rows[path] = live  # files no longer live drop out
+        return [r for t in live.values() for r in t.to_pylist()]
+
     def entities_with_watermarks(self) -> list[Row]:
         """The reference's entitiesSQL (COPY_MSQL_TO_SILVER.py:223-249),
         computed on the driver with no Spark job: each entity (ordered
@@ -268,7 +282,7 @@ class ConfigStore:
         sentinel defaults as COALESCE → O16; per-type choice as CASE
         WHEN → O15)."""
         latest: dict = {}
-        for w in _read_rows(self.watermarks_path):
+        for w in self._rows(self.watermarks_path):
             if w["LoadEndDatetime"] is None:
                 continue
             # DESC NULLS LAST: a null ranks below every value
@@ -278,7 +292,7 @@ class ConfigStore:
             if cur is None or w["rank"] > cur["rank"]:
                 latest[w["EntityId"]] = w
         out = []
-        for e in sorted(_read_rows(self.entities_path), key=lambda e: e["EntityId"]):
+        for e in sorted(self._rows(self.entities_path), key=lambda e: e["EntityId"]):
             wm = latest.get(e["EntityId"], {})
             date_wm, ct_wm = wm.get("DateWatermark"), wm.get("CTWatermark")
             out.append(

@@ -19,6 +19,7 @@ these functions, so both read a file the same way.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 from dataclasses import dataclass
@@ -239,22 +240,34 @@ def _dictionary_columns(tbl) -> list[str]:
     default would."""
     import pyarrow as pa
     import pyarrow.compute as pc
+
+    out = []
+    for paths, col in zip(_leaf_paths(tbl.schema), tbl.columns):
+        try:
+            worth = 2 * pc.count_distinct(col).as_py() <= tbl.num_rows
+        except pa.ArrowNotImplementedError:
+            worth = True
+        if worth:
+            out += paths
+    return out
+
+
+@functools.lru_cache(maxsize=256)
+def _leaf_paths(schema) -> tuple[tuple[str, ...], ...]:
+    """Each field's parquet leaf column paths, as pyarrow writes
+    ``schema``: read back from an empty file's footer, once per schema."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     def leaves(t) -> int:
         return sum(leaves(t.field(i).type) for i in range(t.num_fields)) or 1
 
     buf = pa.BufferOutputStream()
-    pq.write_table(tbl.schema.empty_table(), buf)
+    pq.write_table(schema.empty_table(), buf)
     paths = pq.read_metadata(pa.BufferReader(buf.getvalue())).schema
     out, i = [], 0
-    for fld, col in zip(tbl.schema, tbl.columns):
+    for fld in schema:
         n = leaves(fld.type)
-        try:
-            worth = 2 * pc.count_distinct(col).as_py() <= tbl.num_rows
-        except pa.ArrowNotImplementedError:
-            worth = True
-        if worth:
-            out += [paths.column(j).path for j in range(i, i + n)]
+        out.append(tuple(paths.column(j).path for j in range(i, i + n)))
         i += n
-    return out
+    return tuple(out)

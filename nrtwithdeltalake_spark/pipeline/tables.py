@@ -37,7 +37,7 @@ import time
 import uuid
 from typing import TYPE_CHECKING
 
-from . import log
+from . import log, predicate
 from .files import _arrow_batches, _FilePartition, _ids_of, _write_arrow_files
 from .log import (
     FIELD_ID,
@@ -3080,11 +3080,11 @@ class VersionedTable:
         (``_merge_arrow``): a DataFrame whose deduped plan's
         ``sizeInBytes`` is at most ``spark.sql.autoBroadcastJoinThreshold``
         — Spark's own rule for a relation small enough to ship whole
-        (``-1`` disables it) — collected once as Arrow, or a
-        ``pyarrow.Table`` source whose ``nbytes`` is at most it, deduped
-        and aligned on the driver with no Spark job (``_arrow_source``;
-        Spark evaluates ``delete_condition`` over it as a local
-        relation, which runs no job). The driver pairs the batch with the
+        (``-1`` disables it), read once per merge — collected once as
+        Arrow, or a ``pyarrow.Table`` source whose ``nbytes`` is at most
+        it, deduped and aligned on the driver with no Spark job and,
+        for a ``delete_condition`` in ``pipeline/predicate.py``'s set,
+        no JVM call (``_arrow_source``). The driver pairs the batch with the
         target and writes the change-feed images with the format's
         pyarrow writer. When the probe's candidate files
         (``_key_range_files``) total at most the same threshold on disk,
@@ -3120,10 +3120,12 @@ class VersionedTable:
 
         The result and the commit's stats carry ``rows_inserted``,
         ``rows_updated``, ``rows_deleted`` (Delta's operation metrics),
-        ``images`` ("driver" | "spark", the path that paired the rows)
-        and ``rewrite`` ("driver" | "spark", the one that probed and
-        rewrote the target's files); ``load_entity`` adds ``extract``
-        (the path that read its batch) through ``extra_stats``.
+        ``images`` ("driver" | "spark", the path that paired the rows),
+        ``rewrite`` ("driver" | "spark", the one that probed and
+        rewrote the target's files) and, with a ``delete_condition``,
+        ``condition`` ("driver" | "spark", where it was evaluated);
+        ``load_entity`` adds ``extract`` (the path that read its batch)
+        through ``extra_stats``.
 
         ``exclude_cols``: marker columns (e.g. an op flag feeding
         ``delete_condition`` or ``dedup_order_col``) consumed here but
@@ -3226,10 +3228,12 @@ class VersionedTable:
                 f"column(s) {bad_assign}"
             )
         pairable = not (ident_defs or nmbs_active or matched_update_condition)
+        # read once: the batch's gate and the candidate files' gate
+        limit = self._broadcast_limit() if pairable else -1
 
         def commit(
             schema, new_files, cdf_files, touched, probe_files, key_rows,
-            counts, ident_last=None,
+            counts, ident_last=None, condition="spark",
         ) -> dict:
             # the publish both paths share; key_rows() gives the batch's
             # keys, needed only to rebase over a concurrent commit
@@ -3243,7 +3247,12 @@ class VersionedTable:
                 )
 
             touched_set = set(touched)
-            own = {"touched_files": len(touched), **counts, **(extra_stats or {})}
+            own = {
+                "touched_files": len(touched),
+                **counts,
+                **({"condition": condition} if delete_condition else {}),
+                **(extra_stats or {}),
+            }
             if ident_last:
                 own["identity"] = dict(ident_last)
             v, stats = self._publish(
@@ -3284,11 +3293,15 @@ class VersionedTable:
             # converts one
             prepared = pairable and self._arrow_source(
                 prev, source, keys, delete_condition, dedup_order_col,
-                exclude_cols,
+                exclude_cols, limit,
             )
             if prepared:
-                batch, schema = prepared
-                return commit(schema, **self._merge_arrow(prev, batch, schema, keys))
+                batch, schema, condition = prepared
+                return commit(
+                    schema,
+                    **self._merge_arrow(prev, batch, schema, keys, limit),
+                    condition=condition,
+                )
             source = self.spark.createDataFrame(source)
         # evaluate the delete predicate on the source BEFORE the join so
         # column references stay unambiguous
@@ -3320,10 +3333,12 @@ class VersionedTable:
 
         # 0. a small batch pairs on the driver (``_merge_arrow``); a NULL
         #    key, which eqNullSafe matches, keeps it on the Spark path
-        if pairable and self._driver_mergeable(prev, src, keys):
+        if pairable and self._driver_mergeable(prev, src, keys, limit):
             batch = src.toArrow()
             if not any(batch.column(k).null_count for k in keys):
-                return commit(schema, **self._merge_arrow(prev, batch, schema, keys))
+                return commit(
+                    schema, **self._merge_arrow(prev, batch, schema, keys, limit)
+                )
         src = src.cache()
 
         # 1. touched files: semi-join target rows against source keys on
@@ -3650,16 +3665,21 @@ class VersionedTable:
         delete_condition: str | None,
         dedup_order_col: str | None,
         exclude_cols: list[str] | None,
-    ) -> tuple[pa.Table, T.StructType] | None:
+        limit: int,
+    ) -> tuple[pa.Table, T.StructType, str] | None:
         """An Arrow merge source made ``_merge_arrow``'s batch on the
         driver, with the merged schema: deduped as the Spark path dedups,
         aligned to that schema, with ``__is_delete``. None when it must
         take the Spark path: the table binds a rule the driver can't
         apply (``_driver_writable``), a key has a type Arrow can't pair
         (``_driver_key``) or a NULL, or ``tbl.nbytes`` is above
-        ``spark.sql.autoBroadcastJoinThreshold``. ``delete_condition``
-        keeps its SQL meaning: Spark evaluates it over the rows as a
-        local relation, whose collect runs no job."""
+        ``limit`` (``spark.sql.autoBroadcastJoinThreshold``). The third
+        value names where ``delete_condition`` ran: "driver" when
+        ``pipeline/predicate.py`` evaluates it in Arrow (the string
+        parsed by Spark once per process, then no JVM call), otherwise
+        "spark": Spark filters the rows as a local relation, whose
+        collect runs no job. Both keep its SQL meaning,
+        ``coalesce(cond, false)``."""
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -3673,20 +3693,27 @@ class VersionedTable:
             self._driver_writable(prev)
             and all(_driver_key(types[k].dataType) for k in keys)
             and not any(tbl.column(k).null_count for k in keys)
-            and tbl.nbytes <= self._broadcast_limit()
+            and tbl.nbytes <= limit
         ):
             return None
         deletes = np.zeros(tbl.num_rows, dtype=bool)
+        condition = "driver"
         if delete_condition and tbl.num_rows:
-            # only the deleting rows' positions come back as Python rows
-            pos = pa.array(np.arange(tbl.num_rows))
-            rows = (
-                self.spark.createDataFrame(tbl.append_column("__pos", pos))
-                .filter(F.expr(delete_condition))
-                .select("__pos")
-                .collect()
-            )
-            deletes[[r[0] for r in rows]] = True
+            hits = predicate.mask(predicate.parse(self.spark, delete_condition), tbl)
+            if hits is None:
+                # Spark's filter: only the deleting rows' positions come
+                # back as Python rows
+                condition = "spark"
+                pos = pa.array(np.arange(tbl.num_rows))
+                rows = (
+                    self.spark.createDataFrame(tbl.append_column("__pos", pos))
+                    .filter(F.expr(delete_condition))
+                    .select("__pos")
+                    .collect()
+                )
+                deletes[[r[0] for r in rows]] = True
+            else:
+                deletes = hits
         tbl = tbl.append_column("__is_delete", pa.array(deletes))
         # the latest row per key by ``dedup_order_col`` (descending, NULLs
         # last), a delete below the key's other rows on a tie: the first
@@ -3708,10 +3735,11 @@ class VersionedTable:
         rows = tbl.drop_columns(["__is_delete"])
         schema = self._merged_schema(prev, spark_schema(rows))
         batch = _align_arrow_by_id(rows, spark_schema(rows), schema)
-        return batch.append_column("__is_delete", tbl.column("__is_delete")), schema
+        batch = batch.append_column("__is_delete", tbl.column("__is_delete"))
+        return batch, schema, condition
 
     def _driver_mergeable(
-        self, prev: Commit, src: DataFrame, keys: list[str]
+        self, prev: Commit, src: DataFrame, keys: list[str], limit: int
     ) -> bool:
         """True when a merge may pair its deduped batch ``src`` on the
         driver (the caller rules out identity columns and the clauses
@@ -3735,7 +3763,7 @@ class VersionedTable:
         except Exception:  # noqa: BLE001 - any type Arrow can't carry
             return False
         size = src._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        return 0 <= int(size) <= self._broadcast_limit()
+        return 0 <= int(size) <= limit
 
     def _broadcast_limit(self) -> int:
         """``spark.sql.autoBroadcastJoinThreshold`` in bytes (``-1``:
@@ -3744,7 +3772,12 @@ class VersionedTable:
         return int(jss.sessionState().conf().autoBroadcastJoinThreshold())
 
     def _merge_arrow(
-        self, prev: Commit, batch: pa.Table, schema: T.StructType, keys: list[str]
+        self,
+        prev: Commit,
+        batch: pa.Table,
+        schema: T.StructType,
+        keys: list[str],
+        limit: int,
     ) -> dict:
         """The small-batch merge (see ``merge``). ``batch`` is the
         deduped, aligned source with ``__is_delete``, collected once or
@@ -3791,7 +3824,7 @@ class VersionedTable:
                 {k: _min_max(rows.column(k)) for k in keys},
             )
         on_driver = (
-            sum(os.path.getsize(f) for f in probe_files) <= self._broadcast_limit()
+            sum(os.path.getsize(f) for f in probe_files) <= limit
         )
         # ``old`` holds target rows, at least every matched one;
         # ``file_of`` is each row's index in ``probe_files``

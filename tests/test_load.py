@@ -8,11 +8,13 @@ the failure cases: a crash at each kill point converges on the next run
 without re-merging, a source commit racing a load lands on the next
 load, and two config stores racing one batch apply it once. Then the
 extraction on the driver: a steady-state cycle and an onboarding start
-no Spark job, the driver and Spark extractions give the same loads and
-bootstrap commits, and a CT load after a source overwrite keeps every
-row. Last, the control plane on the driver: it starts no Spark job,
-resolves as the entitiesSQL query does, keeps the ledger compacted, and
-writes rows that read back the same through every reader. Tier-1: these run in the default (fast) tier."""
+no Spark job, a steady cycle makes at most 13 py4j calls, the driver and
+Spark extractions give the same loads and bootstrap commits, and a CT
+load after a source overwrite keeps every row. Last, the control plane
+on the driver: it starts no Spark job, resolves as the entitiesSQL query
+does, reads only the ledger files committed since its previous call,
+keeps the ledger compacted, and writes rows that read back the same
+through every reader. Tier-1: these run in the default (fast) tier."""
 
 from __future__ import annotations
 
@@ -28,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from nrtwithdeltalake_spark.pipeline import incremental
+from nrtwithdeltalake_spark.pipeline import incremental, predicate
 from nrtwithdeltalake_spark.pipeline.config import (
     DEFAULT_CT_WM,
     DEFAULT_DATE_WM,
@@ -503,6 +505,24 @@ def test_steady_state_cycle_starts_no_spark_job(spark, roots):
     _assert_converged_b2(spark, store, roots)
 
 
+def test_steady_state_cycle_py4j_calls(spark, roots):
+    """A steady cycle calls the JVM only to read ``THRESHOLD`` once per
+    merge and once per extraction (3 calls each) and the session time
+    zone once (TMSTP): at most 13 calls for 2 entities. The merges
+    evaluate their delete condition in Arrow; Spark parses it once per
+    process, which the cycle after the first finds done."""
+    store = _bootstrapped_batch2(spark, roots)
+    predicate.parse(spark, f"{incremental.SYNC_OP} = 'D'")
+    n, res = _py4j_calls_during(
+        spark, lambda: run_pipeline(spark, store, roots[0], roots[1])
+    )
+    assert n <= 13, f"{n} py4j calls"
+    assert [(r.action, r.merge["condition"]) for r in res] == [
+        ("incremental", "driver")
+    ] * 2
+    _assert_converged_b2(spark, store, roots)
+
+
 def test_onboarding_starts_no_spark_job(spark, roots):
     """Adding entities runs on the driver end to end: the config store's
     empty tables, a small source created from Arrow, the registrations
@@ -751,6 +771,29 @@ def _jobs_during(spark, fn):
     return _last_job(spark) - before, out
 
 
+def _py4j_calls_during(spark, fn):
+    """(py4j commands the driver sent the JVM while ``fn`` ran, its
+    result). The memory commands py4j's finalizer thread sends for
+    Python references already dropped are not counted."""
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = 0
+
+    def counted(command, *args, **kwargs):
+        nonlocal calls
+        calls += not command.startswith(MEMORY_COMMAND_NAME)
+        return send(command, *args, **kwargs)
+
+    client.send_command = counted
+    try:
+        out = fn()
+    finally:
+        client.send_command = send
+    return calls, out
+
+
 def _spark_resolution(store):
     """The entitiesSQL as a DataFrame query: the oracle for the driver
     resolution (O11-O19)."""
@@ -869,6 +912,47 @@ def test_ledger_compaction_keeps_resolution(spark, roots):
         (None, f"2030-01-01 00:00:{incremental.LEDGER_MAX_FILES - 2:02d}"),
     ]
     assert sorted(r.WatermarkId for r in ledger.read().collect()) == ids
+
+
+def test_ledger_resolution_reads_only_new_files(spark, roots, monkeypatch):
+    """Resolution reads each ledger file once per store: after N closed
+    loads a call reads just the N new files, and it resolves as a fresh
+    store does, also after another store's append and after a
+    compaction replaced the files."""
+    store = _bootstrapped_batch2(spark, roots)
+    ct = _entity(store, "CT").EntityId
+    ledger = store.watermarks
+    read = []
+    arrow_files = VersionedTable._arrow_files
+
+    def spy(files, *args, **kwargs):
+        read.extend(files)
+        return arrow_files(files, *args, **kwargs)
+
+    monkeypatch.setattr(VersionedTable, "_arrow_files", staticmethod(spy))
+
+    def resolve_after(change):
+        before = set(ledger.get_commit().files)
+        change()
+        read.clear()
+        got = store.entities_with_watermarks()
+        assert sorted(read) == sorted(set(ledger.get_commit().files) - before)
+        assert got == ConfigStore(spark, roots[2]).entities_with_watermarks()
+        return [r.CTWatermark for r in got if r.EntityId == ct]
+
+    def close(s, *wms):
+        for wm in wms:
+            s.close_watermark(s.open_watermark(ct, None, wm))
+
+    store.entities_with_watermarks()
+    assert resolve_after(lambda: close(store, 11)) == [11]
+    assert resolve_after(lambda: close(store, 12, 13, 14)) == [14]
+    other = ConfigStore(spark, roots[2])
+    assert resolve_after(lambda: close(other, 15)) == [15]
+    assert resolve_after(
+        lambda: ledger.compact(small_file_bytes=incremental.LEDGER_SMALL_FILE_BYTES)
+    ) == [15]
+    assert ledger.get_commit().op == "compact" and read
 
 
 def _by_id(rows, key):

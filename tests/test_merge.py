@@ -13,8 +13,10 @@ count of a pipeline that keeps merging, a table left with no file, a
 table created from Arrow on the driver, the config store's idempotent
 ``init``, and the core merge semantics: txn tokens (a replay is a
 no-op, for an Arrow batch too), time travel and the change feed, the
-touched-file rewrite, the latest-per-key oracle (on both paths) and
-NULL keys.
+touched-file rewrite, the latest-per-key oracle (on both paths), NULL
+keys and a NULL matched-update condition. Last, the delete condition on
+the driver: its Arrow translation against Spark's
+``filter(coalesce(cond, false))``, and the conditions left to Spark.
 """
 
 from __future__ import annotations
@@ -26,10 +28,12 @@ from collections import Counter
 import pyarrow as pa
 import pytest
 from hypothesis import given, settings, strategies as st
+from pyspark.errors import ParseException
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from nrtwithdeltalake_spark.pipeline import predicate
 from nrtwithdeltalake_spark.pipeline.config import ConfigStore
 from nrtwithdeltalake_spark.pipeline.incremental import run_pipeline
 from nrtwithdeltalake_spark.pipeline.tables import (
@@ -714,3 +718,197 @@ def test_merge_null_key_is_updated_not_duplicated(spark, tmp_path):
         [(None, "x2"), (1, "a"), (2, "b")], key=str
     )
     assert len(rows) == 3, f"duplicate produced: {rows}"
+
+
+def test_merge_matched_condition_null_is_false(spark, tmp_path):
+    """A NULL condition result keeps the target row (SQL WHEN semantics)."""
+    t = VersionedTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame([(1, "keep", None)], "id long, v string, seq long"),
+    )
+    t.merge(
+        spark.createDataFrame([(1, "new", 5)], "id long, v string, seq long"),
+        ["id"],
+        matched_update_condition="s.seq > t.seq",  # 5 > NULL → NULL → skip
+    )
+    assert t.read().collect()[0].v == "keep"
+
+
+# -- the delete condition on the driver ----------------------------------------
+
+_UTC = datetime.timezone.utc
+_COND_ROWS = pa.table(
+    {
+        "s": ["D", "U", None, "I", "d", "M", "D", None, "z", "", "D", "U"],
+        "i": pa.array(
+            [1, 2, None, 3, 1, None, -5, 2, 2**63 - 1, 0, 1, 3], pa.int64()
+        ),
+        "j": pa.array([1, 2, None, None, 0, 1, 2, 3, 4, 5, -1, None], pa.int32()),
+        "f": [1.0, 2.5, None, -0.0, 0.0, 2.0, 1e308, None, -1.5, 3.0, 1.0, 2.0],
+        "g": pa.array(
+            [1.0, 1.5, None, 0.1, 2.0, -1.0, 1.25, None, 3.0, 0.0, 1.5, 2.5],
+            pa.float32(),
+        ),
+        "b": [True, False, None, True, None, False]
+        + [True, False, None, True, False, True],
+        "ts": pa.array(
+            [datetime.datetime(2024, 1, 1 + k % 3, tzinfo=_UTC) for k in range(11)]
+            + [None],
+            pa.timestamp("us", "UTC"),
+        ),
+    }
+)
+# conditions the driver evaluates: strings, integers, doubles, floats and
+# booleans with NULLs, IN lists with a NULL, NULL literals, and nested
+# AND/OR/NOT in three-valued logic
+_DRIVER_CONDITIONS = [
+    "s = 'D'",
+    "'D' = s",
+    "s <> 'D'",
+    "s != 'D'",
+    "s < 'M'",
+    "s >= 'd'",
+    "s <=> 'D'",
+    "s <=> NULL",
+    "NULL <=> s",
+    "s = NULL",
+    "s IN ('D', 'U')",
+    "s IN ('D', NULL)",
+    "s NOT IN ('D', NULL)",
+    "s NOT IN ('D', '')",
+    "s IS NULL",
+    "s IS NOT NULL",
+    "i = 1",
+    "i > 1L",
+    "i <= 2.5D",
+    "i = 9.223372036854776E18D",
+    "i IN (1, 3, NULL)",
+    "i NOT IN (1, 2)",
+    "i IN (2, 2.5D)",
+    "i <=> 2",
+    "j < i",
+    "i <=> j",
+    "j >= 2Y",
+    "j IN (1S, 3)",
+    "f > 1",
+    "f = 0.0D",
+    "f IN (1e0, 2.5D, NULL)",
+    "f <= j",
+    "g < 1.5F",
+    "g = 1.25D",
+    "g <> f",
+    "b",
+    "NOT b",
+    "b = true",
+    "b < true",
+    "b <=> NULL",
+    "b AND NULL",
+    "b OR NULL",
+    "NOT NULL",
+    "b AND s = 'D'",
+    "b OR s = 'D'",
+    "NOT (b OR i > 1)",
+    "(s = 'D' AND i IS NULL) OR (NOT b AND f < 2)",
+    "NOT (s IN ('D', NULL) AND (b OR g > 1D)) OR i <=> NULL",
+    "ts IS NULL",
+    "1 = 1",
+    "NULL = NULL",
+    "NULL <=> NULL",
+    "false",
+]
+# conditions Spark keeps: a function, a timestamp against a string, a
+# name that matches only ignoring case, a string against a number, a
+# decimal literal, an integral against a FLOAT, a cast, arithmetic
+_SPARK_CONDITIONS = [
+    "upper(s) = 'D'",
+    "ts < '2024-01-02'",
+    "S = 'D'",
+    "s = 1",
+    "f = 1.5",
+    "i = 1.5F",
+    "cast(i AS string) = '1'",
+    "i + 1 = 2",
+]
+
+
+def _spark_filter(spark, tbl, cond):
+    """Spark's rows of ``tbl`` for ``cond``, as the merge's Spark path
+    evaluates it: ``coalesce(cond, false)``."""
+    pos = pa.array(range(tbl.num_rows), pa.int64())
+    rows = (
+        spark.createDataFrame(tbl.append_column("__pos", pos))
+        .filter(F.coalesce(F.expr(cond), F.lit(False)))
+        .select("__pos")
+        .collect()
+    )
+    return sorted(r[0] for r in rows)
+
+
+def test_delete_condition_driver_matches_spark(spark):
+    """The driver's translation of a delete condition keeps exactly the
+    rows Spark's ``filter(coalesce(cond, false))`` keeps; a condition
+    outside the translated set, or a float column holding NaN, is left
+    to Spark. A string is parsed once; one that does not parse raises."""
+    for cond in _DRIVER_CONDITIONS:
+        hits = predicate.mask(predicate.parse(spark, cond), _COND_ROWS)
+        assert hits is not None, cond
+        got = [k for k, hit in enumerate(hits) if hit]
+        assert got == _spark_filter(spark, _COND_ROWS, cond), cond
+    for cond in _SPARK_CONDITIONS:
+        assert predicate.mask(predicate.parse(spark, cond), _COND_ROWS) is None, cond
+    nan = _COND_ROWS.set_column(
+        3, "f", pa.array([float("nan")] + [1.0] * (_COND_ROWS.num_rows - 1))
+    )
+    assert predicate.mask(predicate.parse(spark, "f > 1"), nan) is None
+    assert predicate.parse(spark, "s = 'D'") is predicate.parse(spark, "s = 'D'")
+    with pytest.raises(ParseException):  # as F.expr raises it
+        predicate.parse(spark, "s =")
+
+
+@pytest.mark.parametrize(
+    "cond, where",
+    [
+        ("op = 'D'", "driver"),
+        ("upper(op) = 'D'", "spark"),
+        ("ts < '2024-01-02'", "spark"),
+        ("OP = 'D'", "spark"),
+    ],
+)
+def test_delete_condition_paths_agree(spark, tmp_path, cond, where):
+    """An Arrow batch's merge evaluates its delete condition where the
+    result's ``condition`` says; a condition the driver leaves to Spark
+    deletes the same rows as the Spark path's merge."""
+    ddl = "id long, v long, op string, ts timestamp"
+    day = [datetime.datetime(2024, 1, d) for d in (1, 2, 3)]
+    src = _arrow(
+        [
+            (1, 10, "D", day[0]),  # deleted by every condition
+            (2, 20, "d", day[2]),  # only upper(op) = 'D'
+            (3, 30, "U", day[0]),  # only the timestamp one
+            (4, 40, None, day[1]),
+            (50, 1, "U", day[2]),  # an insert
+        ],
+        ddl,
+    )
+    kw = {"delete_condition": cond, "exclude_cols": ["op", "ts"]}
+    saved = spark.conf.get(THRESHOLD)
+    got = {}
+    try:
+        for path, threshold in (("driver", None), ("spark", "-1")):
+            t = VersionedTable.create(
+                spark,
+                str(tmp_path / path),
+                spark.range(5).select("id", (F.col("id") * 100).alias("v")),
+            )
+            if threshold:
+                spark.conf.set(THRESHOLD, threshold)
+            got[path] = t.merge(src, ["id"], **kw), _rows(t.read())
+    finally:
+        spark.conf.set(THRESHOLD, saved)
+    (d_res, d_rows), (s_res, s_rows) = got["driver"], got["spark"]
+    assert (d_res["images"], d_res["condition"]) == ("driver", where)
+    assert (s_res["images"], s_res["condition"]) == ("spark", "spark")
+    assert d_rows == s_rows
+    counts = ("rows_inserted", "rows_updated", "rows_deleted")
+    assert [d_res[c] for c in counts] == [s_res[c] for c in counts]

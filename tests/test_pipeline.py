@@ -1754,21 +1754,6 @@ def test_merge_matched_update_condition_guards_out_of_order(spark, tmp_path):
     assert t.read().filter("id = 2").count() == 0
 
 
-def test_merge_matched_condition_null_is_false(spark, tmp_path):
-    """A NULL condition result keeps the target row (SQL WHEN semantics)."""
-    t = VersionedTable.create(
-        spark,
-        str(tmp_path / "t"),
-        spark.createDataFrame([(1, "keep", None)], "id long, v string, seq long"),
-    )
-    t.merge(
-        spark.createDataFrame([(1, "new", 5)], "id long, v string, seq long"),
-        ["id"],
-        matched_update_condition="s.seq > t.seq",  # 5 > NULL → NULL → skip
-    )
-    assert t.read().collect()[0].v == "keep"
-
-
 def test_merge_nmbs_composes_with_schema_evolution(spark, tmp_path):
     """A source that evolves a new column in + by-source clauses in one
     merge: unmatched rows null-fill the new column (update assignments
