@@ -102,7 +102,8 @@ class ConfigStore:
         # commit log allows one writer per version.
         self._ledger_lock = threading.Lock()
         # table path -> {(file, schema_json, dv_files): the file's rows as
-        # Arrow} for the live files of the latest commit read (``_rows``)
+        # Python dicts} for the live files of the latest commit read
+        # (``_rows``)
         self._file_rows: dict[str, dict[tuple, object]] = {}
 
     def init(self) -> None:
@@ -257,9 +258,11 @@ class ConfigStore:
         """A table's latest snapshot as Python rows, read on the driver by
         the format's per-file reader (field-id column mapping and
         deletion-vector masking included). The latest commit is read on
-        every call; its files are immutable, so each one is read once
-        per store and schema and deletion-vector set, and a call reads
-        only the files committed since the previous one."""
+        every call; its files are immutable, so each one is read and
+        converted to Python rows once per store and schema and
+        deletion-vector set, and a call reads only the files committed
+        since the previous one. Each call returns fresh dicts, which
+        the caller may change."""
         log_dir = log.dir_of(path)
         c = log.read_commit(log_dir, log.latest_version_in(log_dir), where=f"{path}: ")
         cached = self._file_rows.get(path, {})
@@ -268,10 +271,12 @@ class ConfigStore:
             key = (f, c.schema_json, tuple(c.dv_files))
             if key not in cached:
                 schema = T.StructType.fromJson(json.loads(c.schema_json))
-                cached[key] = VersionedTable._arrow_files([f], schema, c.dv_files)
+                cached[key] = VersionedTable._arrow_files(
+                    [f], schema, c.dv_files
+                ).to_pylist()
             live[key] = cached[key]
         self._file_rows[path] = live  # files no longer live drop out
-        return [r for t in live.values() for r in t.to_pylist()]
+        return [dict(r) for rows in live.values() for r in rows]
 
     def entities_with_watermarks(self) -> list[Row]:
         """The reference's entitiesSQL (COPY_MSQL_TO_SILVER.py:223-249),

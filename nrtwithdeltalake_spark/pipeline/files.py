@@ -230,6 +230,10 @@ def _write_arrow_files(
     return out[0], out[1]
 
 
+# rows ``_dictionary_columns`` samples per file to choose its encodings
+ENCODING_SAMPLE_ROWS = 1024
+
+
 def _dictionary_columns(tbl) -> list[str]:
     """The parquet column paths of ``tbl`` worth dictionary encoding:
     a column's leaves when its distinct count is at most half its rows
@@ -237,10 +241,22 @@ def _dictionary_columns(tbl) -> list[str]:
     doesn't pay; pyarrow's default of a dictionary on every column
     wrote the bench's rows 40% larger), and always when
     ``count_distinct`` can't take its type (nested), as pyarrow's
-    default would."""
+    default would. The count runs over at most ``ENCODING_SAMPLE_ROWS``
+    evenly spaced rows, so the choice costs the same for any file size
+    (parquet-mr also decides from its first page). The sample is
+    strided, not a prefix: a driver rewrite lists a file's oldest rows
+    first, where a column added by schema evolution is NULL. A column
+    whose repeats lie further apart than the stride reads as distinct
+    in the sample and is written PLAIN; pyarrow's fallback at a 1 MB
+    dictionary page still bounds a dictionary that grows too large."""
+    import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
+    if tbl.num_rows > ENCODING_SAMPLE_ROWS:
+        tbl = tbl.take(
+            np.linspace(0, tbl.num_rows - 1, ENCODING_SAMPLE_ROWS).astype(np.int64)
+        )
     out = []
     for paths, col in zip(_leaf_paths(tbl.schema), tbl.columns):
         try:

@@ -191,6 +191,7 @@ def _max_wm(snapshot: DataFrame, ts_col: str, old_wm: str) -> str:
 # 1-9999 print as four digits, so there the numbers order as the strings
 _EPOCH = datetime.datetime(1970, 1, 1)
 _WM_RANGE = (-62135596800, 253402300799)  # 0001-01-01 .. 9999-12-31 23:59:59
+_TICKS_PER_SECOND = {"s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9}
 
 
 def _wm_seconds(
@@ -201,7 +202,14 @@ def _wm_seconds(
     then as local time in ``spark.sql.session.timeZone`` for a
     TIMESTAMP (a TIMESTAMP_NTZ as it is). None for a value outside
     years 1-9999 or a time zone Arrow does not know."""
-    secs = pc.floor_temporal(ts, unit="second").cast(pa.timestamp("s", ts.type.tz))
+    # floor division on the raw ticks: integer division truncates toward
+    # zero, so a negative value with a remainder steps down one second
+    ticks = ts.cast(pa.int64())
+    per_s = _TICKS_PER_SECOND[ts.type.unit]
+    secs = pc.divide(ticks, per_s)
+    secs = pc.subtract(
+        secs, pc.greater(pc.multiply(secs, per_s), ticks).cast(pa.int64())
+    )
     if ts.type.tz is not None:
         tz = spark.conf.get("spark.sql.session.timeZone")
         try:

@@ -61,6 +61,7 @@ import dataclasses
 import json
 import os
 import tempfile
+import threading
 from dataclasses import dataclass
 
 from pyspark.sql import types as T
@@ -728,7 +729,7 @@ def change_records(
     * a vacuumed change-data file (Delta fails here too)."""
     out = []
     for v in range(max(start, -1) + 1, end + 1):
-        rec = read_raw(log_dir, v)
+        rec = _cached(log_dir, v)[1] or read_raw(log_dir, v)
         check_read_protocol(rec, where)
         stats = rec.get("stats") or {}
         if stats.get("cdf_schema_break"):
@@ -752,13 +753,53 @@ def change_records(
     return out
 
 
+# log dir -> (version, commit file stamp, materialized record) of the
+# newest version this process read or published: a writer builds on it
+# and the next commit resolves against it, so a steady writer decodes
+# each commit once. Records are shared with every caller, which must
+# not change them. The least recently kept log drops out past 256.
+_RECORDS: dict[str, tuple[int, tuple, dict]] = {}
+_RECORDS_LOCK = threading.Lock()
+
+
+def _stamp(path: str) -> tuple:
+    # published commits are never rewritten; the stamp tells a file
+    # recreated at the same path apart
+    st = os.stat(path)
+    return (path, st.st_ino, st.st_mtime_ns, st.st_size)
+
+
+def _keep(log_dir: str, version: int, stamp: tuple, record: dict) -> None:
+    with _RECORDS_LOCK:
+        cur = _RECORDS.pop(log_dir, None)
+        if cur is not None and cur[0] > version:
+            _RECORDS[log_dir] = cur
+            return
+        _RECORDS[log_dir] = (version, stamp, record)
+        if len(_RECORDS) > 256:
+            del _RECORDS[next(iter(_RECORDS))]
+
+
+def _cached(log_dir: str, version: int) -> tuple[tuple, dict | None]:
+    """(stamp of the commit file, its kept record or None)."""
+    stamp = _stamp(commit_path(log_dir, version))
+    cur = _RECORDS.get(log_dir)
+    if cur is not None and cur[0] == version and cur[1] == stamp:
+        return stamp, cur[2]
+    return stamp, None
+
+
 def read_record(log_dir: str, version: int) -> dict:
     """The commit record with full file lists — delta-encoded records
     resolve through the parent chain, bounded by the checkpoint
-    cadence."""
-    return materialize(
-        read_raw(log_dir, version), lambda v: read_record(log_dir, v)
-    )
+    cadence. The newest record read is kept (``_RECORDS``)."""
+    stamp, rec = _cached(log_dir, version)
+    if rec is None:
+        rec = materialize(
+            read_raw(log_dir, version), lambda v: read_record(log_dir, v)
+        )
+        _keep(log_dir, version, stamp, rec)
+    return rec
 
 
 def read_commit(log_dir: str, version: int, where: str = "") -> Commit:
@@ -788,39 +829,16 @@ def metadata_of(log_dir: str, version: int, record: dict) -> dict | None:
     return legacy_metadata(log_dir)
 
 
-# commit file (path, inode, mtime, size) -> {"metadata": ...}, or {}
-# when the record has no metadata key. Published commits are never
-# rewritten; the stamp tells a file recreated at the same path apart.
-_METADATA_SEEN: dict[tuple, dict] = {}
-
-
-def _stamp(path: str) -> tuple:
-    st = os.stat(path)
-    return (path, st.st_ino, st.st_mtime_ns, st.st_size)
-
-
-def _remember(stamp: tuple, part: dict) -> None:
-    if len(_METADATA_SEEN) >= 256:
-        _METADATA_SEEN.clear()
-    _METADATA_SEEN[stamp] = part
-
-
 def current_metadata(log_dir: str) -> dict:
     """The table metadata as of the latest commit ({} while the table
-    has none). A record that stores full file lists is tens of MB at
-    10^5 files, so each commit's metadata is parsed at most once per
-    process (never for a commit this process published)."""
+    has none), read through the kept record (``read_record``), so a
+    commit is parsed at most once per process while it is the newest."""
     try:
         v = latest_version_in(log_dir)
-        stamp = _stamp(commit_path(log_dir, v))
+        rec = read_record(log_dir, v)
     except FileNotFoundError:
         return {}
-    part = _METADATA_SEEN.get(stamp)
-    if part is None:
-        rec = read_raw(log_dir, v)
-        part = {"metadata": rec["metadata"]} if "metadata" in rec else {}
-        _remember(stamp, part)
-    return copy.deepcopy(metadata_of(log_dir, v, part) or {})
+    return copy.deepcopy(metadata_of(log_dir, v, rec) or {})
 
 
 def legacy_metadata(log_dir: str) -> dict:
@@ -899,9 +917,9 @@ def _widens(prev_schema_json: str | None, record: dict) -> bool:
 
 def prepare(prev: dict | None, record: dict, read_raw_at=None) -> dict:
     """Apply every rule a commit carries from its predecessor to the
-    next ``record`` (a dict in log-record shape; ``prev`` is the RAW
-    predecessor record, None for version 0) and return it — completed
-    in place, including its ``stats`` dict:
+    next ``record`` (a dict in log-record shape; ``prev`` is the
+    predecessor record, raw or materialized, None for version 0) and
+    return it — completed in place, including its ``stats`` dict:
 
     * ``metadata``: carried whole when the record omits it;
     * the field-id high-water ``stats.max_field_id`` never regresses
@@ -931,7 +949,7 @@ def prepare(prev: dict | None, record: dict, read_raw_at=None) -> dict:
       once the metadata is non-empty. Upgrades are monotone, so a
       version-v reader gate covers v's whole history.
 
-    Scalar stats keys and schema_json are never delta-encoded, so the
+    Scalar stats keys and schema_json are never delta-encoded, so a
     raw ``prev`` carries everything these rules read."""
     version = record["version"]
     prev = prev or {}
@@ -1023,28 +1041,28 @@ def commit(log_dir: str, record: dict, where: str = "") -> None:
     called only by ``VersionedTable._write_commit``. Gates on the
     predecessor (may this engine build on it at all?), completes the
     record with ``prepare``, delta-encodes it against the materialized
-    parent and publishes it put-if-absent; raises CommitConflictError
-    when another writer already owns the version."""
+    parent and publishes it put-if-absent, keeping it as the log's
+    newest record (``_RECORDS``); raises CommitConflictError when
+    another writer already owns the version."""
     version = record["version"]
     prev = None
     if version > 0:
         try:
-            prev = read_raw(log_dir, version - 1)
+            prev = dict(read_record(log_dir, version - 1))
         except FileNotFoundError:
             prev = {}
         check_write_protocol(prev, where)
         prev["metadata"] = metadata_of(log_dir, version - 1, prev)
     prepare(prev, record, lambda v: read_raw(log_dir, v))
-    parent = None
-    if version > 0 and version % CHECKPOINT_EVERY:
-        # checkpoint versions store full lists — don't pay the
-        # parent-chain walk for a parent encode() won't look at
-        try:
-            parent = read_record(log_dir, version - 1)
-        except FileNotFoundError:
-            parent = None
-    publish_commit_file(log_dir, version, json.dumps(encode(record, parent)))
-    _remember(
+    # checkpoint versions store full lists: encode() looks at no parent
+    parent = prev if version % CHECKPOINT_EVERY else None
+    payload = json.dumps(encode(record, parent))
+    publish_commit_file(log_dir, version, payload)
+    # keep what a reader would decode from the file, sharing nothing
+    # with the caller's record
+    _keep(
+        log_dir,
+        version,
         _stamp(commit_path(log_dir, version)),
-        {"metadata": copy.deepcopy(record["metadata"])},
+        materialize(json.loads(payload), lambda v: parent),
     )

@@ -64,8 +64,12 @@ if TYPE_CHECKING:
 CHANGE_TYPE_COL = "_change_type"
 
 # version collisions a commit rebases over before the conflict surfaces
-# (``VersionedTable._publish``)
-COMMIT_RETRIES = 5
+# (``VersionedTable._publish``). Each collision is another writer's
+# progress, so a high bound costs no correctness (Delta allows 10^7
+# attempts), while a low one starves a writer whose rebuild takes as
+# long as a competitor's whole write: back-to-back appends from another
+# process can win every round.
+COMMIT_RETRIES = 50
 # how conflict errors name an op
 _OP_NAMES = {"compact": "compaction", "reorg_purge": "REORG PURGE"}
 # a merge's row counts, by the change-feed image each row leaves
@@ -180,6 +184,65 @@ def _identity_defs(md: dict) -> dict:
     return json.loads(props.get(log.IDENTITY_PROP) or "{}")
 
 
+def _identity_starts(md: dict) -> dict[str, tuple[int, int]]:
+    """{column: (start, step)} of the identity columns in ``md``."""
+    return {
+        c: (int(d["start"]), int(d["step"])) for c, d in _identity_defs(md).items()
+    }
+
+
+def _refuse_explicit_identity(
+    md: dict, cols, op: str, include_by_default: bool = False
+) -> None:
+    """Refuse a batch/assignment that names an identity column of table
+    metadata ``md``. ALWAYS-mode columns are refused everywhere;
+    ``include_by_default`` extends the refusal to BY DEFAULT columns
+    for the operations Delta also forbids in both modes (UPDATE
+    assignments)."""
+    modes = {c: d.get("mode", "always") for c, d in _identity_defs(md).items()}
+    bad = sorted(
+        c
+        for c in modes
+        if c in set(cols) and (include_by_default or modes[c] == "always")
+    )
+    if bad:
+        kinds = {modes[c] for c in bad}
+        label = (
+            "GENERATED ALWAYS AS IDENTITY"
+            if kinds == {"always"}
+            else "GENERATED ... AS IDENTITY"
+        )
+        raise ValueError(
+            f"cannot {op} {label} column(s) "
+            f"{bad} — the engine assigns them; drop them from the "
+            "batch/assignments"
+        )
+
+
+def _explicit_identity_split(md: dict, cols) -> list[str]:
+    """The BY DEFAULT identity columns of table metadata ``md`` a batch
+    explicitly carries."""
+    return sorted(
+        c
+        for c, d in _identity_defs(md).items()
+        if c in set(cols) and d.get("mode", "always") == "default"
+    )
+
+
+def _bloom_columns(md: dict, schema: T.StructType) -> list[str]:
+    """The bloom columns table metadata ``md`` configures that are in
+    ``schema``. The reserved ``__bloom__`` stats key means a column
+    literally named that can't be indexed (it would alias the sidecar
+    pointer) — refused at SET time, belt-and-braces here."""
+    raw = (md.get("properties") or {}).get("versioned.bloomFilterColumns")
+    if not raw:
+        return []
+    names = {f.name for f in schema.fields}
+    return [
+        c.strip()
+        for c in raw.split(",")
+        if c.strip() and c.strip() in names and c.strip() != "__bloom__"
+    ]
 
 
 def _identity_spec(sk) -> dict:
@@ -310,9 +373,13 @@ def _footer_file_stats(
 
     # footer reads are I/O-bound metadata fetches (remote stores: one
     # ranged GET each) — a thread pool keeps a 10k-file convert in
-    # seconds instead of minutes
-    with ThreadPoolExecutor(max_workers=min(32, max(4, len(files)))) as ex:
-        results = list(ex.map(_one, files))
+    # seconds instead of minutes; a driver write's one file is read
+    # inline, where starting the pool would cost more than the read
+    if len(files) <= 1:
+        results = [_one(f) for f in files]
+    else:
+        with ThreadPoolExecutor(max_workers=min(32, max(4, len(files)))) as ex:
+            results = list(ex.map(_one, files))
     return {key: stats for key, stats in results if stats}
 
 
@@ -487,7 +554,7 @@ class VersionedTable:
             key = (schema_json, tuple(new_files))
             if new_files and key not in harvested:
                 harvested[key] = self._with_new_file_stats(
-                    {}, new_files, schema_json
+                    {}, new_files, schema_json, base.metadata or {}
                 ).get("file_stats", {})
             footer = harvested.get(key, {})
             fstats = {**stats.get("file_stats", {}), **footer}
@@ -1428,22 +1495,14 @@ class VersionedTable:
 
     def identity_columns(self) -> dict[str, tuple[int, int]]:
         """{column: (start, step)} for declared identity columns."""
-        raw = self.properties().get(self._IDENTITY_PROP)
-        if not raw:
-            return {}
-        return {
-            c: (int(d["start"]), int(d["step"]))
-            for c, d in json.loads(raw).items()
-        }
+        return _identity_starts(self._metadata())
 
     def identity_modes(self) -> dict[str, str]:
         """{column: 'always' | 'default'} — pre-mode declarations (no
         ``mode`` key in the stored spec) read as 'always'."""
-        raw = self.properties().get(self._IDENTITY_PROP)
-        if not raw:
-            return {}
         return {
-            c: d.get("mode", "always") for c, d in json.loads(raw).items()
+            c: d.get("mode", "always")
+            for c, d in _identity_defs(self._metadata()).items()
         }
 
     def identity_high_water(self, col: str, version: int | None = None) -> int | None:
@@ -1456,60 +1515,22 @@ class VersionedTable:
     def _identity_plan(self, commit: Commit) -> dict[str, tuple[int, int]]:
         """{col: (next value to assign, step)} given a base commit."""
         out = {}
-        for c, (start, step) in self.identity_columns().items():
+        for c, (start, step) in _identity_starts(commit.metadata or {}).items():
             last = (commit.stats.get("identity") or {}).get(c)
             out[c] = (start if last is None else int(last) + step, step)
         return out
 
-    def _refuse_explicit_identity(
-        self, cols, op: str, include_by_default: bool = False
-    ) -> None:
-        """Refuse a batch/assignment that names an identity column.
-        ALWAYS-mode columns are refused everywhere; ``include_by_default``
-        extends the refusal to BY DEFAULT columns for the operations
-        Delta also forbids in both modes (UPDATE assignments)."""
-        ident = self.identity_columns()
-        modes = self.identity_modes()
-        bad = sorted(
-            c
-            for c in ident
-            if c in set(cols)
-            and (include_by_default or modes.get(c, "always") == "always")
-        )
-        if bad:
-            kinds = {modes.get(c, "always") for c in bad}
-            label = (
-                "GENERATED ALWAYS AS IDENTITY"
-                if kinds == {"always"}
-                else "GENERATED ... AS IDENTITY"
-            )
-            raise ValueError(
-                f"cannot {op} {label} column(s) "
-                f"{bad} — the engine assigns them; drop them from the "
-                "batch/assignments"
-            )
-
-    def _explicit_identity_split(self, cols) -> list[str]:
-        """The BY DEFAULT identity columns a batch explicitly carries."""
-        modes = self.identity_modes()
-        return sorted(
-            c
-            for c in self.identity_columns()
-            if c in set(cols) and modes.get(c, "always") == "default"
-        )
-
     def _explicit_identity_extremes(
-        self, df: DataFrame, cols: list[str], defs: dict | None = None
+        self, df: DataFrame, cols: list[str], defs: dict
     ) -> dict[str, int]:
         """Validate explicitly-supplied (BY DEFAULT) identity values and
         return {col: farthest-along-the-step value} for the commit's
         high-water advance. One bounded aggregate over the batch; NULL
         values are refused (a NULL id can never be arbitrated past).
         {} for an empty batch — the carried high-water then stands.
-        ``defs`` ({col: (start, step)}) defaults to the table's."""
+        ``defs``: {col: (start, step)}."""
         if not cols:
             return {}
-        defs = defs or self.identity_columns()
         aggs = [F.count(F.lit(1)).alias("__n")]
         for c in cols:
             aggs += [
@@ -1894,13 +1915,15 @@ class VersionedTable:
     def schema(self, version: int | None = None) -> T.StructType:
         return T.StructType.fromJson(json.loads(self.get_commit(version).schema_json))
 
-    def _with_new_file_stats(self, stats: dict, new_files: list[str], schema) -> dict:
+    def _with_new_file_stats(
+        self, stats: dict, new_files: list[str], schema, md: dict
+    ) -> dict:
         """Footer-harvest min/max for the data files this commit just
         wrote and merge them into the carried skipping stats — O(churn)
         per commit (only NEW files are opened, footers only), so every
         file-writing op keeps ``read_between`` pruning complete without
         waiting for a clustered compact. ``schema`` is the commit's
-        StructType or its JSON.
+        StructType or its JSON, ``md`` the table metadata it builds on.
 
         When ``versioned.bloomFilterColumns`` is set, the same O(churn)
         pass digests those columns of each new file into a bloom
@@ -1919,12 +1942,12 @@ class VersionedTable:
         fstats = _footer_file_stats(new_files, schema)
         for f, s in fstats.items():
             merged[f] = {**merged.get(f, {}), **s}
-        bloom_cols = self._bloom_columns(schema)
+        bloom_cols = _bloom_columns(md, schema)
         if bloom_cols:
             from . import bloom as _bloom
 
             fpp = float(
-                self.properties().get(
+                (md.get("properties") or {}).get(
                     "versioned.bloomFilterFpp", _bloom.DEFAULT_FPP
                 )
             )
@@ -1939,21 +1962,6 @@ class VersionedTable:
         out = dict(stats)
         out["file_stats"] = merged
         return out
-
-    def _bloom_columns(self, schema: T.StructType) -> list[str]:
-        """Configured bloom columns present in this commit's schema.
-        The reserved ``__bloom__`` stats key means a column literally
-        named that can't be indexed (it would alias the sidecar
-        pointer) — refused at SET time, belt-and-braces here."""
-        raw = self.properties().get("versioned.bloomFilterColumns")
-        if not raw:
-            return []
-        names = {f.name for f in schema.fields}
-        return [
-            c.strip()
-            for c in raw.split(",")
-            if c.strip() and c.strip() in names and c.strip() != "__bloom__"
-        ]
 
     @staticmethod
     def _carry_stats(prev: Commit, kept_files: list[str], base: dict | None = None) -> dict:
@@ -2224,12 +2232,15 @@ class VersionedTable:
         ident_last: dict = {}
         ident_cache = None
         explicit_cache = None
-        if self.identity_columns():
-            self._refuse_explicit_identity(df.columns, "overwrite")
-            explicit = self._explicit_identity_split(df.columns)
+        md = prev.metadata or {}
+        if _identity_defs(md):
+            _refuse_explicit_identity(md, df.columns, "overwrite")
+            explicit = _explicit_identity_split(md, df.columns)
             if explicit:
                 df = explicit_cache = df.persist()
-            explicit_ext = self._explicit_identity_extremes(df, explicit)
+            explicit_ext = self._explicit_identity_extremes(
+                df, explicit, _identity_starts(md)
+            )
             # numbering CONTINUES past the previous high-water — an
             # overwrite never reuses ids of replaced rows (Delta's rule);
             # log.prepare's monotone combine keeps that true for
@@ -2260,7 +2271,7 @@ class VersionedTable:
             files = self._write_files(df, self.data_dir, schema=schema)
             old = self._snapshot(prev)  # DV-applied: don't retract twice
             stats = self._with_new_file_stats(
-                dict(extra_stats or {}), files, schema
+                dict(extra_stats or {}), files, schema, md
             )
             if _cdf_representable(prev_schema, schema):
                 # pre-images are ALIGNED (projected + cast losslessly)
@@ -2647,9 +2658,10 @@ class VersionedTable:
         cols = df.column_names if on_driver else df.columns
         ident_plan: dict = {}
         explicit: list = []
-        if self.identity_columns():
-            self._refuse_explicit_identity(cols, "append to")
-            explicit = self._explicit_identity_split(cols)
+        md = prev.metadata or {}
+        if _identity_defs(md):
+            _refuse_explicit_identity(md, cols, "append to")
+            explicit = _explicit_identity_split(md, cols)
             ident_plan = {
                 c: p
                 for c, p in self._identity_plan(prev).items()
@@ -2673,7 +2685,9 @@ class VersionedTable:
                 # through; one bounded aggregate advances the high-water
                 # past them (pinned to one materialization)
                 df = explicit_cache = df.persist()
-            explicit_ext = self._explicit_identity_extremes(df, explicit)
+            explicit_ext = self._explicit_identity_extremes(
+                df, explicit, _identity_starts(md)
+            )
             df, ident_last, ident_cache = self._assign_identity(df, ident_plan)
             ident_last.update(explicit_ext)
             schema = self._merged_schema(prev, df.schema)
@@ -2764,8 +2778,8 @@ class VersionedTable:
         return not (
             log.metadata_features(md) - {"identity_columns"}
             or md.get("partition_columns")
-            or self._bloom_columns(
-                T.StructType.fromJson(json.loads(prev.schema_json))
+            or _bloom_columns(
+                md, T.StructType.fromJson(json.loads(prev.schema_json))
             )
         )
 
@@ -3182,7 +3196,8 @@ class VersionedTable:
         columns = (
             source.columns if isinstance(source, DataFrame) else source.column_names
         )
-        ident_defs = self.identity_columns()
+        md = prev.metadata or {}
+        ident_defs = _identity_starts(md)
         ident_carried: list[str] = []
         if ident_defs:
             # ALWAYS columns: the source must not carry them. BY DEFAULT
@@ -3190,10 +3205,11 @@ class VersionedTable:
             # supplied value (Delta's merge-insert parity); matched rows
             # keep the target's id in both modes (identity is never
             # updated).
-            self._refuse_explicit_identity(columns, "merge into")
-            ident_carried = self._explicit_identity_split(columns)
+            _refuse_explicit_identity(md, columns, "merge into")
+            ident_carried = _explicit_identity_split(md, columns)
             if not_matched_by_source_update:
-                self._refuse_explicit_identity(
+                _refuse_explicit_identity(
+                    md,
                     not_matched_by_source_update,
                     "assign (WHEN NOT MATCHED BY SOURCE UPDATE) to",
                     include_by_default=True,
@@ -3206,7 +3222,10 @@ class VersionedTable:
                     f"identity column(s) {bad_key} cannot be merge keys "
                     "— the source cannot carry them (GENERATED ALWAYS)"
                 )
-        tgt_cols = {f.name for f in self.schema().fields}
+        tgt_cols = {
+            f.name
+            for f in T.StructType.fromJson(json.loads(prev.schema_json)).fields
+        }
         src_cols = set(columns)
         missing = [k for k in keys if k not in src_cols or k not in tgt_cols]
         if missing:
@@ -3526,7 +3545,7 @@ class VersionedTable:
             # carried BY DEFAULT values ride through; validate them and
             # advance the high-water past the insert images' extremes
             carried_ext = self._explicit_identity_extremes(
-                ins_raw, ident_carried
+                ins_raw, ident_carried, ident_defs
             )
             ins_assigned, ident_last, cache = self._assign_identity(
                 ins_raw,
@@ -4381,11 +4400,11 @@ class VersionedTable:
         updated rows (Delta does the same): updating a referenced
         column keeps the derivation true instead of tripping the
         write probe."""
-        # Delta refuses UPDATE of identity columns in BOTH modes
-        self._refuse_explicit_identity(
-            assignments, "UPDATE", include_by_default=True
-        )
         prev = self.get_commit()
+        # Delta refuses UPDATE of identity columns in BOTH modes
+        _refuse_explicit_identity(
+            prev.metadata or {}, assignments, "UPDATE", include_by_default=True
+        )
         gen_recompute = {
             g: e
             for g, e in self.generated_columns().items()

@@ -8,7 +8,8 @@ the failure cases: a crash at each kill point converges on the next run
 without re-merging, a source commit racing a load lands on the next
 load, and two config stores racing one batch apply it once. Then the
 extraction on the driver: a steady-state cycle and an onboarding start
-no Spark job, a steady cycle makes at most 13 py4j calls, the driver and
+no Spark job, a steady cycle makes at most 13 py4j calls, resolves the
+table metadata twice per load and decodes no commit record, the driver and
 Spark extractions give the same loads and bootstrap commits, and a CT
 load after a source overwrite keeps every row. Last, the control plane
 on the driver: it starts no Spark job, resolves as the entitiesSQL query
@@ -30,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from nrtwithdeltalake_spark.pipeline import incremental, predicate
+from nrtwithdeltalake_spark.pipeline import incremental, log, predicate
 from nrtwithdeltalake_spark.pipeline.config import (
     DEFAULT_CT_WM,
     DEFAULT_DATE_WM,
@@ -523,6 +524,39 @@ def test_steady_state_cycle_py4j_calls(spark, roots):
     _assert_converged_b2(spark, store, roots)
 
 
+def test_steady_state_cycle_budget(spark, roots):
+    """A steady 2-entity cycle's fixed driver cost, counted exactly.
+    Writers take the table metadata from the commit they build on, so
+    the cycle resolves the latest metadata 4 times, 2 per load (14 per
+    load before): ``ConfigStore.init``'s identity check of both control
+    tables and ``close_watermark``'s of the ledger. Every commit record
+    it reads was published or read earlier in this process and is kept
+    as its log's newest, so it decodes none. It still makes 13 py4j
+    calls and starts no Spark job."""
+    store = _bootstrapped_batch2(spark, roots)
+    predicate.parse(spark, f"{incremental.SYNC_OP} = 'D'")
+    # the job count's own py4j calls fall outside the counted window
+    jobs, (calls, res) = _jobs_during(
+        spark,
+        lambda: _calls_during(
+            lambda: run_pipeline(spark, store, roots[0], roots[1]),
+            (log, "current_metadata"),
+            (log, "read_raw"),
+            _py4j_sends(spark),
+        ),
+    )
+    assert [r.action for r in res] == ["incremental"] * 2
+    assert len(calls["current_metadata"]) == 4
+    tables = sorted(
+        os.path.basename(os.path.dirname(d)) for (d,) in calls["current_metadata"]
+    )
+    assert tables == ["entities", "watermarks", "watermarks", "watermarks"]
+    assert calls["read_raw"] == []
+    assert len(calls["send_command"]) == 13
+    assert jobs == 0
+    _assert_converged_b2(spark, store, roots)
+
+
 def test_onboarding_starts_no_spark_job(spark, roots):
     """Adding entities runs on the driver end to end: the config store's
     empty tables, a small source created from Arrow, the registrations
@@ -595,6 +629,29 @@ _TS_CYCLES = [  # id, name, ts, op per cycle
         (3, "", datetime.datetime(2024, 3, 10, 6, 59, 59, 999000, _UTC), "D"),
     ],
 ]
+
+
+@pytest.mark.parametrize(
+    "unit, ticks",
+    [
+        # 1 µs and 1.000001 s before 1970, 0001-01-01 and the last µs of
+        # 9999-12-31, and NULL
+        ("us", [-1, -1_000_001, 0, 999_999, None, -62135596800 * 10**6,
+                253402300799 * 10**6 + 999_999]),
+        ("ms", [-1, -1_001, -1_000, 0, 1_999, None]),
+        ("ns", [-1, -10**9 - 1, 10**9, None]),
+    ],
+)
+def test_wm_seconds_floor_like_floor_temporal(unit, ticks):
+    """The TMSTP watermark floors each value to the second by integer
+    division on its ticks, which equals ``pyarrow.compute.floor_temporal``
+    before 1970 too, at both ends of years 1-9999, and passes NULL."""
+    import pyarrow.compute as pc
+
+    ts = pa.chunked_array([pa.array(ticks, pa.int64()).cast(pa.timestamp(unit))])
+    want = pc.floor_temporal(ts, unit="second").cast(pa.timestamp("s"))
+    got = incremental._wm_seconds(ts, None)
+    assert got.to_pylist() == want.cast(pa.int64()).to_pylist()
 
 
 def test_driver_and_spark_extraction_agree(spark, tmp_path):
@@ -771,27 +828,49 @@ def _jobs_during(spark, fn):
     return _last_job(spark) - before, out
 
 
-def _py4j_calls_during(spark, fn):
-    """(py4j commands the driver sent the JVM while ``fn`` ran, its
-    result). The memory commands py4j's finalizer thread sends for
+def _calls_during(fn, *targets):
+    """({name: [positional args of each call]}, ``fn``'s result): each
+    ``(owner, name[, counts])`` of ``targets`` is wrapped while ``fn``
+    runs, recording the calls ``counts(*args)`` accepts (default all)."""
+    calls, saved = {}, []
+    for owner, name, *counts in targets:
+        orig = getattr(owner, name)
+        calls[name] = []
+
+        def counted(*args, _orig=orig, _seen=calls[name], _counts=counts, **kw):
+            if not _counts or _counts[0](*args):
+                _seen.append(args)
+            return _orig(*args, **kw)
+
+        saved.append((owner, name, orig))
+        setattr(owner, name, counted)
+    try:
+        out = fn()
+    finally:
+        for owner, name, orig in saved:
+            setattr(owner, name, orig)
+    return calls, out
+
+
+def _py4j_sends(spark):
+    """The ``_calls_during`` target for the py4j commands the driver
+    sends the JVM. The memory commands py4j's finalizer thread sends for
     Python references already dropped are not counted."""
     from py4j.protocol import MEMORY_COMMAND_NAME
 
     client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
-    calls = 0
+    return (
+        client,
+        "send_command",
+        lambda command, *a: not command.startswith(MEMORY_COMMAND_NAME),
+    )
 
-    def counted(command, *args, **kwargs):
-        nonlocal calls
-        calls += not command.startswith(MEMORY_COMMAND_NAME)
-        return send(command, *args, **kwargs)
 
-    client.send_command = counted
-    try:
-        out = fn()
-    finally:
-        client.send_command = send
-    return calls, out
+def _py4j_calls_during(spark, fn):
+    """(py4j commands the driver sent the JVM while ``fn`` ran, its
+    result)."""
+    calls, out = _calls_during(fn, _py4j_sends(spark))
+    return len(calls["send_command"]), out
 
 
 def _spark_resolution(store):
@@ -945,6 +1024,10 @@ def test_ledger_resolution_reads_only_new_files(spark, roots, monkeypatch):
             s.close_watermark(s.open_watermark(ct, None, wm))
 
     store.entities_with_watermarks()
+    # resolution may change the rows it is given: the next call's are fresh
+    row = store._rows(ledger.path)[0]
+    row["CTWatermark"] = -7
+    assert row not in store._rows(ledger.path)
     assert resolve_after(lambda: close(store, 11)) == [11]
     assert resolve_after(lambda: close(store, 12, 13, 14)) == [14]
     other = ConfigStore(spark, roots[2])

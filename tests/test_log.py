@@ -1,8 +1,9 @@
 """The log layer's carry rules (``pipeline/log.py::prepare``) on plain
-dict records, and its table-metadata reads on hand-written log files —
-no SparkSession. The one commit writer, ``VersionedTable``, publishes
-through ``prepare``, so these rules hold for every commit. Also the
-layering rule that keeps ``pipeline/`` free of ``sources/``."""
+dict records, its table-metadata reads on hand-written log files and
+the record it keeps per log — no SparkSession. The one commit writer,
+``VersionedTable``, publishes through ``prepare``, so these rules hold
+for every commit. Also the layering rule that keeps ``pipeline/`` free
+of ``sources/``."""
 
 from __future__ import annotations
 
@@ -234,6 +235,111 @@ def test_current_metadata_follows_the_latest_commit(tmp_path):
     assert log.current_metadata(log_dir) == {}
     _write(log_dir, _rec(1, metadata={"partition_columns": ["s"]}))
     assert log.current_metadata(log_dir) == {"partition_columns": ["s"]}
+
+
+def _decodes(monkeypatch) -> list[int]:
+    """The versions ``log.read_raw`` decodes from here on."""
+    seen = []
+    read_raw = log.read_raw
+
+    def spy(log_dir, version):
+        seen.append(version)
+        return read_raw(log_dir, version)
+
+    monkeypatch.setattr(log, "read_raw", spy)
+    return seen
+
+
+def test_record_read_twice_decodes_once(tmp_path, monkeypatch):
+    """The newest record read is kept: a second read of it decodes no
+    JSON, and a commit file recreated at the same path is read again."""
+    log_dir = str(tmp_path / "_log")
+    os.makedirs(log_dir)
+    _write(log_dir, _rec(0, files=["a"]))
+    seen = _decodes(monkeypatch)
+    assert log.read_record(log_dir, 0)["files"] == ["a"]
+    assert log.read_record(log_dir, 0)["files"] == ["a"]
+    assert seen == [0]
+    _write(log_dir, _rec(0, files=["a", "bb"]))
+    assert log.read_record(log_dir, 0)["files"] == ["a", "bb"]
+    assert seen == [0, 0]
+
+
+def test_publish_primes_the_kept_record(tmp_path, monkeypatch):
+    """``commit`` keeps the record it publishes, as a reader would
+    decode it from the file: the next writer builds on it and a reader
+    resolves it with no decode, down a delta-encoded chain too."""
+    log_dir = str(tmp_path / "_log")
+    os.makedirs(log_dir)
+    seen = _decodes(monkeypatch)
+    for v in range(4):
+        log.commit(log_dir, _rec(v, files=[f"f{i}" for i in range(v + 3)]))
+    raw = log.read_raw(log_dir, 3)
+    assert raw["files_base"] == 2  # delta-encoded against its parent
+    seen.clear()
+    rec = log.read_record(log_dir, 3)
+    assert seen == []
+    assert rec["files"] == [f"f{i}" for i in range(6)]
+    assert rec == log.materialize(raw, lambda v: log.read_record(log_dir, v))
+
+
+def test_only_the_newest_record_per_log_is_kept(tmp_path, monkeypatch):
+    """An older version read through the chain does not displace the
+    newest one, and is decoded again on its next read."""
+    log_dir = str(tmp_path / "_log")
+    os.makedirs(log_dir)
+    for v in range(3):
+        log.commit(log_dir, _rec(v, files=[f"f{i}" for i in range(v + 3)]))
+    seen = _decodes(monkeypatch)
+    assert log.read_record(log_dir, 1)["files"] == ["f0", "f1", "f2", "f3"]
+    assert log.read_record(log_dir, 1)["files"] == ["f0", "f1", "f2", "f3"]
+    assert seen == [1, 0, 1, 0]
+    assert log._RECORDS[log_dir][0] == 2
+    seen.clear()
+    log.read_record(log_dir, 2)
+    assert seen == []
+
+
+def test_kept_records_stay_exact_under_threads(tmp_path):
+    """Threads committing to their own logs while reading every version
+    of a shared one, with the switch interval shortened: each read
+    returns the record of the version asked for, and each log keeps its
+    newest."""
+    import sys
+    import threading
+
+    shared = str(tmp_path / "shared")
+    os.makedirs(shared)
+    for v in range(25):
+        log.commit(shared, _rec(v, files=[f"s{i}" for i in range(v + 1)]))
+    errors = []
+
+    def work(n: int) -> None:
+        own = str(tmp_path / f"own{n}")
+        os.makedirs(own)
+        try:
+            for v in range(25):
+                log.commit(own, _rec(v, files=[f"o{i}" for i in range(v + 1)]))
+                got = log.read_record(shared, (v * 7 + n) % 25)
+                assert got["files"] == [f"s{i}" for i in range(got["version"] + 1)]
+                assert got["version"] == (v * 7 + n) % 25
+                assert log.read_record(own, v)["files"][-1] == f"o{v}"
+        except Exception as e:  # noqa: BLE001 - reported by the main thread
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(n,)) for n in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert all(log._RECORDS[str(tmp_path / f"own{n}")][0] == 24 for n in range(8))
 
 
 def test_txn_watermarks_carry_as_a_per_app_max():
