@@ -311,8 +311,9 @@ def load_entity(
     merged = None
     if first_load:
         # The reference caches + counts the batch as a SEPARATE pass
-        # (:180-183). Observation folds the row count into the write job
-        # itself — at 100 TB that deletes one full batch scan per load.
+        # (:180-183). Observation folds the row count into the job that
+        # reads the batch (the write, or a small batch's collect) — at
+        # 100 TB that deletes one full batch scan per load.
         obs = None
         if isinstance(batch, DataFrame):
             obs = Observation(f"load_{eid}")

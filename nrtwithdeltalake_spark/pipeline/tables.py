@@ -21,8 +21,10 @@ Table Storage over Cloud Object Stores", VLDB 2020):
 Commit records — table metadata included — are read and published
 put-if-absent by ``log.py``, which owns every byte under ``_log/``;
 concurrent writers resolve by optimistic concurrency. Data files are
-written through the normal Spark parquet writer, so everything here is
-executor-parallel; only file *lists* (metadata) touch the driver.
+written through the normal Spark parquet writer, executor-parallel,
+unless the input is small enough to bring to the driver
+(``spark.sql.autoBroadcastJoinThreshold``): then the driver writes them
+with the format's pyarrow writer (``pipeline/files.py``).
 """
 
 from __future__ import annotations
@@ -1825,6 +1827,25 @@ class VersionedTable:
                     os.remove(f)
         return sorted(found)
 
+    def _write_inserts(
+        self, df: DataFrame, schema: T.StructType, metadata: dict | None = None
+    ) -> tuple[list[str], list[str]]:
+        """The Spark path of ``create`` and ``append``: ``df`` as data
+        files (``_write_files``), then their insert images read back from
+        those files, so ``df`` runs once and the change feed holds
+        exactly the rows the snapshot holds, even when ``df`` is not
+        deterministic (``current_timestamp()``, a re-read source).
+        Returns (data files, change-data files)."""
+        files = self._write_files(df, self.data_dir, schema=schema, metadata=metadata)
+        if not files:
+            return [], []
+        images = self._read_files(files, schema.json()).withColumn(
+            CHANGE_TYPE_COL, F.lit("insert")
+        )
+        return files, self._write_files(
+            images, self.cdf_dir, schema=schema, metadata=metadata
+        )
+
     def _read_files(self, files: list[str], schema_json: str) -> DataFrame:
         """Read with the commit's schema applied explicitly: after schema
         evolution, carried-over files physically lack new columns (they are
@@ -2018,15 +2039,20 @@ class VersionedTable:
         ``column_order`` gives the full final order (the SQL CREATE
         path uses it to keep the DDL-declared positions).
 
-        ``df`` may be a ``pyarrow.Table``, rows already in the driver's
-        memory (the config store's empty tables, a small bootstrap):
-        unless it asks for ``partition_by``, ``column_order`` or a BY
-        DEFAULT identity column, or a column's Arrow type is not the
-        one the format reads back, commit 0 is written on the driver
-        with pyarrow (ALWAYS identity columns numbered from their
-        ``(start, step)``) and no Spark job runs. Otherwise it is
-        converted with ``spark.createDataFrame`` and takes the Spark
-        path, as ``append`` does."""
+        Commit 0 is written on the driver with pyarrow (ALWAYS identity
+        columns numbered from their ``(start, step)``) unless it asks
+        for ``partition_by``, ``column_order`` or a BY DEFAULT identity
+        column, or a column's Arrow type is not the one the format reads
+        back. ``df`` may be a ``pyarrow.Table``, rows already in the
+        driver's memory (the config store's empty tables, a small
+        bootstrap): then no Spark job runs. A DataFrame takes this path
+        when ``merge`` would pair it on the driver (``_collectable``):
+        its rows are collected in one job and written as one data file,
+        plus its insert images, per non-empty partition — the files the
+        Spark writer makes. Anything else takes the Spark path (an Arrow
+        table converted with ``_spark_frame``), as ``append`` does. The
+        schema is the DataFrame's on both paths, nullability and field
+        metadata included."""
         t = cls(spark, path)
         if cls.exists(path):
             raise RuntimeError(f"table already exists at {path}")
@@ -2043,24 +2069,30 @@ class VersionedTable:
         md: dict = {}  # the table metadata commit 0 carries
         if defs:
             md["properties"] = {cls._IDENTITY_PROP: json.dumps(defs)}
-        driver = None  # the Arrow table's schema, when the driver writes it
+        driver = None  # the rows' schema, when the driver writes them
+        splits: list[int] = []
         if not (
-            isinstance(df, DataFrame)
-            or partition_by
+            partition_by
             or column_order
             or any(d["mode"] != "always" for d in defs.values())
         ):
-            driver = _driver_schema(df)
+            if not isinstance(df, DataFrame):
+                driver = _driver_schema(df.schema)
+            else:
+                arrow = t._collectable(df, t._broadcast_limit())
+                if arrow is not None:
+                    driver = strip_ids(df.schema)
+                    df, splits = _collect(df, arrow)
         if driver is not None:
             schema = with_field_ids(
                 T.StructType(
                     [T.StructField(c, T.LongType()) for c in plan] + driver.fields
                 )
             )
-            files, cdf, ident_last = t._write_arrow(df, schema, plan)
+            files, cdf, ident_last = t._write_arrow(df, schema, plan, splits)
         else:
             if not isinstance(df, DataFrame):
-                df = spark.createDataFrame(df)
+                df = _spark_frame(spark, df)
             ident_last: dict[str, int] = {}
             ident_cache = explicit_cache = None
             if defs:
@@ -2103,13 +2135,7 @@ class VersionedTable:
                     )
                 md["partition_columns"] = pcols
             schema = with_field_ids(strip_ids(df.schema))  # mapping from birth
-            files = t._write_files(df, t.data_dir, schema=schema, metadata=md)
-            cdf = t._write_files(
-                df.withColumn(CHANGE_TYPE_COL, F.lit("insert")),
-                t.cdf_dir,
-                schema=schema,
-                metadata=md,
-            )
+            files, cdf = t._write_inserts(df, schema, md)
             for cache in (ident_cache, explicit_cache):
                 if cache is not None:
                     cache.unpersist()
@@ -2629,13 +2655,17 @@ class VersionedTable:
         (app, version) is a structural no-op — the at-least-once safety
         a scheduler-restarted ingest job needs without a dedup pass.
 
-        ``df`` may be a ``pyarrow.Table`` holding exactly the current
-        schema's non-identity columns: when the table binds no rule the
-        driver cannot apply (``_driver_appendable``), the rows are
-        numbered and written on the driver with pyarrow and no Spark job
-        runs — the config store's one-row appends. Otherwise it is
-        converted with ``spark.createDataFrame`` and takes the Spark
-        path, which enforces every rule.
+        When the batch holds exactly the current schema's non-identity
+        columns and the table binds no rule the driver cannot apply
+        (``_driver_appendable``), the rows are numbered and written on
+        the driver with pyarrow. A ``pyarrow.Table`` batch then runs no
+        Spark job — the config store's one-row appends. A DataFrame
+        takes this path when ``merge`` would pair it on the driver
+        (``_collectable``): one job collects it, and each non-empty
+        partition becomes one data file plus its insert images, as on
+        the Spark path. Anything else takes the Spark path (an Arrow
+        table converted with ``_spark_frame``), which enforces every
+        rule.
 
         Concurrent writers: a blind append never semantically conflicts
         with another commit, so a version collision (atomic put-if-
@@ -2650,9 +2680,16 @@ class VersionedTable:
         prev = self.get_commit()
         if self._txn_skip(prev, txn_app, txn_version):
             return prev.version
-        on_driver = not isinstance(df, DataFrame)
-        if on_driver and not self._driver_appendable(prev, df):
-            df, on_driver = self.spark.createDataFrame(df), False
+        splits: list[int] = []
+        if isinstance(df, DataFrame):
+            arrow = self._collectable(df, self._broadcast_limit())
+            on_driver = arrow is not None and self._driver_appendable(prev, arrow)
+            if on_driver:
+                df, splits = _collect(df, arrow)
+        else:
+            on_driver = self._driver_appendable(prev, df.schema)
+            if not on_driver:
+                df = _spark_frame(self.spark, df)
         if not on_driver:
             df = self._fill_generated(self._fill_defaults(df))
         cols = df.column_names if on_driver else df.columns
@@ -2669,7 +2706,9 @@ class VersionedTable:
             }
         if on_driver:
             schema = T.StructType.fromJson(json.loads(prev.schema_json))
-            new_files, cdf, ident_last = self._write_arrow(df, schema, ident_plan)
+            new_files, cdf, ident_last = self._write_arrow(
+                df, schema, ident_plan, splits
+            )
 
             def rewrite(shifts: dict) -> tuple[list, list]:
                 # the rows are in hand: number them again and rewrite
@@ -2677,7 +2716,7 @@ class VersionedTable:
                     c: (nxt + shifts.get(c, 0), step)
                     for c, (nxt, step) in ident_plan.items()
                 }
-                return self._write_arrow(df, schema, plan)[:2]
+                return self._write_arrow(df, schema, plan, splits)[:2]
         else:
             explicit_cache = None
             if explicit:
@@ -2692,12 +2731,7 @@ class VersionedTable:
             ident_last.update(explicit_ext)
             schema = self._merged_schema(prev, df.schema)
             df = _align_to(df, schema)
-            new_files = self._write_files(df, self.data_dir, schema=schema)
-            cdf = self._write_files(
-                df.withColumn(CHANGE_TYPE_COL, F.lit("insert")),
-                self.cdf_dir,
-                schema=schema,
-            )
+            new_files, cdf = self._write_inserts(df, schema)
             if ident_cache is not None:
                 ident_cache.unpersist()
             if explicit_cache is not None:
@@ -2783,34 +2817,47 @@ class VersionedTable:
             )
         )
 
-    def _driver_appendable(self, prev: Commit, tbl: pa.Table) -> bool:
-        """True when an Arrow batch can be appended on the driver: the
-        table allows driver writes (``_driver_writable``) and the batch
-        holds exactly the current schema's non-identity columns with
-        their Arrow types (so no explicit BY DEFAULT identity value and
-        no schema evolution)."""
-        from pyspark.sql.pandas.types import to_arrow_type
-
+    def _driver_appendable(self, prev: Commit, arrow) -> bool:
+        """True when a batch laid out as the Arrow schema ``arrow`` can
+        be appended on the driver: the table allows driver writes
+        (``_driver_writable``) and the batch holds exactly the current
+        schema's non-identity columns (so no explicit BY DEFAULT identity
+        value and no schema evolution), each with a type the driver
+        writes as it is (``_driver_schema``) and equal to the column's
+        or one that safely widens to it (``widened_type``, an exact
+        Arrow cast: an SQL ``INSERT``'s INT literal into a BIGINT)."""
         if not self._driver_writable(prev):
             return False
-        schema = T.StructType.fromJson(json.loads(prev.schema_json))
+        have = _driver_schema(arrow)
         ident = _identity_defs(prev.metadata or {})
-        want = [
-            (f.name, to_arrow_type(f.dataType))
-            for f in schema.fields
+        want = {
+            f.name: f.dataType
+            for f in T.StructType.fromJson(json.loads(prev.schema_json)).fields
             if f.name not in ident
-        ]
-        have = list(zip(tbl.column_names, tbl.schema.types))
-        return len(have) == len(want) and dict(have) == dict(want)
+        }
+        return (
+            have is not None
+            and sorted(have.names) == sorted(want)
+            and all(
+                widened_type(want[f.name], f.dataType) == want[f.name]
+                for f in have.fields
+            )
+        )
 
     def _write_arrow(
-        self, tbl: pa.Table, schema: T.StructType, plan: dict
+        self,
+        tbl: pa.Table,
+        schema: T.StructType,
+        plan: dict,
+        splits: list[int] = (),
     ) -> tuple[list[str], list[str], dict[str, int]]:
-        """The driver half of an Arrow append or create: number the
-        rows from ``plan`` ({col: (next, step)}), lay them out as
-        ``schema`` and write one data file and one insert-image CDF file
-        with the format's pyarrow writer. Returns (data files, CDF
-        files, {col: last value assigned}) — {} for an empty batch."""
+        """The driver half of an append or create: number the rows from
+        ``plan`` ({col: (next, step)}), lay them out as ``schema`` and
+        write them as one data file and one insert-image CDF file per
+        run of rows between the ``splits`` offsets (a collected
+        DataFrame's partitions) with the format's pyarrow writer.
+        Returns (data files, CDF files, {col: last value assigned}) —
+        {} for an empty batch."""
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_type
 
@@ -2822,22 +2869,26 @@ class VersionedTable:
                 to_arrow_type(f.dataType),
             )
             if f.name in plan
-            else tbl.column(f.name)
+            else tbl.column(f.name).cast(to_arrow_type(f.dataType))
             for f in schema.fields
         ]
         out = pa.table(cols, names=schema.names)
-        data_file, cdf_file = _write_arrow_files(
-            self.path,
-            out,
-            out.append_column(CHANGE_TYPE_COL, pa.array(["insert"] * n)),
-            _ids_of(schema),
-        )
+        data, images = [], []
+        ids = _ids_of(schema)
+        for lo, hi in zip([0, *splits], [*splits, n]):
+            part = out.slice(lo, hi - lo)
+            data_file, cdf_file = _write_arrow_files(
+                self.path,
+                part,
+                part.append_column(
+                    CHANGE_TYPE_COL, pa.array(["insert"] * part.num_rows)
+                ),
+                ids,
+            )
+            data += [data_file] if data_file else []
+            images += [cdf_file] if cdf_file else []
         last = {c: nxt + step * (n - 1) for c, (nxt, step) in plan.items()}
-        return (
-            [data_file] if data_file else [],
-            [cdf_file] if cdf_file else [],
-            last if n else {},
-        )
+        return data, images, last if n else {}
 
     # -- COPY INTO (idempotent bulk file ingestion) -------------------------
 
@@ -3321,7 +3372,7 @@ class VersionedTable:
                     **self._merge_arrow(prev, batch, schema, keys, limit),
                     condition=condition,
                 )
-            source = self.spark.createDataFrame(source)
+            source = _spark_frame(self.spark, source)
         # evaluate the delete predicate on the source BEFORE the join so
         # column references stay unambiguous
         src = source.withColumn(
@@ -3725,7 +3776,7 @@ class VersionedTable:
                 condition = "spark"
                 pos = pa.array(np.arange(tbl.num_rows))
                 rows = (
-                    self.spark.createDataFrame(tbl.append_column("__pos", pos))
+                    _spark_frame(self.spark, tbl.append_column("__pos", pos))
                     .filter(F.expr(delete_condition))
                     .select("__pos")
                     .collect()
@@ -3763,26 +3814,31 @@ class VersionedTable:
         """True when a merge may pair its deduped batch ``src`` on the
         driver (the caller rules out identity columns and the clauses
         that need the full outer join): the table allows driver writes
-        (``_driver_writable``), every column has an Arrow type, every key
-        type compares in Arrow exactly as ``eqNullSafe`` does on non-NULL
-        values, and the optimized plan's ``sizeInBytes`` is at most
-        ``spark.sql.autoBroadcastJoinThreshold`` — Spark's own rule for a
-        relation small enough to ship whole (``-1`` disables the path).
-        Decided before any job runs."""
-        from pyspark.sql.pandas.types import to_arrow_type
-
+        (``_driver_writable``), every key type compares in Arrow exactly
+        as ``eqNullSafe`` does on non-NULL values, and the driver may
+        collect ``src`` (``_collectable``)."""
         if not self._driver_writable(prev):
             return False
         types = {f.name: f.dataType for f in src.schema.fields}
-        if not all(_driver_key(types[k]) for k in keys):
-            return False
-        try:
-            for t in types.values():
-                to_arrow_type(t)
-        except Exception:  # noqa: BLE001 - any type Arrow can't carry
-            return False
-        size = src._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        return 0 <= int(size) <= limit
+        return all(_driver_key(types[k]) for k in keys) and (
+            self._collectable(src, limit) is not None
+        )
+
+    @staticmethod
+    def _collectable(df: DataFrame, limit: int):
+        """The Arrow layout ``df`` is collected in when the driver may
+        bring it over whole and write it — the one small-input rule of
+        ``create``, ``append`` and ``merge`` — else None: every column
+        has an Arrow type the driver writes as it is (``_driver_arrow``)
+        and the optimized plan's ``sizeInBytes`` is at most ``limit``,
+        ``spark.sql.autoBroadcastJoinThreshold`` — Spark's own rule for
+        a relation small enough to ship whole (``-1`` disables the
+        path). Decided before any job runs."""
+        arrow = _driver_arrow(df.schema)
+        if arrow is None:
+            return None
+        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        return arrow if 0 <= int(size) <= limit else None
 
     def _broadcast_limit(self) -> int:
         """``spark.sql.autoBroadcastJoinThreshold`` in bytes (``-1``:
@@ -3832,8 +3888,8 @@ class VersionedTable:
         def key_rows() -> DataFrame:
             # the batch's keys as a local relation: a broadcast side, no
             # shuffle; built only for a Spark probe, rewrite or rebase
-            return self.spark.createDataFrame(
-                rows.select(keys), T.StructType([schema[k] for k in keys])
+            return _spark_frame(
+                self.spark, rows.select(keys), T.StructType([schema[k] for k in keys])
             )
 
         probe_files = []
@@ -3926,7 +3982,7 @@ class VersionedTable:
             rewrite = (
                 _align_to(self._snapshot(prev, touched), schema)
                 .join(key_rows(), keys, "left_anti")
-                .unionByName(self.spark.createDataFrame(new_rows, schema))
+                .unionByName(_spark_frame(self.spark, new_rows, schema))
                 .coalesce(len(touched))
             )
             new_files += self._write_files(rewrite, self.data_dir, schema=schema)
@@ -4554,7 +4610,16 @@ class VersionedTable:
         entries referencing the files it rewrote (their deletions are
         materialized in the replacements) go stale harmlessly — the
         read path ignores entries whose file is gone. Composes with
-        ``small_file_bytes`` (both filters apply)."""
+        ``small_file_bytes`` (both filters apply).
+
+        With no ``cluster_by``, ``zorder_by`` or ``where`` on an
+        unpartitioned table whose selected files total at most
+        ``spark.sql.autoBroadcastJoinThreshold`` on disk (the rule
+        ``merge`` applies to its candidate files), the driver reads them
+        with the format's per-file reader and writes them with its
+        pyarrow writer, in as many files as the Spark path's coalesce
+        makes, and no Spark job runs: ``run_pipeline``'s ledger
+        compaction."""
         if cluster_by and zorder_by:
             raise ValueError("cluster_by and zorder_by are mutually exclusive")
         if small_file_bytes is not None and (cluster_by or zorder_by):
@@ -4611,28 +4676,45 @@ class VersionedTable:
             if not candidates:
                 return prev.version  # nothing owed: no empty commit
             rewrite_set = set(candidates)
-            df = self._snapshot(prev, files=candidates)
-            total = sum(os.path.getsize(f) for f in candidates)
-        else:
-            df = self._snapshot(prev)
-            total = sum(os.path.getsize(f) for f in prev.files)
+        total = sum(os.path.getsize(f) for f in candidates)
         n_out = max(1, -(-total // target_file_bytes))  # ceil
-        if cluster_by:
-            df = df.repartitionByRange(n_out, *cluster_by).sortWithinPartitions(
-                *cluster_by
-            )
-        elif zorder_by:
-            zkey = _morton_code(df, zorder_by)
-            df = (
-                df.withColumn("__z", zkey)
-                .repartitionByRange(n_out, "__z")
-                .sortWithinPartitions("__z")
-                .drop("__z")
-            )
+        if not (
+            cluster_by
+            or zorder_by
+            or where
+            or (prev.metadata or {}).get("partition_columns")
+        ) and total <= self._broadcast_limit():
+            # small and unclustered: read and re-pack on the driver with
+            # the format's per-file reader and writer, in as many files
+            # as the Spark path's coalesce makes
+            schema = T.StructType.fromJson(json.loads(prev.schema_json))
+            rows = self._arrow_files(candidates, schema, prev.dv_files)
+            step = -(-rows.num_rows // max(1, min(n_out, len(candidates)))) or 1
+            new_files = [
+                _write_arrow_files(
+                    self.path, part, part.slice(0, 0), _ids_of(schema)
+                )[0]
+                for part in (
+                    rows.slice(i, step) for i in range(0, rows.num_rows, step)
+                )
+            ]
         else:
-            n_in = len(rewrite_set) if rewrite_set is not None else len(prev.files)
-            df = df.coalesce(n_out) if n_out < n_in else df
-        new_files = self._write_files(df, self.data_dir, enforce=False)
+            df = self._snapshot(prev, files=candidates)
+            if cluster_by:
+                df = df.repartitionByRange(n_out, *cluster_by).sortWithinPartitions(
+                    *cluster_by
+                )
+            elif zorder_by:
+                zkey = _morton_code(df, zorder_by)
+                df = (
+                    df.withColumn("__z", zkey)
+                    .repartitionByRange(n_out, "__z")
+                    .sortWithinPartitions("__z")
+                    .drop("__z")
+                )
+            elif n_out < len(candidates):
+                df = df.coalesce(n_out)
+            new_files = self._write_files(df, self.data_dir, enforce=False)
         stat_cols = cluster_by or zorder_by
         packed_stats = (
             self._collect_file_stats(new_files, prev.schema_json, stat_cols)
@@ -5186,18 +5268,60 @@ def _arrow_schema(schema: T.StructType):
     )
 
 
-def _driver_schema(tbl) -> T.StructType | None:
-    """The schema of a ``pyarrow.Table`` the driver can write as it is,
-    or None when a column's Arrow type is not the one the format's
-    per-file reader yields for its Spark type (``_arrow_schema``)."""
+def _driver_schema(arrow) -> T.StructType | None:
+    """The Spark schema of rows laid out as the Arrow schema ``arrow``
+    that the driver can write as they are, or None when a column's
+    Arrow type is not the one the format's per-file reader yields for
+    its Spark type (``_arrow_schema``)."""
     from pyspark.errors import PySparkTypeError
     from pyspark.sql.pandas.types import from_arrow_schema
 
     try:
-        schema = from_arrow_schema(tbl.schema, prefer_timestamp_ntz=True)
+        schema = from_arrow_schema(arrow, prefer_timestamp_ntz=True)
     except PySparkTypeError:
         return None
-    return schema if _arrow_schema(schema).types == tbl.schema.types else None
+    return schema if _arrow_schema(schema).types == arrow.types else None
+
+
+def _driver_arrow(schema: T.StructType):
+    """The Arrow layout the driver collects and writes a DataFrame
+    shaped ``schema`` in, or None when a column has no Arrow type or one
+    ``_driver_schema`` refuses."""
+    try:
+        arrow = _arrow_schema(schema)
+    except Exception:  # noqa: BLE001 - any type Arrow can't carry
+        return None
+    return arrow if _driver_schema(arrow) is not None else None
+
+
+# the partition id each collected row carries (``_collect``)
+_PARTITION_COL = "__spark_partition_id"
+
+
+def _collect(df: DataFrame, arrow) -> tuple[pa.Table, list[int]]:
+    """``df``'s rows on the driver, laid out as ``arrow``, in ONE Spark
+    job, with the row offsets at which each later non-empty partition
+    starts: the file boundaries the Spark writer would have made."""
+    import numpy as np
+
+    tbl = df.withColumn(_PARTITION_COL, F.spark_partition_id()).toArrow()
+    pid = tbl.column(_PARTITION_COL).to_numpy()
+    splits = (np.flatnonzero(pid[1:] != pid[:-1]) + 1).tolist()
+    return tbl.drop_columns([_PARTITION_COL]).cast(arrow), splits
+
+
+def _spark_frame(spark: SparkSession, tbl, schema=None) -> DataFrame:
+    """``spark.createDataFrame(tbl)`` for a ``pyarrow.Table``, with its
+    empty record batches dropped first: pyspark 4.1 loses every row
+    after an empty batch that is not the first (``[10, 0, 10]`` rows
+    convert to 10), and ``pa.concat_tables`` of an empty table with
+    others builds exactly that layout."""
+    import pyarrow as pa
+
+    tbl = pa.Table.from_batches(
+        [b for b in tbl.to_batches() if b.num_rows], schema=tbl.schema
+    )
+    return spark.createDataFrame(tbl, schema)
 
 
 def _min_max(col) -> tuple:

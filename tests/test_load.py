@@ -14,8 +14,11 @@ Spark extractions give the same loads and bootstrap commits, and a CT
 load after a source overwrite keeps every row. Last, the control plane
 on the driver: it starts no Spark job, resolves as the entitiesSQL query
 does, reads only the ledger files committed since its previous call,
-keeps the ledger compacted, and writes rows that read back the same
-through every reader. Tier-1: these run in the default (fast) tier."""
+keeps the ledger compacted on the driver, and writes rows that read
+back the same through every reader. Last, the Spark write path: an
+Arrow table keeps the rows after an empty record batch, and ``create``
+and ``append`` evaluate their DataFrame once. Tier-1: these run in the
+default (fast) tier."""
 
 from __future__ import annotations
 
@@ -23,6 +26,7 @@ import datetime
 import os
 import threading
 import time
+from collections import Counter
 
 import pyarrow as pa
 import pytest
@@ -957,9 +961,11 @@ def test_control_plane_starts_no_spark_job(spark, roots):
     ]
 
 
-def test_ledger_compaction_keeps_resolution(spark, roots):
+def test_ledger_compaction_keeps_resolution(spark, roots, monkeypatch):
     """More than LEDGER_MAX_FILES ledger rows: run_pipeline compacts
-    the ledger to at most that many live files, and resolution returns
+    the ledger on the driver (the compaction starts no Spark job) to at
+    most that many live files; every row and id reads back unchanged,
+    at the latest version and at the one before, and resolution returns
     the same watermarks as before."""
     source_root, target_root, _ = roots
     store = _setup_scenario(spark, roots)
@@ -980,11 +986,24 @@ def test_ledger_compaction_keeps_resolution(spark, roots):
     assert len(ledger.get_commit().files) > incremental.LEDGER_MAX_FILES
     before = store.entities_with_watermarks()
     ids = sorted(r.WatermarkId for r in ledger.read().collect())
+    rows = _by_id(ledger.read().collect(), "WatermarkId")
+    v = ledger.latest_version()
 
+    jobs, compact = [], VersionedTable.compact
+
+    def counted(table, *args, **kw):
+        n, out = _jobs_during(spark, lambda: compact(table, *args, **kw))
+        jobs.append(n)
+        return out
+
+    monkeypatch.setattr(VersionedTable, "compact", counted)
     res = run_pipeline(spark, store, source_root, target_root)
+    assert jobs == [0]
     assert all(r.action == "skipped" for r in res)
     assert ledger.get_commit().op == "compact"
     assert len(ledger.get_commit().files) <= incremental.LEDGER_MAX_FILES
+    assert _by_id(ledger.read().collect(), "WatermarkId") == rows
+    assert _by_id(ledger.read(version=v).collect(), "WatermarkId") == rows
     assert store.entities_with_watermarks() == before
     assert [(r.CTWatermark, r.DateWatermark) for r in before] == [
         (10 + incremental.LEDGER_MAX_FILES - 1, None),
@@ -1144,3 +1163,53 @@ def test_arrow_append_takes_spark_path_for_bound_rules(spark, tmp_path):
         t.append(pa.table({"k": pa.array([-1], pa.int64())}))
     t.append(pa.table({"k": pa.array([2], pa.int64())}))
     assert sorted(r.k for r in t.read().collect()) == [1, 2]
+
+
+def test_arrow_batches_after_an_empty_one_keep_their_rows(spark, tmp_path):
+    """An Arrow table whose record batches are ``[3, 0, 3]`` rows, as
+    ``pa.concat_tables`` builds after an empty table, keeps all 6 rows
+    on the Spark path: an append to a table with a CHECK constraint and
+    a partitioned create (pyspark's ``createDataFrame`` alone keeps 3)."""
+    schema = pa.schema([("k", pa.int64())])
+    tbl = pa.Table.from_batches(
+        [
+            pa.record_batch([pa.array(ks, pa.int64())], schema=schema)
+            for ks in ([1, 2, 3], [], [4, 5, 6])
+        ]
+    )
+    t = VersionedTable.create(
+        spark, str(tmp_path / "checked"), pa.table({"k": pa.array([0], pa.int64())})
+    )
+    t.add_constraint("non_negative", "k >= 0")
+    t.append(tbl)
+    assert sorted(r.k for r in t.read().collect()) == [0, 1, 2, 3, 4, 5, 6]
+    p = VersionedTable.create(spark, str(tmp_path / "part"), tbl, partition_by=["k"])
+    assert sorted(r.k for r in p.read().collect()) == [1, 2, 3, 4, 5, 6]
+    assert sorted(r.k for r in p.change_feed(-1).collect()) == [1, 2, 3, 4, 5, 6]
+
+
+def test_spark_path_writes_its_input_once(spark, tmp_path):
+    """On the Spark path, ``create`` and ``append`` evaluate their
+    DataFrame once: a ``current_timestamp()`` column reads the same in
+    the snapshot and in the change feed's insert images."""
+
+    def stamped():
+        return spark.range(5).withColumn("t", F.current_timestamp())
+
+    def writes():
+        t = VersionedTable.create(spark, str(tmp_path / "t"), stamped())
+        t.append(stamped())
+        return t
+
+    t = _with_threshold(spark, "-1", writes)
+    assert all("/ds-" not in f for f in t.get_commit().files)
+    for v in (0, 1):
+        snap = Counter(tuple(r) for r in t.read(version=v).collect())
+        images = Counter(
+            tuple(r)
+            for r in t.change_feed(v - 1, v).drop("_change_type", "_commit_version")
+            .collect()
+        )
+        assert images == snap - Counter(
+            tuple(r) for r in (t.read(version=v - 1).collect() if v else [])
+        )

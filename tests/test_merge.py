@@ -10,7 +10,10 @@ feeds and row counts; an Arrow source (``pyarrow.Table``) pairs on the
 driver when its ``nbytes`` is that small and is otherwise converted to a
 DataFrame. Then the job budget of a change-tracking batch, the file
 count of a pipeline that keeps merging, a table left with no file, a
-table created from Arrow on the driver, the config store's idempotent
+table created from Arrow on the driver, a small DataFrame created and
+appended on the driver (the same small-input rule, one job, the Spark
+path's files per partition; larger, partitioned and schema-evolving
+writes keep Spark; SQL CTAS and INSERT), the config store's idempotent
 ``init``, and the core merge semantics: txn tokens (a replay is a
 no-op, for an Arrow batch too), time travel and the change feed, the
 touched-file rewrite, the latest-per-key oracle (on both paths), NULL
@@ -29,20 +32,30 @@ import pyarrow as pa
 import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.errors import ParseException
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from nrtwithdeltalake_spark.pipeline import predicate
+from nrtwithdeltalake_spark.pipeline import predicate, tables
 from nrtwithdeltalake_spark.pipeline.config import ConfigStore
 from nrtwithdeltalake_spark.pipeline.incremental import run_pipeline
+from nrtwithdeltalake_spark.pipeline.sqldml import execute_dml
 from nrtwithdeltalake_spark.pipeline.tables import (
     CommitConflictError,
     VersionedTable,
 )
 
 from .test_commit_loop import _inject_before_merge_commit
-from .test_load import _jobs_during, _setup_scenario, _txn_df, roots  # noqa: F401
+from .test_load import (  # noqa: F401
+    _calls_during,
+    _jobs_during,
+    _last_job,
+    _setup_scenario,
+    _txn_df,
+    _with_threshold,
+    roots,
+)
 
 THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
 
@@ -470,8 +483,12 @@ def test_arrow_create_writes_on_driver(spark, tmp_path):
     for side, df in (("driver", rows), ("spark", spark.createDataFrame(rows))):
         n, made[side] = _jobs_during(
             spark,
-            lambda: VersionedTable.create(
-                spark, str(tmp_path / side), df, identity={"id": (10, 5)}
+            lambda: _with_threshold(  # a small DataFrame is collected too
+                spark,
+                "-1",
+                lambda: VersionedTable.create(
+                    spark, str(tmp_path / side), df, identity={"id": (10, 5)}
+                ),
             ),
         )
         assert (n == 0) == (side == "driver"), (side, n)
@@ -510,6 +527,145 @@ def test_arrow_create_writes_on_driver(spark, tmp_path):
         )
         assert n > 0, kw
         assert f.schema().names == names and f.read().count() == 5
+
+
+def _ranged(spark, n, parts):
+    """``n`` rows over ``parts`` range partitions, the second one empty
+    (when there are more than two): a non-null key, a commented column,
+    a nullable string and a timestamp."""
+    k = F.col("id")
+    return (
+        spark.range(n, numPartitions=parts)
+        .filter((k < n // parts) | (k >= 2 * n // parts) | F.lit(parts < 3))
+        .select(
+            k.alias("k"),
+            (k * 3).alias("c", metadata={"comment": "three times k"}),
+            F.when(k % 5 > 0, F.concat(F.lit("s"), k.cast("string"))).alias("s"),
+            F.lit(datetime.datetime(2024, 1, 1)).cast("timestamp").alias("ts"),
+        )
+    )
+
+
+def _layout(t: VersionedTable) -> list:
+    """Per commit: its schema and, per data file, the columns with
+    footer stats but ``ts`` (Spark writes timestamps as INT96, which has
+    no min/max)."""
+    out = []
+    for c in t.history():
+        fstats = c.stats.get("file_stats", {})
+        out.append(
+            (
+                c.schema_json,
+                len(c.cdf_files),
+                sorted(sorted(set(fstats[f]) - {"ts"}) for f in c.files),
+            )
+        )
+    return out
+
+
+def test_small_dataframe_create_and_append_write_on_driver(spark, tmp_path):
+    """A small DataFrame ``create`` or ``append`` collects its rows in
+    one Spark job and writes them on the driver, one data file and one
+    insert-image file per non-empty partition. The same writes through
+    the Spark path (threshold ``-1``) give the same snapshot, change
+    feed, schema (non-null and commented columns), identity ids and
+    high-water, files per partition and footer-stats columns, and an
+    ``Observation`` on the DataFrame fires on both."""
+    made = {}
+    for side, threshold in (("driver", None), ("spark", "-1")):
+
+        def writes():
+            obs = Observation()
+            t, n = VersionedTable.create(
+                spark,
+                str(tmp_path / side),
+                _ranged(spark, 40, 4).observe(obs, F.count(F.lit(1)).alias("n")),
+                identity={"id": (100, 2)},
+            ), []
+            n.append(_last_job(spark))
+            assert obs.get == {"n": 30}  # the bootstrap's row count
+            t.append(_ranged(spark, 10, 2))
+            n.append(_last_job(spark))
+            return t, n
+
+        before = _last_job(spark)
+        t, after = _with_threshold(spark, threshold, writes)
+        jobs = [after[0] - before, after[1] - after[0]]
+        if side == "driver":
+            assert jobs == [1, 1], jobs
+            assert all("/ds-" in f for f in t.get_commit().files)
+        else:
+            assert min(jobs) > 1, jobs
+        made[side] = t
+    d, s = made["driver"], made["spark"]
+    assert _rows(d.read()) == _rows(s.read())
+    assert d.read().count() == 40 - 10 + 10
+    assert _rows(d.change_feed(-1)) == _rows(s.change_feed(-1))
+    assert _layout(d) == _layout(s)
+    assert [len(c.files) for c in d.history()] == [3, 5]
+    assert d.identity_high_water("id") == s.identity_high_water("id") == 178
+    fields = {f.name: f for f in d.schema().fields}
+    assert not fields["k"].nullable and fields["s"].nullable
+    assert fields["c"].metadata["comment"] == "three times k"
+
+
+def test_dataframe_writes_keep_spark_path(spark, tmp_path):
+    """A plan over the threshold, a ``partition_by`` create and a
+    schema-evolving append keep the Spark path: Spark writes the files
+    and nothing collects the DataFrame first."""
+
+    def spark_written(fn):
+        calls, t = _calls_during(fn, (tables, "_collect"))
+        assert calls["_collect"] == []
+        c = t.get_commit()
+        old = set(t.get_commit(c.version - 1).files) if c.version else set()
+        assert not any("/ds-" in f for f in set(c.files) - old)
+        return t
+
+    spark_written(
+        lambda: _with_threshold(
+            spark,
+            "1024",
+            lambda: VersionedTable.create(
+                spark, str(tmp_path / "big"), _ranged(spark, 4000, 4)
+            ),
+        )
+    )
+    t = spark_written(
+        lambda: VersionedTable.create(
+            spark, str(tmp_path / "part"), _ranged(spark, 40, 4), partition_by=["s"]
+        )
+    )
+    assert t.read().count() == 30
+    t = VersionedTable.create(spark, str(tmp_path / "evolve"), _ranged(spark, 8, 2))
+    spark_written(
+        lambda: (t.append(_ranged(spark, 8, 2).withColumn("x", F.lit(1))), t)[1]
+    )
+    assert t.schema().names == ["k", "c", "s", "ts", "x"]
+    assert t.read().count() == 16
+
+
+def test_sql_ctas_and_insert_write_on_driver(spark, tmp_path):
+    """A CTAS and an ``INSERT`` through ``sqldml`` hand ``create`` and
+    ``append`` a small local relation: each starts one Spark job and
+    the driver writes its file."""
+    tgt = f"versioned.`{tmp_path / 'ctas'}`"  # k BIGINT: 3 is widened
+    n, _ = _jobs_during(
+        spark,
+        lambda: execute_dml(
+            spark,
+            f"CREATE TABLE {tgt} AS SELECT * FROM VALUES "
+            "(CAST(1 AS BIGINT), 'a'), (CAST(2 AS BIGINT), 'b') AS v(k, s)",
+        ),
+    )
+    assert n == 1
+    n, _ = _jobs_during(
+        spark, lambda: execute_dml(spark, f"INSERT INTO {tgt} VALUES (3, 'c')")
+    )
+    assert n == 1
+    t = VersionedTable(spark, str(tmp_path / "ctas"))
+    assert sorted(map(tuple, t.read().collect())) == [(1, "a"), (2, "b"), (3, "c")]
+    assert all("/ds-" in f for f in t.get_commit().files)
 
 
 def test_config_store_init_is_idempotent(spark, tmp_path):
