@@ -36,6 +36,17 @@ from .tables import VersionedTable
 DEFAULT_DATE_WM = "2000-01-01 00:00:00"
 DEFAULT_CT_WM = -1
 
+
+def wm_time(wm: str) -> datetime.datetime | None:
+    """A date watermark as a naive time; None unless it is exactly
+    ``yyyy-MM-dd HH:mm:ss``."""
+    try:
+        t = datetime.datetime.strptime(wm, "%Y-%m-%d %H:%M:%S")
+    except ValueError:
+        return None
+    return t if t.isoformat(sep=" ") == wm else None
+
+
 ENTITIES_SCHEMA = T.StructType(
     [
         T.StructField("EntityId", T.LongType()),
@@ -216,7 +227,10 @@ class ConfigStore:
         """OpenWatermark proc (dbrconfig.sql:45-83), with no I/O: returns
         the load's pending ledger row, ``LoadStartDatetime`` set. The
         row is written only by ``close_watermark``, after the silver
-        commit, so the ledger never holds an open row."""
+        commit, so the ledger never holds an open row. A malformed
+        ``date_wm`` raises: it would send every later TMSTP load to Spark."""
+        if date_wm is not None and wm_time(date_wm) is None:
+            raise ValueError(f"malformed DateWatermark {date_wm!r}")
         return {
             "EntityId": entity_id,
             "DateWatermark": date_wm,

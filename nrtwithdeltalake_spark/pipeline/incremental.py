@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .config import ConfigStore, DEFAULT_CT_WM
+from .config import ConfigStore, DEFAULT_CT_WM, wm_time
 from .tables import (
     CHANGE_TYPE_COL,
     MERGE_COUNTS,
@@ -225,14 +225,9 @@ def _wm_seconds(
 
 def _wm_seconds_of(wm: str) -> int | None:
     """A watermark string as local seconds; None unless it is exactly
-    ``yyyy-MM-dd HH:mm:ss``."""
-    try:
-        t = datetime.datetime.strptime(wm, "%Y-%m-%d %H:%M:%S")
-    except ValueError:
-        return None
-    if t.isoformat(sep=" ") != wm:
-        return None
-    return (t - _EPOCH) // datetime.timedelta(seconds=1)
+    ``yyyy-MM-dd HH:mm:ss`` (``wm_time``)."""
+    t = wm_time(wm)
+    return None if t is None else (t - _EPOCH) // datetime.timedelta(seconds=1)
 
 
 def _wm_text(secs: int) -> str:

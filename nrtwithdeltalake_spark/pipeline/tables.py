@@ -3136,41 +3136,36 @@ class VersionedTable:
         rewritten; all other files carry over by reference.
 
         Two paths, one merge (Delta VLDB'20 §3: one pass finds the
-        touched files, one rewrites them). Both share the txn skip, the
-        source dedup (the latest row per key by ``dedup_order_col``; on
-        a tie a delete ranks below the key's other row, so an
+        touched files, one rewrites them), chosen in ONE place for both
+        source types. Both share the txn skip, the source dedup (the
+        latest row per key by ``dedup_order_col``, NaN first and NULL
+        last; on a tie a delete ranks below the key's other row, so an
         overwrite's delete and insert images of one key leave the
-        insert), generated columns, schema evolution, the stats-based
-        probe pruning and the commit. A SMALL batch pairs on the driver
-        (``_merge_arrow``): a DataFrame whose deduped plan's
-        ``sizeInBytes`` is at most ``spark.sql.autoBroadcastJoinThreshold``
-        — Spark's own rule for a relation small enough to ship whole
-        (``-1`` disables it), read once per merge — collected once as
-        Arrow, or a ``pyarrow.Table`` source whose ``nbytes`` is at most
-        it, deduped and aligned on the driver with no Spark job and,
-        for a ``delete_condition`` in ``pipeline/predicate.py``'s set,
-        no JVM call (``_arrow_source``). The driver pairs the batch with the
-        target and writes the change-feed images with the format's
-        pyarrow writer. When the probe's candidate files
-        (``_key_range_files``) total at most the same threshold on disk,
-        so both sides of the join are small, the driver also reads them
-        (the format's per-file reader) and writes the touched files'
-        other rows with the new ones as ONE pyarrow data file: a
-        DataFrame batch's collect is then the merge's only Spark action,
-        two jobs with its dedup shuffle, and an Arrow batch's merge runs
-        none. Larger candidates take one Spark action that returns
-        the target rows matching the batch's keys and one Spark write
-        that rewrites the touched files in at most as many files as it
-        removes. The table must allow driver writes
-        (``_driver_writable``) and hold no identity column; the merge must have no by-source clause and no
-        ``matched_update_condition``; the keys must be integral, string,
-        date or timestamp (Arrow's join equality is Spark's there) and
-        never NULL. Anything else takes the Spark path — an Arrow source
-        as ``spark.createDataFrame(source)``, as ``append`` converts one:
-        a full outer join, written once as data and once as the change
-        feed. ``sizeInBytes`` is Spark's estimate from the files the
-        plan reads, so a filtered DataFrame is sized as its whole source
-        table; an Arrow batch is sized as itself.
+        insert), schema evolution, the stats-based probe pruning and the
+        commit. The batch pairs on the DRIVER when the merge has no
+        identity column, by-source clause or ``matched_update_condition``,
+        the table allows driver writes (``_driver_writable``), every key
+        is integral, string, date or timestamp (Arrow's join equality is
+        Spark's there) and never NULL, and the batch is small: a
+        ``pyarrow.Table`` whose ``nbytes``, or a DataFrame whose plan's
+        ``sizeInBytes`` (``_collectable``: Spark's estimate from the
+        files the plan reads), is at most
+        ``spark.sql.autoBroadcastJoinThreshold``, read once per merge
+        (``-1`` disables it). A small DataFrame is collected as it is, in
+        one job, and never runs again. ``_arrow_source`` dedups the
+        batch, evaluates ``delete_condition`` (no JVM call for a
+        condition in ``pipeline/predicate.py``'s set) and aligns it;
+        ``_merge_arrow`` pairs it with the target and writes the
+        change-feed images with pyarrow. Anything else takes the SPARK
+        path, an Arrow batch converted with ``_spark_frame``: generated
+        columns, a full outer join, written as data and as change feed.
+        When the driver path's candidate files (``_key_range_files``)
+        total at most the threshold on disk, the driver reads them and
+        writes the touched files' other rows with the new ones as ONE
+        pyarrow file, so a DataFrame's merge starts one Spark job and an
+        Arrow batch's none. Larger candidates take one Spark probe of
+        the batch's keys and one Spark rewrite of the touched files into
+        at most as many files.
         Measured range (4 vCPUs, 3 GB driver heap, 2M-row target, one
         or two runs per size at the session's 64 MB threshold): the
         driver path took 0.2–0.46x the Spark path's time up to 300k
@@ -3357,22 +3352,36 @@ class VersionedTable:
                 **stats,
             }
 
-        if not isinstance(source, DataFrame):
-            # an Arrow source pairs on the driver unless it must not
-            # (``_arrow_source``); otherwise it is converted, as ``append``
-            # converts one
-            prepared = pairable and self._arrow_source(
-                prev, source, keys, delete_condition, dedup_order_col,
-                exclude_cols, limit,
-            )
-            if prepared:
-                batch, schema, condition = prepared
+        # the one driver/Spark choice point, for both source types; a
+        # NULL key, which eqNullSafe matches, sends the batch to Spark
+        frame = source.schema if isinstance(source, DataFrame) else None
+        types = frame or _spark_types(source.schema)
+        if (
+            pairable
+            and self._driver_writable(prev)
+            and all(_driver_key(types[k].dataType) for k in keys)
+        ):
+            if frame is None:
+                small = source.nbytes <= limit
+            else:
+                arrow = self._collectable(source, limit)
+                small = arrow is not None
+                if small:
+                    source = source.toArrow().cast(arrow)
+            if small and not any(source.column(k).null_count for k in keys):
+                batch, schema, condition = self._arrow_source(
+                    prev, source, frame, keys, delete_condition,
+                    dedup_order_col, exclude_cols,
+                )
                 return commit(
                     schema,
                     **self._merge_arrow(prev, batch, schema, keys, limit),
                     condition=condition,
                 )
-            source = _spark_frame(self.spark, source)
+        if not isinstance(source, DataFrame):
+            # converted as ``append`` converts one; a collected DataFrame
+            # keeps its schema and never runs again
+            source = _spark_frame(self.spark, source, frame)
         # evaluate the delete predicate on the source BEFORE the join so
         # column references stay unambiguous
         src = source.withColumn(
@@ -3399,17 +3408,7 @@ class VersionedTable:
             src = src.dropDuplicates(keys)
         src = self._fill_generated(src.drop(*(exclude_cols or [])))
         schema = self._merged_schema(prev, src.drop("__is_delete").schema)
-        src = _align_to(src, schema, keep=["__is_delete"])
-
-        # 0. a small batch pairs on the driver (``_merge_arrow``); a NULL
-        #    key, which eqNullSafe matches, keeps it on the Spark path
-        if pairable and self._driver_mergeable(prev, src, keys, limit):
-            batch = src.toArrow()
-            if not any(batch.column(k).null_count for k in keys):
-                return commit(
-                    schema, **self._merge_arrow(prev, batch, schema, keys, limit)
-                )
-        src = src.cache()
+        src = _align_to(src, schema, keep=["__is_delete"]).cache()
 
         # 1. touched files: semi-join target rows against source keys on
         #    the file-path metadata column — shuffles only keys + paths.
@@ -3731,41 +3730,27 @@ class VersionedTable:
         self,
         prev: Commit,
         tbl: pa.Table,
+        frame: T.StructType | None,
         keys: list[str],
         delete_condition: str | None,
         dedup_order_col: str | None,
         exclude_cols: list[str] | None,
-        limit: int,
-    ) -> tuple[pa.Table, T.StructType, str] | None:
-        """An Arrow merge source made ``_merge_arrow``'s batch on the
+    ) -> tuple[pa.Table, T.StructType, str]:
+        """A small merge source made ``_merge_arrow``'s batch on the
         driver, with the merged schema: deduped as the Spark path dedups,
-        aligned to that schema, with ``__is_delete``. None when it must
-        take the Spark path: the table binds a rule the driver can't
-        apply (``_driver_writable``), a key has a type Arrow can't pair
-        (``_driver_key``) or a NULL, or ``tbl.nbytes`` is above
-        ``limit`` (``spark.sql.autoBroadcastJoinThreshold``). The third
-        value names where ``delete_condition`` ran: "driver" when
-        ``pipeline/predicate.py`` evaluates it in Arrow (the string
-        parsed by Spark once per process, then no JVM call), otherwise
-        "spark": Spark filters the rows as a local relation, whose
-        collect runs no job. Both keep its SQL meaning,
+        aligned to that schema, with ``__is_delete``. ``tbl`` is an Arrow
+        source or a DataFrame's collected rows, whose schema ``frame`` is
+        then the one the Spark path would see (field metadata,
+        TIMESTAMP_NTZ). The third value names where ``delete_condition``
+        ran: "driver" when ``pipeline/predicate.py`` evaluates it in
+        Arrow, otherwise "spark": Spark filters the rows as a local
+        relation, whose collect runs no job. Both keep its SQL meaning,
         ``coalesce(cond, false)``."""
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
-        from pyspark.sql.pandas.types import from_arrow_schema
 
-        def spark_schema(t: pa.Table) -> T.StructType:
-            return from_arrow_schema(t.schema, prefer_timestamp_ntz=True)
-
-        types = spark_schema(tbl)
-        if not (
-            self._driver_writable(prev)
-            and all(_driver_key(types[k].dataType) for k in keys)
-            and not any(tbl.column(k).null_count for k in keys)
-            and tbl.nbytes <= limit
-        ):
-            return None
+        types = frame or _spark_types(tbl.schema)
         deletes = np.zeros(tbl.num_rows, dtype=bool)
         condition = "driver"
         if delete_condition and tbl.num_rows:
@@ -3775,8 +3760,9 @@ class VersionedTable:
                 # back as Python rows
                 condition = "spark"
                 pos = pa.array(np.arange(tbl.num_rows))
+                with_pos = frame and T.StructType([*frame.fields]).add("__pos", "long")
                 rows = (
-                    _spark_frame(self.spark, tbl.append_column("__pos", pos))
+                    _spark_frame(self.spark, tbl.append_column("__pos", pos), with_pos)
                     .filter(F.expr(delete_condition))
                     .select("__pos")
                     .collect()
@@ -3784,14 +3770,26 @@ class VersionedTable:
                 deletes[[r[0] for r in rows]] = True
             else:
                 deletes = hits
+        # the latest row per key by ``dedup_order_col`` (descending, NaN
+        # first and NULLs last, as Spark's ``F.desc`` ranks them), a
+        # delete below the key's other rows on a tie: the first row of
+        # each key in that order
+        ranks = {"__is_delete": deletes}
+        order = []
+        if dedup_order_col:
+            o = tbl.column(dedup_order_col)
+            if pa.types.is_floating(o.type):
+                # Arrow sorts NaN beside the NULLs, below every number
+                ranks["nan"] = pc.is_nan(o)
+                order.append(("nan", "descending"))
+            ranks["order"] = o
+            order.append(("order", "descending"))
         tbl = tbl.append_column("__is_delete", pa.array(deletes))
-        # the latest row per key by ``dedup_order_col`` (descending, NULLs
-        # last), a delete below the key's other rows on a tie: the first
-        # row of each key in that order
-        order = [(dedup_order_col, "descending")] if dedup_order_col else []
         tbl = tbl.take(
             pc.sort_indices(
-                tbl, order + [("__is_delete", "ascending")], null_placement="at_end"
+                pa.table(ranks),
+                order + [("__is_delete", "ascending")],
+                null_placement="at_end",
             )
         )
         first = (
@@ -3803,26 +3801,11 @@ class VersionedTable:
         tbl = tbl.take(np.sort(first.column("__row_min").to_numpy()))
         tbl = tbl.drop_columns([c for c in exclude_cols or [] if c in tbl.column_names])
         rows = tbl.drop_columns(["__is_delete"])
-        schema = self._merged_schema(prev, spark_schema(rows))
-        batch = _align_arrow_by_id(rows, spark_schema(rows), schema)
+        fields = T.StructType([types[c] for c in rows.column_names])
+        schema = self._merged_schema(prev, fields)
+        batch = _align_arrow_by_id(rows, strip_ids(fields), schema)
         batch = batch.append_column("__is_delete", tbl.column("__is_delete"))
         return batch, schema, condition
-
-    def _driver_mergeable(
-        self, prev: Commit, src: DataFrame, keys: list[str], limit: int
-    ) -> bool:
-        """True when a merge may pair its deduped batch ``src`` on the
-        driver (the caller rules out identity columns and the clauses
-        that need the full outer join): the table allows driver writes
-        (``_driver_writable``), every key type compares in Arrow exactly
-        as ``eqNullSafe`` does on non-NULL values, and the driver may
-        collect ``src`` (``_collectable``)."""
-        if not self._driver_writable(prev):
-            return False
-        types = {f.name: f.dataType for f in src.schema.fields}
-        return all(_driver_key(types[k]) for k in keys) and (
-            self._collectable(src, limit) is not None
-        )
 
     @staticmethod
     def _collectable(df: DataFrame, limit: int):
@@ -3854,27 +3837,17 @@ class VersionedTable:
         keys: list[str],
         limit: int,
     ) -> dict:
-        """The small-batch merge (see ``merge``). ``batch`` is the
-        deduped, aligned source with ``__is_delete``, collected once or
-        prepared from an Arrow source (``_arrow_source``); its keys are
-        unique and non-NULL. The probe's candidate files
-        (``_key_range_files``) are read on the driver when their bytes
-        on disk are at most ``spark.sql.autoBroadcastJoinThreshold``,
-        the rule the batch passed, so both sides of the join are small:
-        each file once, with the format's per-file reader
-        (``_arrow_batches``: field ids, evolved columns, deletion
-        vectors). Larger candidates are probed by one Spark action that
-        returns the target rows matching the batch's keys. The driver
-        pairs the matched rows with the batch and writes every
-        change-feed image with the format's pyarrow writer. The touched
-        files' unmatched rows plus the new and updated ones become one
-        pyarrow data file when the candidates were read on the driver;
-        otherwise one Spark write rewrites them in at most as many files
-        as the merge removes. Up to the session's 64 MB threshold the
-        driver rewrite was the faster one at every measured size (see
-        ``merge``). Returns ``commit``'s arguments but the schema, with
-        ``key_rows`` a function that builds the batch's keys as a Spark
-        relation, called only by a Spark probe, rewrite or rebase."""
+        """The driver path of ``merge``. ``batch`` is the deduped,
+        aligned source with ``__is_delete`` (``_arrow_source``); its keys
+        are unique and non-NULL. Candidate files totalling at most
+        ``limit`` bytes on disk are read once each with the format's
+        per-file reader (``_arrow_batches``: field ids, evolved columns,
+        deletion vectors) and rewritten as one pyarrow file; larger ones
+        are probed and rewritten by Spark (see ``merge``). Every change-feed
+        image is written with pyarrow. Returns ``commit``'s arguments
+        but the schema, with ``key_rows`` a function that builds the
+        batch's keys as a Spark relation, called only by a Spark probe,
+        rewrite or rebase."""
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -5268,16 +5241,23 @@ def _arrow_schema(schema: T.StructType):
     )
 
 
+def _spark_types(arrow) -> T.StructType:
+    """The Spark schema of rows laid out as the Arrow schema ``arrow``
+    (a timezone-naive timestamp is TIMESTAMP_NTZ)."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+
+
 def _driver_schema(arrow) -> T.StructType | None:
     """The Spark schema of rows laid out as the Arrow schema ``arrow``
     that the driver can write as they are, or None when a column's
     Arrow type is not the one the format's per-file reader yields for
     its Spark type (``_arrow_schema``)."""
     from pyspark.errors import PySparkTypeError
-    from pyspark.sql.pandas.types import from_arrow_schema
 
     try:
-        schema = from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+        schema = _spark_types(arrow)
     except PySparkTypeError:
         return None
     return schema if _arrow_schema(schema).types == arrow.types else None

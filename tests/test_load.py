@@ -961,6 +961,20 @@ def test_control_plane_starts_no_spark_job(spark, roots):
     ]
 
 
+def test_open_watermark_rejects_malformed_date(spark, tmp_path):
+    """A DateWatermark that is not exactly ``yyyy-MM-dd HH:mm:ss`` raises
+    before any write: stored, it would send every later TMSTP load of
+    the entity through Spark."""
+    store = ConfigStore(spark, str(tmp_path / "config"))
+    for wm in ("2030-01-01 00:00:62", "2030-01-01T00:00:00", "2030-1-1 00:00:00"):
+        with pytest.raises(ValueError, match="DateWatermark"):
+            store.open_watermark(2, wm, None)
+    assert store.open_watermark(2, DEFAULT_DATE_WM, None)["DateWatermark"] == (
+        DEFAULT_DATE_WM
+    )
+    assert not os.path.exists(store.root)
+
+
 def test_ledger_compaction_keeps_resolution(spark, roots, monkeypatch):
     """More than LEDGER_MAX_FILES ledger rows: run_pipeline compacts
     the ledger on the driver (the compaction starts no Spark job) to at
@@ -978,9 +992,8 @@ def test_ledger_compaction_keeps_resolution(spark, roots, monkeypatch):
         if i % 2:
             row = store.open_watermark(ct.EntityId, None, 10 + i)
         else:
-            row = store.open_watermark(
-                tmstp.EntityId, f"2030-01-01 00:00:{i:02d}", None
-            )
+            wm = datetime.datetime(2030, 1, 1) + datetime.timedelta(seconds=i)
+            row = store.open_watermark(tmstp.EntityId, str(wm), None)
         store.close_watermark(row)
     ledger = store.watermarks
     assert len(ledger.get_commit().files) > incremental.LEDGER_MAX_FILES
@@ -1007,7 +1020,7 @@ def test_ledger_compaction_keeps_resolution(spark, roots, monkeypatch):
     assert store.entities_with_watermarks() == before
     assert [(r.CTWatermark, r.DateWatermark) for r in before] == [
         (10 + incremental.LEDGER_MAX_FILES - 1, None),
-        (None, f"2030-01-01 00:00:{incremental.LEDGER_MAX_FILES - 2:02d}"),
+        (None, str(wm)),  # the last TMSTP row's
     ]
     assert sorted(r.WatermarkId for r in ledger.read().collect()) == ids
 

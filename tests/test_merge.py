@@ -1,30 +1,33 @@
 """MERGE, Tier-1: the upsert the paper's load loop runs each cycle.
 
-A batch whose deduped plan is small (``sizeInBytes`` at most
-``spark.sql.autoBroadcastJoinThreshold``) pairs with the target on the
-driver, which also reads and rewrites the touched files when the
-probe's candidate files are that small; anything else takes the Spark
-full-outer-join path. The parity test runs each case on both paths
-(``-1`` forces the Spark one) and requires equal snapshots, change
-feeds and row counts; an Arrow source (``pyarrow.Table``) pairs on the
-driver when its ``nbytes`` is that small and is otherwise converted to a
-DataFrame. Then the job budget of a change-tracking batch, the file
-count of a pipeline that keeps merging, a table left with no file, a
-table created from Arrow on the driver, a small DataFrame created and
+A small batch (an Arrow source's ``nbytes`` or a DataFrame's plan at
+most ``spark.sql.autoBroadcastJoinThreshold``) pairs with the target on
+the driver, a DataFrame collected once as Arrow; the driver also reads
+and rewrites the touched files when the probe's candidate files are
+that small; anything else takes the Spark full-outer-join path. The
+parity test runs each case on both paths (``-1`` forces the Spark one)
+and requires equal snapshots, change feeds and row counts. Then the job
+budget of a change-tracking batch, a DataFrame's evolved column
+metadata, a NULL-keyed batch that runs once, the file count of a
+pipeline that keeps merging, a table left with no file, a table
+created from Arrow on the driver, a small DataFrame created and
 appended on the driver (the same small-input rule, one job, the Spark
 path's files per partition; larger, partitioned and schema-evolving
 writes keep Spark; SQL CTAS and INSERT), the config store's idempotent
 ``init``, and the core merge semantics: txn tokens (a replay is a
 no-op, for an Arrow batch too), time travel and the change feed, the
 touched-file rewrite, the latest-per-key oracle (on both paths), NULL
-keys and a NULL matched-update condition. Last, the delete condition on
-the driver: its Arrow translation against Spark's
-``filter(coalesce(cond, false))``, and the conditions left to Spark.
+keys, a NULL matched-update condition, and the Spark-only merges (WHEN
+NOT MATCHED BY SOURCE clauses and a matched-update condition). Last,
+the delete condition on the driver: its Arrow translation against
+Spark's ``filter(coalesce(cond, false))``, and the conditions left to
+Spark.
 """
 
 from __future__ import annotations
 
 import datetime
+import json
 import os
 from collections import Counter
 
@@ -38,6 +41,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from nrtwithdeltalake_spark.pipeline import predicate, tables
+from nrtwithdeltalake_spark.pipeline.checksum_view import IncrementalChecksum
 from nrtwithdeltalake_spark.pipeline.config import ConfigStore
 from nrtwithdeltalake_spark.pipeline.incremental import run_pipeline
 from nrtwithdeltalake_spark.pipeline.sqldml import execute_dml
@@ -131,6 +135,32 @@ def _case(name, spark):
         ]
         kw = {"dedup_order_col": "seq", "exclude_cols": ["d", "seq"]}
         src = _arrow(rows, mix_ddl + ", seq long")
+        return _mix_target, src, kw, "driver", (), {}
+    if name == "arrow_nan":
+        # Spark's F.desc ranks NaN above every number
+        rows = [(1, 10, False, 1.0), (1, 20, False, float("nan"))]
+        kw = {"dedup_order_col": "o", "exclude_cols": ["d", "o"]}
+        src = _arrow(rows, mix_ddl + ", o double")
+        return _mix_target, src, kw, "driver", (), {}
+    if name == "dataframe_dedup":
+        # a small DataFrame is collected once, then deduped, flagged and
+        # aligned as an Arrow batch: NaN first, NULL last, a delete
+        # below the key's other row on a tie
+        nan = float("nan")
+        rows = [
+            (1, 3, False, 1.0),
+            (1, 4, False, nan),
+            (3, 0, True, 5.0),
+            (3, 9, False, 5.0),
+            (17, 0, True, 1.0),
+            (17, 8, False, 2.0),
+            (40, 1, False, None),
+            (40, 2, False, 0.5),
+            (41, 5, False, nan),
+            (41, 0, True, nan),
+        ]
+        kw = {"dedup_order_col": "o", "exclude_cols": ["d", "o"]}
+        src = _local(spark, rows, mix_ddl + ", o double")
         return _mix_target, src, kw, "driver", (), {}
     if name == "empty":
         return _mix_target, _local(spark, [], mix_ddl), {}, "driver", (), {}
@@ -249,6 +279,8 @@ def _case(name, spark):
         "mix",
         "arrow",
         "arrow_dedup",
+        "arrow_nan",
+        "dataframe_dedup",
         "above_threshold",
         "empty",
         "insert_only",
@@ -297,6 +329,8 @@ def test_merge_paths_agree(spark, tmp_path, case):
     assert d_res["images"] == images
     assert s_res["images"] == s_res["rewrite"] == "spark"
     if images == "driver":
+        # a DataFrame source's condition runs on the driver too
+        assert d_res["condition"] == "driver"
         spark_rewrite = case == "above_threshold"
         assert d_res["rewrite"] == ("spark" if spark_rewrite else "driver")
     assert d_snap == s_snap
@@ -323,6 +357,13 @@ def test_merge_paths_agree(spark, tmp_path, case):
         assert [d_res[c] for c in counts] == [1, 3, 0]
         assert {r[0]: r[1] for r in d_snap if r[0] in (1, 3, 17, 40)} == {
             1: 4, 3: 9, 17: 8, 40: 1
+        }
+    if case == "arrow_nan":
+        assert {r[0]: r[1] for r in d_snap}[1] == 20
+    if case == "dataframe_dedup":
+        assert [d_res[c] for c in counts] == [2, 3, 0]
+        assert {r[0]: r[1] for r in d_snap if r[0] in (1, 3, 17, 40, 41)} == {
+            1: 4, 3: 9, 17: 8, 40: 2, 41: 5
         }
     if case == "empty":
         assert d_cdf == Counter() and d_res["touched_files"] == 0
@@ -362,9 +403,9 @@ def test_driver_merge_rebases_or_conflicts(spark, tmp_path, race_key, conflicts)
 
 def test_ct_batch_merges_within_job_budget(spark, tmp_path):
     """A change-tracking batch (the source's change feed, deduped by
-    commit version in merge) merges in at most 2 Spark jobs: collecting
-    the batch, with its dedup shuffle. The small target's touched files
-    are probed and rewritten on the driver."""
+    commit version in merge) merges in 1 Spark job, which collects it
+    as it is: the dedup, the delete condition and the small target's
+    probe and rewrite run on the driver."""
     src = VersionedTable.create(
         spark,
         str(tmp_path / "src"),
@@ -401,9 +442,56 @@ def test_ct_batch_merges_within_job_budget(spark, tmp_path):
             exclude_cols=["_commit_version", "op"],
         ),
     )
-    assert n <= 2, f"{n} Spark jobs"
-    assert res["images"] == res["rewrite"] == "driver"
+    assert n == 1, f"{n} Spark jobs"
+    assert res["images"] == res["rewrite"] == res["condition"] == "driver"
     assert _rows(silver.read()) == _rows(src.read())
+
+
+def test_dataframe_merge_keeps_evolved_column_metadata(spark, tmp_path):
+    """A small DataFrame that evolves in a commented column commits the
+    schema the Spark path commits: the comment rides ``schema_json``,
+    which Arrow alone would drop."""
+    src = _local(spark, [(1, 5, "a"), (60, 6, "b")], "id long, v long, w string")
+    src = src.withMetadata("w", {"comment": "a note"})
+    saved = spark.conf.get(THRESHOLD)
+    got = {}
+    try:
+        for path, threshold in (("driver", None), ("spark", "-1")):
+            t = _mix_target(spark, str(tmp_path / path))
+            if threshold:
+                spark.conf.set(THRESHOLD, threshold)
+            got[path] = t.merge(src, ["id"])["images"], t.get_commit().schema_json
+    finally:
+        spark.conf.set(THRESHOLD, saved)
+    assert got["driver"][0] == "driver" and got["spark"][0] == "spark"
+    assert got["driver"][1] == got["spark"][1]
+    assert T.StructType.fromJson(json.loads(got["driver"][1]))["w"].metadata[
+        "comment"
+    ] == "a note"
+
+
+def test_collected_null_key_batch_runs_its_source_once(spark, tmp_path):
+    """A small DataFrame is collected once; a NULL key sends the
+    collected rows, not the DataFrame, to the Spark path."""
+    t = VersionedTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame([(None, "x"), (1, "a")], "id long, v string"),
+    )
+    runs = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def counted(v):
+        runs.add(1)
+        return v
+
+    src = _local(spark, [(None, "x2"), (2, "b")], "id long, v string")
+    res = t.merge(src.select("id", counted("v").alias("v")), ["id"])
+    assert res["images"] == "spark"
+    assert runs.value == 2  # each source row once
+    assert sorted(t.read().collect(), key=str) == sorted(
+        [(None, "x2"), (1, "a"), (2, "b")], key=str
+    )
 
 
 def test_pipeline_cycles_keep_silver_file_count(spark, roots):
@@ -889,6 +977,263 @@ def test_merge_matched_condition_null_is_false(spark, tmp_path):
         matched_update_condition="s.seq > t.seq",  # 5 > NULL → NULL → skip
     )
     assert t.read().collect()[0].v == "keep"
+
+
+# -- the Spark-only merges: WHEN NOT MATCHED BY SOURCE and a matched condition
+
+
+def test_merge_nmbs_delete_full_sync(spark, tmp_path):
+    """Full-sync merge: source is the complete desired state; target rows
+    it doesn't mention are deleted, matched rows update, new rows insert
+    — and the change feed carries delete images for the purged rows."""
+    t = VersionedTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame(
+            [(i, f"old{i}") for i in range(1, 7)], "id long, v string"
+        ),
+    )
+    out = t.merge(
+        spark.createDataFrame(
+            [(2, "new2"), (4, "new4"), (7, "new7")], "id long, v string"
+        ),
+        ["id"],
+        not_matched_by_source_delete="true",
+    )
+    assert out["version"] == 1
+    got = {r.id: r.v for r in t.read().collect()}
+    assert got == {2: "new2", 4: "new4", 7: "new7"}
+    cf = t.change_feed(0)
+    deleted = sorted(
+        r.id for r in cf.filter("_change_type = 'delete'").collect()
+    )
+    assert deleted == [1, 3, 5, 6]
+    assert cf.filter("_change_type = 'insert'").count() == 1  # id 7
+    assert cf.filter("_change_type = 'update_postimage'").count() == 2
+
+
+def test_merge_nmbs_conditional_delete_prunes_files(spark, tmp_path):
+    """A conditional by-source delete only rewrites files whose rows are
+    unmatched AND satisfy the condition — copy-on-write pruning holds."""
+    t = VersionedTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame(
+            [(1, "keep"), (2, "keep")], "id long, status string"
+        ).coalesce(1),
+    )
+    t.append(
+        spark.createDataFrame(
+            [(3, "stale"), (4, "keep")], "id long, status string"
+        ).coalesce(1)
+    )
+    # source matches nothing; condition only hits the second file (id 3)
+    out = t.merge(
+        spark.createDataFrame([(99, "x")], "id long, status string"),
+        ["id"],
+        not_matched_by_source_delete="status = 'stale'",
+    )
+    assert out["touched_files"] == 1
+    assert out["carryover_files"] == 1
+    got = sorted(r.id for r in t.read().collect())
+    assert got == [1, 2, 4, 99]
+
+
+def test_merge_nmbs_update_marks_stale(spark, tmp_path):
+    """By-source UPDATE: unmatched target rows get target-side
+    assignments (gated by a condition), with exact CDF pre/post images."""
+    t = VersionedTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame(
+            [(1, "live", 10), (2, "live", 20), (3, "dead", 30)],
+            "id long, status string, n long",
+        ),
+    )
+    t.merge(
+        spark.createDataFrame([(1, "live", 11)], "id long, status string, n long"),
+        ["id"],
+        not_matched_by_source_update={"status": "'stale'", "n": "n + 100"},
+        not_matched_by_source_update_condition="status = 'live'",
+    )
+    got = {r.id: (r.status, r.n) for r in t.read().collect()}
+    assert got == {
+        1: ("live", 11),       # matched: updated from source
+        2: ("stale", 120),     # unmatched + condition: assignments applied
+        3: ("dead", 30),       # unmatched, condition false: untouched
+    }
+    cf = t.change_feed(0)
+    pre = {
+        r.id: (r.status, r.n)
+        for r in cf.filter(
+            "_change_type = 'update_preimage' and id = 2"
+        ).collect()
+    }
+    post = {
+        r.id: (r.status, r.n)
+        for r in cf.filter(
+            "_change_type = 'update_postimage' and id = 2"
+        ).collect()
+    }
+    assert pre == {2: ("live", 20)} and post == {2: ("stale", 120)}
+
+
+def test_merge_nmbs_delete_beats_update(spark, tmp_path):
+    """When both by-source clauses match a row, delete wins (documented
+    clause order) — the row is gone, not updated."""
+    t = VersionedTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame([(1, "x"), (2, "x")], "id long, v string"),
+    )
+    t.merge(
+        spark.createDataFrame([(2, "upd")], "id long, v string"),
+        ["id"],
+        not_matched_by_source_delete="id = 1",
+        not_matched_by_source_update={"v": "'touched'"},
+    )
+    got = {r.id: r.v for r in t.read().collect()}
+    assert got == {2: "upd"}  # id 1 deleted, not updated
+
+
+def test_merge_nmbs_validates_assignments(spark, tmp_path):
+    t = VersionedTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame([(1, "a")], "id long, v string"),
+    )
+    with pytest.raises(ValueError, match="unknown"):
+        t.merge(
+            spark.createDataFrame([(1, "b")], "id long, v string"),
+            ["id"],
+            not_matched_by_source_update={"nope": "'x'"},
+        )
+    with pytest.raises(ValueError, match="requires"):
+        t.merge(
+            spark.createDataFrame([(1, "b")], "id long, v string"),
+            ["id"],
+            not_matched_by_source_update_condition="true",
+        )
+
+
+def test_merge_nmbs_conflicts_on_concurrent_append(spark, tmp_path):
+    """OCC is conservative under a by-source clause: ANY concurrently
+    added file conflicts (its rows would be unmatched-by-source in a
+    serial execution), even if its keys don't collide with the merge."""
+    p = str(tmp_path / "t")
+    t = VersionedTable.create(
+        spark, p, spark.createDataFrame([(1, "a")], "id long, v string")
+    )
+
+    def racing_foreign_append():
+        VersionedTable(spark, p).append(
+            spark.createDataFrame([(50, "x")], "id long, v string")
+        )
+
+    _inject_before_merge_commit(t, racing_foreign_append)
+    with pytest.raises(CommitConflictError, match="NOT MATCHED BY SOURCE"):
+        t.merge(
+            spark.createDataFrame([(1, "upd")], "id long, v string"),
+            ["id"],
+            not_matched_by_source_delete="true",
+        )
+    # re-run on the fresh snapshot: full-sync semantics now purge id 50
+    t2 = VersionedTable(spark, p)
+    t2.merge(
+        spark.createDataFrame([(1, "upd")], "id long, v string"),
+        ["id"],
+        not_matched_by_source_delete="true",
+    )
+    assert {r.id: r.v for r in t2.read().collect()} == {1: "upd"}
+
+
+def test_merge_nmbs_checksum_converges(spark, tmp_path):
+    """IncrementalChecksum consuming the change feed across a by-source
+    merge converges to the recomputed truth — the NMBS delete/update
+    images are exact."""
+    t = VersionedTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame(
+            [(i, i * 10) for i in range(8)], "id long, n long"
+        ),
+    )
+    cs = IncrementalChecksum(spark, t, str(tmp_path / "cs"))
+    cs.refresh()
+    t.merge(
+        spark.createDataFrame([(0, 5), (9, 90)], "id long, n long"),
+        ["id"],
+        not_matched_by_source_delete="id >= 6",
+        not_matched_by_source_update={"n": "n + 1"},
+    )
+    cs.refresh()
+    assert cs.current() == cs.compute_now()
+
+
+def test_merge_matched_update_condition_guards_out_of_order(spark, tmp_path):
+    """Delta's whenMatchedUpdate(condition): 's.seq > t.seq' keeps a
+    late replay of an OLD batch from overwriting newer data — skipped
+    rows carry byte-identical and emit NO change-feed images."""
+    t = VersionedTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame(
+            [(1, "v5", 5), (2, "v9", 9)], "id long, v string, seq long"
+        ),
+    )
+    cs = IncrementalChecksum(spark, t, str(tmp_path / "cs"))
+    cs.refresh()
+    # late batch: id1 newer (7>5, applies), id2 older (3<9, skipped),
+    # id3 brand-new (inserts regardless of the matched condition)
+    out = t.merge(
+        spark.createDataFrame(
+            [(1, "v7", 7), (2, "v3", 3), (3, "v1", 1)],
+            "id long, v string, seq long",
+        ),
+        ["id"],
+        matched_update_condition="s.seq > t.seq",
+    )
+    got = {r.id: (r.v, r.seq) for r in t.read().collect()}
+    assert got == {1: ("v7", 7), 2: ("v9", 9), 3: ("v1", 1)}
+    cf = t.change_feed(0)
+    assert cf.filter("id = 2").count() == 0  # skipped: no images at all
+    assert cf.filter("id = 1 and _change_type = 'update_postimage'").count() == 1
+    assert cf.filter("id = 3 and _change_type = 'insert'").count() == 1
+    cs.refresh()
+    assert cs.current() == cs.compute_now()
+    # delete still wins over a failing update condition
+    t.merge(
+        spark.createDataFrame(
+            [(2, "x", 0, True)], "id long, v string, seq long, is_del boolean"
+        ),
+        ["id"],
+        delete_condition="is_del",
+        exclude_cols=["is_del"],
+        matched_update_condition="s.seq > t.seq",
+    )
+    assert t.read().filter("id = 2").count() == 0
+
+
+def test_merge_nmbs_composes_with_schema_evolution(spark, tmp_path):
+    """A source that evolves a new column in + by-source clauses in one
+    merge: unmatched rows null-fill the new column (update assignments
+    still see only OLD target columns), and the feed stays exact."""
+    t = VersionedTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame([(1, 10), (2, 20)], "id long, n long"),
+    )
+    cs = IncrementalChecksum(spark, t, str(tmp_path / "cs"))
+    cs.refresh()
+    t.merge(
+        spark.createDataFrame([(1, 11, "x")], "id long, n long, tag string"),
+        ["id"],
+        not_matched_by_source_update={"n": "n + 1000"},
+    )
+    got = {r.id: (r.n, r.tag) for r in t.read().collect()}
+    assert got == {1: (11, "x"), 2: (1020, None)}
+    cs.refresh()
+    assert cs.current() == cs.compute_now()
 
 
 # -- the delete condition on the driver ----------------------------------------

@@ -1,6 +1,6 @@
 """Pipeline-core tests (the load loop itself is in ``test_load.py``, the
-core merge semantics, txn tokens and the latest-per-key property test
-in ``test_merge.py``).
+core merge semantics, txn tokens, the by-source and matched-condition
+merges and the latest-per-key property test in ``test_merge.py``).
 """
 
 from __future__ import annotations
@@ -14,7 +14,6 @@ from pyspark.sql import types as T
 
 from nrtwithdeltalake_spark.pipeline.tables import VersionedTable
 
-from .test_commit_loop import _inject_before_merge_commit
 from .test_load import _txn_df
 
 # Slow tier (see pytest.ini): excluded from the default driver-budget
@@ -1472,198 +1471,6 @@ def test_append_type_widening(spark, tmp_path):
 # -- WHEN NOT MATCHED BY SOURCE (Delta's third merge clause family) ---------
 
 
-def test_merge_nmbs_delete_full_sync(spark, tmp_path):
-    """Full-sync merge: source is the complete desired state; target rows
-    it doesn't mention are deleted, matched rows update, new rows insert
-    — and the change feed carries delete images for the purged rows."""
-    t = VersionedTable.create(
-        spark,
-        str(tmp_path / "t"),
-        spark.createDataFrame(
-            [(i, f"old{i}") for i in range(1, 7)], "id long, v string"
-        ),
-    )
-    out = t.merge(
-        spark.createDataFrame(
-            [(2, "new2"), (4, "new4"), (7, "new7")], "id long, v string"
-        ),
-        ["id"],
-        not_matched_by_source_delete="true",
-    )
-    assert out["version"] == 1
-    got = {r.id: r.v for r in t.read().collect()}
-    assert got == {2: "new2", 4: "new4", 7: "new7"}
-    cf = t.change_feed(0)
-    deleted = sorted(
-        r.id for r in cf.filter("_change_type = 'delete'").collect()
-    )
-    assert deleted == [1, 3, 5, 6]
-    assert cf.filter("_change_type = 'insert'").count() == 1  # id 7
-    assert cf.filter("_change_type = 'update_postimage'").count() == 2
-
-
-def test_merge_nmbs_conditional_delete_prunes_files(spark, tmp_path):
-    """A conditional by-source delete only rewrites files whose rows are
-    unmatched AND satisfy the condition — copy-on-write pruning holds."""
-    t = VersionedTable.create(
-        spark,
-        str(tmp_path / "t"),
-        spark.createDataFrame(
-            [(1, "keep"), (2, "keep")], "id long, status string"
-        ).coalesce(1),
-    )
-    t.append(
-        spark.createDataFrame(
-            [(3, "stale"), (4, "keep")], "id long, status string"
-        ).coalesce(1)
-    )
-    # source matches nothing; condition only hits the second file (id 3)
-    out = t.merge(
-        spark.createDataFrame([(99, "x")], "id long, status string"),
-        ["id"],
-        not_matched_by_source_delete="status = 'stale'",
-    )
-    assert out["touched_files"] == 1
-    assert out["carryover_files"] == 1
-    got = sorted(r.id for r in t.read().collect())
-    assert got == [1, 2, 4, 99]
-
-
-def test_merge_nmbs_update_marks_stale(spark, tmp_path):
-    """By-source UPDATE: unmatched target rows get target-side
-    assignments (gated by a condition), with exact CDF pre/post images."""
-    t = VersionedTable.create(
-        spark,
-        str(tmp_path / "t"),
-        spark.createDataFrame(
-            [(1, "live", 10), (2, "live", 20), (3, "dead", 30)],
-            "id long, status string, n long",
-        ),
-    )
-    t.merge(
-        spark.createDataFrame([(1, "live", 11)], "id long, status string, n long"),
-        ["id"],
-        not_matched_by_source_update={"status": "'stale'", "n": "n + 100"},
-        not_matched_by_source_update_condition="status = 'live'",
-    )
-    got = {r.id: (r.status, r.n) for r in t.read().collect()}
-    assert got == {
-        1: ("live", 11),       # matched: updated from source
-        2: ("stale", 120),     # unmatched + condition: assignments applied
-        3: ("dead", 30),       # unmatched, condition false: untouched
-    }
-    cf = t.change_feed(0)
-    pre = {
-        r.id: (r.status, r.n)
-        for r in cf.filter(
-            "_change_type = 'update_preimage' and id = 2"
-        ).collect()
-    }
-    post = {
-        r.id: (r.status, r.n)
-        for r in cf.filter(
-            "_change_type = 'update_postimage' and id = 2"
-        ).collect()
-    }
-    assert pre == {2: ("live", 20)} and post == {2: ("stale", 120)}
-
-
-def test_merge_nmbs_delete_beats_update(spark, tmp_path):
-    """When both by-source clauses match a row, delete wins (documented
-    clause order) — the row is gone, not updated."""
-    t = VersionedTable.create(
-        spark,
-        str(tmp_path / "t"),
-        spark.createDataFrame([(1, "x"), (2, "x")], "id long, v string"),
-    )
-    t.merge(
-        spark.createDataFrame([(2, "upd")], "id long, v string"),
-        ["id"],
-        not_matched_by_source_delete="id = 1",
-        not_matched_by_source_update={"v": "'touched'"},
-    )
-    got = {r.id: r.v for r in t.read().collect()}
-    assert got == {2: "upd"}  # id 1 deleted, not updated
-
-
-def test_merge_nmbs_validates_assignments(spark, tmp_path):
-    t = VersionedTable.create(
-        spark,
-        str(tmp_path / "t"),
-        spark.createDataFrame([(1, "a")], "id long, v string"),
-    )
-    with pytest.raises(ValueError, match="unknown"):
-        t.merge(
-            spark.createDataFrame([(1, "b")], "id long, v string"),
-            ["id"],
-            not_matched_by_source_update={"nope": "'x'"},
-        )
-    with pytest.raises(ValueError, match="requires"):
-        t.merge(
-            spark.createDataFrame([(1, "b")], "id long, v string"),
-            ["id"],
-            not_matched_by_source_update_condition="true",
-        )
-
-
-def test_merge_nmbs_conflicts_on_concurrent_append(spark, tmp_path):
-    """OCC is conservative under a by-source clause: ANY concurrently
-    added file conflicts (its rows would be unmatched-by-source in a
-    serial execution), even if its keys don't collide with the merge."""
-    from nrtwithdeltalake_spark.pipeline.tables import CommitConflictError
-
-    p = str(tmp_path / "t")
-    t = VersionedTable.create(
-        spark, p, spark.createDataFrame([(1, "a")], "id long, v string")
-    )
-
-    def racing_foreign_append():
-        VersionedTable(spark, p).append(
-            spark.createDataFrame([(50, "x")], "id long, v string")
-        )
-
-    _inject_before_merge_commit(t, racing_foreign_append)
-    with pytest.raises(CommitConflictError, match="NOT MATCHED BY SOURCE"):
-        t.merge(
-            spark.createDataFrame([(1, "upd")], "id long, v string"),
-            ["id"],
-            not_matched_by_source_delete="true",
-        )
-    # re-run on the fresh snapshot: full-sync semantics now purge id 50
-    t2 = VersionedTable(spark, p)
-    t2.merge(
-        spark.createDataFrame([(1, "upd")], "id long, v string"),
-        ["id"],
-        not_matched_by_source_delete="true",
-    )
-    assert {r.id: r.v for r in t2.read().collect()} == {1: "upd"}
-
-
-def test_merge_nmbs_checksum_converges(spark, tmp_path):
-    """IncrementalChecksum consuming the change feed across a by-source
-    merge converges to the recomputed truth — the NMBS delete/update
-    images are exact."""
-    from nrtwithdeltalake_spark.pipeline.checksum_view import IncrementalChecksum
-
-    t = VersionedTable.create(
-        spark,
-        str(tmp_path / "t"),
-        spark.createDataFrame(
-            [(i, i * 10) for i in range(8)], "id long, n long"
-        ),
-    )
-    cs = IncrementalChecksum(spark, t, str(tmp_path / "cs"))
-    cs.refresh()
-    t.merge(
-        spark.createDataFrame([(0, 5), (9, 90)], "id long, n long"),
-        ["id"],
-        not_matched_by_source_delete="id >= 6",
-        not_matched_by_source_update={"n": "n + 1"},
-    )
-    cs.refresh()
-    assert cs.current() == cs.compute_now()
-
-
 @settings(max_examples=5, deadline=None)
 @given(
     history=st.lists(
@@ -1706,76 +1513,6 @@ def test_merge_nmbs_full_sync_equals_source_oracle(
             expect[k] = v  # later rows win (seq order)
         got = {r.k: r.v for r in t.read().collect()}
         assert got == expect, f"batch={batch}"
-
-
-def test_merge_matched_update_condition_guards_out_of_order(spark, tmp_path):
-    """Delta's whenMatchedUpdate(condition): 's.seq > t.seq' keeps a
-    late replay of an OLD batch from overwriting newer data — skipped
-    rows carry byte-identical and emit NO change-feed images."""
-    from nrtwithdeltalake_spark.pipeline.checksum_view import IncrementalChecksum
-
-    t = VersionedTable.create(
-        spark,
-        str(tmp_path / "t"),
-        spark.createDataFrame(
-            [(1, "v5", 5), (2, "v9", 9)], "id long, v string, seq long"
-        ),
-    )
-    cs = IncrementalChecksum(spark, t, str(tmp_path / "cs"))
-    cs.refresh()
-    # late batch: id1 newer (7>5, applies), id2 older (3<9, skipped),
-    # id3 brand-new (inserts regardless of the matched condition)
-    out = t.merge(
-        spark.createDataFrame(
-            [(1, "v7", 7), (2, "v3", 3), (3, "v1", 1)],
-            "id long, v string, seq long",
-        ),
-        ["id"],
-        matched_update_condition="s.seq > t.seq",
-    )
-    got = {r.id: (r.v, r.seq) for r in t.read().collect()}
-    assert got == {1: ("v7", 7), 2: ("v9", 9), 3: ("v1", 1)}
-    cf = t.change_feed(0)
-    assert cf.filter("id = 2").count() == 0  # skipped: no images at all
-    assert cf.filter("id = 1 and _change_type = 'update_postimage'").count() == 1
-    assert cf.filter("id = 3 and _change_type = 'insert'").count() == 1
-    cs.refresh()
-    assert cs.current() == cs.compute_now()
-    # delete still wins over a failing update condition
-    t.merge(
-        spark.createDataFrame(
-            [(2, "x", 0, True)], "id long, v string, seq long, is_del boolean"
-        ),
-        ["id"],
-        delete_condition="is_del",
-        exclude_cols=["is_del"],
-        matched_update_condition="s.seq > t.seq",
-    )
-    assert t.read().filter("id = 2").count() == 0
-
-
-def test_merge_nmbs_composes_with_schema_evolution(spark, tmp_path):
-    """A source that evolves a new column in + by-source clauses in one
-    merge: unmatched rows null-fill the new column (update assignments
-    still see only OLD target columns), and the feed stays exact."""
-    from nrtwithdeltalake_spark.pipeline.checksum_view import IncrementalChecksum
-
-    t = VersionedTable.create(
-        spark,
-        str(tmp_path / "t"),
-        spark.createDataFrame([(1, 10), (2, 20)], "id long, n long"),
-    )
-    cs = IncrementalChecksum(spark, t, str(tmp_path / "cs"))
-    cs.refresh()
-    t.merge(
-        spark.createDataFrame([(1, 11, "x")], "id long, n long, tag string"),
-        ["id"],
-        not_matched_by_source_update={"n": "n + 1000"},
-    )
-    got = {r.id: (r.n, r.tag) for r in t.read().collect()}
-    assert got == {1: (11, "x"), 2: (1020, None)}
-    cs.refresh()
-    assert cs.current() == cs.compute_now()
 
 
 # -- generated columns (Delta GENERATED ALWAYS AS analog) -------------------
