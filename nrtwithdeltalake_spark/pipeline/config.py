@@ -23,6 +23,7 @@ from __future__ import annotations
 import datetime
 import json
 import os
+import re
 import threading
 
 from pyspark.sql import Row, SparkSession
@@ -45,6 +46,17 @@ def wm_time(wm: str) -> datetime.datetime | None:
     except ValueError:
         return None
     return t if t.isoformat(sep=" ") == wm else None
+
+
+def wm_printed(wm: str) -> bool:
+    """True for a time as ``date_format(ts, 'yyyy-MM-dd HH:mm:ss')``
+    prints one: a year outside 0-9999 is signed ("+10000-01-01 ...")."""
+    m = re.fullmatch(r"([+-]?\d+)(-.*)", wm)
+    year = int(m[1]) if m else 0
+    if not m or m[1] != (f"{year:04d}" if 0 <= year <= 9999 else f"{year:+05d}"):
+        return False
+    # the Gregorian calendar repeats every 400 years
+    return wm_time(f"{2000 + year % 400}{m[2]}") is not None
 
 
 ENTITIES_SCHEMA = T.StructType(
@@ -227,9 +239,10 @@ class ConfigStore:
         """OpenWatermark proc (dbrconfig.sql:45-83), with no I/O: returns
         the load's pending ledger row, ``LoadStartDatetime`` set. The
         row is written only by ``close_watermark``, after the silver
-        commit, so the ledger never holds an open row. A malformed
-        ``date_wm`` raises: it would send every later TMSTP load to Spark."""
-        if date_wm is not None and wm_time(date_wm) is None:
+        commit, so the ledger never holds an open row. A ``date_wm``
+        that is no time ``date_format`` prints (``wm_printed``) raises:
+        it would send every later TMSTP load to Spark."""
+        if date_wm is not None and not wm_printed(date_wm):
             raise ValueError(f"malformed DateWatermark {date_wm!r}")
         return {
             "EntityId": entity_id,

@@ -5,10 +5,12 @@
 ``parse`` runs Spark's own parser
 (``sessionState().sqlParser().parseExpression``) once per condition
 string and keeps a plain-Python tree of it; ``mask`` evaluates that tree
-over a ``pyarrow.Table`` with no JVM call. The set:
+over a ``pyarrow.Table`` and its Spark schema with no JVM call. The set:
 
 * a column whose name is exactly one of the table's (a match only when
-  case is ignored is left to Spark's resolver);
+  case is ignored is left to Spark's resolver) and whose Spark type is
+  not a string of another collation than the default, CHAR or VARCHAR
+  (Spark compares by the collation, and pads a CHAR's operands);
 * string, integral, floating, boolean and NULL literals;
 * ``=``, ``<=>``, ``!=``/``<>``, ``<``, ``<=``, ``>``, ``>=``, ``IN``,
   ``IS [NOT] NULL``, ``AND``, ``OR`` and ``NOT``, in three-valued
@@ -34,6 +36,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import SparkSession
+from pyspark.sql import types as T
 
 _COMPARE = {
     "EqualTo": "equal",
@@ -67,6 +70,8 @@ _LITERALS = {
 # Spark's numeric widening order
 _NUMERIC = [pa.int8(), pa.int16(), pa.int32(), pa.int64(), pa.float32(), pa.float64()]
 _NULL = pa.scalar(None, pa.bool_())
+# the field metadata that marks a Spark string column CHAR(n) or VARCHAR(n)
+_CHAR_VARCHAR = "__CHAR_VARCHAR_TYPE_STRING"
 
 # condition string -> its tree, or None outside the set; past
 # _PARSED_MAX strings the oldest is dropped, and the lock keeps
@@ -120,13 +125,16 @@ def _tree(j) -> tuple:
     return ("compare", op, *args) if name in _COMPARE else (op, *args)
 
 
-def mask(tree: tuple | None, tbl: pa.Table) -> np.ndarray | None:
-    """The rows of ``tbl`` where ``tree`` is TRUE (NULL is false), or
-    None when it must be evaluated in Spark (``tree`` None included)."""
+def mask(
+    tree: tuple | None, tbl: pa.Table, types: T.StructType
+) -> np.ndarray | None:
+    """The rows of ``tbl``, whose Spark schema is ``types``, where
+    ``tree`` is TRUE (NULL is false), or None when it must be evaluated
+    in Spark (``tree`` None included)."""
     if tree is None:
         return None
     try:
-        v, t = _eval(tree, tbl)
+        v, t = _eval(tree, tbl, types)
     except _Outside:
         return None
     if not pa.types.is_boolean(t):
@@ -136,7 +144,7 @@ def mask(tree: tuple | None, tbl: pa.Table) -> np.ndarray | None:
     return pc.fill_null(v, False).to_numpy(zero_copy_only=False)
 
 
-def _eval(node: tuple, tbl: pa.Table):
+def _eval(node: tuple, tbl: pa.Table, types: T.StructType):
     """(value, Arrow type) of one node: an array over ``tbl``'s rows or
     a scalar."""
     kind = node[0]
@@ -146,31 +154,35 @@ def _eval(node: tuple, tbl: pa.Table):
             name not in tbl.column_names
         ):
             raise _Outside(name)
+        t = types[name].dataType
+        collated = isinstance(t, T.StringType) and t != T.StringType()
+        if collated or _CHAR_VARCHAR in types[name].metadata:
+            raise _Outside(f"{name} {t}")
         col = tbl.column(name)
         return col, col.type
     if kind == "lit":
         return pa.scalar(node[1], node[2]), node[2]
     if kind in ("is_null", "is_valid"):
-        return getattr(pc, kind)(_eval(node[1], tbl)[0]), pa.bool_()
+        return getattr(pc, kind)(_eval(node[1], tbl, types)[0]), pa.bool_()
     if kind in ("and", "or"):
-        left, right = (_logical(n, tbl) for n in node[1:])
+        left, right = (_logical(n, tbl, types) for n in node[1:])
         return getattr(pc, f"{kind}_kleene")(left, right), pa.bool_()
     if kind == "not":
-        return pc.invert(_logical(node[1], tbl)), pa.bool_()
+        return pc.invert(_logical(node[1], tbl, types)), pa.bool_()
     if kind == "compare":
-        left, right = _common([_eval(n, tbl) for n in node[2:]])
+        left, right = _common([_eval(n, tbl, types) for n in node[2:]])
         if left is None or right is None:
             return _NULL, pa.bool_()
         return getattr(pc, node[1])(left, right), pa.bool_()
     if kind == "null_safe":
-        left, right = _common([_eval(n, tbl) for n in node[1:]])
+        left, right = _common([_eval(n, tbl, types) for n in node[1:]])
         if left is None or right is None:
             other = right if left is None else left
             return (pa.scalar(True) if other is None else pc.is_null(other)), pa.bool_()
         both_null = pc.and_(pc.is_null(left), pc.is_null(right))
         return pc.or_(pc.fill_null(pc.equal(left, right), False), both_null), pa.bool_()
     # IN: value = item OR ... in Kleene logic, over the list's common type
-    value, *items = _common([_eval(n, tbl) for n in node[1:]])
+    value, *items = _common([_eval(n, tbl, types) for n in node[1:]])
     out = pa.scalar(False)
     for item in items:
         hit = _NULL if value is None or item is None else pc.equal(value, item)
@@ -178,9 +190,9 @@ def _eval(node: tuple, tbl: pa.Table):
     return out, pa.bool_()
 
 
-def _logical(node: tuple, tbl: pa.Table):
+def _logical(node: tuple, tbl: pa.Table, types: T.StructType):
     """An operand of AND, OR or NOT: boolean, or a NULL literal."""
-    v, t = _eval(node, tbl)
+    v, t = _eval(node, tbl, types)
     if pa.types.is_null(t):
         return _NULL
     if not pa.types.is_boolean(t):

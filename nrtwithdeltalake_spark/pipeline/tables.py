@@ -97,6 +97,13 @@ def _driver_key(t: T.DataType) -> bool:
     return isinstance(t, _DRIVER_KEY_TYPES) or t == T.StringType()
 
 
+def _driver_order(t: T.DataType) -> bool:
+    """True for an order type Arrow sorts as Spark does (NaN aside):
+    not nested, nor a string of another collation."""
+    collated = isinstance(t, T.StringType) and t != T.StringType()
+    return isinstance(t, T.AtomicType) and not collated
+
+
 def _strip_scheme(p: str) -> str:
     return p[len("file:") :] if p.startswith("file:") else p
 
@@ -3144,28 +3151,26 @@ class VersionedTable:
         insert), schema evolution, the stats-based probe pruning and the
         commit. The batch pairs on the DRIVER when the merge has no
         identity column, by-source clause or ``matched_update_condition``,
-        the table allows driver writes (``_driver_writable``), every key
-        is integral, string, date or timestamp (Arrow's join equality is
-        Spark's there) and never NULL, and the batch is small: a
-        ``pyarrow.Table`` whose ``nbytes``, or a DataFrame whose plan's
-        ``sizeInBytes`` (``_collectable``: Spark's estimate from the
-        files the plan reads), is at most
+        the table allows driver writes (``_driver_writable``), the keys
+        are of a type Arrow pairs as Spark does (``_driver_key``) and
+        never NULL, ``dedup_order_col`` is neither nested nor collated
+        (``_driver_order``), and the batch is small: an Arrow batch's
+        ``nbytes``, or a DataFrame plan's ``sizeInBytes`` (Spark's
+        estimate from the files it reads, ``_collectable``), at most
         ``spark.sql.autoBroadcastJoinThreshold``, read once per merge
-        (``-1`` disables it). A small DataFrame is collected as it is, in
-        one job, and never runs again. ``_arrow_source`` dedups the
-        batch, evaluates ``delete_condition`` (no JVM call for a
-        condition in ``pipeline/predicate.py``'s set) and aligns it;
-        ``_merge_arrow`` pairs it with the target and writes the
-        change-feed images with pyarrow. Anything else takes the SPARK
-        path, an Arrow batch converted with ``_spark_frame``: generated
-        columns, a full outer join, written as data and as change feed.
-        When the driver path's candidate files (``_key_range_files``)
-        total at most the threshold on disk, the driver reads them and
-        writes the touched files' other rows with the new ones as ONE
-        pyarrow file, so a DataFrame's merge starts one Spark job and an
-        Arrow batch's none. Larger candidates take one Spark probe of
-        the batch's keys and one Spark rewrite of the touched files into
-        at most as many files.
+        (``-1`` disables it). A small DataFrame is collected as it is,
+        in one job, and never runs again. ``_arrow_source`` dedups,
+        flags (``delete_condition``, with no JVM call in
+        ``pipeline/predicate.py``'s set) and aligns the batch;
+        ``_merge_arrow`` pairs it and writes the change-feed images with
+        pyarrow. Anything else takes the SPARK path, an Arrow batch in
+        ``_spark_types``' schema: generated columns, a full outer join,
+        written as data and as change feed. The driver path reads and
+        rewrites candidate files (``_key_range_files``) totalling at
+        most the threshold on disk as ONE pyarrow file, so a DataFrame's
+        merge starts one Spark job and an Arrow batch's none; larger
+        candidates take one Spark probe and one Spark rewrite into at
+        most as many files.
         Measured range (4 vCPUs, 3 GB driver heap, 2M-row target, one
         or two runs per size at the session's 64 MB threshold): the
         driver path took 0.2–0.46x the Spark path's time up to 300k
@@ -3352,25 +3357,33 @@ class VersionedTable:
                 **stats,
             }
 
-        # the one driver/Spark choice point, for both source types; a
-        # NULL key, which eqNullSafe matches, sends the batch to Spark
-        frame = source.schema if isinstance(source, DataFrame) else None
-        types = frame or _spark_types(source.schema)
+        # the one driver/Spark choice point, for both source types, on
+        # the one source schema both paths read; a NULL key, which
+        # eqNullSafe matches, sends the batch to Spark
+        if isinstance(source, DataFrame):
+            types = source.schema
+        else:
+            types = _spark_types(source.schema)
         if (
             pairable
             and self._driver_writable(prev)
             and all(_driver_key(types[k].dataType) for k in keys)
+            and (
+                dedup_order_col is None
+                or dedup_order_col in columns
+                and _driver_order(types[dedup_order_col].dataType)
+            )
         ):
-            if frame is None:
-                small = source.nbytes <= limit
-            else:
+            if isinstance(source, DataFrame):
                 arrow = self._collectable(source, limit)
                 small = arrow is not None
                 if small:
                     source = source.toArrow().cast(arrow)
+            else:
+                small = source.nbytes <= limit
             if small and not any(source.column(k).null_count for k in keys):
                 batch, schema, condition = self._arrow_source(
-                    prev, source, frame, keys, delete_condition,
+                    prev, source, types, keys, delete_condition,
                     dedup_order_col, exclude_cols,
                 )
                 return commit(
@@ -3379,9 +3392,9 @@ class VersionedTable:
                     condition=condition,
                 )
         if not isinstance(source, DataFrame):
-            # converted as ``append`` converts one; a collected DataFrame
-            # keeps its schema and never runs again
-            source = _spark_frame(self.spark, source, frame)
+            # an Arrow batch or a collected DataFrame (which never runs
+            # again), in the schema the driver path reads
+            source = _spark_frame(self.spark, source, types)
         # evaluate the delete predicate on the source BEFORE the join so
         # column references stay unambiguous
         src = source.withColumn(
@@ -3730,7 +3743,7 @@ class VersionedTable:
         self,
         prev: Commit,
         tbl: pa.Table,
-        frame: T.StructType | None,
+        types: T.StructType,
         keys: list[str],
         delete_condition: str | None,
         dedup_order_col: str | None,
@@ -3739,9 +3752,9 @@ class VersionedTable:
         """A small merge source made ``_merge_arrow``'s batch on the
         driver, with the merged schema: deduped as the Spark path dedups,
         aligned to that schema, with ``__is_delete``. ``tbl`` is an Arrow
-        source or a DataFrame's collected rows, whose schema ``frame`` is
-        then the one the Spark path would see (field metadata,
-        TIMESTAMP_NTZ). The third value names where ``delete_condition``
+        source or a DataFrame's collected rows, and ``types`` the Spark
+        schema the Spark path reads them in (a DataFrame's keeps its
+        field metadata). The third value names where ``delete_condition``
         ran: "driver" when ``pipeline/predicate.py`` evaluates it in
         Arrow, otherwise "spark": Spark filters the rows as a local
         relation, whose collect runs no job. Both keep its SQL meaning,
@@ -3750,17 +3763,17 @@ class VersionedTable:
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        types = frame or _spark_types(tbl.schema)
         deletes = np.zeros(tbl.num_rows, dtype=bool)
         condition = "driver"
         if delete_condition and tbl.num_rows:
-            hits = predicate.mask(predicate.parse(self.spark, delete_condition), tbl)
+            tree = predicate.parse(self.spark, delete_condition)
+            hits = predicate.mask(tree, tbl, types)
             if hits is None:
                 # Spark's filter: only the deleting rows' positions come
                 # back as Python rows
                 condition = "spark"
                 pos = pa.array(np.arange(tbl.num_rows))
-                with_pos = frame and T.StructType([*frame.fields]).add("__pos", "long")
+                with_pos = T.StructType([*types.fields]).add("__pos", "long")
                 rows = (
                     _spark_frame(self.spark, tbl.append_column("__pos", pos), with_pos)
                     .filter(F.expr(delete_condition))

@@ -966,13 +966,59 @@ def test_open_watermark_rejects_malformed_date(spark, tmp_path):
     before any write: stored, it would send every later TMSTP load of
     the entity through Spark."""
     store = ConfigStore(spark, str(tmp_path / "config"))
-    for wm in ("2030-01-01 00:00:62", "2030-01-01T00:00:00", "2030-1-1 00:00:00"):
+    for wm in (
+        "2030-01-01 00:00:62",
+        "2030-01-01T00:00:00",
+        "2030-1-1 00:00:00",
+        "+2030-01-01 00:00:00",
+        "10000-01-01 00:00:00",
+        "-0005-02-29 00:00:00",
+    ):
         with pytest.raises(ValueError, match="DateWatermark"):
             store.open_watermark(2, wm, None)
-    assert store.open_watermark(2, DEFAULT_DATE_WM, None)["DateWatermark"] == (
-        DEFAULT_DATE_WM
-    )
+    # what date_format prints outside years 1-9999, and the default
+    for wm in (
+        "+10000-01-01 08:59:59",
+        "0000-02-29 00:00:00",
+        "-0001-12-31 09:44:59",
+        DEFAULT_DATE_WM,
+    ):
+        assert store.open_watermark(2, wm, None)["DateWatermark"] == wm
     assert not os.path.exists(store.root)
+
+
+def test_tmstp_load_past_year_9999_in_local_time(spark, tmp_path):
+    """A TMSTP source whose latest time is the INT96 maximum, in an
+    Asia/Tokyo session, where that is past year 9999: the driver leaves
+    the snapshot to Spark, the load stores the watermark ``date_format``
+    prints, and the entity bootstraps and cycles."""
+    roots = [str(tmp_path / r) for r in ("src", "silver", "cfg")]
+    saved = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+    try:
+        src = VersionedTable.create(
+            spark,
+            os.path.join(roots[0], "ts"),
+            spark.createDataFrame(
+                [(9, "int96 high", _INT96_HIGH)],
+                "id long, name string, ts timestamp",
+            ).coalesce(1),
+        )
+        store = ConfigStore(spark, roots[2])
+        store.init()
+        store.register_entity(
+            "ts", "silver_ts", "TMSTP", ["id"], timestamp_column="ts"
+        )
+        boot = run_pipeline(spark, store, roots[0], roots[1])
+        new = [(10, "new", _TS_ROWS[2][2])]
+        src.append(spark.createDataFrame(new, src.read().schema))
+        cycle = run_pipeline(spark, store, roots[0], roots[1])
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", saved)
+    assert [(r.action, r.new_watermark, r.rows) for r in boot] == [
+        ("full", "+10000-01-01 08:59:59", 1)
+    ]
+    assert [r.action for r in cycle] == ["incremental"]
 
 
 def test_ledger_compaction_keeps_resolution(spark, roots, monkeypatch):

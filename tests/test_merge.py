@@ -8,7 +8,8 @@ that small; anything else takes the Spark full-outer-join path. The
 parity test runs each case on both paths (``-1`` forces the Spark one)
 and requires equal snapshots, change feeds and row counts. Then the job
 budget of a change-tracking batch, a DataFrame's evolved column
-metadata, a NULL-keyed batch that runs once, the file count of a
+metadata and an Arrow batch's naive timestamp (one schema on both
+paths), a NULL-keyed batch that runs once, the file count of a
 pipeline that keeps merging, a table left with no file, a table
 created from Arrow on the driver, a small DataFrame created and
 appended on the driver (the same small-input rule, one job, the Spark
@@ -162,6 +163,20 @@ def _case(name, spark):
         kw = {"dedup_order_col": "o", "exclude_cols": ["d", "o"]}
         src = _local(spark, rows, mix_ddl + ", o double")
         return _mix_target, src, kw, "driver", (), {}
+    if name == "collated_condition":
+        # UTF8_LCASE: 'x' = 'X'; Spark evaluates the condition
+        rows = [(1, 3, False, "x"), (17, 4, False, "X"), (40, 1, False, "y")]
+        kw = {"delete_condition": "s = 'X'", "exclude_cols": ["d", "s"]}
+        kw["condition"] = "spark"
+        src = _local(spark, rows, mix_ddl + ", s string collate UTF8_LCASE")
+        return _mix_target, src, kw, "driver", (), {}
+    if name == "collated_order":
+        # UTF8_LCASE orders 'B' above 'a', bytes the other way: Spark
+        # dedups the batch
+        rows = [(1, 3, False, "a"), (1, 4, False, "B"), (40, 1, False, "a")]
+        kw = {"dedup_order_col": "o", "exclude_cols": ["d", "o"]}
+        src = _local(spark, rows, mix_ddl + ", o string collate UTF8_LCASE")
+        return _mix_target, src, kw, "spark", (), {}
     if name == "empty":
         return _mix_target, _local(spark, [], mix_ddl), {}, "driver", (), {}
     if name == "insert_only":
@@ -281,6 +296,8 @@ def _case(name, spark):
         "arrow_dedup",
         "arrow_nan",
         "dataframe_dedup",
+        "collated_condition",
+        "collated_order",
         "above_threshold",
         "empty",
         "insert_only",
@@ -299,6 +316,7 @@ def test_merge_paths_agree(spark, tmp_path, case):
     ``arrow`` cases) takes the Spark path as a DataFrame."""
     target, src, kw, images, away, case_conf = _case(case, spark)
     keys = kw.pop("keys", ["id"])
+    condition = kw.pop("condition", "driver")
     kw = {"delete_condition": "d", "exclude_cols": ["d"], **kw}
     saved = {k: spark.conf.get(k) for k in (THRESHOLD, *case_conf)}
     got = {}
@@ -330,7 +348,7 @@ def test_merge_paths_agree(spark, tmp_path, case):
     assert s_res["images"] == s_res["rewrite"] == "spark"
     if images == "driver":
         # a DataFrame source's condition runs on the driver too
-        assert d_res["condition"] == "driver"
+        assert d_res["condition"] == condition
         spark_rewrite = case == "above_threshold"
         assert d_res["rewrite"] == ("spark" if spark_rewrite else "driver")
     assert d_snap == s_snap
@@ -365,6 +383,10 @@ def test_merge_paths_agree(spark, tmp_path, case):
         assert {r[0]: r[1] for r in d_snap if r[0] in (1, 3, 17, 40, 41)} == {
             1: 4, 3: 9, 17: 8, 40: 2, 41: 5
         }
+    if case == "collated_condition":
+        assert [d_res[c] for c in counts] == [1, 0, 2]
+    if case == "collated_order":
+        assert {r[0]: r[1] for r in d_snap}[1] == 4
     if case == "empty":
         assert d_cdf == Counter() and d_res["touched_files"] == 0
     if case == "insert_only":
@@ -447,12 +469,25 @@ def test_ct_batch_merges_within_job_budget(spark, tmp_path):
     assert _rows(silver.read()) == _rows(src.read())
 
 
-def test_dataframe_merge_keeps_evolved_column_metadata(spark, tmp_path):
-    """A small DataFrame that evolves in a commented column commits the
-    schema the Spark path commits: the comment rides ``schema_json``,
-    which Arrow alone would drop."""
-    src = _local(spark, [(1, 5, "a"), (60, 6, "b")], "id long, v long, w string")
-    src = src.withMetadata("w", {"comment": "a note"})
+@pytest.mark.parametrize("source", ["dataframe_comment", "arrow_naive_timestamp"])
+def test_evolved_column_commits_one_schema_on_both_paths(spark, tmp_path, source):
+    """A small batch that evolves in a column commits the schema the
+    Spark path commits: a DataFrame's commented column keeps the
+    comment, which Arrow alone would drop, and an Arrow batch's
+    timezone-naive timestamp is TIMESTAMP_NTZ on both paths (the Spark
+    path converts the batch to the schema the driver path reads)."""
+    if source == "dataframe_comment":
+        src = _local(spark, [(1, 5, "a"), (60, 6, "b")], "id long, v long, w string")
+        src = src.withMetadata("w", {"comment": "a note"})
+    else:
+        ts = datetime.datetime(2024, 3, 10, 7)
+        src = pa.table(
+            {
+                "id": pa.array([1, 60], pa.int64()),
+                "v": pa.array([5, 6], pa.int64()),
+                "w": pa.array([ts, ts], pa.timestamp("us")),
+            }
+        )
     saved = spark.conf.get(THRESHOLD)
     got = {}
     try:
@@ -460,14 +495,17 @@ def test_dataframe_merge_keeps_evolved_column_metadata(spark, tmp_path):
             t = _mix_target(spark, str(tmp_path / path))
             if threshold:
                 spark.conf.set(THRESHOLD, threshold)
-            got[path] = t.merge(src, ["id"])["images"], t.get_commit().schema_json
+            images = t.merge(src, ["id"])["images"]
+            got[path] = images, t.get_commit().schema_json, _rows(t.read())
     finally:
         spark.conf.set(THRESHOLD, saved)
     assert got["driver"][0] == "driver" and got["spark"][0] == "spark"
-    assert got["driver"][1] == got["spark"][1]
-    assert T.StructType.fromJson(json.loads(got["driver"][1]))["w"].metadata[
-        "comment"
-    ] == "a note"
+    assert got["driver"][1:] == got["spark"][1:]
+    w = T.StructType.fromJson(json.loads(got["driver"][1]))["w"]
+    if source == "dataframe_comment":
+        assert w.metadata["comment"] == "a note"
+    else:
+        assert w.dataType == T.TimestampNTZType()
 
 
 def test_collected_null_key_batch_runs_its_source_once(spark, tmp_path):
@@ -1350,18 +1388,31 @@ def test_delete_condition_driver_matches_spark(spark):
     """The driver's translation of a delete condition keeps exactly the
     rows Spark's ``filter(coalesce(cond, false))`` keeps; a condition
     outside the translated set, or a float column holding NaN, is left
-    to Spark. A string is parsed once; one that does not parse raises."""
+    to Spark, as is a string column of another collation, CHAR or
+    VARCHAR. A string is parsed once; one that does not parse raises."""
+    types = tables._spark_types(_COND_ROWS.schema)
     for cond in _DRIVER_CONDITIONS:
-        hits = predicate.mask(predicate.parse(spark, cond), _COND_ROWS)
+        hits = predicate.mask(predicate.parse(spark, cond), _COND_ROWS, types)
         assert hits is not None, cond
         got = [k for k, hit in enumerate(hits) if hit]
         assert got == _spark_filter(spark, _COND_ROWS, cond), cond
     for cond in _SPARK_CONDITIONS:
-        assert predicate.mask(predicate.parse(spark, cond), _COND_ROWS) is None, cond
+        tree = predicate.parse(spark, cond)
+        assert predicate.mask(tree, _COND_ROWS, types) is None, cond
     nan = _COND_ROWS.set_column(
         3, "f", pa.array([float("nan")] + [1.0] * (_COND_ROWS.num_rows - 1))
     )
-    assert predicate.mask(predicate.parse(spark, "f > 1"), nan) is None
+    assert predicate.mask(predicate.parse(spark, "f > 1"), nan, types) is None
+    for other in (
+        T.StructField("s", T.StringType("UTF8_LCASE")),
+        *(
+            T.StructField("s", T.StringType(), True, {"__CHAR_VARCHAR_TYPE_STRING": t})
+            for t in ("char(1)", "varchar(1)")
+        ),
+    ):
+        typed = T.StructType([other if f.name == "s" else f for f in types.fields])
+        tree = predicate.parse(spark, "s = 'D' OR i = 1")
+        assert predicate.mask(tree, _COND_ROWS, typed) is None, other
     assert predicate.parse(spark, "s = 'D'") is predicate.parse(spark, "s = 'D'")
     with pytest.raises(ParseException):  # as F.expr raises it
         predicate.parse(spark, "s =")
