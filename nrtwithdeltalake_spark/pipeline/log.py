@@ -201,8 +201,9 @@ class CommitConflictError(RuntimeError):
     no row the operation would have affected (Delta VLDB'20 §3.2
     semantics); ``compact`` rebases over any pure file-add. Only
     genuinely conflicting writes surface — their read was stale, the
-    caller must re-run. A full ``overwrite`` and ``restore`` always
-    surface it."""
+    caller must re-run. A full ``overwrite`` conflicts with any
+    concurrently added file, a create (whose base is the empty table)
+    with any collision, and ``restore`` always surfaces it."""
 
 
 class UnsupportedTableFeatureError(RuntimeError):

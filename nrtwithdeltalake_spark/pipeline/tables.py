@@ -522,7 +522,8 @@ class VersionedTable:
         ``build(base)`` returns the commit's fields on a base snapshot —
         ``new_files``, ``cdf_files``, ``schema_json``, ``stats`` keys,
         ``metadata``, ``protocol``, ``dv_files`` (default: none, or the
-        base's) — or raises to refuse. The commit keeps ``base.files``
+        base's) — or raises to refuse. A new table builds on an empty
+        base at version -1 (``create``, ``convert``). The commit keeps ``base.files``
         minus ``rewritten`` plus the new files, carries the kept files'
         stats (``_carry_stats``), harvests the new files' footers once
         per schema (a ``file_stats`` entry from ``build`` replaces a
@@ -545,8 +546,8 @@ class VersionedTable:
           deletion vectors (``dvs``) or the identity high-water
           (``identity``).
 
-        Anything else raises CommitConflictError for the caller to
-        re-run; ``COMMIT_RETRIES`` collisions re-raise the last one.
+        Anything else, and any collision on the empty base, raises
+        CommitConflictError for the caller to re-run; ``COMMIT_RETRIES`` collisions re-raise the last one.
         Returns the published version and stats."""
         what = _OP_NAMES.get(op, op)
         depends = set(rewritten if depends is None else depends)
@@ -587,12 +588,14 @@ class VersionedTable:
                         stats,
                         dv_files=list(kw.get("dv_files", base.dv_files)),
                         protocol=kw.get("protocol"),
-                        metadata=kw.get("metadata"),
+                        metadata=kw.get("metadata", base.metadata),
                     )
                 )
                 return base.version + 1, stats
             except CommitConflictError:
-                if attempt == COMMIT_RETRIES:
+                # on the empty base (-1) another writer created the
+                # table: there is no snapshot to rebase on
+                if attempt == COMMIT_RETRIES or base.version < 0:
                     raise
             fresh = self.get_commit()
             if self._txn_skip(fresh, app, txn_version):
@@ -1835,14 +1838,14 @@ class VersionedTable:
         return sorted(found)
 
     def _write_inserts(
-        self, df: DataFrame, schema: T.StructType, metadata: dict | None = None
+        self, df: DataFrame, schema: T.StructType, metadata: dict
     ) -> tuple[list[str], list[str]]:
-        """The Spark path of ``create`` and ``append``: ``df`` as data
-        files (``_write_files``), then their insert images read back from
-        those files, so ``df`` runs once and the change feed holds
-        exactly the rows the snapshot holds, even when ``df`` is not
-        deterministic (``current_timestamp()``, a re-read source).
-        Returns (data files, change-data files)."""
+        """The Spark path of ``create``, ``append`` and ``overwrite``:
+        ``df`` as data files (``_write_files``), then their insert
+        images read back from those files, so ``df`` runs once and the
+        change feed holds exactly the rows the snapshot holds, even when
+        ``df`` is not deterministic (``current_timestamp()``, a re-read
+        source). Returns (data files, change-data files)."""
         files = self._write_files(df, self.data_dir, schema=schema, metadata=metadata)
         if not files:
             return [], []
@@ -2042,128 +2045,69 @@ class VersionedTable:
         ``{"start":, "step":, "mode": "always"|"default"}``. An
         ALWAYS column must NOT be in ``df``; a BY DEFAULT column MAY
         carry explicit initial values (validated non-null, high-water
-        starts past them). Generated columns are prepended unless
+        starts past them). Identity columns are prepended unless
         ``column_order`` gives the full final order (the SQL CREATE
         path uses it to keep the DDL-declared positions).
+        ``partition_by`` names created columns.
 
-        Commit 0 is written on the driver with pyarrow (ALWAYS identity
-        columns numbered from their ``(start, step)``) unless it asks
-        for ``partition_by``, ``column_order`` or a BY DEFAULT identity
-        column, or a column's Arrow type is not the one the format reads
-        back. ``df`` may be a ``pyarrow.Table``, rows already in the
-        driver's memory (the config store's empty tables, a small
-        bootstrap): then no Spark job runs. A DataFrame takes this path
-        when ``merge`` would pair it on the driver (``_collectable``):
-        its rows are collected in one job and written as one data file,
-        plus its insert images, per non-empty partition — the files the
-        Spark writer makes. Anything else takes the Spark path (an Arrow
-        table converted with ``_spark_frame``), as ``append`` does. The
-        schema is the DataFrame's on both paths, nullability and field
-        metadata included."""
+        Commit 0 is an append of ``df`` (``_append``) to the empty
+        table at version -1, whose schema is ``df``'s, nullability and
+        field metadata included."""
         t = cls(spark, path)
         if cls.exists(path):
             raise RuntimeError(f"table already exists at {path}")
-        cols = df.columns if isinstance(df, DataFrame) else df.column_names
+        fields = {
+            f.name: f
+            for f in (
+                strip_ids(df.schema)
+                if isinstance(df, DataFrame)
+                else _spark_types(df.schema)
+            ).fields
+        }
         defs = {c: _identity_spec(sk) for c, sk in (identity or {}).items()}
         for col, d in defs.items():
-            if col in cols and d["mode"] == "always":
+            if col in fields and d["mode"] == "always":
                 raise ValueError(
                     f"cannot supply values for GENERATED ALWAYS "
                     f"AS IDENTITY column {col!r} at create — "
                     "drop it from the dataframe"
                 )
-        plan = {c: (d["start"], d["step"]) for c, d in defs.items() if c not in cols}
+        created = {
+            c: fields.get(c, T.StructField(c, T.LongType())) for c in defs
+        }
+        created.update(fields)
+        order = column_order or list(created)
+        if sorted(order) != sorted(created):
+            raise ValueError(
+                f"column_order {order} is not a permutation of the "
+                f"created columns {sorted(created)}"
+            )
         md: dict = {}  # the table metadata commit 0 carries
         if defs:
             md["properties"] = {cls._IDENTITY_PROP: json.dumps(defs)}
-        driver = None  # the rows' schema, when the driver writes them
-        splits: list[int] = []
-        if not (
-            partition_by
-            or column_order
-            or any(d["mode"] != "always" for d in defs.values())
-        ):
-            if not isinstance(df, DataFrame):
-                driver = _driver_schema(df.schema)
-            else:
-                arrow = t._collectable(df, t._broadcast_limit())
-                if arrow is not None:
-                    driver = strip_ids(df.schema)
-                    df, splits = _collect(df, arrow)
-        if driver is not None:
-            schema = with_field_ids(
-                T.StructType(
-                    [T.StructField(c, T.LongType()) for c in plan] + driver.fields
+        if partition_by:
+            pcols = list(partition_by)
+            missing = [c for c in pcols if c not in created]
+            if missing:
+                raise ValueError(
+                    f"PARTITIONED BY column(s) {missing} not in the "
+                    f"created columns {sorted(created)}"
                 )
-            )
-            files, cdf, ident_last = t._write_arrow(df, schema, plan, splits)
-        else:
-            if not isinstance(df, DataFrame):
-                df = _spark_frame(spark, df)
-            ident_last: dict[str, int] = {}
-            ident_cache = explicit_cache = None
-            if defs:
-                explicit = [c for c in defs if c in df.columns]
-                if explicit:
-                    # pin ONE materialization so the extremes aggregate and
-                    # the file writes see identical explicit values
-                    df = explicit_cache = df.persist()
-                ident_last = t._explicit_identity_extremes(
-                    df,
-                    explicit,
-                    {c: (d["start"], d["step"]) for c, d in defs.items()},
+            if len(set(pcols)) != len(pcols):
+                raise ValueError(f"duplicate PARTITIONED BY columns {pcols}")
+            bad = [c for c in created if c.startswith("__part__")]
+            if bad:
+                raise ValueError(
+                    f"column name(s) {bad} collide with the reserved "
+                    "__part__ shadow-column prefix of partitioned writes"
                 )
-                df, assigned_last, ident_cache = t._assign_identity(df, plan)
-                ident_last.update(assigned_last)
-                order = column_order or (
-                    list(defs) + [c for c in df.columns if c not in defs]
-                )
-                if sorted(order) != sorted(df.columns):
-                    raise ValueError(
-                        f"column_order {order} is not a permutation of the "
-                        f"created columns {sorted(df.columns)}"
-                    )
-                df = df.select(*order)
-            if partition_by:
-                pcols = list(partition_by)
-                missing = [c for c in pcols if c not in df.columns]
-                if missing:
-                    raise ValueError(
-                        f"PARTITIONED BY column(s) {missing} not in the "
-                        f"created columns {sorted(df.columns)}"
-                    )
-                if len(set(pcols)) != len(pcols):
-                    raise ValueError(f"duplicate PARTITIONED BY columns {pcols}")
-                bad = [c for c in df.columns if c.startswith("__part__")]
-                if bad:
-                    raise ValueError(
-                        f"column name(s) {bad} collide with the reserved "
-                        "__part__ shadow-column prefix of partitioned writes"
-                    )
-                md["partition_columns"] = pcols
-            schema = with_field_ids(strip_ids(df.schema))  # mapping from birth
-            files, cdf = t._write_inserts(df, schema, md)
-            for cache in (ident_cache, explicit_cache):
-                if cache is not None:
-                    cache.unpersist()
-        stats = dict(extra_stats or {})
-        if ident_last:
-            stats["identity"] = ident_last
-        fstats = _footer_file_stats(files, schema)
-        if fstats and "file_stats" not in stats:
-            stats["file_stats"] = fstats  # O(#files) footer harvest
-        t._write_commit(
-            Commit(
-                0,
-                "create",
-                files,
-                cdf,
-                schema.json(),
-                time.time(),
-                stats,
-                metadata=md,
-            )
+            md["partition_columns"] = pcols
+        # field ids from birth, in the created order
+        schema = with_field_ids(T.StructType([created[c] for c in order]))
+        empty = Commit(
+            -1, "create", [], [], schema.json(), time.time(), {}, metadata=md
         )
+        t._append(empty, df, "create", extra_stats)
         return t
 
     @classmethod
@@ -2223,14 +2167,13 @@ class VersionedTable:
             )
         if not files:
             raise ValueError(f"no parquet files found in {src}")
-        schema = strip_ids(spark.read.parquet(*files).schema)
-        stats: dict = {
-            "converted_from": src,
-            "cdf_absent": True,
-            "file_stats": _footer_file_stats(files, schema),
-        }
-        t._write_commit(
-            Commit(0, "convert", files, [], schema.json(), time.time(), stats)
+        schema_json = strip_ids(spark.read.parquet(*files).schema).json()
+        empty = Commit(-1, "convert", [], [], schema_json, time.time(), {})
+        stats = {"converted_from": src, "cdf_absent": True}
+        t._publish(
+            empty,
+            "convert",
+            lambda base: {"new_files": files, "stats": stats},
         )
         return t
 
@@ -2258,7 +2201,11 @@ class VersionedTable:
         the scale property — only files physically containing matching
         rows are rewritten; everything else carries over by reference
         with its data-skipping stats intact. Rows where the predicate is
-        NULL are kept (not matched), mirroring SQL filter semantics."""
+        NULL are kept (not matched), mirroring SQL filter semantics.
+
+        Both modes evaluate ``df`` once (``_write_inserts``: the insert
+        images are read back from the data files) and publish through
+        ``_publish``."""
         prev = self.get_commit()
         df = self._fill_generated(self._fill_defaults(df))
         prev_schema = T.StructType.fromJson(json.loads(prev.schema_json))
@@ -2293,38 +2240,40 @@ class VersionedTable:
             df = df.select(
                 *order, *(c for c in df.columns if c not in set(order))
             )
-        v = prev.version + 1
-        if replace_where is None:
+        stats = dict(extra_stats or {})
+
+        def deletes(rows: DataFrame) -> list[str]:
+            # pre-images are ALIGNED (projected + cast losslessly) to
+            # the NEW commit schema so one commit's CDF files share one
+            # schema — the change feed reads each commit with its own
+            # schema, and a mixed-schema commit (old-typed deletes
+            # beside new-typed inserts after a full-replace retype)
+            # silently corrupted incremental consumers.
+            return self._write_files(
+                _align_to(rows, schema).withColumn(
+                    CHANGE_TYPE_COL, F.lit("delete")
+                ),
+                self.cdf_dir,
+                schema=schema,
+                metadata=md,
+            )
+
+        full = replace_where is None
+        if full:
             # full replace commits the NEW dataframe's schema; same-named
             # columns keep their field ids (they are the same logical
-            # column), brand-new ones get fresh ids
+            # column), brand-new ones get fresh ids. Every file of
+            # ``prev`` is replaced, so any file added concurrently
+            # conflicts.
             schema = log.replaced_schema(
                 prev_schema, df.schema, int(prev.stats.get("max_field_id", 0))
             )
-            files = self._write_files(df, self.data_dir, schema=schema)
-            old = self._snapshot(prev)  # DV-applied: don't retract twice
-            stats = self._with_new_file_stats(
-                dict(extra_stats or {}), files, schema, md
-            )
+            touched = prev.files
+            affects = ("replaced snapshot", lambda rows: True)
             if _cdf_representable(prev_schema, schema):
-                # pre-images are ALIGNED (projected + cast losslessly)
-                # to the NEW commit schema so one commit's CDF files
-                # share one schema — the change feed reads each commit
-                # with its own schema, and a mixed-schema commit
-                # (old-typed deletes beside new-typed inserts after a
-                # full-replace retype) silently corrupted incremental
-                # consumers.
-                cdf = self._write_files(
-                    _align_to(old, schema).withColumn(
-                        CHANGE_TYPE_COL, F.lit("delete")
-                    ),
-                    self.cdf_dir,
-                    schema=schema,
-                ) + self._write_files(
-                    df.withColumn(CHANGE_TYPE_COL, F.lit("insert")),
-                    self.cdf_dir,
-                    schema=schema,
-                )
+                files, inserts = self._write_inserts(df, schema, md)
+                # DV-applied: don't retract twice
+                cdf = deletes(self._snapshot(prev)) + inserts
             else:
                 # incompatible retype (e.g. string → bigint): the old
                 # snapshot's values are NOT representable in the new
@@ -2333,73 +2282,55 @@ class VersionedTable:
                 # overwriteSchema. The commit is flagged; change_feed
                 # refuses to cross it and tells consumers to reload
                 # from a snapshot.
+                files = self._write_files(
+                    df, self.data_dir, schema=schema, metadata=md
+                )
                 cdf = []
                 stats["cdf_schema_break"] = True
-            if ident_last:
-                stats["identity"] = dict(ident_last)
-            self._write_commit(
-                Commit(
-                    v,
-                    "overwrite",
-                    files,
-                    cdf,
-                    schema.json(),
-                    time.time(),
-                    stats,
-                )
-            )
-            if ident_cache is not None:
-                ident_cache.unpersist()
-            if explicit_cache is not None:
-                explicit_cache.unpersist()
-            return v
-
-        pred = F.coalesce(F.expr(replace_where), F.lit(False))
-        if df.filter(~F.coalesce(F.expr(replace_where), F.lit(False))).take(1):
-            raise ValueError(
-                f"replace_where source contains rows not matching "
-                f"{replace_where!r}"
-            )
-        schema = self._merged_schema(prev, df.schema)
-        df = _align_to(df, schema)
-        touched = self._files_where(prev, pred)
-        new_files = self._write_files(df, self.data_dir, schema=schema)
-        if touched:
-            touched_df = self._snapshot(prev, touched)
-            new_files += self._write_files(
-                touched_df.filter(~pred), self.data_dir, enforce=False, schema=schema
-            )
-            removed = touched_df.filter(pred)
         else:
-            removed = self.spark.createDataFrame([], self.schema())
-        removed = _align_to(removed, schema)
-        cdf = self._write_files(
-            removed.withColumn(CHANGE_TYPE_COL, F.lit("delete")),
-            self.cdf_dir,
-            schema=schema,
-        ) + self._write_files(
-            df.withColumn(CHANGE_TYPE_COL, F.lit("insert")),
-            self.cdf_dir,
-            schema=schema,
-        )
-        stats = {
-            "touched_files": len(touched),
-            "replace_where": replace_where,
-            **(extra_stats or {}),
-        }
+            pred = F.coalesce(F.expr(replace_where), F.lit(False))
+            schema = self._merged_schema(prev, df.schema)
+            touched = self._files_where(prev, pred)
+            affects = self._rows_matching(replace_where)
+            files, cdf = self._write_inserts(_align_to(df, schema), schema, md)
+            # checked on the rows as written, so ``df`` runs once; the
+            # refused files are never committed
+            if files and self._read_files(files, schema.json()).filter(
+                ~pred
+            ).take(1):
+                raise ValueError(
+                    f"replace_where source contains rows not matching "
+                    f"{replace_where!r}"
+                )
+            if touched:
+                touched_df = self._snapshot(prev, touched)
+                files += self._write_files(
+                    touched_df.filter(~pred),
+                    self.data_dir,
+                    enforce=False,
+                    schema=schema,
+                    metadata=md,
+                )
+                cdf = deletes(touched_df.filter(pred)) + cdf
+            stats = {
+                "touched_files": len(touched),
+                "replace_where": replace_where,
+                **stats,
+            }
         if ident_last:
             stats["identity"] = dict(ident_last)
         ver, _ = self._publish(
             prev,
-            "overwrite_where",
+            "overwrite" if full else "overwrite_where",
             lambda base: {
-                "new_files": new_files,
+                "new_files": files,
                 "cdf_files": cdf,
                 "schema_json": schema.json(),
                 "stats": stats,
+                "dv_files": [] if full else base.dv_files,
             },
             rewritten=set(touched),
-            affects=self._rows_matching(replace_where),
+            affects=affects,
             identity=bool(ident_last),
         )
         if ident_cache is not None:
@@ -2687,6 +2618,21 @@ class VersionedTable:
         prev = self.get_commit()
         if self._txn_skip(prev, txn_app, txn_version):
             return prev.version
+        return self._append(prev, df, op, extra_stats, (txn_app, txn_version))
+
+    def _append(
+        self,
+        prev: Commit,
+        df: DataFrame | pa.Table,
+        op: str,
+        extra_stats: dict | None = None,
+        txn: tuple = (None, None),
+    ) -> int:
+        """``append``'s body on the snapshot ``prev`` — for ``create``,
+        the empty table at version -1. Chooses the driver or Spark
+        once, numbers identity once and publishes through ``_publish``;
+        returns the version."""
+        md = prev.metadata or {}
         splits: list[int] = []
         if isinstance(df, DataFrame):
             arrow = self._collectable(df, self._broadcast_limit())
@@ -2702,7 +2648,6 @@ class VersionedTable:
         cols = df.column_names if on_driver else df.columns
         ident_plan: dict = {}
         explicit: list = []
-        md = prev.metadata or {}
         if _identity_defs(md):
             _refuse_explicit_identity(md, cols, "append to")
             explicit = _explicit_identity_split(md, cols)
@@ -2738,7 +2683,7 @@ class VersionedTable:
             ident_last.update(explicit_ext)
             schema = self._merged_schema(prev, df.schema)
             df = _align_to(df, schema)
-            new_files, cdf = self._write_inserts(df, schema)
+            new_files, cdf = self._write_inserts(df, schema, md)
             if ident_cache is not None:
                 ident_cache.unpersist()
             if explicit_cache is not None:
@@ -2805,9 +2750,7 @@ class VersionedTable:
                 "stats": stats,
             }
 
-        return self._publish(
-            prev, op, build, dvs=False, txn=(txn_app, txn_version)
-        )[0]
+        return self._publish(prev, op, build, dvs=False, txn=txn)[0]
 
     def _driver_writable(self, prev: Commit) -> bool:
         """True when the table binds no rule that needs Spark to write
@@ -4902,63 +4845,34 @@ class VersionedTable:
         hi,
         version: int | None = None,
     ) -> DataFrame:
-        """Range read with driver-side file skipping: files whose
-        committed [min, max] for ``col`` don't intersect [lo, hi] are
-        dropped from the scan list before Spark ever opens them — the
-        query never pays listing/footer cost for cold ranges. Falls back
-        to the full file list when no stats exist (pre-compact commits);
-        the residual filter keeps results exact either way."""
-        c = self.get_commit(version)
-        fstats = c.stats.get("file_stats", {})
-
-        def overlaps(f: str) -> bool:
-            s = fstats.get(f)
-            if not s or col not in s:
-                return True
-            f_lo, f_hi = s[col]
-            try:
-                t_lo, t_hi = type(lo)(f_lo), type(hi)(f_hi)
-            except (TypeError, ValueError):
-                return True
-            return t_hi >= lo and t_lo <= hi
-
-        files = [f for f in c.files if overlaps(f)]
-        return self._snapshot(c, files).filter(
-            (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
-        )
+        """Range read of ``lo <= col <= hi``: ``read_between_multi`` over
+        one column."""
+        return self.read_between_multi({col: (lo, hi)}, version)
 
     def read_between_multi(
         self,
         ranges: dict[str, tuple],
         version: int | None = None,
     ) -> DataFrame:
-        """Conjunctive multi-column range read: a file survives only if
-        its committed [min, max] intersects EVERY requested range — the
-        consumer of z-ordered layout, where each dimension's stats are
-        tight, so the intersection prunes multiplicatively (a point-ish
-        query on two z-ordered columns touches ~√files, not all of
-        them). Semantics are exact regardless of layout: the residual
-        filter re-applies every range."""
+        """Conjunctive multi-column range read with driver-side file
+        skipping: a file is read only when its committed [min, max] may
+        intersect EVERY requested range (``log.file_stats_may_match``,
+        the DataSource planner's rule), so cold files are dropped before
+        Spark opens them. On a z-ordered layout each dimension's stats
+        are tight and the intersection prunes multiplicatively (a
+        point-ish query on two z-ordered columns touches ~√files). A
+        file without stats is kept, and the residual filter re-applies
+        every range, so results are exact regardless of layout."""
         c = self.get_commit(version)
         fstats = c.stats.get("file_stats", {})
-
-        def survives(f: str) -> bool:
-            s = fstats.get(f)
-            if not s:
-                return True
-            for col, (lo, hi) in ranges.items():
-                if col not in s:
-                    continue
-                f_lo, f_hi = s[col]
-                try:
-                    t_lo, t_hi = type(lo)(f_lo), type(hi)(f_hi)
-                except (TypeError, ValueError):
-                    continue
-                if t_lo > hi or t_hi < lo:
-                    return False
-            return True
-
-        files = [f for f in c.files if survives(f)]
+        pushed = [
+            (col, op, v)
+            for col, (lo, hi) in ranges.items()
+            for op, v in ((">=", lo), ("<=", hi))
+        ]
+        files = [
+            f for f in c.files if log.file_stats_may_match(fstats.get(f), pushed)
+        ]
         df = self._snapshot(c, files)
         for col, (lo, hi) in ranges.items():
             df = df.filter((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))
@@ -5304,17 +5218,19 @@ def _collect(df: DataFrame, arrow) -> tuple[pa.Table, list[int]]:
 
 
 def _spark_frame(spark: SparkSession, tbl, schema=None) -> DataFrame:
-    """``spark.createDataFrame(tbl)`` for a ``pyarrow.Table``, with its
-    empty record batches dropped first: pyspark 4.1 loses every row
-    after an empty batch that is not the first (``[10, 0, 10]`` rows
-    convert to 10), and ``pa.concat_tables`` of an empty table with
-    others builds exactly that layout."""
+    """``spark.createDataFrame(tbl, schema)`` for a ``pyarrow.Table``,
+    typed as ``_spark_types(tbl.schema)`` when no ``schema`` is given
+    (the driver's reading: a naive timestamp is TIMESTAMP_NTZ, whatever
+    the session prefers), with its empty record batches dropped first:
+    pyspark 4.1 loses every row after an empty batch that is not the
+    first (``[10, 0, 10]`` rows convert to 10), and ``pa.concat_tables``
+    of an empty table with others builds exactly that layout."""
     import pyarrow as pa
 
     tbl = pa.Table.from_batches(
         [b for b in tbl.to_batches() if b.num_rows], schema=tbl.schema
     )
-    return spark.createDataFrame(tbl, schema)
+    return spark.createDataFrame(tbl, schema or _spark_types(tbl.schema))
 
 
 def _min_max(col) -> tuple:

@@ -2,14 +2,19 @@
 concurrency with rebase, Delta VLDB'20 §3.2. Every writer publishes
 through it, so each test injects a racing commit at ``_write_commit``
 and checks that a commuting race rebases and a conflicting one
-surfaces. Tier-1: these run in the default (fast) tier."""
+surfaces; a create, whose base is the empty table at version -1,
+never rebases. Tier-1: these run in the default (fast) tier."""
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from nrtwithdeltalake_spark.pipeline.tables import VersionedTable
+from nrtwithdeltalake_spark.pipeline.tables import (
+    CommitConflictError,
+    VersionedTable,
+)
 
 
 def _inject_before_merge_commit(t, fn):
@@ -316,3 +321,57 @@ def test_restore_keeps_txn_watermarks(spark, tmp_path):
     # the replay of the committed batch stays a structural no-op
     assert t.append(batch, txn_app="job", txn_version=1) == 2
     assert [r.id for r in t.read().collect()] == [1]
+
+
+@pytest.mark.parametrize("winner", [[], [1]])
+def test_racing_create_conflicts(spark, tmp_path, monkeypatch, winner):
+    """Two creates of one table race: the loser's commit collides on
+    the empty base (version -1), which has no snapshot to rebase on, so
+    it raises and the table holds only the winner's commit — also when
+    the winner's batch is the loser's own empty one, which a rebase
+    would have turned into a second, empty commit."""
+    p = str(tmp_path / "rc")
+
+    def rows(ks):
+        return pa.table({"k": pa.array(ks, pa.int64())})
+
+    orig = VersionedTable._write_commit
+    state = {"fired": False}
+
+    def racing(self, commit):
+        if not state["fired"]:
+            state["fired"] = True
+            VersionedTable.create(spark, p, rows(winner))
+        return orig(self, commit)
+
+    monkeypatch.setattr(VersionedTable, "_write_commit", racing)
+    with pytest.raises(CommitConflictError):
+        VersionedTable.create(spark, p, rows([]))
+    t = VersionedTable(spark, p)
+    assert [c.op for c in t.history()] == ["create"]
+    assert [r.k for r in t.read().collect()] == winner
+
+
+def test_full_overwrite_conflicts_on_concurrent_append(spark, tmp_path):
+    """A full overwrite replaces every file of the snapshot it read, so
+    a concurrently appended file conflicts instead of surviving the
+    replace; re-run on the fresh snapshot, it replaces that file too."""
+    p = str(tmp_path / "ow")
+    schema = "id long, v string"
+    t = VersionedTable.create(spark, p, spark.createDataFrame([(1, "a")], schema))
+    orig = t._write_commit
+    state = {"fired": False}
+
+    def inject(commit):
+        if not state["fired"]:
+            state["fired"] = True
+            VersionedTable(spark, p).append(spark.createDataFrame([(2, "b")], schema))
+        return orig(commit)
+
+    t._write_commit = inject
+    new = spark.createDataFrame([(9, "z")], schema)
+    with pytest.raises(CommitConflictError, match="replaced snapshot"):
+        t.overwrite(new)
+    assert sorted(r.id for r in t.read().collect()) == [1, 2]
+    VersionedTable(spark, p).overwrite(new)
+    assert [r.id for r in t.read().collect()] == [9]

@@ -41,25 +41,6 @@ def _mk(spark, tmp_path, rows=("a", "b", "c"), name="t"):
     )
 
 
-def test_create_assigns_contiguous_ids_and_prepends_column(spark, tmp_path):
-    t = _mk(spark, tmp_path)
-    assert [f.name for f in t.schema().fields][0] == "id"
-    rows = sorted((r.id, r.s) for r in t.read().collect())
-    assert rows == [(1, "a"), (2, "b"), (3, "c")]
-    assert t.identity_high_water("id") == 3
-    assert t.identity_columns() == {"id": (1, 1)}
-
-
-def test_custom_start_and_step(spark, tmp_path):
-    df = spark.createDataFrame([("x",), ("y",)], "s string")
-    t = VersionedTable.create(
-        spark, str(tmp_path / "ss"), df, identity={"id": (100, 10)}
-    )
-    assert sorted(r.id for r in t.read().collect()) == [100, 110]
-    t.append(spark.createDataFrame([("z",)], "s string"))
-    assert sorted(r.id for r in t.read().collect()) == [100, 110, 120]
-
-
 def test_always_semantics_refuse_explicit_values_everywhere(spark, tmp_path):
     t = _mk(spark, tmp_path)
     with pytest.raises(ValueError, match="GENERATED ALWAYS"):
@@ -802,21 +783,6 @@ def test_always_column_still_refused_alongside_by_default(spark, tmp_path):
         t.update("s = 'x'", {"did": "99"})
 
 
-def test_by_default_create_with_explicit_initial_values(spark, tmp_path):
-    t = VersionedTable.create(
-        spark,
-        str(tmp_path / "seed"),
-        spark.createDataFrame([(7, "a"), (3, "b")], "id long, s string"),
-        identity={"id": {"start": 1, "step": 1, "mode": "default"}},
-    )
-    assert sorted((r.id, r.s) for r in t.read().collect()) == [
-        (3, "b"),
-        (7, "a"),
-    ]
-    t.append(spark.createDataFrame([("c",)], "s string"))
-    assert t.read().filter("s = 'c'").collect()[0].id == 8
-
-
 def test_by_default_overwrite_explicit(spark, tmp_path):
     t = _mk_bd(spark, tmp_path)  # hw = 2
     t.overwrite(
@@ -964,48 +930,6 @@ def test_sql_by_default_identity_end_to_end(spark, tmp_path):
         execute_dml(
             spark, f"UPDATE versioned.`{p}` SET id = 1 WHERE s = 'a'"
         )
-
-
-def test_sql_identity_position_and_nullability_preserved(spark, tmp_path):
-    """ADVICE r11: the DDL-declared column position survives (no
-    prepend), and the identity column is implicitly NOT NULL."""
-    p = str(tmp_path / "pos")
-    execute_dml(
-        spark,
-        f"CREATE TABLE versioned.`{p}` "
-        "(s STRING, id BIGINT GENERATED ALWAYS AS IDENTITY, v INT)",
-    )
-    t = VersionedTable(spark, p)
-    fields = {f.name: f for f in t.schema().fields}
-    assert [f.name for f in t.schema().fields] == ["s", "id", "v"]
-    assert fields["id"].nullable is False
-    assert t.not_null_columns() == ["id"]
-    execute_dml(
-        spark, f"INSERT INTO versioned.`{p}` (s, v) VALUES ('a', 7)"
-    )
-    r = t.read().collect()[0]
-    assert (r.s, r.id, r.v) == ("a", 1, 7)
-    # SELECT * positional order matches the DDL
-    assert t.read().columns == ["s", "id", "v"]
-
-
-def test_sql_create_table_failure_leaves_no_partial_table(spark, tmp_path):
-    """ADVICE r11: a bad DEFAULT expression must not leave a
-    half-created table behind — the corrected statement re-runs."""
-    p = str(tmp_path / "atomic")
-    with pytest.raises(Exception):
-        execute_dml(
-            spark,
-            f"CREATE TABLE versioned.`{p}` "
-            "(s STRING, n INT DEFAULT no_such_function_xyz())",
-        )
-    assert not VersionedTable.exists(p)
-    execute_dml(
-        spark,
-        f"CREATE TABLE versioned.`{p}` (s STRING, n INT DEFAULT 7)",
-    )
-    execute_dml(spark, f"INSERT INTO versioned.`{p}` (s) VALUES ('a')")
-    assert VersionedTable(spark, p).read().collect()[0].n == 7
 
 
 def test_rebase_overflow_guard(spark, tmp_path, monkeypatch):

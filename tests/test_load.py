@@ -1247,28 +1247,80 @@ def test_arrow_batches_after_an_empty_one_keep_their_rows(spark, tmp_path):
     assert sorted(r.k for r in p.change_feed(-1).collect()) == [1, 2, 3, 4, 5, 6]
 
 
+def test_arrow_spark_path_keeps_naive_timestamps_ntz(spark, tmp_path):
+    """An Arrow batch's timezone-naive timestamp is TIMESTAMP_NTZ on the
+    Spark path as on the driver: an append to a table with a CHECK
+    constraint (Spark enforces it) and a partitioned create both commit
+    ``timestamp_ntz`` and keep the wall-clock values."""
+    days = [datetime.datetime(2024, 1, 1, 8), datetime.datetime(2024, 1, 2, 9)]
+    batch = pa.table(
+        {
+            "id": pa.array([1, 2], pa.int64()),
+            "w": pa.array(days, pa.timestamp("us")),
+        }
+    )
+    t = VersionedTable.create(spark, str(tmp_path / "checked"), batch)
+    t.add_constraint("positive", "id > 0")
+    t.append(batch)
+    p = VersionedTable.create(spark, str(tmp_path / "part"), batch, partition_by=["id"])
+    for table, rows in ((t, days * 2), (p, days)):
+        assert table.schema()["w"].dataType == T.TimestampNTZType()
+        assert sorted(r.w for r in table.read().collect()) == sorted(rows)
+
+
+def test_read_between_prunes_a_date_range(spark, tmp_path):
+    """``read_between`` on a DATE column opens only the files whose
+    committed [min, max] may hold the range (``file_stats_may_match``,
+    the DataSource planner's rule) and returns exactly its rows."""
+    days = [datetime.date(2024, 1, d) for d in (1, 10, 20)]
+
+    def batch(i):
+        return pa.table(
+            {"d": pa.array([days[i]], pa.date32()), "v": pa.array([i], pa.int64())}
+        )
+
+    t = VersionedTable.create(spark, str(tmp_path / "days"), batch(0))
+    for i in (1, 2):
+        t.append(batch(i))
+    hit = t.read_between("d", datetime.date(2024, 1, 9), datetime.date(2024, 1, 11))
+    assert len(t.get_commit().files) == 3
+    assert len(hit.inputFiles()) == 1
+    assert [r.v for r in hit.collect()] == [1]
+
+
 def test_spark_path_writes_its_input_once(spark, tmp_path):
-    """On the Spark path, ``create`` and ``append`` evaluate their
-    DataFrame once: a ``current_timestamp()`` column reads the same in
-    the snapshot and in the change feed's insert images."""
+    """On the Spark path, ``create`` and then ``append`` or
+    ``overwrite`` (full or ``replace_where``) evaluate their DataFrame
+    once: a ``current_timestamp()`` column reads the same in the
+    snapshot and in the change feed's insert images."""
 
     def stamped():
         return spark.range(5).withColumn("t", F.current_timestamp())
 
-    def writes():
-        t = VersionedTable.create(spark, str(tmp_path / "t"), stamped())
-        t.append(stamped())
-        return t
+    for i, write in enumerate(
+        [
+            lambda t: t.append(stamped()),
+            lambda t: t.overwrite(stamped()),
+            lambda t: t.overwrite(stamped().filter("id < 3"), replace_where="id < 3"),
+        ]
+    ):
 
-    t = _with_threshold(spark, "-1", writes)
-    assert all("/ds-" not in f for f in t.get_commit().files)
-    for v in (0, 1):
-        snap = Counter(tuple(r) for r in t.read(version=v).collect())
-        images = Counter(
-            tuple(r)
-            for r in t.change_feed(v - 1, v).drop("_change_type", "_commit_version")
-            .collect()
-        )
-        assert images == snap - Counter(
-            tuple(r) for r in (t.read(version=v - 1).collect() if v else [])
-        )
+        def writes():
+            t = VersionedTable.create(spark, str(tmp_path / f"t{i}"), stamped())
+            write(t)
+            return t
+
+        t = _with_threshold(spark, "-1", writes)
+        assert all("/ds-" not in f for f in t.get_commit().files)
+        for v in (0, 1):
+            snap = Counter(tuple(r) for r in t.read(version=v).collect())
+            images = Counter(
+                tuple(r)
+                for r in t.change_feed(v - 1, v)
+                .filter("_change_type = 'insert'")
+                .drop("_change_type", "_commit_version")
+                .collect()
+            )
+            assert images == snap - Counter(
+                tuple(r) for r in (t.read(version=v - 1).collect() if v else [])
+            )

@@ -11,7 +11,11 @@ budget of a change-tracking batch, a DataFrame's evolved column
 metadata and an Arrow batch's naive timestamp (one schema on both
 paths), a NULL-keyed batch that runs once, the file count of a
 pipeline that keeps merging, a table left with no file, a table
-created from Arrow on the driver, a small DataFrame created and
+created from Arrow on the driver (``create`` is an append to the empty
+table), the shapes a create commits (identity numbering, start and
+step, BY DEFAULT seeds, the SQL DDL's column positions and its atomic
+failure, one partition value per file and the partition-column
+guards), a small DataFrame created and
 appended on the driver (the same small-input rule, one job, the Spark
 path's files per partition; larger, partitioned and schema-evolving
 writes keep Spark; SQL CTAS and INSERT), the config store's idempotent
@@ -52,6 +56,7 @@ from nrtwithdeltalake_spark.pipeline.tables import (
 )
 
 from .test_commit_loop import _inject_before_merge_commit
+from .test_identity import _mk as _mk_identity
 from .test_load import (  # noqa: F401
     _calls_during,
     _jobs_during,
@@ -61,6 +66,7 @@ from .test_load import (  # noqa: F401
     _with_threshold,
     roots,
 )
+from .test_partitioning import _mk as _mk_partitioned
 
 THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
 
@@ -602,8 +608,10 @@ def test_arrow_create_writes_on_driver(spark, tmp_path):
     """``create`` of a ``pyarrow.Table`` writes commit 0 on the driver
     with no Spark job: ALWAYS identity ids, high-water and schema as the
     Spark path gives them, and a zero-row table lists no file. A BY
-    DEFAULT identity, ``partition_by`` or ``column_order`` takes the
-    Spark path."""
+    DEFAULT identity the batch does not carry and a ``column_order``
+    write on the driver too, as the same create of a DataFrame on the
+    Spark path writes them; ``partition_by`` and a batch that carries
+    BY DEFAULT values take the Spark path."""
     rows = _arrow([(f"r{i}",) for i in range(5)], "s string")
     made = {}
     for side, df in (("driver", rows), ("spark", spark.createDataFrame(rows))):
@@ -643,16 +651,173 @@ def test_arrow_create_writes_on_driver(spark, tmp_path):
     for i, (kw, names) in enumerate(
         [
             ({"identity": {"id": {"start": 1, "mode": "default"}}}, ["id", "s"]),
-            ({"partition_by": ["s"]}, ["s"]),
             ({"identity": {"id": (1, 1)}, "column_order": ["s", "id"]}, ["s", "id"]),
+        ]
+    ):
+        for side, df in (("driver", rows), ("spark", spark.createDataFrame(rows))):
+            n, made[side] = _jobs_during(
+                spark,
+                lambda: _with_threshold(
+                    spark,
+                    "-1",
+                    lambda: VersionedTable.create(
+                        spark, str(tmp_path / f"{side}{i}"), df, **kw
+                    ),
+                ),
+            )
+            assert (n == 0) == (side == "driver"), (kw, side, n)
+        t, s = made["driver"], made["spark"]
+        assert t.schema().names == names
+        assert _rows(t.read()) == _rows(s.read())
+        assert _rows(t.change_feed(-1)) == _rows(s.change_feed(-1))
+        assert t.get_commit(0).schema_json == s.get_commit(0).schema_json
+        assert t.identity_high_water("id") == s.identity_high_water("id") == 5
+
+    carried = _arrow([(7, "a"), (3, "b")], "id long, s string")
+    for i, (df, kw, names) in enumerate(
+        [
+            (rows, {"partition_by": ["s"]}, ["s"]),
+            (carried, {"identity": {"id": {"start": 1, "mode": "default"}}}, ["id", "s"]),
         ]
     ):
         n, f = _jobs_during(
             spark,
-            lambda: VersionedTable.create(spark, str(tmp_path / f"f{i}"), rows, **kw),
+            lambda: VersionedTable.create(spark, str(tmp_path / f"f{i}"), df, **kw),
         )
         assert n > 0, kw
-        assert f.schema().names == names and f.read().count() == 5
+        assert f.schema().names == names
+        assert f.read().count() == df.num_rows
+
+
+def test_create_assigns_contiguous_ids_and_prepends_column(spark, tmp_path):
+    t = _mk_identity(spark, tmp_path)
+    assert [f.name for f in t.schema().fields][0] == "id"
+    rows = sorted((r.id, r.s) for r in t.read().collect())
+    assert rows == [(1, "a"), (2, "b"), (3, "c")]
+    assert t.identity_high_water("id") == 3
+    assert t.identity_columns() == {"id": (1, 1)}
+
+
+def test_custom_start_and_step(spark, tmp_path):
+    df = spark.createDataFrame([("x",), ("y",)], "s string")
+    t = VersionedTable.create(
+        spark, str(tmp_path / "ss"), df, identity={"id": (100, 10)}
+    )
+    assert sorted(r.id for r in t.read().collect()) == [100, 110]
+    t.append(spark.createDataFrame([("z",)], "s string"))
+    assert sorted(r.id for r in t.read().collect()) == [100, 110, 120]
+
+
+def test_by_default_create_with_explicit_initial_values(spark, tmp_path):
+    t = VersionedTable.create(
+        spark,
+        str(tmp_path / "seed"),
+        spark.createDataFrame([(7, "a"), (3, "b")], "id long, s string"),
+        identity={"id": {"start": 1, "step": 1, "mode": "default"}},
+    )
+    assert sorted((r.id, r.s) for r in t.read().collect()) == [
+        (3, "b"),
+        (7, "a"),
+    ]
+    t.append(spark.createDataFrame([("c",)], "s string"))
+    assert t.read().filter("s = 'c'").collect()[0].id == 8
+
+
+def test_sql_identity_position_and_nullability_preserved(spark, tmp_path):
+    """ADVICE r11: the DDL-declared column position survives (no
+    prepend), and the identity column is implicitly NOT NULL."""
+    p = str(tmp_path / "pos")
+    execute_dml(
+        spark,
+        f"CREATE TABLE versioned.`{p}` "
+        "(s STRING, id BIGINT GENERATED ALWAYS AS IDENTITY, v INT)",
+    )
+    t = VersionedTable(spark, p)
+    fields = {f.name: f for f in t.schema().fields}
+    assert [f.name for f in t.schema().fields] == ["s", "id", "v"]
+    assert fields["id"].nullable is False
+    assert t.not_null_columns() == ["id"]
+    execute_dml(
+        spark, f"INSERT INTO versioned.`{p}` (s, v) VALUES ('a', 7)"
+    )
+    r = t.read().collect()[0]
+    assert (r.s, r.id, r.v) == ("a", 1, 7)
+    # SELECT * positional order matches the DDL
+    assert t.read().columns == ["s", "id", "v"]
+
+
+def test_sql_create_table_failure_leaves_no_partial_table(spark, tmp_path):
+    """ADVICE r11: a bad DEFAULT expression must not leave a
+    half-created table behind — the corrected statement re-runs."""
+    p = str(tmp_path / "atomic")
+    with pytest.raises(Exception):
+        execute_dml(
+            spark,
+            f"CREATE TABLE versioned.`{p}` "
+            "(s STRING, n INT DEFAULT no_such_function_xyz())",
+        )
+    assert not VersionedTable.exists(p)
+    execute_dml(
+        spark,
+        f"CREATE TABLE versioned.`{p}` (s STRING, n INT DEFAULT 7)",
+    )
+    execute_dml(spark, f"INSERT INTO versioned.`{p}` (s) VALUES ('a')")
+    assert VersionedTable(spark, p).read().collect()[0].n == 7
+
+
+def test_partitioned_create_one_value_per_file(spark, tmp_path):
+    t = _mk_partitioned(spark, tmp_path)
+    assert t.partition_columns() == ["day"]
+    c = t.get_commit()
+    fs = c.stats["file_stats"]
+    seen = set()
+    for f in c.files:
+        lo, hi = fs[f]["day"]
+        assert lo == hi  # exactly one partition value per file
+        seen.add(lo)
+        assert "__part__day=" in f  # layout is self-describing
+    assert seen == {"d1", "d2", "d3"}
+    # the REAL column is in the files: plain snapshot read is complete
+    rows = t.read().collect()
+    assert len(rows) == 30
+    assert {r.day for r in rows} == {"d1", "d2", "d3"}
+    # no shadow column leaks into the schema or the rows
+    assert [f.name for f in t.schema().fields] == ["id", "day", "v"]
+
+
+def test_partition_column_guards(spark, tmp_path):
+    t = _mk_partitioned(spark, tmp_path, name="guards")
+    with pytest.raises(ValueError, match="PARTITIONED BY"):
+        t.drop_column("day")
+    # a write omitting the partition column null-fills it (Delta
+    # semantics: null partition value), lands in the default-partition
+    # file, and stays readable
+    t.append(spark.createDataFrame([(777, 7.0)], "id long, v double"))
+    assert t.read().filter("id = 777").collect()[0].day is None
+    # rename follows the column
+    t.rename_column("day", "dt")
+    assert t.partition_columns() == ["dt"]
+    t.append(
+        spark.createDataFrame(
+            [(300, "d7", 3.0)], "id long, dt string, v double"
+        )
+    )
+    assert t.read().filter("dt = 'd7'").count() == 1
+    # reserved shadow prefix refused at create
+    with pytest.raises(ValueError, match="__part__"):
+        VersionedTable.create(
+            spark,
+            str(tmp_path / "bad"),
+            spark.createDataFrame([(1, "x")], "`__part__p` long, p string"),
+            partition_by=["p"],
+        )
+    with pytest.raises(ValueError, match="not in the created"):
+        VersionedTable.create(
+            spark,
+            str(tmp_path / "bad2"),
+            spark.createDataFrame([(1,)], "id long"),
+            partition_by=["nope"],
+        )
 
 
 def _ranged(spark, n, parts):

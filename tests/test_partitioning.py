@@ -34,26 +34,6 @@ def _mk(spark, tmp_path, name="t", days=("d1", "d2", "d3"), rows=30):
     )
 
 
-def test_partitioned_create_one_value_per_file(spark, tmp_path):
-    t = _mk(spark, tmp_path)
-    assert t.partition_columns() == ["day"]
-    c = t.get_commit()
-    fs = c.stats["file_stats"]
-    seen = set()
-    for f in c.files:
-        lo, hi = fs[f]["day"]
-        assert lo == hi  # exactly one partition value per file
-        seen.add(lo)
-        assert "__part__day=" in f  # layout is self-describing
-    assert seen == {"d1", "d2", "d3"}
-    # the REAL column is in the files: plain snapshot read is complete
-    rows = t.read().collect()
-    assert len(rows) == 30
-    assert {r.day for r in rows} == {"d1", "d2", "d3"}
-    # no shadow column leaks into the schema or the rows
-    assert [f.name for f in t.schema().fields] == ["id", "day", "v"]
-
-
 def test_partition_pruning_skips_files(spark, tmp_path):
     t = _mk(spark, tmp_path, name="prune")
     t.append(
@@ -115,41 +95,6 @@ def test_partitioned_appends_and_row_count(spark, tmp_path):
     assert t.current_row_count() == 31 == t.read().count()
     t.delete("day = 'd9'", use_dv=True)
     assert t.current_row_count() == 30 == t.read().count()
-
-
-def test_partition_column_guards(spark, tmp_path):
-    t = _mk(spark, tmp_path, name="guards")
-    with pytest.raises(ValueError, match="PARTITIONED BY"):
-        t.drop_column("day")
-    # a write omitting the partition column null-fills it (Delta
-    # semantics: null partition value), lands in the default-partition
-    # file, and stays readable
-    t.append(spark.createDataFrame([(777, 7.0)], "id long, v double"))
-    assert t.read().filter("id = 777").collect()[0].day is None
-    # rename follows the column
-    t.rename_column("day", "dt")
-    assert t.partition_columns() == ["dt"]
-    t.append(
-        spark.createDataFrame(
-            [(300, "d7", 3.0)], "id long, dt string, v double"
-        )
-    )
-    assert t.read().filter("dt = 'd7'").count() == 1
-    # reserved shadow prefix refused at create
-    with pytest.raises(ValueError, match="__part__"):
-        VersionedTable.create(
-            spark,
-            str(tmp_path / "bad"),
-            spark.createDataFrame([(1, "x")], "`__part__p` long, p string"),
-            partition_by=["p"],
-        )
-    with pytest.raises(ValueError, match="not in the created"):
-        VersionedTable.create(
-            spark,
-            str(tmp_path / "bad2"),
-            spark.createDataFrame([(1,)], "id long"),
-            partition_by=["nope"],
-        )
 
 
 def test_sql_create_partitioned_and_show_create_roundtrip(spark, tmp_path):
